@@ -11,6 +11,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * parquet under `workDir` and re-read, cutting the plan like a dbt table
   * materialization (and bounding recomputation + plan depth at scale).
   * Snapshot state is a table fed back across runs (SURVEY §7.4 risk 5).
+  *
+  * The re-read passes the schema the node just wrote. Parquet stores that
+  * Spark schema in its footer and a file read marks every field nullable
+  * either way, so the frame equals an inferring `spark.read.parquet(path)`
+  * (ModelGraphSpec pins it, nested and NTZ columns included) without the
+  * footer-reading Spark job that inference starts.
   */
 final class ModelGraph(spark: SparkSession, workDir: String) {
 
@@ -46,7 +52,7 @@ final class ModelGraph(spark: SparkSession, workDir: String) {
         case Table =>
           val path = s"$workDir/$name"
           df.write.mode("overwrite").parquet(path)
-          spark.read.parquet(path)
+          spark.read.schema(df.schema).parquet(path)
       }
     } finally building.remove(name)
   })
@@ -79,15 +85,15 @@ object Glamira {
     g.view("stg_customer", "raw.countly_summary")(d => Staging.stgCustomer(d("raw.countly_summary")))
     g.view("stg_product", "raw.product")(d => Staging.stgProduct(d("raw.product")))
 
+    // dbt's unique_key 'user|email|time_stamp' (customer_email_scd.sql:7):
+    // the first run opens a version per row, later runs merge into the prior
+    // state; only the branch in use is planned
     g.table("customer_email_scd", "stg_order", "stg_customer") { d =>
       val feed = Staging.customerEmailScdFeed(d("stg_order"), d("stg_customer"))
-        .withColumn("ts_s", org.apache.spark.sql.functions.col("time_stamp"))
-      val snap = graft.operators.Scd2.firstRun(
-        feed, Seq("user_db_id", "email_address", "ts_s"), "event_ts").drop("ts_s")
+      val uniqueKey = Seq("user_db_id", "email_address", "time_stamp")
       priorSnapshot match {
-        case Some(prior) => graft.operators.Scd2.snapshot(
-          prior, feed.drop("ts_s"), Seq("user_db_id", "email_address", "time_stamp"), "event_ts")
-        case None => snap
+        case Some(prior) => graft.operators.Scd2.snapshot(prior, feed, uniqueKey, "event_ts")
+        case None => graft.operators.Scd2.firstRun(feed, uniqueKey, "event_ts")
       }
     }
 

@@ -115,42 +115,35 @@ object Staging {
 
   /** stg_customer (stg_customer.sql): fake-null user classification, email
     * base with Unique/Multiple flag, distinct email-user pairs.
+    *
+    * The reference classifies each DISTINCT user_id_db (a GROUP BY) and
+    * inner-joins the status back onto the rows. The status is a function of
+    * the id's value alone and the equi-join drops NULL ids, so keeping the
+    * rows whose own id classifies VALID is the same set: a row-level filter,
+    * no aggregate, no join. Likewise an email's count of distinct users is
+    * the number of its distinct (email, user) pairs — valid ids are never
+    * NULL, so COUNT(DISTINCT) has nothing to skip — and one window over the
+    * pairs replaces the per-email aggregate and its join back.
     */
   def stgCustomer(summary: DataFrame): DataFrame = {
-    val userCheck = summary
-      .groupBy(col("user_id_db"))
-      .agg(count(lit(1)).as("_one"))
-      .withColumn("user_status",
-        when(col("user_id_db").isNull, "NULL")
-          .when(trim(col("user_id_db").cast(StringType)) === "", "EMPTY")
-          .when(lower(trim(col("user_id_db").cast(StringType)))
-            .isin("null", "n/a", "na", "none", "undefined"), "FAKE_NULL")
-          .otherwise("VALID"))
-      .select(col("user_id_db"), col("user_status"))
-
-    val checkedUsers = userCheck
-      .join(summary.select(col("email_address"), col("user_id_db")), Seq("user_id_db"))
+    val uid = trim(col("user_id_db").cast(StringType))
+    val valid = summary
+      .filter(col("user_id_db").isNotNull && uid =!= "" &&
+        !lower(uid).isin("null", "n/a", "na", "none", "undefined"))
       .filter(col("email_address").isNotNull && trim(col("email_address")) =!= "")
-
-    val valid = checkedUsers.filter(col("user_status") === "VALID")
-
-    val emailBase = valid
-      .groupBy(col("email_address"))
-      .agg(countDistinct(col("user_id_db").cast(StringType)).as("n_users"))
-      .withColumn("has_email_multiple_user_ids",
-        when(col("n_users") === 1, "Unique")
-          .when(col("n_users") > 1, "Multiple")
-          .otherwise("Unknown"))
-      .select(col("email_address"), col("has_email_multiple_user_ids"))
 
     val emailUserPairs = valid
       .select(col("email_address"), col("user_id_db").cast(StringType).as("user_db_id"))
       .distinct()
 
-    emailUserPairs.join(emailBase, Seq("email_address"))
+    emailUserPairs
+      .withColumn("n_users", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("email_address"))))
       .select(col("email_address"),
         col("user_db_id").try_cast(LongType).as("user_db_id"),
-        col("has_email_multiple_user_ids"))
+        when(col("n_users") === 1, "Unique")
+          .when(col("n_users") > 1, "Multiple")
+          .otherwise("Unknown").as("has_email_multiple_user_ids"))
       .orderBy(col("email_address"), col("user_db_id"))
   }
 

@@ -73,8 +73,10 @@ object Scd2 {
       .withColumn("dbt_valid_from", col(updatedAt))
       .withColumn("dbt_valid_to", lit(null).cast(TimestampType))
 
-    // Close superseded open versions at the newest incoming updatedAt per key.
-    val closeAt = incNew.groupBy(col("_key")).agg(max(col(updatedAt)).as("_close_ts"))
+    // Close superseded open versions at the newest incoming updatedAt per key:
+    // the `_rn = 1` filter already left incNew one row per key, that newest
+    // row, so its updatedAt is the per-key max without a second aggregate.
+    val closeAt = incNew.select(col("_key"), col(updatedAt).as("_close_ts"))
     val curClosed = cur.join(closeAt, Seq("_key"), "left")
       .withColumn("dbt_valid_to",
         when(col("dbt_valid_to").isNull && col("_close_ts").isNotNull

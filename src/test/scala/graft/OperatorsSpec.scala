@@ -46,6 +46,25 @@ class Scd2Spec extends SparkSpec {
     assert(closed.length === 1 && closed.head.getAs[String]("email") === "a@x.com")
   }
 
+  test("duplicate incoming rows at one updated_at open one version and close the old at it") {
+    val s1 = Scd2.firstRun(batch((1L, "a@x.com", 100L), (2L, "b@x.com", 100L)),
+      Seq("user_id"), "updated_at")
+    val s2 = Scd2.snapshot(s1,
+      batch((1L, "new@x.com", 200L), (1L, "new@x.com", 200L), (1L, "new@x.com", 200L),
+        (2L, "b@x.com", 100L), (2L, "b@x.com", 100L), (3L, "c@x.com", 150L), (3L, "c@x.com", 150L)),
+      Seq("user_id"), "updated_at").cache()
+    // key 1: one new open version, the old one closed at the duplicates' ts;
+    // key 2: duplicates at the current updated_at are a no-op; key 3: one insert
+    assert(s2.count() === 4)
+    val u1 = s2.filter($"user_id" === 1).orderBy($"dbt_valid_from").collect()
+    assert(u1.map(_.getAs[String]("email")).toSeq === Seq("a@x.com", "new@x.com"))
+    assert(u1.head.getAs[java.sql.Timestamp]("dbt_valid_to") ===
+      u1.last.getAs[java.sql.Timestamp]("dbt_valid_from"))
+    assert(u1.last.getAs[Any]("dbt_valid_to") == null)
+    assert(s2.filter($"user_id" === 2).count() === 1)
+    assert(s2.filter($"user_id" === 3 && $"dbt_valid_to".isNull).count() === 1)
+  }
+
   test("idempotent re-apply: same batch twice is a no-op") {
     val b = batch((1L, "a@x.com", 100L))
     val s1 = Scd2.firstRun(b, Seq("user_id"), "updated_at")

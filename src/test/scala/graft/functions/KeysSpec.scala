@@ -72,4 +72,56 @@ class ModelGraphSpec extends SparkSpec {
     val e = intercept[RuntimeException](g.resolve("nope"))
     assert(e.getMessage.contains("unknown model"))
   }
+
+  /** Jobs started outside any SQL execution while `body` runs: the
+    * footer-reading job of parquet schema inference is one, a table write
+    * never is (its jobs carry the execution id).
+    */
+  private def jobsOutsideSql[T](body: => T): (T, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).forall(_.getProperty("spark.sql.execution.id") == null))
+          n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      (out, n.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("a table node reads back with the written schema and starts no inference job") {
+    import graft.glamira.{Glamira, GlamiraFixtures}
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    val workDir = java.nio.file.Files.createTempDirectory("mg3").toString
+    val g = Glamira.graph(spark, workDir,
+      GlamiraFixtures.summary(spark), GlamiraFixtures.productRaw(spark),
+      GlamiraFixtures.ipLocationRaw(spark), GlamiraFixtures.fxSeed(spark))
+    g.table("fact_nested", "mart_fact_order")(d => d("mart_fact_order")
+      .withColumn("s", struct(col("order_id"), col("line_total_amount")))
+      .withColumn("a", array(col("event_datetime")))
+      .withColumn("m", map(col("item_key"), col("product_price_usd"))))
+
+    val tables = Seq("customer_email_scd", "mart_dim_customer", "mart_dim_product",
+      "mart_fact_order", "fact_nested")
+    val (resolved, inferenceJobs) = jobsOutsideSql(tables.map(t => t -> g.resolve(t)).toMap)
+    assert(inferenceJobs === 0)
+
+    // the control: an inferring read of the same files does start that job
+    assert(jobsOutsideSql(spark.read.parquet(s"$workDir/fact_nested"))._2 >= 1)
+
+    val fields = resolved("fact_nested").schema.map(_.dataType)
+    assert(fields.contains(TimestampNTZType) && fields.contains(DecimalType(38, 9)))
+    assert(fields.exists(_.isInstanceOf[StructType]) && fields.exists(_.isInstanceOf[ArrayType])
+      && fields.exists(_.isInstanceOf[MapType]))
+    tables.foreach { t =>
+      val inferred = spark.read.parquet(s"$workDir/$t")
+      assert(resolved(t).schema === inferred.schema, t)
+      assert(resolved(t).collect().map(_.toString).sorted ===
+        inferred.collect().map(_.toString).sorted, t)
+    }
+  }
 }

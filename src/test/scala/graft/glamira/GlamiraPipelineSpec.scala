@@ -12,6 +12,14 @@ class GlamiraPipelineSpec extends SparkSpec {
     GlamiraFixtures.summary(spark), GlamiraFixtures.productRaw(spark),
     GlamiraFixtures.ipLocationRaw(spark), GlamiraFixtures.fxSeed(spark))
 
+  // Drop this suite's .cache()s: the shared session would otherwise swap
+  // them into any later suite's plan over the same fixtures (suites run
+  // one after another in the forked test JVM, see ConcurrencySoakSpec).
+  override protected def afterAll(): Unit = {
+    spark.catalog.clearCache()
+    super.afterAll()
+  }
+
   test("stg_order grain: line-item × option with outer-unnest semantics") {
     val so = g.resolve("stg_order").cache()
     // o1: cp0 with 2 options (2 rows) + cp1 empty options (1 row) = 3
@@ -54,6 +62,73 @@ class GlamiraPipelineSpec extends SparkSpec {
     val a = sc.filter(col("email_address") === "A@X.com").collect()
     assert(a.map(_.getAs[Long]("user_db_id")).toSet === Set(101L, 103L))
     assert(a.forall(_.getAs[String]("has_email_multiple_user_ids") == "Multiple"))
+  }
+
+  /** stg_customer as the reference spells it (stg_customer.sql): classify
+    * each distinct user_id_db, join the status back, count distinct users
+    * per email and join that back. Kept as the reference for the
+    * filter-and-window production spelling.
+    */
+  private def stgCustomerReference(summary: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val userCheck = summary
+      .groupBy(col("user_id_db"))
+      .agg(count(lit(1)).as("_one"))
+      .withColumn("user_status",
+        when(col("user_id_db").isNull, "NULL")
+          .when(trim(col("user_id_db").cast(StringType)) === "", "EMPTY")
+          .when(lower(trim(col("user_id_db").cast(StringType)))
+            .isin("null", "n/a", "na", "none", "undefined"), "FAKE_NULL")
+          .otherwise("VALID"))
+      .select(col("user_id_db"), col("user_status"))
+    val valid = userCheck
+      .join(summary.select(col("email_address"), col("user_id_db")), Seq("user_id_db"))
+      .filter(col("email_address").isNotNull && trim(col("email_address")) =!= "")
+      .filter(col("user_status") === "VALID")
+    val emailBase = valid
+      .groupBy(col("email_address"))
+      .agg(countDistinct(col("user_id_db").cast(StringType)).as("n_users"))
+      .withColumn("has_email_multiple_user_ids",
+        when(col("n_users") === 1, "Unique")
+          .when(col("n_users") > 1, "Multiple")
+          .otherwise("Unknown"))
+      .select(col("email_address"), col("has_email_multiple_user_ids"))
+    valid
+      .select(col("email_address"), col("user_id_db").cast(StringType).as("user_db_id"))
+      .distinct()
+      .join(emailBase, Seq("email_address"))
+      .select(col("email_address"),
+        col("user_db_id").try_cast(LongType).as("user_db_id"),
+        col("has_email_multiple_user_ids"))
+      .orderBy(col("email_address"), col("user_db_id"))
+  }
+
+  test("stg_customer: adversarial ids and emails match the reference spelling row for row") {
+    def event(uid: String, email: String) = Row("o", 1700000000L, "t", "checkout_success",
+      "1.1.1.1", "ua", "r", uid, "d", "v1", "s1", "true", "u", null, email, null)
+    val rows = Seq(
+      event(null, "nul@x.com"), event("", "empty@x.com"), event(" null ", "fake@x.com"),
+      event("N/A", "na@x.com"), event("NONE", "a@x.com"), event("undefined", "a@x.com"),
+      event("201", null), event("201", ""), event("201", "   "),
+      event("202", "shared@x.com"), event("203", "shared@x.com"), event("203", "shared@x.com"),
+      event("204", "one@x.com"), event("204", "two@x.com"),
+      event(" 205 ", "pad@x.com"), event("205", "pad@x.com"),
+      event("abc", "junk@x.com"), event("xyz", "junk@x.com"), event("206", "Case@X.com"),
+      event("206", "case@x.com"))
+    val summary = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 3), Schemas.countlySummary)
+    val got = Staging.stgCustomer(summary)
+    val want = stgCustomerReference(summary)
+    assert(got.schema === want.schema)
+    val gotRows = got.collect().map(_.toString).sorted.toSeq
+    assert(gotRows === want.collect().map(_.toString).sorted.toSeq)
+    // the fixture exercises every branch: no fake-null user survives, a shared
+    // email and a padded duplicate id are Multiple, a one-user email Unique
+    assert(gotRows.contains("[shared@x.com,202,Multiple]"))
+    assert(gotRows.count(_ == "[pad@x.com,205,Multiple]") === 2)
+    assert(gotRows.contains("[one@x.com,204,Unique]") && gotRows.contains("[two@x.com,204,Unique]"))
+    assert(gotRows.count(_ == "[junk@x.com,null,Multiple]") === 2)
+    assert(gotRows.length === 10)
   }
 
   test("stg_product: multi-path id coalesce + sentinel filters + weights") {
@@ -141,6 +216,23 @@ class GlamiraPipelineSpec extends SparkSpec {
     assert(snap2.count() === snap1.count())             // same batch → no-op
     assert(snap2.filter(col("dbt_valid_to").isNull).count() ===
       snap1.filter(col("dbt_valid_to").isNull).count())
+  }
+
+  test("with prior state the snapshot node is Scd2.snapshot over the feed") {
+    val feed = Staging.customerEmailScdFeed(g.resolve("stg_order"), g.resolve("stg_customer"))
+    val key = Seq("user_db_id", "email_address", "time_stamp")
+    // day-1 state without o5, so the merge has one new version to open
+    val prior = graft.operators.Scd2.firstRun(
+      feed.filter(col("time_stamp") =!= 1700000400L), key, "event_ts")
+    val g2 = Glamira.graph(spark, workDir + "_prior",
+      GlamiraFixtures.summary(spark), GlamiraFixtures.productRaw(spark),
+      GlamiraFixtures.ipLocationRaw(spark), GlamiraFixtures.fxSeed(spark),
+      priorSnapshot = Some(prior))
+    val got = g2.resolve("customer_email_scd")
+    val want = graft.operators.Scd2.snapshot(prior, feed, key, "event_ts")
+    assert(got.schema.fieldNames.toSeq === want.schema.fieldNames.toSeq)
+    assert(got.collect().map(_.toString).sorted === want.collect().map(_.toString).sorted)
+    assert(got.count() === prior.count() + 1)
   }
 
   test("fact FKs resolve: product_key and location_key joined") {

@@ -47,6 +47,22 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"))
   }
 
+  test("dim_date: the calendar spine plans no shuffle and no sort") {
+    val p = plan("glamira_dim_date")
+    assert(!p.contains("Exchange") && !p.contains("Sort"), p.take(1200))
+  }
+
+  test("customer_email_scd feed: stg_customer classifies and counts without join-backs") {
+    import graft.glamira.{GlamiraFixtures, Staging}
+    val summary = GlamiraFixtures.summary(spark)
+    val feed = Staging.customerEmailScdFeed(
+      Staging.stgOrder(summary, Staging.stgLocation(GlamiraFixtures.ipLocationRaw(spark))),
+      Staging.stgCustomer(summary))
+    val p = feed.queryExecution.executedPlan.toString
+    // distinct (email, user) pairs, distinct users, the per-user recency window
+    assert(count(p, "Exchange hashpartitioning") === 3, p)
+  }
+
   test("exact dedup: single shuffle on the content hash") {
     val p = plan("dedup_exact")
     // partial agg → one Exchange → final agg; AQE wraps but adds no extra shuffle
