@@ -12,21 +12,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // scan-split size tuned to LOCAL fixture scale: the default 128 MB
-      // leaves every fixture file a single split, so scan-side map work
-      // (explodes, parses) runs on one core regardless of local[32]. 8 MB
-      // splits multi-row-group files across cores; on a real cluster the
-      // default is right — this is the local knob, env-overridable.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "8388608"))
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
 
     // Warm the JVM/codegen/FS paths once so the first measured query does

@@ -285,10 +285,7 @@ object GlamiraShaped {
     fxShaped(s).select(col("fx_date"), lit("USD").as("base_code"),
       col("fx_ccy").as("currency_code"), col("usd_to_ccy"))
 
-  /** The e2e gate's ModelGraph over the shaped inputs — factored out of
-    * the query so the E2eProbe measurement main can time individual node
-    * materializations of the identical DAG.
-    */
+  /** The e2e gate's ModelGraph over the shaped inputs. */
   private[queries] def e2eGraph(s: SparkSession, dir: String): graft.glamira.ModelGraph = {
     val work = TempDirs.fresh("glamira_e2e")
     // 7-mod-2 uids carry a MESSY raw email: stg_customer normalizes it

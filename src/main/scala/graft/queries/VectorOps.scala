@@ -41,10 +41,11 @@ object VectorOps {
     * centroid minus cos to the runner-up) is at most this — i.e. only
     * BOUNDARY vectors pay the second probe; a decisive winner's
     * ≥COS_T-similar neighbors co-assign with it anyway. Calibrated with
-    * [[MarginProbe]] against the anchored-truth governance at ALL THREE
-    * sfs (SCALE.md round 11): τ = 0.1 holds the ivf_imi recall at
-    * exactly its ungated level everywhere (0.9512 / 0.9015 / 0.8629 at
-    * sf0.001/0.01/0.1) while probing only 42–49% of second regions;
+    * `graft.tools.Probe <sfDir> margin` against the anchored-truth
+    * governance at ALL THREE sfs (SCALE.md round 11): τ = 0.1 holds the
+    * ivf_imi recall at exactly its ungated level everywhere (0.9512 /
+    * 0.9015 / 0.8629 at sf0.001/0.01/0.1) while probing only 42–49% of
+    * second regions;
     * τ = 0.05 was measured to LOSE truth pairs at sf0.01 and sf0.1
     * (0.8864 / 0.8514) — the recall-relevant probes concentrate at
     * small margins, but not under 0.05. Shared verbatim by the
@@ -518,9 +519,9 @@ object VectorOps {
     * candidate set gated at τ, plus the fraction of vectors whose second
     * region is actually probed. The τ grid is evaluated against ONE
     * persisted truth/anchor/assignment build, so a sweep costs little
-    * more than a single governance row. Driven by [[MarginProbe]].
+    * more than a single governance row. Driven by `graft.tools.Probe margin`.
     */
-  private[queries] def marginSweep(s: SparkSession, dir: String,
+  private[graft] def marginSweep(s: SparkSession, dir: String,
       taus: Seq[Double], nt: Boolean = false): Seq[(Double, String, Long, Long, Double, Double)] = {
     register(s)
     // round 13: the sweep reports PER-BAND recall — the τ decision is
@@ -550,51 +551,6 @@ object VectorOps {
           r.getLong(2).toDouble / math.max(r.getLong(1), 1L), frac))
         .sortBy(_._2)
     }
-  }
-
-  /** Recall DECOMPOSITION by truth-pair cosine band and copy locality
-    * (round 12, driven by [[RecallProbe]]): the ann_recall governance
-    * number is candidate recall over ALL anchored truth pairs at COS_T —
-    * a mix of (a) exact/planted duplicates and strong structural pairs
-    * (what the IVF consumers actually OUTPUT after the ANN_T=0.999
-    * verification, and what SemDeDup-style curation acts on) and (b) the
-    * random geometric tail of a 64-dim corpus (pairs at barely-COS_T
-    * whose directions are independent — at k=⌈n/1024⌉ cells their
-    * co-assignment probability decays like nprobe²/k, so NO bounded-probe
-    * index finds them, by geometry rather than by defect). At gate sfs k
-    * is 1–4 and the tail co-assigns by pigeonhole, masking the mix; at
-    * 10⁶⁺ the tail dominates n_true and the blended number collapses even
-    * while band (a) stays found. This decomposition separates the two so
-    * the governance floor can be read against the band the production
-    * consumers depend on. `copySpan` labels same-copy pairs on the
-    * synth_scale probe fixtures (ID_SHIFT=10⁷); pass 0 to skip.
-    */
-  private[queries] def recallBands(s: SparkSession, dir: String,
-      tau: Double, copySpan: Long, nt: Boolean = false): DataFrame = {
-    register(s)
-    val truth = if (nt) sharedNtTruth(s, dir) else sharedAnnTruth(s, dir)
-    val anchors = if (nt) sharedNtAnchors(s, dir) else sharedAnnAnchors(s, dir)
-    val assign = if (nt) sharedImiAssignNt(s, dir) else sharedImiAssign(s, dir)
-    val cand = probeAnchorCandidatesAt(assign, anchors, tau)
-      .withColumn("found", lit(1L))
-    val sameCopy =
-      if (copySpan > 0) floor(col("i") / copySpan) === floor(col("j") / copySpan)
-      else lit(true)
-    truth.join(cand, Seq("i", "j"), "left")
-      .withColumn("band",
-        when(col("cos") >= 0.999, "a_dup_0.999+")
-          .when(col("cos") >= NT_BAND_LO, "b_ntwin_0.95+")
-          .when(col("cos") >= 0.8, "c_strong_0.80+")
-          .when(col("cos") >= 0.6, "d_mid_0.60+")
-          .otherwise("e_tail_0.45+"))
-      .withColumn("same_copy", sameCopy)
-      .groupBy(col("band"), col("same_copy"))
-      .agg(count(lit(1)).as("n_true"),
-        sum(coalesce(col("found"), lit(0L))).as("n_found"))
-      .withColumn("recall",
-        round(col("n_found").cast(org.apache.spark.sql.types.DoubleType) /
-          col("n_true"), 4))
-      .orderBy(col("band"), col("same_copy"))
   }
 
   /** Anchor-touching multiprobe pairs: only ANCHORS probe (the hamming-1
@@ -790,7 +746,7 @@ object VectorOps {
     * n ≈ 10⁸⁺). Gated by `sim_ann_ivf_imi`; governed by `ann_recall`'s
     * `ivf_imi` row. See [[imiAssignments]].
     */
-  private[queries] def sharedImiAssign(s: SparkSession, dir: String): DataFrame =
+  private[graft] def sharedImiAssign(s: SparkSession, dir: String): DataFrame =
     withBuildParallelism(s, dir) {
       CorpusCache.getOrBuild(s, s"ivfimi:$dir")(
         refinedAssign(imiAssignments(s, dir, augmented(s, dir), "aug",
@@ -814,7 +770,7 @@ object VectorOps {
     * governs: the first fixture on which the τ apparatus is exercised by
     * pairs that are NOT byte-identical (and so can straddle regions).
     */
-  private[queries] def sharedImiAssignNt(s: SparkSession, dir: String): DataFrame =
+  private[graft] def sharedImiAssignNt(s: SparkSession, dir: String): DataFrame =
     withBuildParallelism(s, dir) {
       CorpusCache.getOrBuild(s, s"ivfimint:$dir")(
         refinedAssign(imiAssignments(s, dir, ntAugmented(s, dir), "nt",

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes PLANS.md: the formatted physical plan of each headline query, so
   * the partitioning/pushdown/broadcast story is reviewable without running
   * Spark. Usage: `sbt "runMain graft.tools.ExplainDump [sfDir] [outFile]"`.
@@ -54,10 +52,7 @@ object ExplainDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes one `<out_dir>/<query><suffix>.txt` formatted-plan file per named
   * query — the per-round before/after plan evidence
   * (`plans/rNN/<query>_{before,after}.txt`).
@@ -10,13 +8,7 @@ import org.apache.spark.sql.SparkSession
 object ExplainOne {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names) = args.take(4)
-    // probe-tier dumps (10⁸-name fixtures) need the box's cores for the
-    // count jobs a query builds eagerly; gate-SF dumps keep the old 4
-    val cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>

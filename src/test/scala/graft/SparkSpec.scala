@@ -15,18 +15,20 @@ import org.scalatest.funsuite.AnyFunSuite
   * life of the test JVM (round-6 advice).
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession(SparkSpec.Cores, Map(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString))
 
   override protected def afterAll(): Unit = {
     graft.queries.ScratchCache.drain()
     super.afterAll()
   }
+}
+
+object SparkSpec {
+  /** Fixed, not the box's core count, so partition-count pins in the
+    * specs hold on any machine.
+    */
+  val Cores = 4
 }

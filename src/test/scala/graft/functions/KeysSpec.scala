@@ -87,7 +87,7 @@ class ModelGraphSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(l)
     try {
       val out = body
-      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
       (out, n.get)
     } finally spark.sparkContext.removeSparkListener(l)
   }

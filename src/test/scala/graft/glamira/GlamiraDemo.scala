@@ -1,6 +1,5 @@
 package graft.glamira
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end drive of the Glamira DAG on reference-shaped fixtures:
@@ -9,10 +8,7 @@ import org.apache.spark.sql.functions._
   */
 object GlamiraDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession(4)
     spark.sparkContext.setLogLevel("ERROR")
 
     val workDir = java.nio.file.Files.createTempDirectory("glamira_demo").toString

@@ -1,30 +1,17 @@
 #!/usr/bin/env bash
-# Scale-probe runner: one fresh 8g JVM per invocation, full logs kept.
+# Scale-probe runner: graft.Bench over a query subset in one fresh JVM.
 #
 #   tools/probe.sh <sf_dir> <query[,query...]> [log_file]
 #
-# Mirrors the build.sbt fork settings (JDK17 add-opens, default heap,
-# UTC, UI off) so a probe JVM is byte-for-byte the bench JVM; timing
-# comes from Bench itself (single pass unless SPARK_GRAFT_BENCH_PASSES
-# is exported). stdout (the JSON line) passes through; stderr goes to
-# the log file so a task-failure reason is never lost (the round-11
-# 1-in-5 transient was unattributable because a filter swallowed it).
+# Single pass unless SPARK_GRAFT_BENCH_PASSES is exported. stdout (the
+# JSON line) passes through; stderr goes to the log file so a
+# task-failure reason is never lost (the round-11 1-in-5 transient was
+# unattributable because a filter swallowed it).
 set -u
-SF_DIR="$1"; ONLY="$2"; LOG="${3:-/tmp/probe_$(date +%s).log}"
-CP="$(dirname "$0")/../target/scala-2.13/classes:/opt/spark/jars/*"
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_BENCH_ONLY="$ONLY" \
+LOG="${3:-/tmp/probe_$(date +%s).log}"
+SPARK_GRAFT_SF_DIR="$1" SPARK_GRAFT_BENCH_ONLY="$2" \
 SPARK_GRAFT_BENCH_PASSES="${SPARK_GRAFT_BENCH_PASSES:-1}" \
-java $OPENS -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" graft.Bench 2>"$LOG"
+  "$(dirname "$0")/runmain.sh" graft.Bench 2>"$LOG"
 rc=$?
 echo "rc=$rc log=$LOG" >&2
 exit $rc

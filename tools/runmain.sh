@@ -1,6 +1,8 @@
 #!/usr/bin/env bash
-# Direct-JVM runner for diagnostic mains (MarginProbe/RecallProbe/...):
-# same JDK17 add-opens + default-heap discipline as probe.sh, no sbt lock.
+# Direct-JVM runner for the mains (graft.tools.Probe, graft.Bench,
+# graft.tools.ExplainOne, ...): the build.sbt fork settings (JDK17
+# add-opens, default heap, UTC, UI off) without the sbt lock. Run
+# `sbt compile` first; it runs the classes under target/.
 #   tools/runmain.sh <mainClass> [args...]
 set -u
 MAIN="$1"; shift
