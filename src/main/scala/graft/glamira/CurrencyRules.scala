@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.StringType
   */
 object CurrencyRules {
 
-  private val cleanLower: Map[Seq[String], String] = Map(
+  private[glamira] val cleanLower: Map[Seq[String], String] = Map(
     Seq("usd $", "usd", "us$", "us $") -> "USD",
     Seq("cad $") -> "CAD", Seq("au $") -> "AUD", Seq("sgd $") -> "SGD",
     Seq("nzd $") -> "NZD", Seq("hkd $") -> "HKD", Seq("mxn $") -> "MXN",
@@ -21,11 +21,11 @@ object CurrencyRules {
     Seq("zł") -> "PLN", Seq("лв.", "лв") -> "BGN", Seq("kn") -> "HRK",
     Seq("din.", " din.", "din") -> "RSD", Seq("r$") -> "BRL")
 
-  private val cleanSymbols: Map[String, String] = Map(
+  private[glamira] val cleanSymbols: Map[String, String] = Map(
     "€" -> "EUR", "£" -> "GBP", "₺" -> "TRY", "₫" -> "VND", "₱" -> "PHP",
     "₹" -> "INR", "￥" -> "JPY", "₲" -> "PYG", "د.ك.‏" -> "KWD")
 
-  private val tldCurrency: Seq[(String, String)] = Seq(
+  private[glamira] val tldCurrency: Seq[(String, String)] = Seq(
     "uk" -> "GBP", "de" -> "EUR", "fr" -> "EUR", "es" -> "EUR", "it" -> "EUR",
     "au" -> "AUD", "ca" -> "CAD", "nz" -> "NZD", "sg" -> "SGD", "se" -> "SEK",
     "no" -> "NOK", "dk" -> "DKK", "ch" -> "CHF", "jp" -> "JPY", "mx" -> "MXN",
@@ -98,62 +98,42 @@ object CurrencyRules {
       .when(status === "AMBIGUOUS" && inferred.isNotNull, "INFERRED")
       .otherwise(status)
 
-  // ---- Broadcast map-join variant --------------------------------------
-  // The Column chains above compile to ~40-branch CASE expressions — fine
-  // for one column, but the fact pipeline evaluates them per row inside
-  // whole-stage codegen, and at 100 TB the branchy bytecode pressures the
-  // JIT. The SAME rule tables expressed as two tiny broadcast lookup
-  // tables turn the mapping into two hash probes; all keys are disjoint so
-  // the left joins cannot fan out.
+  private def literalMap(pairs: Seq[(String, String)]): Column =
+    map(pairs.flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
 
-  /** (ccy_key = lower(trim(raw)), mapped_code, mapped_status). Symbols
-    * carry no cased letters, so one lower-cased key space covers both the
-    * label map (matched on lower(trim)) and the symbol map (matched on
-    * trim) with identical semantics.
-    */
-  def currencyMap(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame = {
-    val rows: Seq[(String, String, String)] =
-      cleanLower.toSeq.flatMap { case (keys, code) => keys.map(k => (k, code, "CLEAN")) } ++
-        cleanSymbols.toSeq.map { case (sym, code) => (sym, code, "CLEAN") } ++
-        Seq(("$", null, "AMBIGUOUS"), ("kr", null, "AMBIGUOUS"))
-    spark.createDataFrame(rows).toDF("ccy_key", "mapped_code", "mapped_status")
-  }
+  // The rule tables as literal maps. Symbols carry no cased letters, so one
+  // key space, lower(trim(raw)), covers both the label map (matched on
+  // lower(trim)) and the symbol map (matched on trim).
+  private val codeByKey: Column = literalMap(
+    cleanLower.toSeq.flatMap { case (keys, code) => keys.map(_ -> code) } ++ cleanSymbols.toSeq)
+  private val ccyByTld: Column = literalMap(tldCurrency)
 
-  /** (tld_key, tld_ccy) — the AMBIGUOUS-row inference chain as a table. */
-  def tldMap(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.DataFrame =
-    spark.createDataFrame(tldCurrency).toDF("tld_key", "tld_ccy")
-
-  /** Join-based application of the full currency pipeline: adds
+  /** The full currency pipeline as literal-map lookups: adds
     * currency_code_mapped, currency_status, url_host, url_tld,
-    * inferred_currency, currency_status_final — bit-identical to the
-    * Column-chain functions (the oracle's generated CASE SQL is the proof),
-    * but planned as two broadcast hash joins.
+    * inferred_currency, currency_status_final, row for row equal to the
+    * Column chains above (CurrencyRulesSpec pins it).
     */
-  def applyCurrencyJoins(df: org.apache.spark.sql.DataFrame, raw: Column,
+  def applyCurrencyRules(df: org.apache.spark.sql.DataFrame, raw: Column,
                          url: Column): org.apache.spark.sql.DataFrame = {
-    val s = df.sparkSession
-    val cmap = broadcast(currencyMap(s))
-    val tmap = broadcast(tldMap(s))
-    df.withColumn("_ccy_norm", lower(trim(raw)))
-      .withColumn("_raw_blank", raw.isNull || trim(raw) === "")
-      .join(cmap, col("_ccy_norm") === col("ccy_key"), "left")
-      .withColumn("currency_code_mapped",
-        when(col("_raw_blank"), lit(null).cast(StringType)).otherwise(col("mapped_code")))
+    val norm = lower(trim(raw))
+    val blank = raw.isNull || trim(raw) === ""
+    val amb = col("currency_status") === "AMBIGUOUS"
+    df.withColumn("currency_code_mapped",
+        when(blank, lit(null).cast(StringType)).otherwise(codeByKey(norm)))
       .withColumn("currency_status",
-        when(col("_raw_blank"), "UNKNOWN").otherwise(coalesce(col("mapped_status"), lit("UNKNOWN"))))
+        when(blank, "UNKNOWN")
+          .when(col("currency_code_mapped").isNotNull, "CLEAN")
+          .when(norm.isin("$", "kr"), "AMBIGUOUS")
+          .otherwise("UNKNOWN"))
       .withColumn("url_host", urlHost(url))
       .withColumn("url_tld", urlTld(col("url_host")))
-      .join(tmap,
-        col("url_tld") === col("tld_key") && col("currency_status") === "AMBIGUOUS", "left")
       .withColumn("inferred_currency",
         when(col("currency_code_mapped").isNotNull, col("currency_code_mapped"))
-          .when(col("currency_status") === "AMBIGUOUS" && col("url_host").endsWith("co.uk"), "GBP")
-          .when(col("currency_status") === "AMBIGUOUS", col("tld_ccy"))
+          .when(amb && col("url_host").endsWith("co.uk"), "GBP")
+          .when(amb, ccyByTld(col("url_tld")))
           .otherwise(lit(null).cast(StringType)))
       .withColumn("currency_status_final",
         statusFinal(col("currency_code_mapped"), col("currency_status"), col("inferred_currency")))
-      .drop("_ccy_norm", "_raw_blank", "ccy_key", "mapped_code", "mapped_status",
-        "tld_key", "tld_ccy")
   }
 
   // ---- DuckDB twins, generated from the SAME rule tables as the Column

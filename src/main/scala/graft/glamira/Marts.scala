@@ -77,14 +77,11 @@ object Marts {
         farm(col("email_address_final")).as("customer_key"))
   }
 
-  /** The fx_latest shape (mart_fact_order.sql:142): keep only the rows of
-    * the max fx_date — a broadcast 1-row scalar-max join, shared by the
-    * production mart and the oracle gates so the pattern cannot drift.
-    */
+  /** fx_latest (mart_fact_order.sql:142): the rows of the max fx_date. */
   def latestRates(fxSeed: DataFrame): DataFrame =
-    fxSeed.join(broadcast(fxSeed.agg(max(col("fx_date")).as("mx"))),
-        col("fx_date") === col("mx"))
-      .drop("mx")
+    fxSeed.withColumn("_mx", max(col("fx_date")).over())
+      .filter(col("fx_date") === col("_mx"))
+      .drop("_mx")
 
   /** mart_fact_order.sql: currency clean/infer → fx_latest join → USD
     * measures → dim joins. Grain: order line-item × option (stg_order).
@@ -92,10 +89,7 @@ object Marts {
   def martFactOrder(stgOrder: DataFrame, fxSeed: DataFrame,
                     dimCustomer: DataFrame, dimProduct: DataFrame): DataFrame = {
     val raw = col("product_currency")
-    // currency map + TLD inference as two broadcast hash joins (see
-    // CurrencyRules.applyCurrencyJoins) — the CASE-chain Column functions
-    // remain the semantic source of truth and the oracle generator
-    val inferred = CurrencyRules.applyCurrencyJoins(
+    val inferred = CurrencyRules.applyCurrencyRules(
       stgOrder.withColumn("product_currency_raw", trim(raw)),
       raw, col("current_url"))
 

@@ -10,7 +10,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * every consumer, exactly as BigQuery inlines views. "table" nodes write
   * parquet under `workDir` and re-read, cutting the plan like a dbt table
   * materialization (and bounding recomputation + plan depth at scale).
-  * Snapshot state is a table fed back across runs (SURVEY §7.4 risk 5).
+  * A view with more than one consumer is planned, compiled and run once
+  * per consumer, so a heavy one pays for a table instead (see `stg_order`
+  * in [[Glamira.graph]]). Snapshot state is a table fed back across runs
+  * (SURVEY §7.4 risk 5).
   *
   * The re-read passes the schema the node just wrote. Parquet stores that
   * Spark schema in its footer and a file read marks every field nullable
@@ -80,7 +83,10 @@ object Glamira {
     g.source("seed.fx_to_usd", fxSeed)
 
     g.view("stg_location", "raw.ip_location")(d => Staging.stgLocation(d("raw.ip_location")))
-    g.view("stg_order", "raw.countly_summary", "stg_location")(d =>
+    // a table, not the reference's view: its two consumers (the snapshot
+    // feed and the fact) would each re-run the double explode, price parse,
+    // item_key hash and location join, and compile them into their stages
+    g.table("stg_order", "raw.countly_summary", "stg_location")(d =>
       Staging.stgOrder(d("raw.countly_summary"), d("stg_location")))
     g.view("stg_customer", "raw.countly_summary")(d => Staging.stgCustomer(d("raw.countly_summary")))
     g.view("stg_product", "raw.product")(d => Staging.stgProduct(d("raw.product")))

@@ -10,7 +10,10 @@ import graft.functions.LocaleNumeric
 /** Staging models — Spark-first re-expression of the dbt staging layer.
   * Views in the reference (dbt_project.yml:37-38) = unmaterialized
   * DataFrames here: Catalyst fuses them into downstream plans exactly as
-  * BigQuery inlines views.
+  * BigQuery inlines views. The exception is `stg_order`, which
+  * [[Glamira.graph]] materializes as a table: it has two consumers per
+  * day (the snapshot feed and the fact), and as a view each of them would
+  * plan, compile and run its double explode again.
   */
 object Staging {
 

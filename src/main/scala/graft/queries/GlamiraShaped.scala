@@ -362,7 +362,7 @@ object GlamiraShaped {
         round(CurrencyRules.usdMeasure(
           col("currency_code_mapped"), col("usd_to_ccy"), amount), 6).cast(DoubleType)
 
-      CurrencyRules.applyCurrencyJoins(so, raw, col("current_url"))
+      CurrencyRules.applyCurrencyRules(so, raw, col("current_url"))
         .withColumn("currency_code", coalesce(col("currency_code_mapped"), col("inferred_currency")))
         .join(broadcast(fxLatest), col("fx_ccy") === col("currency_code"), "left")
         .withColumn("email_address", email)
@@ -381,9 +381,10 @@ object GlamiraShaped {
     }),
 
     // THE FULL DAG UNDER THE ORACLE: Glamira.graph executes end-to-end —
-    // raw summary/product/ip_location/fx in, stg views fused by Catalyst,
-    // customer_email_scd materialized to parquet (Scd2.firstRun), dims and
-    // the fact materialized across table boundaries — and the FINAL
+    // raw summary/product/ip_location/fx in, stg_order materialized once,
+    // the other stg views fused by Catalyst, customer_email_scd materialized
+    // to parquet (Scd2.firstRun), dims and the fact materialized across
+    // table boundaries — and the FINAL
     // mart_fact_order faces a DuckDB recompute of the whole lineage. The
     // per-node gates prove each model; this entry proves the COMPOSITION
     // (ModelGraph resolution order, view fusion, snapshot persistence,
@@ -415,10 +416,7 @@ object GlamiraShaped {
       val fxLatest = Marts.latestRates(fxShaped(s))
         .select(col("fx_ccy"), col("usd_to_ccy"))
 
-      // currency map + TLD inference via the broadcast lookup tables (two
-      // hash probes per row) instead of the ~40-branch CASE chains — same
-      // rule tables, same oracle, better plan at 100 TB
-      CurrencyRules.applyCurrencyJoins(so, raw, col("current_url"))
+      CurrencyRules.applyCurrencyRules(so, raw, col("current_url"))
         .withColumn("currency_code", coalesce(col("currency_code_mapped"), col("inferred_currency")))
         .join(broadcast(fxLatest), col("fx_ccy") === col("currency_code"), "left")
         // Reference semantics (mart_fact_order.sql final CTE) via the

@@ -16,7 +16,7 @@ object ExplainDump {
     "w1_latest_per_key",     // single-partition-key window
     "dedup_minhash_lsh",     // signature pipeline (df-capped), candidate-only verify
     "sim_ann_ivf",           // k-means refined centroids + cell join
-    "glamira_fact_order",    // currency map-joins + fx + dim merge-backs
+    "glamira_fact_order",    // currency rule maps + fx + dim merge-backs
     "sess_sessionize",       // lag + running-sum session windows
     "dedup_incremental",     // new-batch bands × existing index (no corpus self-pair)
     "skew_salted_agg",       // two-phase salted aggregation on a hot key

@@ -47,6 +47,45 @@ class PlanShapeSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"))
   }
 
+  test("stg_order is written once; the snapshot feed and the fact scan it, no explode") {
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    import org.apache.spark.sql.execution.{LocalTableScanExec, ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import graft.glamira.{Glamira, GlamiraFixtures, Marts, Staging}
+    val workDir = java.nio.file.Files.createTempDirectory("planshape-glamira").toString
+    val fx = GlamiraFixtures.fxSeed(spark)
+    val g = Glamira.graph(spark, workDir, GlamiraFixtures.summary(spark),
+      GlamiraFixtures.productRaw(spark), GlamiraFixtures.ipLocationRaw(spark), fx)
+    // the two consumers exactly as Glamira.graph wires them on day 1
+    val scd = graft.operators.Scd2.firstRun(
+      Staging.customerEmailScdFeed(g.resolve("stg_order"), g.resolve("stg_customer")),
+      Seq("user_db_id", "email_address", "time_stamp"), "event_ts")
+    val fact = Marts.martFactOrder(g.resolve("stg_order"), fx,
+      g.resolve("mart_dim_customer"), g.resolve("mart_dim_product"))
+    def generates(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case x: Generate => x }.size
+    assert(generates(Staging.stgOrder(GlamiraFixtures.summary(spark),
+      Staging.stgLocation(GlamiraFixtures.ipLocationRaw(spark)))) === 2)
+    assert(generates(scd) === 0, scd.queryExecution.optimizedPlan)
+    assert(generates(fact) === 0, fact.queryExecution.optimizedPlan)
+
+    def under(p: SparkPlan): SparkPlan = p match {
+      case ProjectExec(_, c) => under(c)
+      case c => c
+    }
+    val p = fact.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case other => other
+    }
+    val broadcasts = p.collect { case b: BroadcastExchangeExec => under(b.child) }
+    // the latest-rate, customer and product dims; the currency and TLD rule
+    // tables are literal maps, the rate date a window, the location join
+    // lives in the stg_order write
+    assert(broadcasts.size === 3, p)
+    assert(!broadcasts.exists(_.isInstanceOf[LocalTableScanExec]), p)
+  }
+
   test("dim_date: the calendar spine plans no shuffle and no sort") {
     val p = plan("glamira_dim_date")
     assert(!p.contains("Exchange") && !p.contains("Sort"), p.take(1200))
