@@ -36,21 +36,12 @@ object Components {
     * `maxIter` passes (with pointer jumping that would take a component of
     * diameter > 2^maxIter).
     *
-    * `stageDir` (default: the SPARK_GRAFT_STAGE_DIR env var, the same
-    * scratch-bounding contract as CorpusCache's staged index mode — round
-    * 15, extending it to the closure): when set, the symmetrized edge set
-    * is PUBLISHED to parquet under it (rename-swapped, per-run salted)
-    * and every pass reads the scan, instead of a localCheckpoint whose
-    * pinned blocks compete with the join's execution memory for the whole
-    * closure and whose build lineage (the caller's whole candidate/verify
-    * chain) stays shuffle-file-resident until the query ends. Label state
-    * keeps its checkpoint discipline either way — it is node-count-sized,
-    * orders of magnitude under the edge set. The staged edge files are
-    * deleted when the closure returns (the result is an eager checkpoint
-    * with no lineage into them).
+    * The symmetrized edge set is held as one `localCheckpoint`. Publishing
+    * it to parquet under a scratch dir instead was measured as a dead end
+    * (SCALE.md): 911.0 s on a 12 GB heap and an OOM on 8 GB at 50M names,
+    * against 347.4 s on 8 GB for the checkpoint.
     */
-  def connectedComponents(edgesIn: DataFrame, maxIter: Int = 50,
-      stageDir: Option[String] = sys.env.get("SPARK_GRAFT_STAGE_DIR")): DataFrame = {
+  def connectedComponents(edgesIn: DataFrame, maxIter: Int = 50): DataFrame = {
     // Symmetrize in a SINGLE pass over the caller's chain: explode each
     // pair into both directions inside one projection, then checkpoint the
     // result once. The earlier union-of-two-references shape re-executed
@@ -75,109 +66,70 @@ object Components {
         struct(col("j").as("i"), col("i").as("j")))).as("e"))
       .select(col("e.i").as("i"), col("e.j").as("j"))
       .observe("sym_edges", count(lit(1)).as("n"))
-    val ses = edgesIn.sparkSession
-    // staged mode: the edge set becomes a parquet artifact (rename-swapped
-    // so no reader can see a partial publish), the build lineage becomes
-    // GC-able, and zero edge blocks pin the block manager
-    val stagedFin: Option[org.apache.hadoop.fs.Path] = stageDir.map { dir =>
-      // branch line to stderr — same round-15 forensics discipline as
-      // CorpusCache.materialize: the probe log must say which edge-state
-      // mode a closure actually ran
-      System.err.println(s"[components] staged edges dir=$dir")
-      val nonce = java.util.UUID.randomUUID().toString.take(8)
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(ses.sessionState.newHadoopConf())
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/.tmp-cc-edges-$nonce")
-      val fin = new org.apache.hadoop.fs.Path(s"$dir/cc-edges-$nonce")
-      // small row groups (the repo's 8 MB local-split discipline): the
-      // default 128 MB block size hands every reader task a row-group-
-      // sized decompression buffer — 32 concurrent readers of the 50M-name
-      // closure's edge files OOMed a default 8 GB heap on exactly that
-      // (round-15 measurement); a row group is also the unsplittable unit,
-      // so small groups are what lets maxPartitionBytes spread the
-      // per-pass edge scans across cores at all
-      observed.write.mode("overwrite")
-        .option("parquet.block.size", 8L * 1024 * 1024)
-        .parquet(tmp.toString)
-      require(fs.rename(tmp, fin), s"cc staged publish: rename $tmp -> $fin failed")
-      fin
-    }
-    val edges = stagedFin match {
-      case Some(fin) => ses.read.parquet(fin.toString)
-      case None => observed.localCheckpoint()
-    }
-    try {
-      // Round 13 (round-12 verdict #2): localCheckpoint blocks are PINNED —
-      // the truncated lineage makes them unevictable — so iteration state
-      // competes with execution memory for the whole closure. Two levers
-      // keep the closure inside a bounded heap at any edge volume:
-      //   1. the label tables of a LARGE closure (derived threshold below)
-      //      checkpoint at DISK_ONLY: label state is read exactly twice per
-      //      pass (neighbor join + pointer join), so streaming it from
-      //      local disk costs one read per use while freeing the unified
-      //      region for the joins themselves — at 20M names this moves the
-      //      closure from a 24 GB requirement to the default 8 GB heap
-      //      (SCALE.md round 13);
-      //   2. the PREVIOUS pass's pinned blocks are unpersisted eagerly once
-      //      the next table is materialized (they are unreachable — the
-      //      loop re-binds `labels`), capping live label state at ~2 tables
-      //      instead of O(iterations).
-      // The threshold derives from the runtime, not a constant: disk-back
-      // when the symmetrized edge count at ~[[EdgeStateBytes]]/row would
-      // claim more than a quarter of the JVM max heap (the label table is
-      // bounded by the edge endpoints, and ≥2 tables + join scratch are
-      // live at once). The gate fixtures stay memory-resident; the decision
-      // reads the observe metric the eager checkpoint just published. The
-      // count() fallback fires in staged mode (the parquet write runs its
-      // own QueryExecution, so the metric never lands on this one — it is
-      // then a parquet-metadata row count, one cheap job) or if a future
-      // Spark stops publishing metrics for checkpoint jobs.
-      val symEdges = observed.queryExecution.observedMetrics.get("sym_edges")
-        .map(_.getAs[Long]("n")).getOrElse(edges.count())
-      val big = symEdges * EdgeStateBytes > Runtime.getRuntime.maxMemory() / 4
-      val lvl = if (big) StorageLevel.DISK_ONLY else StorageLevel.MEMORY_AND_DISK
-      if (big) log.info(s"connectedComponents: $symEdges sym-edges -> DISK_ONLY label state")
-      var labels = edges.select(col("i").as("node")).distinct()
-        .withColumn("label", col("node"))
+    val edges = observed.localCheckpoint()
+    // Round 13 (round-12 verdict #2): localCheckpoint blocks are PINNED —
+    // the truncated lineage makes them unevictable — so iteration state
+    // competes with execution memory for the whole closure. Two levers
+    // keep the closure inside a bounded heap at any edge volume:
+    //   1. the label tables of a LARGE closure (derived threshold below)
+    //      checkpoint at DISK_ONLY: label state is read exactly twice per
+    //      pass (neighbor join + pointer join), so streaming it from
+    //      local disk costs one read per use while freeing the unified
+    //      region for the joins themselves — at 20M names this moves the
+    //      closure from a 24 GB requirement to the default 8 GB heap
+    //      (SCALE.md round 13);
+    //   2. the PREVIOUS pass's pinned blocks are unpersisted eagerly once
+    //      the next table is materialized (they are unreachable — the
+    //      loop re-binds `labels`), capping live label state at ~2 tables
+    //      instead of O(iterations).
+    // The threshold derives from the runtime, not a constant: disk-back
+    // when the symmetrized edge count at ~[[EdgeStateBytes]]/row would
+    // claim more than a quarter of the JVM max heap (the label table is
+    // bounded by the edge endpoints, and ≥2 tables + join scratch are
+    // live at once). The gate fixtures stay memory-resident; the decision
+    // reads the observe metric the eager checkpoint just published. The
+    // count() fallback (a re-read of the checkpointed blocks, one cheap
+    // job) fires only if a future Spark stops publishing metrics for
+    // checkpoint jobs.
+    val symEdges = observed.queryExecution.observedMetrics.get("sym_edges")
+      .map(_.getAs[Long]("n")).getOrElse(edges.count())
+    val big = symEdges * EdgeStateBytes > Runtime.getRuntime.maxMemory() / 4
+    val lvl = if (big) StorageLevel.DISK_ONLY else StorageLevel.MEMORY_AND_DISK
+    if (big) log.info(s"connectedComponents: $symEdges sym-edges -> DISK_ONLY label state")
+    var labels = edges.select(col("i").as("node")).distinct()
+      .withColumn("label", col("node"))
+      .localCheckpoint(true, lvl)
+    var converged = false
+    var iter = 0
+    while (!converged && iter < maxIter) {
+      val nbrMin = edges
+        .join(labels, edges("j") === labels("node"))
+        .groupBy(edges("i").as("n2")).agg(min(col("label")).as("nbr_min"))
+      val stepped = labels.join(nbrMin, labels("node") === col("n2"), "left")
+        .select(col("node"), col("label").as("prev"),
+          least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
+      val ptr = labels.select(col("node").as("pn"), col("label").as("plabel"))
+      val next = stepped.join(ptr, stepped("label") === col("pn"), "left")
+        .select(stepped("node"), stepped("prev"),
+          least(stepped("label"), coalesce(col("plabel"), stepped("label"))).as("label"))
         .localCheckpoint(true, lvl)
-      var converged = false
-      var iter = 0
-      while (!converged && iter < maxIter) {
-        val nbrMin = edges
-          .join(labels, edges("j") === labels("node"))
-          .groupBy(edges("i").as("n2")).agg(min(col("label")).as("nbr_min"))
-        val stepped = labels.join(nbrMin, labels("node") === col("n2"), "left")
-          .select(col("node"), col("label").as("prev"),
-            least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-        val ptr = labels.select(col("node").as("pn"), col("label").as("plabel"))
-        val next = stepped.join(ptr, stepped("label") === col("pn"), "left")
-          .select(stepped("node"), stepped("prev"),
-            least(stepped("label"), coalesce(col("plabel"), stepped("label"))).as("label"))
-          .localCheckpoint(true, lvl)
-        converged = next.filter(col("label") =!= col("prev")).isEmpty
-        releaseCheckpoint(labels)
-        labels = next.select(col("node"), col("label"))
-        iter += 1
-      }
-      require(converged,
-        s"connectedComponents: no fixpoint after $maxIter passes (diameter > 2^$maxIter?)")
-      // Iteration count is the scale observable for this operator (passes grow
-      // with log component-diameter, each pass is a full join over the edge
-      // set) — surface it so a production run can alert on diameter growth.
-      // INFO on the normal path; WARN is reserved for a fixpoint that nearly
-      // exhausted the cap (a diameter anomaly worth operator attention).
-      if (iter >= maxIter - 5)
-        log.warn(s"connectedComponents: fixpoint after $iter passes (cap $maxIter)")
-      else
-        log.info(s"connectedComponents: fixpoint after $iter passes")
-      labels
-    } finally {
-      // the returned labels are an eager checkpoint with no lineage into
-      // the staged edges — reclaim the scratch even on a failed fixpoint
-      stagedFin.foreach { fin =>
-        fin.getFileSystem(ses.sessionState.newHadoopConf()).delete(fin, true)
-      }
+      converged = next.filter(col("label") =!= col("prev")).isEmpty
+      releaseCheckpoint(labels)
+      labels = next.select(col("node"), col("label"))
+      iter += 1
     }
+    require(converged,
+      s"connectedComponents: no fixpoint after $maxIter passes (diameter > 2^$maxIter?)")
+    // Iteration count is the scale observable for this operator (passes grow
+    // with log component-diameter, each pass is a full join over the edge
+    // set) — surface it so a production run can alert on diameter growth.
+    // INFO on the normal path; WARN is reserved for a fixpoint that nearly
+    // exhausted the cap (a diameter anomaly worth operator attention).
+    if (iter >= maxIter - 5)
+      log.warn(s"connectedComponents: fixpoint after $iter passes (cap $maxIter)")
+    else
+      log.info(s"connectedComponents: fixpoint after $iter passes")
+    labels
   }
 
   /** Conservative bytes/row of pinned label-iteration state (two long-ish

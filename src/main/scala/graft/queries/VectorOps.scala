@@ -749,8 +749,7 @@ object VectorOps {
   private[graft] def sharedImiAssign(s: SparkSession, dir: String): DataFrame =
     withBuildParallelism(s, dir) {
       CorpusCache.getOrBuild(s, s"ivfimi:$dir")(
-        refinedAssign(imiAssignments(s, dir, augmented(s, dir), "aug",
-          augCount(s, dir))))
+        refinedAssign(imiAssignments(s, dir, augmented(s, dir), augCount(s, dir))))
     }
 
   /** Two-level assignment over the NEAR-TWIN corpus ([[ntAugmented]]) —
@@ -773,7 +772,7 @@ object VectorOps {
   private[graft] def sharedImiAssignNt(s: SparkSession, dir: String): DataFrame =
     withBuildParallelism(s, dir) {
       CorpusCache.getOrBuild(s, s"ivfimint:$dir")(
-        refinedAssign(imiAssignments(s, dir, ntAugmented(s, dir), "nt",
+        refinedAssign(imiAssignments(s, dir, ntAugmented(s, dir),
           Preconditions.longOnce(s, s"rowcount:imi:nt:$dir")(
             ntAugmented(s, dir).count()))))
     }
@@ -796,7 +795,7 @@ object VectorOps {
   /** Memoized augmented-corpus row count — ONE count job per (session,
     * corpus) under ONE key (round 17, the round-16 verdict's #7: the IMI
     * beam sizing counted this relation under `rowcount:imi:aug:` while
-    * the pair-scan band gate counted it again under `rowcount:pairscan:`
+    * the pair-scan width gates counted it again under `rowcount:pairscan:`
     * — a duplicate corpus-count job per session). Column-pruned to a
     * row-count scan.
     */
@@ -929,14 +928,7 @@ object VectorOps {
     // ROW, before the pair-scan exchange, never per candidate). Within
     // one cell key both directions of the anchor argument hold (c(u) and
     // c(v) both live in the joined cell), so the symmetric spelling
-    // applies. Deliberately NOT band-split ([[bandRange]]): a self-join
-    // has no small side to carry the band explode, so the ~1.9× row
-    // inflation would land on a full corpus-sized sketch exchange (+88%
-    // of ~16 GB at the 2×10⁸ tier — straight against the staged run's
-    // binding DISK budget) to cut join-output iteration that was never
-    // this scan's measured wall (the 10⁸ flagship ran 414 s end-to-end,
-    // r13). The probe search, whose probe side dwarfs its member side,
-    // is where the band key pays — see [[probeVerifiedPairs]].
+    // applies.
     // round 16 (the exchange-row narrowing): each side carries ONLY
     // (ck, id, hq, tn, s1) — the sine column and the norm column are gone
     // from the corpus-sized self-join exchange (two 8-byte slots per row
@@ -996,83 +988,6 @@ object VectorOps {
       ((lit(1.0d) - su * su) * (lit(1.0d) - sv * sv) >= d * d - lit(BOUND_EPS))
   }
 
-  /** sin of an angle given its cosine, clamped against float overshoot
-    * (a computed cosine an ulp above 1 must yield 0, not NaN — NaN would
-    * silently PRUNE, breaking the superset guarantee).
-    */
-  private def sinFromCos(c: Column): Column =
-    sqrt(greatest(lit(0.0d), lit(1.0d) - c * c))
-
-  /** Band-split probe join (round 15 — the materialization half of the
-    * angular prune): the tier-0 keep test is, for one side's score
-    * fixed, a pure WINDOW in the other side's score — f(x) = a·x +
-    * sin·sin = cos(θ_a − θ_x) is unimodal with its peak at x = a, so the
-    * keepable partners of a row with score a are exactly x ∈
-    * [cos(θ_a + W), cos(θ_a − W)] with W = acos(ANN_T). Quartile-banding
-    * one side's scores per cell (three per-cell boundaries, a k-row
-    * broadcast) and keying the pair join on (cell, band) — that side
-    * carries its own band, the OTHER side explodes over the bands its
-    * window intersects — means out-of-window candidates are never
-    * MATERIALIZED by the join at all: the same algebra as the scalar
-    * prune, moved from the filter into the equi-join key (at 39k-cell
-    * tiers the τ margin gate admits 96% of rank-2 probes, so join-output
-    * volume — not dot work — is the binding term; BandProbe measured the
-    * quartile key cutting candidate volume 2.13× at a 1.88× explode at
-    * 10⁷, against a 3.1× infinite-band floor — SCALE.md round 15).
-    * The explode must ride the SMALLER side. Output-invariant by the
-    * same superset argument as the prune: a band is skipped only when
-    * every score in it fails the tier-0 window, and tier-0 is a true
-    * upper bound of the exact cosine. [[BAND_PAD]] absorbs double
-    * rounding between the window arithmetic and the per-candidate
-    * filter.
-    */
-  private val BAND_PCTS = Seq(0.25d, 0.5d, 0.75d)
-  private val BAND_PAD = 1e-12
-
-  /** Per-cell quantile boundaries of the member anchor scores: one
-    * broadcastable row per join key — `key` renamed to `as` — carrying
-    * `qs` = [q1, q2, q3]. Derived from the (cached) assignment, so the
-    * extra cost is one O(n)→k aggregate per consumer, paid once per
-    * pair scan it guards.
-    */
-  private def bandBoundaries(assign: DataFrame, key: String, as: String): DataFrame =
-    broadcast(assign.groupBy(col(key).as(as))
-      .agg(percentile(col("s1"), array(BAND_PCTS.map(lit): _*)).as("qs")))
-
-  /** Band of an anchor score against the joined `qs` boundaries: band
-    * b = (q_b, q_{b+1}], open below, with band 0 unbounded below and
-    * band 3 unbounded above. Carried by the side that does NOT explode.
-    */
-  private def bandOf(sv: Column): Column =
-    when(sv > col("qs").getItem(2), lit(3))
-      .when(sv > col("qs").getItem(1), lit(2))
-      .when(sv > col("qs").getItem(0), lit(1))
-      .otherwise(lit(0))
-
-  /** Exploding-side band list: the contiguous run of bands whose score
-    * interval intersects this row's keep window [lo, hi] = cos(θ ±
-    * acos(T)). minb = first band whose UPPER boundary reaches lo, maxb =
-    * last band whose LOWER boundary stays under hi; q1 ≤ q2 ≤ q3 and
-    * lo ≤ hi make minb ≤ maxb always (if minb > 0 then q_minb < lo ≤ hi,
-    * which forces maxb ≥ minb), so the sequence is never empty or
-    * descending.
-    */
-  private def bandRange(sc: Column, sn: Column): Column = {
-    val cw = ANN_T - BOUND_EPS
-    val sw = math.sqrt(math.max(0.0, 1.0 - cw * cw))
-    val lo = sc * lit(cw) - sn * lit(sw) - lit(BAND_PAD)
-    val hi = sc * lit(cw) + sn * lit(sw) + lit(BAND_PAD)
-    val minb = when(col("qs").getItem(0) >= lo, lit(0))
-      .when(col("qs").getItem(1) >= lo, lit(1))
-      .when(col("qs").getItem(2) >= lo, lit(2))
-      .otherwise(lit(3))
-    val maxb = when(col("qs").getItem(2) <= hi, lit(3))
-      .when(col("qs").getItem(1) <= hi, lit(2))
-      .when(col("qs").getItem(0) <= hi, lit(1))
-      .otherwise(lit(0))
-    explode(sequence(minb, maxb))
-  }
-
   /** nprobe=2 verified pairs over an IVF assignment — the probe-search
     * shape shared by `sim_ann_ivf_probe` (coarse chain) and, round 10,
     * `sim_ann_ivf_imi` (the three-level chain's production search: a
@@ -1089,31 +1004,18 @@ object VectorOps {
     * rescores exactly ([[rescoreExact]]).
     */
   private[queries] def probeVerifiedPairs(s: SparkSession, dir: String,
-      assign: DataFrame, forceBands: Option[Boolean] = None): DataFrame = {
+      assign: DataFrame): DataFrame = {
     // round 17: the sketch⋈assignment vec_id join also widens to the
     // derived width — its sort at the session count spilled ~19 GB in
     // the 10⁷ StageProbe run (assignment rows carry the probes array,
     // ~270 B raw). None at gate scale → unchanged.
-    val nSk = pairScanParts(s, augCount(s, dir), EMB_PART_ROWS)
+    val nAug = augCount(s, dir)
+    val nSk = pairScanParts(s, nAug, EMB_PART_ROWS)
     def wsk(df: DataFrame): DataFrame =
       nSk.map(p => df.repartition(p, col("vec_id"))).getOrElse(df)
     val sk = wsk(sharedPairSketch(s, dir))
       .join(wsk(assign.select(col("vec_id"), col("cell"), col("s1"), col("probes"))),
         Seq("vec_id"))
-    // The band key engages WITH the derived width (round 15): at the
-    // gate sfs the width law sits at its p = 2 floor, the probe volume
-    // is the round-13 two-region shape, and the band machinery (the
-    // percentile boundary pass, two broadcast joins, the ~1.9× member
-    // explode, a wider join key) is pure overhead — measured at sf0.1 as
-    // sim_ann_ivf_imi 6.0 → 12.9 s. Past the floor (p > 2, ≳1.6×10⁴
-    // corpus rows) the widened probe volume the key exists to cut is
-    // actually present. Plan-static from the memoized corpus count (the
-    // staticProbeWidth discipline); `forceBands` is the spec seam that
-    // pins BOTH shapes equal at the fixture sf.
-    val nAug = augCount(s, dir)
-    val (widthP, _) = staticProbeWidth(nAug)
-    val banded = forceBands.getOrElse(widthP > 2)
-    val bnd = bandBoundaries(assign, "cell", "pc")
     // Each probe row carries sr = the prober's cosine TO THE PROBED
     // CELL'S OWN FINE CENTROID — s1 for the home region, s1 − mgn_r for
     // a ranked extra region. Both are EXACT, not upper bounds: regions
@@ -1126,18 +1028,16 @@ object VectorOps {
     // and exact on both sides, so the symmetric angular test applies to
     // every ordering — the round-15 first cut's `sv ≤ sr` vacuous-keep
     // escape (needed only if sr merely bounded cos(u, c_pc) from above)
-    // is unnecessary, and each probe row's keepable members form a pure
-    // sv WINDOW, which is what lets the join key on (cell, band).
+    // is unnecessary.
     // round 16 (the exchange-row narrowing): probe rows carry ONLY
-    // (pc[, band], u, ha, ta, sr) — the sine and norm slots are gone from
-    // the ~6×-larger probe side of the measured EXCHANGE+SORT wall (the
-    // sine via [[angularKeep]]'s squared spelling, the norm via the
-    // pre-normalized sketch); the member side drops the same two slots,
-    // computing its band-window sine inline BEFORE the exchange.
+    // (pc, u, ha, ta, sr) — the sine and norm slots are gone from the
+    // ~6×-larger probe side of the measured EXCHANGE+SORT wall (the sine
+    // via [[angularKeep]]'s squared spelling, the norm via the
+    // pre-normalized sketch); the member side drops the same two slots.
     // round 17: `ha`/`hb` are the PACKED binary16 heads (40 vs 88
     // UnsafeRow bytes — see [[sharedPairSketch]]), scored by
     // vec_dot_half under the widened [[SKETCH_EPS]].
-    val probesBase = sk.select(col("cell").as("pc"), col("vec_id").as("u"),
+    val probes = sk.select(col("cell").as("pc"), col("vec_id").as("u"),
         col("hq").as("ha"), col("tn").as("ta"),
         col("s1").as("sr"))
       // margin-gated extra regions (round 11; round 14 — derived width):
@@ -1156,32 +1056,9 @@ object VectorOps {
         .select(col("pr").getField("pc").as("pc"), col("u"),
           col("ha"), col("ta"),
           (col("s1") - col("pr").getField("mgn")).as("sr")))
-    val homeBase = sk.select(col("cell").as("pc"), col("vec_id").as("v"),
+    val home = sk.select(col("cell").as("pc"), col("vec_id").as("v"),
       col("hq").as("hb"), col("tn").as("tb"),
       col("s1").as("sv"))
-    // band-split (round 15, second cut): the join keys on (cell, band)
-    // so out-of-window candidates are never materialized — the prune
-    // moves from the filter into the equi-join key. The probe side
-    // (n·(1 + τ-admitted regions) rows — ~6× the member side at the
-    // 10⁷ tier) carries its OWN band; the ~1.9×-row window explode
-    // ([[bandRange]], measured by BandProbe — the window is symmetric
-    // in (sr, sv), so either side can carry it) rides the MEMBER side,
-    // the ~6×-smaller relation — exploding the probe side instead was
-    // measured to inflate its sort-merge spill past the box's disk at
-    // 10⁷ (SCALE.md round 15).
-    val (probes, home, joinKeys) =
-      if (banded) (
-        probesBase.join(bnd, Seq("pc"))
-          .select(col("pc"), bandOf(col("sr")).as("band"),
-            col("u"), col("ha"), col("ta"), col("sr")),
-        homeBase.join(bnd, Seq("pc"))
-          // the window sine is computed INLINE here, once per member row
-          // before the exchange — it feeds only the band explode and is
-          // never carried
-          .select(col("pc"), bandRange(col("sv"), sinFromCos(col("sv"))).as("band"),
-            col("v"), col("hb"), col("tb"), col("sv")),
-        Seq("pc", "band"))
-      else (probesBase, homeBase, Seq("pc"))
     // Tier-0 angular prune (round 15 — the derived width's cost lever,
     // output-invariant by algebra): sr·sv + sin·sin = cos(θ(u,c_pc) −
     // θ(v,c_pc)) exactly, and cos(u,v) ≤ cos(Δθ) by the spherical
@@ -1207,15 +1084,16 @@ object VectorOps {
     // tier's widthP = 12). Under the session's 32 partitions its sort ran
     // at ~1 GB/task and spilled 37 GB; sized to ~PAIR_PART_ROWS rows the
     // sort fits its execution share. Both sides repartition to the same
-    // (keys, N), so the join reuses these two exchanges — same Exchange
+    // (pc, N), so the join reuses these two exchanges — same Exchange
     // count, wider. Gate corpora derive below the session count → None →
     // plans byte-identical to round 16.
-    val (probesW, homeW) = pairScanParts(s, nAug.toLong * widthP) match {
-      case Some(np) => (probes.repartition(np, joinKeys.map(col): _*),
-        home.repartition(np, joinKeys.map(col): _*))
+    val (widthP, _) = staticProbeWidth(nAug)
+    val (probesW, homeW) = pairScanParts(s, nAug * widthP) match {
+      case Some(np) => (probes.repartition(np, col("pc")),
+        home.repartition(np, col("pc")))
       case None => (probes, home)
     }
-    val cand = probesW.join(homeW, joinKeys)
+    val cand = probesW.join(homeW, Seq("pc"))
       .filter(col("u") =!= col("v"))
       .filter(angularKeep(col("sr"), col("sv")) &&
         (dotHalf(col("ha"), col("hb")) + col("ta") * col("tb") >=
@@ -1364,7 +1242,7 @@ object VectorOps {
 
   private[queries] def imiAssignProbe(s: SparkSession, dir: String): DataFrame = {
     register(s)
-    imiAssignments(s, dir, augmented(s, dir), "aug", augCount(s, dir))
+    imiAssignments(s, dir, augmented(s, dir), augCount(s, dir))
   }
 
   /** The two-level assignment chain. Fine centroids are the seed codebook
@@ -1466,7 +1344,7 @@ object VectorOps {
     * with its margin — these chains' region structure is one level deep,
     * so their probe search keeps the round-11 nprobe=2 shape, expressed
     * in the shared (pc, mgn)-array contract the probe consumers read
-    * (the IMI chain's list is the derived-width [[probeWidth]] one).
+    * (the IMI chain's list is the derived-width [[staticProbeWidth]] one).
     * Empty when k = 1 leaves no runner-up.
     */
   private def rankTwoProbes: Column =
@@ -1488,10 +1366,10 @@ object VectorOps {
         .otherwise(c + 1).as("k"))
   }
 
-  /** Ceiling of the DERIVED probe width [[probeWidth]] — the law's clamp,
-    * not a buffer width (round 15): the ArgTopN beams size their
-    * plan-static buffers to the CORPUS-derived width ([[staticProbeWidth]]),
-    * so the ceiling costs nothing at tiers where the law stays under it.
+  /** Ceiling of the derived probe width [[staticProbeWidth]] — the law's
+    * clamp, not a buffer width (round 15): the ArgTopN beams size their
+    * buffers to the corpus-derived width, so the ceiling costs nothing at
+    * tiers where the law stays under it.
     * 32 covers the k^(1/4) law through k = 32⁴ = 1,048,576 cells — the
     * ~10⁹-vector regime at TARGET_CELL the law exists for (the round-14
     * cap of 16 saturated at k = 65,536, an order of magnitude under the
@@ -1508,20 +1386,35 @@ object VectorOps {
     */
   private[queries] val L1_BEAM_CAP = 8
 
-  /** Plan-static twin of [[probeWidth]]'s law over an exact corpus count:
-    * k = max(MIN_CENTROIDS, ⌈n/TARGET_CELL⌉), p = min(PROBE_CAP, max(2,
-    * ⌈k^(1/4)⌉)), b1 = min(L1_BEAM_CAP, ⌈√p⌉) — the same quartic-snapped
-    * integer-exact arithmetic as the Column spelling (pinned equal across
-    * the law's k frames in QueryInvariantSpec). Used ONLY to size the
-    * ArgTopN beam BUFFERS, which are plan-static by nature: the runtime
-    * slice still reads the broadcast [[probeWidth]] frame, and both
-    * derive from the same corpus count (memoized once per session/chain —
-    * the erQ/Bloom-capacity discipline), so buffer width == sliced width
-    * at every tier. Sizing the buffer to the tier's own p is what makes
-    * the PROBE_CAP = 32 ceiling free: a gate corpus plans 2-slot buffers,
-    * the 10⁷ tier 12, and only a ~10⁹-vector corpus pays the full 32 —
-    * under the round-14 static PROBE_CAP-wide buffer every tier paid the
-    * ceiling's per-group aggregation state.
+  /** The derived probe width (round 14 — replacing the fixed two-region
+    * probe whose 10⁷ emission-band recall ceiling, 0.9217, sat under the
+    * 0.95 governance floor; SCALE.md round 13), from an exact corpus
+    * count n:
+    *   k  = max(MIN_CENTROIDS, ⌈n/TARGET_CELL⌉) — the cell count,
+    *   p  = min(PROBE_CAP, max(2, ⌈k^(1/4)⌉))  — the searched regions,
+    *   b1 = min(L1_BEAM_CAP, ⌈√p⌉)             — the level-1 beam.
+    * The k^(1/4) law is the FAISS discipline of growing nprobe with the
+    * cell count, pinned to the IMI chain's cost algebra: the descent
+    * explores b1·k^(1/3) level-2 candidates and p·k^(1/3) fine
+    * candidates per vector, so assignment stays O(n·k^(1/3+1/4)·d) ≪
+    * O(n·√k·d) (the two-level chain it undercuts), and the probe join's
+    * candidate volume grows as p·E[cell] with the τ margin gate pruning
+    * the clear-winner majority of extra regions. At k = 16 (every gate
+    * sf) the law lands exactly on p = 2, b1 = 2 — the round-13 probe
+    * shape. ⌈k^(1/4)⌉ is quartic-snapped like [[cbrtCeil]] (libm pow is
+    * not correctly rounded; exact fourth-power comparisons land on the
+    * true ceiling whenever the estimate is within ±1); ⌈√p⌉ is
+    * IEEE-exact. The DuckDB twin of `sim_ann_ivf_imi` spells the same law
+    * in SQL over its own count.
+    *
+    * (p, b1) are the ArgTopN beam widths of [[imiAssignments]] — plan-
+    * static by nature, and exactly the number of slots each beam emits,
+    * so nothing is sliced at run time. The count is memoized once per
+    * session and corpus (the erQ/Bloom-capacity discipline). Sizing the
+    * beams to the tier's own p is what makes the PROBE_CAP = 32 ceiling
+    * free: a gate corpus plans 2-slot buffers, the 10⁷ tier 12, and only
+    * a ~10⁹-vector corpus pays the full 32. [[probeVerifiedPairs]] sizes
+    * its probe-side exchange from the same p.
     */
   private[queries] def staticProbeWidth(n: Long): (Int, Int) = {
     val k = math.max(MIN_CENTROIDS.toLong,
@@ -1535,38 +1428,6 @@ object VectorOps {
     val b1 = math.min(L1_BEAM_CAP.toLong,
       math.ceil(math.sqrt(p.toDouble)).toLong).toInt
     (p, b1)
-  }
-
-  /** The derived probe-width frame (round 14 — replacing the fixed
-    * two-region probe whose 10⁷ emission-band recall ceiling, 0.9217,
-    * sat under the 0.95 governance floor; SCALE.md round 13): from the
-    * cell-count frame `nk`, one broadcastable row
-    *   p  = min(PROBE_CAP, max(2, ⌈k^(1/4)⌉))  — the searched regions,
-    *   b1 = min(L1_BEAM_CAP, ⌈√p⌉)             — the level-1 beam.
-    * The k^(1/4) law is the FAISS discipline of growing nprobe with the
-    * cell count, pinned to this chain's cost algebra: the descent
-    * explores b1·k^(1/3) level-2 candidates and p·k^(1/3) fine
-    * candidates per vector, so assignment stays O(n·k^(1/3+1/4)·d) ≪
-    * O(n·√k·d) (the two-level chain it undercuts), and the probe join's
-    * candidate volume grows as p·E[cell] with the τ margin gate pruning
-    * the clear-winner majority of extra regions. At k = 16 (every gate
-    * sf) the law lands exactly on p = 2, b1 = 2 — the round-13 probe
-    * shape, so gate outputs are bit-identical to the fixed-nprobe round.
-    * ⌈k^(1/4)⌉ is quartic-snapped like [[cbrtCeil]] (libm pow is not
-    * correctly rounded; exact BIGINT fourth-power comparisons make both
-    * engines land on the true ceiling whenever the estimate is within
-    * ±1); ⌈√p⌉ is IEEE-exact.
-    */
-  private[queries] def probeWidth(nk: DataFrame): DataFrame = {
-    val c = round(pow(col("k").cast(DoubleType), lit(0.25))).cast(LongType)
-    nk.select(
-        when((c - 1) * (c - 1) * (c - 1) * (c - 1) >= col("k"), c - 1)
-          .when(c * c * c * c >= col("k"), c)
-          .otherwise(c + 1).as("q"))
-      .select(least(lit(PROBE_CAP.toLong), greatest(lit(2L), col("q"))).as("p"))
-      .select(col("p"),
-        least(lit(L1_BEAM_CAP.toLong),
-          ceil(sqrt(col("p").cast(DoubleType))).cast(LongType)).as("b1"))
   }
 
   /** The three-level (IMI-shaped) assignment chain: descend level-1
@@ -1593,15 +1454,13 @@ object VectorOps {
     * vector can strand, mirroring [[coarseAssignments]]'s coarseNE.
     */
   private def imiAssignments(s: SparkSession, dir: String, emb: DataFrame,
-      tag: String, nRows: => Long): DataFrame = {
+      nRows: => Long): DataFrame = {
     val nk = emb.agg(greatest(lit(MIN_CENTROIDS.toLong),
       ceil(count(lit(1)).cast(DoubleType) / lit(TARGET_CELL))).as("k"))
-    // plan-static ArgTopN buffer widths from the memoized corpus count —
-    // the same law as the broadcast probeWidth frame (integer-exact twin,
-    // spec-pinned equal), so the runtime slice never outruns the buffer.
-    // The count arrives MEMOIZED from the caller (round 17, verdict #7:
-    // the augmented chain shares [[augCount]]'s key with the pair-scan
-    // gates — one count job per session per corpus, not one per concern).
+    // ArgTopN beam widths from the count of `emb`, which arrives MEMOIZED
+    // from the caller (round 17, verdict #7: the augmented chain shares
+    // [[augCount]]'s key with the pair-scan gates — one count job per
+    // session per corpus, not one per concern).
     val (capP, capB1) = staticProbeWidth(nRows)
     val k1df = cbrtCeil(nk)
     val k2df = k1df.select((col("k") * col("k")).as("k"))
@@ -1642,28 +1501,24 @@ object VectorOps {
     // that probing one adds ZERO recall: truth pairs that separate,
     // separate at levels 1–2, where the menus don't overlap at all).
     // Round 14: the region count p derives from the cell count
-    // ([[probeWidth]] — the fixed p = 2 left the 10⁷ emission-band
+    // ([[staticProbeWidth]] — the fixed p = 2 left the 10⁷ emission-band
     // recall ceiling at 0.9217 against the 0.95 governance floor), so
-    // the beams are the sort-free ArgTopN collapse sliced to (b1, p) at
-    // projection time; identical vectors take identical decisions at
-    // every step, so planted twins still co-assign. Cost: O((b1+p+2)·
+    // the beams are the sort-free ArgTopN collapse at widths (b1, p),
+    // each emitting exactly that many (null-padded) slots; identical
+    // vectors take identical decisions at every step, so planted twins
+    // still co-assign. Cost: O((b1+p+2)·
     // n·k^(1/3)·d) chain candidates — k^(1/4+1/3) per vector, still
     // k^(1/6)/k^(1/4)-factors under the two-level chain's O(n·√k·d).
-    val pb = probeWidth(nk)
     val v1 = withNorm(emb).crossJoin(broadcast(l1ne))
       .withColumn("cs", dot(col("embedding"), col("e1")) / (col("nrm") * col("n1")))
       .groupBy(col("vec_id")).agg(argTopN(col("cs"), col("g1"), capB1).as("tops"))
-      .crossJoin(broadcast(pb))
-      .select(col("vec_id"),
-        explode(slice(col("tops"), lit(1), col("b1").cast(IntegerType))).as("t"))
+      .select(col("vec_id"), explode(col("tops")).as("t"))
       .filter(col("t").isNotNull)
       .select(col("vec_id"), col("t").getField("cid").as("g1"))
     val v2 = withNorm(emb).join(v1, Seq("vec_id")).join(broadcast(l2ne), Seq("g1"))
       .withColumn("cs", dot(col("embedding"), col("e2")) / (col("nrm") * col("n2")))
       .groupBy(col("vec_id")).agg(argTopN(col("cs"), col("g2"), capP).as("tops"))
-      .crossJoin(broadcast(pb))
-      .select(col("vec_id"),
-        explode(slice(col("tops"), lit(1), col("p").cast(IntegerType))).as("t"))
+      .select(col("vec_id"), explode(col("tops")).as("t"))
       .filter(col("t").isNotNull)
       .select(col("vec_id"), col("t").getField("cid").as("g2"))
     val fineCand = withNorm(emb).join(v2, Seq("vec_id")).join(broadcast(fgrp), Seq("g2"))
@@ -1689,7 +1544,6 @@ object VectorOps {
     // hot-cell split key and the margin-distribution stat).
     val s1 = col("tops").getItem(0).getField("cs")
     winners.groupBy(col("vec_id")).agg(argTopN(col("cs"), col("cid"), capP).as("tops"))
-      .crossJoin(broadcast(pb))
       .select(col("vec_id"),
         col("tops").getItem(0).getField("cid").as("cell"),
         get(col("tops"), lit(1)).getField("cid").as("cell2"),
@@ -1700,7 +1554,7 @@ object VectorOps {
         // [[probeVerifiedPairs]])
         s1.as("s1"),
         transform(
-          filter(slice(col("tops"), lit(2), (col("p") - 1).cast(IntegerType)),
+          filter(slice(col("tops"), lit(2), lit(capP - 1)),
             t => t.isNotNull),
           t => struct(t.getField("cid").as("pc"),
             (s1 - t.getField("cs")).as("mgn"))).as("probes"))
@@ -1834,16 +1688,7 @@ object VectorOps {
     // survivors exactly — output identical to inline exact scoring.
     "sim_ann_ivf_probe" -> ((s, dir) => {
       register(s)
-      // round 17 (the r16 verdict's #6): the coarse chain's probe list is
-      // FIXED at the rank-2 shape (one runner-up region per vector —
-      // [[assignCells]]'s rankTwoProbes), so the width-law gate that
-      // engages the band key past ~1.6×10⁴ rows would buy the boundary
-      // pass, two broadcast joins and the ~1.9× member explode to cut a
-      // widened probe volume this chain never materializes. Bands stay
-      // the IMI (derived-width) chain's lever; output-invariant either
-      // way (QueryInvariantSpec pins banded ≡ unbanded candidates).
-      probeVerifiedPairs(s, dir, sharedCoarseAssign(s, dir),
-        forceBands = Some(false))
+      probeVerifiedPairs(s, dir, sharedCoarseAssign(s, dir))
         .select(col("i"), col("j"), round(col("cos"), 6).as("cosine"))
     }),
 

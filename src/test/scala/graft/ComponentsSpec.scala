@@ -55,34 +55,6 @@ class ComponentsSpec extends SparkSpec {
     assert(live() <= 2, s"${live()} checkpointed RDDs alive after a ~6-pass closure")
   }
 
-  test("staged edge mode: identical labels, zero pinned edge blocks, " +
-    "scratch reclaimed on return") {
-    // Round 15 (verdict #4): SPARK_GRAFT_STAGE_DIR extends to the closure —
-    // the symmetrized edge set publishes to parquet (rename-swapped) and
-    // the passes read the scan, so edge state leaves the block manager and
-    // the caller's candidate/verify build lineage becomes GC-able. Pins:
-    // (a) labels are identical to the checkpoint mode's; (b) no .tmp- or
-    // cc-edges- path survives the call (the scratch is reclaimed even
-    // though the RESULT outlives it — labels are an eager checkpoint);
-    // (c) the loop's steady-state pinned-RDD discipline still holds (the
-    // edges no longer contribute a pinned entry at all).
-    val dir = java.nio.file.Files.createTempDirectory("cc-staged").toString
-    try {
-      val chain = (0L until 40L).map(k => (k, k + 1))
-      val clique = for { a <- 500L until 505L; b <- (a + 1) until 505L } yield (a, b)
-      val edges = (chain ++ clique).toDF("i", "j")
-      val want = Components.connectedComponents(edges, stageDir = None)
-        .as[(Long, Long)].collect().toMap
-      val got = Components.connectedComponents(edges, stageDir = Some(dir))
-        .as[(Long, Long)].collect().toMap
-      assert(got === want, "staged and checkpointed closures must agree")
-      val leftover = new java.io.File(dir).listFiles().map(_.getName).toSeq
-      assert(leftover.isEmpty, s"staged edge scratch must be reclaimed: $leftover")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
-  }
-
   test("edge direction does not matter (symmetrized internally)") {
     val reversed = Seq((3L, 2L), (2L, 1L), (1L, 0L)).toDF("i", "j")
     val labels = Components.connectedComponents(reversed)

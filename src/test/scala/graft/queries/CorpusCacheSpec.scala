@@ -1,5 +1,9 @@
 package graft.queries
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import org.apache.spark.storage.StorageLevel
 
@@ -123,6 +127,17 @@ class CorpusCacheSpec extends SparkSpec {
       CorpusCache.stageDirOverride = None
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
+  }
+
+  test("CorpusCache is the only file under src/main that reads the stage dir") {
+    // the staged index mode is the one scratch-bounded path: staging the
+    // closure's edge set measured as a dead end at 50M names (SCALE.md)
+    val reads = "SPARK_GRAFT_STAGE_DIR".r
+    val files = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => reads.findFirstIn(Files.readString(p)).nonEmpty)
+      .map(p => p.toString).toSeq
+    assert(files == Seq(Paths.get("src/main/scala/graft/queries/CorpusCache.scala").toString))
   }
 
   test("a cache hit refreshes recency: the re-touched key survives eviction") {

@@ -537,12 +537,12 @@ class PlanShapeSpec extends SparkSpec {
       s"two-level assignment must materialize <75% of flat's candidates: coarse=$coarse flat=$flat")
     // three-level descent, cross-join side — UNCONDITIONAL O(n·k^(1/3))
     // bound: three seed builds + l2×l1 (9·3) + fine×l1 (16·3) +
-    // vector×l1 n·3 ≈ 5800, plus (round 14) the three 1-row derived-
-    // width frame fan-outs (v1, v2, emission each crossJoin the
-    // broadcast (p, b1) row — n rows out apiece, 3n = 3000 here; O(n)
-    // constants, never candidate-quadratic): ≈ 8800 measured; assert
-    // < 12000. Round 10: the descent is two-REGION at this fixture's
-    // derived p = 2 (top-2 kept at levels 1 and 2 so `cell2` is the
+    // vector×l1 n·3 ≈ 5800 (5784 measured); assert < 7000. The beams
+    // read their widths from the plan, not from a broadcast (p, b1) row:
+    // with the three 1-row frame fan-outs (n rows out apiece, 3n = 3000)
+    // this side measured 8784, which the bound rejects. Round 10: the
+    // descent is two-REGION at this fixture's derived p = 2 (top-2 kept
+    // at levels 1 and 2 so `cell2` is the
     // second-best level-2 cell's winner — the nprobe=2 probe target),
     // which doubles the level-2 and fine BHJ stages: ceiling at this
     // fixture is 2n·(l2 per g1 ≤ 3) + 2n·(fine per g2 ≤ 2) + three
@@ -553,8 +553,8 @@ class PlanShapeSpec extends SparkSpec {
     // may pay its constant factor but must never re-quadratize; the
     // shape's payoff is measured at the 10⁶/10⁷ probes where k^(1/3)/√k
     // is 27/140.
-    assert(imiBnlj < 12000L,
-      s"IMI cross-join stages must stay O(n·k^(1/3)) + O(n) frame fan-outs: bnlj=$imiBnlj")
+    assert(imiBnlj < 7000L,
+      s"IMI cross-join stages must stay O(n·k^(1/3)) with no frame fan-outs: bnlj=$imiBnlj")
     assert(imiBhj < 16000L,
       s"IMI two-region menu/rejoin stages must stay O(n·k^(1/3)): bhj=$imiBhj")
     assert(imiBnlj + imiBhj < 2 * flat,

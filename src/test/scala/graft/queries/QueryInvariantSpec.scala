@@ -222,52 +222,37 @@ class QueryInvariantSpec extends SparkSpec {
     // the gate fixtures (k = 16 → the round-13 p = 2 shape, which is why
     // every gate hash survived this round unchanged), the measured probe
     // tiers, exact fourth powers (the libm-snap boundary), and the
-    // capacity clamps.
+    // capacity clamps. Each k frame is the corpus count n = k·1024 (one
+    // TARGET_CELL per cell), so k = ⌈n/1024⌉ exactly.
     import spark.implicits._
-    def pb(k: Long): (Long, Long) = {
-      val r = VectorOps.probeWidth(Seq(k).toDF("k")).collect()(0)
-      (r.getLong(0), r.getLong(1))
-    }
-    assert(pb(16L) === ((2L, 2L)), "gate fixtures: the round-13 probe shape")
-    assert(pb(80L) === ((3L, 2L)))
-    assert(pb(2401L) === ((7L, 3L)), "exact fourth power: 7^4 must give 7, not 8")
-    assert(pb(2402L) === ((8L, 3L)))
-    assert(pb(19532L) === ((12L, 4L)), "the 10^7 augmented tier")
-    assert(pb(39063L) === ((15L, 4L)), "the 10^7 near-twin tier")
+    def pb(k: Long): (Int, Int) = VectorOps.staticProbeWidth(k * 1024L)
+    assert(pb(16L) === ((2, 2)), "gate fixtures: the round-13 probe shape")
+    assert(pb(80L) === ((3, 2)))
+    assert(pb(2401L) === ((7, 3)), "exact fourth power: 7^4 must give 7, not 8")
+    assert(pb(2402L) === ((8, 3)))
+    assert(pb(19532L) === ((12, 4)), "the 10^7 augmented tier")
+    assert(pb(39063L) === ((15, 4)), "the 10^7 near-twin tier")
     // round 15: PROBE_CAP lifted 16 → 32 (the old cap saturated the law at
     // k = 65536 ≈ 7·10^7 vectors, an order of magnitude under the 10^9
     // regime it cites) — these frames span the old clamp, the new exact
     // fourth-power boundary, and the new clamp
-    assert(pb(65536L) === ((16L, 4L)), "the old cap's k: the law now passes through")
-    assert(pb(65537L) === ((17L, 5L)), "first k past the old clamp")
-    assert(pb(1048576L) === ((32L, 6L)), "exact fourth power 32^4: the 10^9-vector regime")
-    assert(pb(1048577L) === ((32L, 6L)), "capacity clamp engages")
-    assert(pb(4000000000L) === ((32L, 6L)), "clamped at PROBE_CAP past 10^12 vectors")
-    // the PLAN-STATIC twin (buffer-width law) must agree with the Column
-    // law at every corpus size — buffer width == runtime slice width is
-    // what lets the ArgTopN beams size to the tier instead of the ceiling.
-    // n frames chosen so k crosses the MIN_CENTROIDS floor, the gate
-    // shape, both measured probe tiers, and both clamps.
-    for (n <- Seq(1L, 2000L, 16384L, 200000L, 20000000L, 40000000L,
-        67108864L, 1073741824L, 2000000000L)) {
-      val k = math.max(16L, (n + 1023L) / 1024L)
-      assert(VectorOps.staticProbeWidth(n) ===
-        ((pb(k)._1.toInt, pb(k)._2.toInt)),
-        s"static/Column probe-width law drift at n=$n (k=$k)")
-    }
-    // round 16 (round-15 verdict #6): the band key's ENGAGEMENT boundary,
-    // pinned via the same predicate probeVerifiedPairs evaluates
-    // (staticProbeWidth(n)._1 > 2) — a regression flipping the gate
-    // constant would either silently re-tax every gate sf with the band
-    // machinery or silently un-band the 10⁷ tier. p = 2 holds through
-    // k = 16 (n ≤ 16·1024) and the first count past that floor derives
-    // p = 3.
+    assert(pb(65536L) === ((16, 4)), "the old cap's k: the law now passes through")
+    assert(pb(65537L) === ((17, 5)), "first k past the old clamp")
+    assert(pb(1048576L) === ((32, 6)), "exact fourth power 32^4: the 10^9-vector regime")
+    assert(pb(1048577L) === ((32, 6)), "capacity clamp engages")
+    assert(pb(4000000000L) === ((32, 6)), "clamped at PROBE_CAP past 10^12 vectors")
+    // the p = 2 floor that the ArgTopN beam buffers and the probe join's
+    // pairScanParts width key on: it holds from an empty-ish corpus (k at
+    // the MIN_CENTROIDS floor) through exactly k = 16 (n ≤ 16·1024), and
+    // the first count past it derives p = 3
+    assert(VectorOps.staticProbeWidth(1L)._1 === 2,
+      "a corpus under one cell's worth sits on the MIN_CENTROIDS floor")
     assert(VectorOps.staticProbeWidth(4000L)._1 === 2,
-      "gate-sf corpus counts must NOT engage the band key")
+      "gate-sf corpus counts sit on the p = 2 floor")
     assert(VectorOps.staticProbeWidth(16384L)._1 === 2,
       "the p = 2 floor holds through exactly k = 16")
     assert(VectorOps.staticProbeWidth(16385L)._1 === 3,
-      "the first count past the floor must engage the band key")
+      "the first count past the floor derives p = 3")
     // the emitted probe list obeys the law on the fixture: ranked extra
     // regions only (home excluded), margins non-negative and monotone,
     // and rank-2 consistent with the compat columns (cell2, mgn)
@@ -961,80 +946,50 @@ class QueryInvariantSpec extends SparkSpec {
       s"nprobe=2 lost ${(one -- two).size} nprobe=1 pairs")
   }
 
-  test("banded probe search equals the exact probe-space replay; the window " +
-      "join skips real bands") {
-    // round 15 second cut: the probe join keys on (cell, band) and each
-    // probe row explodes only over the member-score bands its angular keep
-    // window intersects. Two claims, both executed: (a) the banded search's
-    // verified output equals a full-precision replay of the entire probe
-    // candidate space (home ∪ margin-gated regions) with NO sketch, NO
-    // bands, NO tier-0 — the window may only ever skip candidates the
-    // exact rescore would discard; (b) the window is non-vacuous on this
-    // fixture — some probe rows join strictly fewer than all four bands.
+  test("probe search equals the exact probe-space replay on both assignment chains") {
+    // the probe join keys on the probed cell alone and prunes candidates
+    // by the tier-0 angular bound and the tier-1 sketch bound. Both are
+    // true upper bounds of the exact cosine, so over each production
+    // assignment — the IMI chain under sim_ann_ivf_imi, the coarse chain
+    // under sim_ann_ivf_probe — the verified output must equal a
+    // full-precision replay of the entire probe candidate space (home ∪
+    // margin-gated regions) with NO sketch and NO tier-0.
     VectorOps.register(spark)
     def vdot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       call_function("vec_dot", a, b)
-    val assign = VectorOps.sharedImiAssign(spark, dir)
     val base = graft.Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val aug = base.unionByName(
       base.select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
     val n = aug.withColumn("nrm", sqrt(vdot(col("embedding"), col("embedding"))))
-    val probeSpace = assign.select($"vec_id".as("u"), $"cell".as("pc"))
-      .unionByName(assign
-        .select($"vec_id".as("u"), explode($"probes").as("pr"))
-        .filter($"pr.mgn" <= VectorOps.PROBE_MARGIN_T)
-        .select($"u", $"pr.pc".as("pc")))
-    val exact = probeSpace
-      .join(n.select($"vec_id".as("u"), $"embedding".as("ea"), $"nrm".as("na")), Seq("u"))
-      .join(assign.select($"cell".as("pc"), $"vec_id".as("v"))
-        .join(n.select($"vec_id".as("v"), $"embedding".as("eb"), $"nrm".as("nb")), Seq("v")),
-        Seq("pc"))
-      .filter($"u" =!= $"v")
-      .withColumn("cos", vdot($"ea", $"eb") / ($"na" * $"nb"))
-      .filter($"cos" >= 0.999)   // = ANN_T
-      .select(least($"u", $"v").as("i"), greatest($"u", $"v").as("j"))
-      .distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // both shapes of the width-gated switch (bands engage only past the
-    // p = 2 floor in production — forceBands pins each side at this sf)
-    val banded = VectorOps.probeVerifiedPairs(spark, dir, assign, Some(true))
-      .select("i", "j")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val unbanded = VectorOps.probeVerifiedPairs(spark, dir, assign, Some(false))
-      .select("i", "j")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(exact.nonEmpty, "fixture should contain planted duplicate pairs")
-    assert(banded === exact,
-      s"banded: lost ${(exact -- banded).size}, gained ${(banded -- exact).size}")
-    assert(unbanded === exact,
-      s"unbanded: lost ${(exact -- unbanded).size}, gained ${(unbanded -- exact).size}")
-    // (b) real skipping: recompute each MEMBER row's joined-band count (the
-    // member side carries the window explode — the probe side, the larger
-    // relation, carries its own band) from the quartile boundaries and the
-    // window algebra (the test-side twin of bandRange); on a random 64-d
-    // fixture the ±acos(0.999) ≈ 2.56° window is far narrower than a cell's
-    // angular extent, so many member rows must join a strict subset of the
-    // bands.
-    val bnd = assign.groupBy($"cell".as("pc"))
-      .agg(percentile($"s1", array(lit(0.25), lit(0.5), lit(0.75))).as("qs"))
-    val cw = 0.999 - 1e-9
-    val sw = math.sqrt(1.0 - cw * cw)
-    val pr = assign.select($"cell".as("pc"), $"s1".as("sv"))
-      .join(bnd, Seq("pc"))
-      .withColumn("snv", sqrt(greatest(lit(0.0), lit(1.0) - $"sv" * $"sv")))
-      .withColumn("lo", $"sv" * lit(cw) - $"snv" * lit(sw) - lit(1e-12))
-      .withColumn("hi", $"sv" * lit(cw) + $"snv" * lit(sw) + lit(1e-12))
-      .withColumn("minb",
-        when($"qs".getItem(0) >= $"lo", 0).when($"qs".getItem(1) >= $"lo", 1)
-          .when($"qs".getItem(2) >= $"lo", 2).otherwise(3))
-      .withColumn("maxb",
-        when($"qs".getItem(2) <= $"hi", 3).when($"qs".getItem(1) <= $"hi", 2)
-          .when($"qs".getItem(0) <= $"hi", 1).otherwise(0))
-    assert(pr.filter($"minb" > $"maxb").count() === 0,
-      "the band window must never be empty (minb ≤ maxb by construction)")
-    val narrowed = pr.filter($"maxb" - $"minb" < 3).count()
-    assert(narrowed > 0,
-      "the window join must skip at least one band for some member row")
+    def replay(assign: org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
+      val probeSpace = assign.select($"vec_id".as("u"), $"cell".as("pc"))
+        .unionByName(assign
+          .select($"vec_id".as("u"), explode($"probes").as("pr"))
+          .filter($"pr.mgn" <= VectorOps.PROBE_MARGIN_T)
+          .select($"u", $"pr.pc".as("pc")))
+      probeSpace
+        .join(n.select($"vec_id".as("u"), $"embedding".as("ea"), $"nrm".as("na")), Seq("u"))
+        .join(assign.select($"cell".as("pc"), $"vec_id".as("v"))
+          .join(n.select($"vec_id".as("v"), $"embedding".as("eb"), $"nrm".as("nb")), Seq("v")),
+          Seq("pc"))
+        .filter($"u" =!= $"v")
+        .withColumn("cos", vdot($"ea", $"eb") / ($"na" * $"nb"))
+        .filter($"cos" >= 0.999)   // = ANN_T
+        .select(least($"u", $"v").as("i"), greatest($"u", $"v").as("j"))
+        .distinct()
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    for ((chain, assign) <- Seq(
+        "imi" -> VectorOps.sharedImiAssign(spark, dir),
+        "coarse" -> VectorOps.sharedCoarseAssign(spark, dir))) {
+      val exact = replay(assign)
+      val got = VectorOps.probeVerifiedPairs(spark, dir, assign)
+        .select("i", "j")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(exact.nonEmpty, s"$chain: fixture should contain planted duplicate pairs")
+      assert(got === exact,
+        s"$chain: lost ${(exact -- got).size}, gained ${(got -- exact).size}")
+    }
   }
 
   test("quantized rescore output equals the exact IVF output") {
