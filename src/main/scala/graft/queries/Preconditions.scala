@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * and er_entity_clusters' 60-bit node handles must be injective over the
   * name universe. Those checks are O(n) Spark jobs, and construction
   * happens far more often than the corpus changes — plan-only consumers
-  * (ExplainDump, the plan-shape specs) build the DataFrame just to inspect
+  * (ExplainOne, the plan-shape specs) build the DataFrame just to inspect
   * it, and the gate drivers rebuild per query. Memoizing per
   * (session, key) makes every construction after the first free while
   * keeping the guarantee: within one session a given corpus dir is checked

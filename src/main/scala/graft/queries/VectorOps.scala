@@ -589,11 +589,12 @@ object VectorOps {
 
   /** IVF scale parameters (round-5 advice: a FIXED k means cell size grows
     * O(n/k) and the within-cell pair join re-quadratizes as the corpus
-    * grows). k now derives from the corpus: k = max(MIN_CENTROIDS,
-    * ceil(n / TARGET_CELL)), computed as a broadcast 1-row aggregate — no
-    * driver-side action — so expected cell membership stays ~TARGET_CELL at
-    * any scale (10⁹ vectors → ~10⁶ cells). On the test fixture the derived
-    * k is exactly MIN_CENTROIDS, so the gates pin the same partitioning.
+    * grows). k now derives from the corpus: k = [[cellCount]](n), worked
+    * out on the driver from the one memoized base count [[embCount]] and
+    * planned as a literal, so expected cell membership stays ~TARGET_CELL
+    * at any scale (10⁹ vectors → ~10⁶ cells). On the test fixture the
+    * derived k is exactly MIN_CENTROIDS, so the gates pin the same
+    * partitioning.
     *
     * CELL_CAP is the hot-cell guard (SemDeDup's own split discipline): a
     * cell with more members than the cap — skewed data piling onto one
@@ -606,6 +607,32 @@ object VectorOps {
   private val MIN_CENTROIDS = 16
   private val TARGET_CELL = 1024.0d
   private[queries] val CELL_CAP = 4096L
+
+  /** The cell-count law k = max(MIN_CENTROIDS, ⌈n/TARGET_CELL⌉) — its only
+    * Scala spelling (the DuckDB oracle SQL spells it over its own count).
+    */
+  private[queries] def cellCount(n: Long): Long =
+    math.max(MIN_CENTROIDS.toLong, (n + TARGET_CELL.toLong - 1L) / TARGET_CELL.toLong)
+
+  /** Memoized base-corpus row count — ONE count job per (session, corpus).
+    * Every IVF size derives from it: [[augmented]] is exactly 2× the base
+    * ([[augCount]]) and [[ntAugmented]] exactly 4×, both being unions of
+    * whole copies. Column-pruned to a row-count scan.
+    */
+  private[queries] def embCount(s: SparkSession, dir: String): Long =
+    Preconditions.longOnce(s, s"rowcount:emb:$dir")(Tables.embeddings(s, dir).count())
+
+  /** Integer-exact ⌈k^(1/r)⌉: libm `pow` is not correctly rounded (unlike
+    * sqrt, which IEEE 754 requires exact), so the rounded estimate is
+    * snapped with exact integer r-th-power comparisons — the true ceiling
+    * whenever the estimate is within ±1 (any libm is). The DuckDB twins
+    * spell the same snap in SQL.
+    */
+  private[queries] def ceilRoot(k: Long, r: Int): Long = {
+    def pow(c: Long): Long = Iterator.fill(r)(c).product
+    val c = math.round(math.pow(k.toDouble, 1.0 / r))
+    if (pow(c - 1) >= k) c - 1 else if (pow(c) >= k) c else c + 1
+  }
 
   /** Hash-ranked seed codebook (round 9): EXACTLY `k` centroid rows —
     * the `k` smallest (md5-hash, vec_id) pairs of a 4×-oversampled
@@ -622,24 +649,26 @@ object VectorOps {
     * rank window sorts only the ~4k-row oversample (codebook-training
     * scale, never the corpus). The 4× oversample puts the undersample
     * probability below e^{-k/3} (Chernoff) — deterministic per corpus,
-    * not flaky.
+    * not flaky. The base corpus is always the embeddings table; k and the
+    * base count [[embCount]] arrive as driver Longs, so the threshold and the
+    * rank cut are plan literals (the threshold keeps the oracle's
+    * double-operation order, so both engines compute the same bound).
     */
-  private def hashSeeds(base: DataFrame, kdf: DataFrame, tag: String): DataFrame = {
-    val nb = base.agg(count(lit(1)).cast(DoubleType).as("nb"))
+  private def hashSeeds(s: SparkSession, dir: String, k: Long, tag: String): DataFrame = {
     val w = Window.orderBy(col("hs").asc, col("vec_id").asc)
-    base.crossJoin(broadcast(kdf)).crossJoin(broadcast(nb))
+    Tables.embeddings(s, dir)
       .withColumn("hs",
         graft.functions.TextFns.md5Hash60(
           concat(lit(tag + ":"), col("vec_id").cast(StringType))) % lit(1000000L))
-      .filter(col("hs") < ceil(lit(4000000.0d) * col("k") / col("nb")))
+      .filter(col("hs") < lit(math.ceil(4000000.0d * k / embCount(s, dir).toDouble).toLong))
       .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= col("k"))
+      .filter(col("rn") <= lit(k))
       .select(col("vec_id").as("cid"), col("embedding").as("ce"))
       .withColumn("nc", norm(col("ce")))
   }
 
   /** Augmented corpus with planted duplicate vectors (vec_id + 100000). */
-  private def augmented(s: SparkSession, dir: String): DataFrame = {
+  private[queries] def augmented(s: SparkSession, dir: String): DataFrame = {
     val base = Tables.embeddings(s, dir)
     base.select(col("vec_id"), col("embedding"))
       .unionByName(base.select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
@@ -717,7 +746,7 @@ object VectorOps {
   private[queries] def sharedIvfAssign(s: SparkSession, dir: String): DataFrame =
     withBuildParallelism(s, dir) {
       CorpusCache.getOrBuild(s, s"ivfassign:$dir")(
-        refinedAssign(ivfAssignments(s, dir, augmented(s, dir))))
+        refinedAssign(ivfAssignments(s, dir, augmented(s, dir), augCount(s, dir))))
     }
 
   /** Two-level (coarse-quantized) IVF cell assignment, built ONCE per
@@ -737,7 +766,7 @@ object VectorOps {
   private[queries] def sharedCoarseAssign(s: SparkSession, dir: String): DataFrame =
     withBuildParallelism(s, dir) {
       CorpusCache.getOrBuild(s, s"ivfcoarse:$dir")(
-        refinedAssign(coarseAssignments(s, dir, augmented(s, dir))))
+        refinedAssign(coarseAssignments(s, dir, augmented(s, dir), augCount(s, dir))))
     }
 
   /** Three-level (IMI-shaped) assignment, cached like the two chains
@@ -761,7 +790,7 @@ object VectorOps {
   private[queries] def sharedCoarseAssignNt(s: SparkSession, dir: String): DataFrame =
     withBuildParallelism(s, dir) {
       CorpusCache.getOrBuild(s, s"ivfcoarsent:$dir")(
-        refinedAssign(coarseAssignments(s, dir, ntAugmented(s, dir))))
+        refinedAssign(coarseAssignments(s, dir, ntAugmented(s, dir), 4L * embCount(s, dir))))
     }
 
   /** Three-level (IMI) assignment over the NEAR-TWIN corpus — the index
@@ -772,9 +801,7 @@ object VectorOps {
   private[graft] def sharedImiAssignNt(s: SparkSession, dir: String): DataFrame =
     withBuildParallelism(s, dir) {
       CorpusCache.getOrBuild(s, s"ivfimint:$dir")(
-        refinedAssign(imiAssignments(s, dir, ntAugmented(s, dir),
-          Preconditions.longOnce(s, s"rowcount:imi:nt:$dir")(
-            ntAugmented(s, dir).count()))))
+        refinedAssign(imiAssignments(s, dir, ntAugmented(s, dir), 4L * embCount(s, dir))))
     }
 
   /** Plain-corpus (non-augmented) two-level assignment, cached per
@@ -786,21 +813,17 @@ object VectorOps {
   private[queries] def corpusAssign(s: SparkSession, dir: String): DataFrame =
     CorpusCache.getOrBuild(s, s"ivfplain:$dir") {
       register(s)
-      val nk = Tables.embeddings(s, dir).agg(greatest(lit(MIN_CENTROIDS.toLong),
-        ceil(count(lit(1)).cast(DoubleType) / lit(TARGET_CELL))).as("k"))
-      val (fgrp, coarseNE) = coarseCodebook(s, dir, nk)
+      val (fgrp, coarseNE) = coarseCodebook(s, dir, cellCount(embCount(s, dir)))
       assignWithCodebook(Tables.embeddings(s, dir), fgrp, coarseNE)
     }
 
-  /** Memoized augmented-corpus row count — ONE count job per (session,
-    * corpus) under ONE key (round 17, the round-16 verdict's #7: the IMI
-    * beam sizing counted this relation under `rowcount:imi:aug:` while
-    * the pair-scan width gates counted it again under `rowcount:pairscan:`
-    * — a duplicate corpus-count job per session). Column-pruned to a
-    * row-count scan.
+  /** Augmented-corpus row count: exactly twice [[embCount]], since
+    * [[augmented]] is the base corpus plus one shifted copy — so the IMI
+    * beam sizing, the pair-scan width gates and the codebook sizes all
+    * read the one memoized base count.
     */
   private[queries] def augCount(s: SparkSession, dir: String): Long =
-    Preconditions.longOnce(s, s"rowcount:aug:$dir")(augmented(s, dir).count())
+    2L * embCount(s, dir)
 
   /** Rows of the pair scan's DOMINANT exchanged side per partition —
     * ≈50–80 MB of raw UnsafeRows at the packed-sketch row width, the
@@ -1174,9 +1197,7 @@ object VectorOps {
     // train the codebook from the corpus (k from the CORPUS size — the
     // index's k, not the batch's) and publish it as the artifact the
     // per-batch assigner reads
-    val nk = Tables.embeddings(s, dir).agg(greatest(lit(MIN_CENTROIDS.toLong),
-      ceil(count(lit(1)).cast(DoubleType) / lit(TARGET_CELL))).as("k"))
-    val (fgrp, coarseNE) = coarseCodebook(s, dir, nk)
+    val (fgrp, coarseNE) = coarseCodebook(s, dir, cellCount(embCount(s, dir)))
     fgrp.write.mode("overwrite").parquet(s"$cb/fgrp")
     coarseNE.write.mode("overwrite").parquet(s"$cb/coarse")
     // backlog-derived shuffle partitions for the per-batch assignment work
@@ -1229,15 +1250,13 @@ object VectorOps {
     */
   private[queries] def flatAssignProbe(s: SparkSession, dir: String): DataFrame = {
     register(s)
-    val emb = augmented(s, dir)
-    val k = emb.agg(greatest(lit(MIN_CENTROIDS.toLong),
-      ceil(count(lit(1)).cast(DoubleType) / lit(TARGET_CELL))).as("k"))
-    assignCells(emb, hashSeeds(Tables.embeddings(s, dir), k, "ivfseed"))
+    assignCells(augmented(s, dir),
+      hashSeeds(s, dir, cellCount(augCount(s, dir)), "ivfseed"))
   }
 
   private[queries] def coarseAssignProbe(s: SparkSession, dir: String): DataFrame = {
     register(s)
-    coarseAssignments(s, dir, augmented(s, dir))
+    coarseAssignments(s, dir, augmented(s, dir), augCount(s, dir))
   }
 
   private[queries] def imiAssignProbe(s: SparkSession, dir: String): DataFrame = {
@@ -1262,27 +1281,25 @@ object VectorOps {
     * decisions (cos desc, id asc tie-break), so planted duplicates can
     * never be separated — the property the gate verifies.
     */
-  private def coarseAssignments(s: SparkSession, dir: String, emb: DataFrame): DataFrame = {
-    val nk = emb.agg(greatest(lit(MIN_CENTROIDS.toLong),
-      ceil(count(lit(1)).cast(DoubleType) / lit(TARGET_CELL))).as("k"))
-    val (fgrp, coarseNE) = coarseCodebook(s, dir, nk)
+  private def coarseAssignments(s: SparkSession, dir: String, emb: DataFrame,
+      nRows: Long): DataFrame = {
+    val (fgrp, coarseNE) = coarseCodebook(s, dir, cellCount(nRows))
     assignWithCodebook(emb, fgrp, coarseNE)
   }
 
   /** The two-level codebook alone — (fine-centroids-grouped-by-coarse,
-    * non-empty coarse table) for a given k frame. Split out of
+    * non-empty coarse table) for a given cell count k. Split out of
     * [[coarseAssignments]] so the streaming ingest gate can train the
     * codebook once from the corpus (the offline-index discipline) and
     * assign micro-batches of arrivals against it.
     */
   private[queries] def coarseCodebook(
-      s: SparkSession, dir: String, nk: DataFrame): (DataFrame, DataFrame) = {
+      s: SparkSession, dir: String, k: Long): (DataFrame, DataFrame) = {
     // fine codebook shares the flat chain's "ivfseed" hash universe (the
     // seeds-as-codebook discipline, now id-distribution-free); the coarse
-    // table draws ⌈√k⌉ rows from an independent hash universe
-    val fine = hashSeeds(Tables.embeddings(s, dir), nk, "ivfseed")
-    val coarse = hashSeeds(Tables.embeddings(s, dir),
-      nk.select(ceil(sqrt(col("k").cast(DoubleType))).cast(LongType).as("k")), "ivfgrp")
+    // table draws ⌈√k⌉ rows (IEEE-exact sqrt) from an independent universe
+    val fine = hashSeeds(s, dir, k, "ivfseed")
+    val coarse = hashSeeds(s, dir, math.ceil(math.sqrt(k.toDouble)).toLong, "ivfgrp")
       .select(col("cid").as("gid"), col("ce").as("ge"), col("nc").as("ng"))
     // fine centroid → coarse group: k×√k candidate rows, never
     // corpus-sized. The pick is the sort-free ArgTop2 argmax (cos DESC,
@@ -1351,21 +1368,6 @@ object VectorOps {
     filter(array(struct(col("cell2").as("pc"), col("mgn").as("mgn"))),
       t => t.getField("pc").isNotNull)
 
-  /** Integer-exact ⌈k^(1/3)⌉ as a 1-row (k) frame: libm `pow`/`cbrt` are
-    * not correctly-rounded (unlike sqrt, which IEEE 754 requires exact),
-    * so Spark's Math.pow and DuckDB's C pow may disagree by an ulp at
-    * perfect cubes — enough to flip a ceil. Snapping the rounded estimate
-    * with exact BIGINT cube comparisons makes both engines land on the
-    * true ceiling whenever the estimate is within ±1 (any libm is).
-    */
-  private def cbrtCeil(kdf: DataFrame): DataFrame = {
-    val c = round(pow(col("k").cast(DoubleType), lit(1.0 / 3.0))).cast(LongType)
-    kdf.select(
-      when((c - 1) * (c - 1) * (c - 1) >= col("k"), c - 1)
-        .when(c * c * c >= col("k"), c)
-        .otherwise(c + 1).as("k"))
-  }
-
   /** Ceiling of the derived probe width [[staticProbeWidth]] — the law's
     * clamp, not a buffer width (round 15): the ArgTopN beams size their
     * buffers to the corpus-derived width, so the ceiling costs nothing at
@@ -1401,9 +1403,7 @@ object VectorOps {
     * candidate volume grows as p·E[cell] with the τ margin gate pruning
     * the clear-winner majority of extra regions. At k = 16 (every gate
     * sf) the law lands exactly on p = 2, b1 = 2 — the round-13 probe
-    * shape. ⌈k^(1/4)⌉ is quartic-snapped like [[cbrtCeil]] (libm pow is
-    * not correctly rounded; exact fourth-power comparisons land on the
-    * true ceiling whenever the estimate is within ±1); ⌈√p⌉ is
+    * shape. ⌈k^(1/4)⌉ is [[ceilRoot]]'s integer-snapped root; ⌈√p⌉ is
     * IEEE-exact. The DuckDB twin of `sim_ann_ivf_imi` spells the same law
     * in SQL over its own count.
     *
@@ -1417,14 +1417,7 @@ object VectorOps {
     * its probe-side exchange from the same p.
     */
   private[queries] def staticProbeWidth(n: Long): (Int, Int) = {
-    val k = math.max(MIN_CENTROIDS.toLong,
-      (n + TARGET_CELL.toLong - 1L) / TARGET_CELL.toLong)
-    val c = math.round(math.pow(k.toDouble, 0.25))
-    val q =
-      if ((c - 1) * (c - 1) * (c - 1) * (c - 1) >= k) c - 1
-      else if (c * c * c * c >= k) c
-      else c + 1
-    val p = math.min(PROBE_CAP.toLong, math.max(2L, q)).toInt
+    val p = math.min(PROBE_CAP.toLong, math.max(2L, ceilRoot(cellCount(n), 4))).toInt
     val b1 = math.min(L1_BEAM_CAP.toLong,
       math.ceil(math.sqrt(p.toDouble)).toLong).toInt
     (p, b1)
@@ -1448,26 +1441,23 @@ object VectorOps {
     * codebook shares the flat and two-level chains' "ivfseed" universe,
     * so identical vectors co-assign under every scheme (the property the
     * invariant spec pins). Level sizes are k1 = ⌈k^(1/3)⌉ exactly
-    * ([[cbrtCeil]]) and k2 = k1² — integer-exact in both engines.
+    * ([[ceilRoot]]) and k2 = k1² — driver Longs from the memoized count
+    * `nRows`, integer-exact in both engines.
     * Non-empty-group guards run bottom-up (a level-2 centroid with no
     * fine members, a level-1 centroid with no surviving level-2) so no
     * vector can strand, mirroring [[coarseAssignments]]'s coarseNE.
     */
   private def imiAssignments(s: SparkSession, dir: String, emb: DataFrame,
-      nRows: => Long): DataFrame = {
-    val nk = emb.agg(greatest(lit(MIN_CENTROIDS.toLong),
-      ceil(count(lit(1)).cast(DoubleType) / lit(TARGET_CELL))).as("k"))
-    // ArgTopN beam widths from the count of `emb`, which arrives MEMOIZED
-    // from the caller (round 17, verdict #7: the augmented chain shares
-    // [[augCount]]'s key with the pair-scan gates — one count job per
-    // session per corpus, not one per concern).
+      nRows: Long): DataFrame = {
+    // codebook sizes and ArgTopN beam widths all from the count of `emb`,
+    // which the caller derives from the one memoized [[embCount]]
+    val k = cellCount(nRows)
     val (capP, capB1) = staticProbeWidth(nRows)
-    val k1df = cbrtCeil(nk)
-    val k2df = k1df.select((col("k") * col("k")).as("k"))
-    val fine = hashSeeds(Tables.embeddings(s, dir), nk, "ivfseed")
-    val l1 = hashSeeds(Tables.embeddings(s, dir), k1df, "ivfl1")
+    val k1 = ceilRoot(k, 3)
+    val fine = hashSeeds(s, dir, k, "ivfseed")
+    val l1 = hashSeeds(s, dir, k1, "ivfl1")
       .select(col("cid").as("g1"), col("ce").as("e1"), col("nc").as("n1"))
-    val l2 = hashSeeds(Tables.embeddings(s, dir), k2df, "ivfl2")
+    val l2 = hashSeeds(s, dir, k1 * k1, "ivfl2")
       .select(col("cid").as("g2"), col("ce").as("e2"), col("nc").as("n2"))
     // level-2 centroid → level-1 group: k2·k1 rows, codebook-scale
     val l2pick = l2.crossJoin(broadcast(l1))
@@ -1608,15 +1598,13 @@ object VectorOps {
     * float32: vec_dot is an array<float> kernel, and the oracle applies the
     * identical DOUBLE→REAL rounding.
     */
-  private def ivfAssignments(s: SparkSession, dir: String, emb: DataFrame): DataFrame = {
-    // k from the corpus, not a constant: a broadcast 1-row count, the same
-    // no-driver-action scalar pattern as the percentile-bounds broadcasts.
+  private def ivfAssignments(s: SparkSession, dir: String, emb: DataFrame,
+      nRows: Long): DataFrame = {
+    // k from the corpus count `nRows`, not a constant ([[cellCount]]).
     // cid stays BIGINT (here and in coarseAssignments — the round-8 ANSI
     // overflow lesson past 2^31 vec_ids); seeds come from the hash-ranked
     // codebook (round 9 — id-distribution-free, see [[hashSeeds]]).
-    val k = emb.agg(greatest(lit(MIN_CENTROIDS.toLong),
-      ceil(count(lit(1)).cast(DoubleType) / lit(TARGET_CELL))).as("k"))
-    val assign0 = assignCells(emb, hashSeeds(Tables.embeddings(s, dir), k, "ivfseed"))
+    val assign0 = assignCells(emb, hashSeeds(s, dir, cellCount(nRows), "ivfseed"))
     val refined = emb.join(assign0, Seq("vec_id"))
       .select(col("cell"), posexplode(col("embedding")).as(Seq("d", "x")))
       .groupBy(col("cell"), col("d"))
@@ -2957,7 +2945,7 @@ object VectorOps {
 
   /** DuckDB twin of [[imiAssignments]] as a reusable CTE chain — the
     * three-level descent replica: integer-exact ⌈k^(1/3)⌉ (the same
-    * cube-snapped correction as [[cbrtCeil]], since C pow and Math.pow
+    * cube-snapped correction as [[ceilRoot]], since C pow and Math.pow
     * may disagree by an ulp), three hash-ranked codebooks, level-2→level-1
     * grouping, fine→level-2 via the descent, bottom-up non-empty guards,
     * the three-step vector descent, and the shared cell-cap key.

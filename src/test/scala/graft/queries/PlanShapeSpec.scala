@@ -5,7 +5,7 @@ import graft.SparkSpec
 /** Plan-shape gates: the scale claims in SCALE.md as assertions, so a
   * regression that silently degrades a broadcast to a shuffle, an
   * equi-join to a nested loop, or pushdown to a full scan fails the build
-  * rather than only changing a PLANS.md diff.
+  * rather than only changing a plan dump (`graft.tools.ExplainOne`).
   */
 class PlanShapeSpec extends SparkSpec {
 
@@ -487,7 +487,7 @@ class PlanShapeSpec extends SparkSpec {
     s2.conf.set("spark.sql.shuffle.partitions", "8")
     s2.conf.set("spark.sql.adaptive.enabled", "false")
     // (bnlj, bhj) output rows, asserted SEPARATELY (round-9 advice): the
-    // cross joins (BNLJ — seed builds + vector×coarse picks) are bounded
+    // cross joins (BNLJ — codebook picks + vector×coarse picks) are bounded
     // O(n·√k) UNCONDITIONALLY, while the in-group fine pick (BHJ, equi on
     // gid) is bounded n·max_g k_g — a bound that DEPENDS on the fine→
     // coarse distribution. A single summed assert would let worst-case
@@ -515,12 +515,17 @@ class PlanShapeSpec extends SparkSpec {
       s"coarse=$coarse (bnlj=$coarseBnlj bhj=$coarseBhj) " +
       s"imi=${imiBnlj + imiBhj} (bnlj=$imiBnlj bhj=$imiBhj)")
     // fixture: n=1000 (augmented), nbase=500, k=16, √k=4.
-    // flat: BNLJ ≥ n·k = 16000 (the quadratizing candidate set).
+    // flat: BNLJ = n·k = 16000 exactly (the quadratizing candidate set);
+    // the seed builds cross no 1-row k/count frames over the base corpus
+    // (k and the count are plan literals), so nothing else is a BNLJ.
     assert(flat >= 16000L, s"flat probe must materialize the full n·k candidate set, saw $flat")
     // coarse cross-join side — UNCONDITIONAL bound, holds under any
-    // fine-centroid distribution: seed builds 2·nbase + fgrp k·√k +
-    // vector×coarse n·√k = 1000 + 64 + 4000 = 5064; assert < 8000
-    assert(coarseBnlj < 8000L,
+    // fine-centroid distribution: vector×coarse n·√k = 4000 + the fgrp
+    // pick k·√k = 64, planned twice (fgrp feeds both the in-group join
+    // and the non-empty guard) = 4128, measured 4128. The seed builds
+    // used to cross a 1-row k frame and a 1-row base count over all
+    // nbase rows apiece: 5688 measured then, which this bound rejects.
+    assert(coarseBnlj < 5000L,
       s"coarse cross-join stage must stay O(n·√k): bnlj=$coarseBnlj")
     // coarse in-group side — bound is n·max_g k_g, which DEPENDS on the
     // fine→coarse distribution. On this fixture the seed codebook spreads
@@ -536,11 +541,13 @@ class PlanShapeSpec extends SparkSpec {
     assert(coarse < (flat * 3) / 4,
       s"two-level assignment must materialize <75% of flat's candidates: coarse=$coarse flat=$flat")
     // three-level descent, cross-join side — UNCONDITIONAL O(n·k^(1/3))
-    // bound: three seed builds + l2×l1 (9·3) + fine×l1 (16·3) +
-    // vector×l1 n·3 ≈ 5800 (5784 measured); assert < 7000. The beams
-    // read their widths from the plan, not from a broadcast (p, b1) row:
-    // with the three 1-row frame fan-outs (n rows out apiece, 3n = 3000)
-    // this side measured 8784, which the bound rejects. Round 10: the
+    // bound: vector×l1 n·3 = 3000 + the codebook picks l2×l1 (9·3 = 27)
+    // and fine×l1 (16·3 = 48), which each unshared consumer re-runs (4×
+    // and 2× here) = 3000 + 108 + 96 = 3204, measured 3204.
+    // Codebook sizes and beam widths are plan literals: with the seed
+    // builds crossing 1-row k and count frames over nbase this side
+    // measured 5784, and with the beams' three (p, b1) frame fan-outs
+    // too, 8784; the bound rejects both. Round 10: the
     // descent is two-REGION at this fixture's derived p = 2 (top-2 kept
     // at levels 1 and 2 so `cell2` is the
     // second-best level-2 cell's winner — the nprobe=2 probe target),
@@ -553,7 +560,7 @@ class PlanShapeSpec extends SparkSpec {
     // may pay its constant factor but must never re-quadratize; the
     // shape's payoff is measured at the 10⁶/10⁷ probes where k^(1/3)/√k
     // is 27/140.
-    assert(imiBnlj < 7000L,
+    assert(imiBnlj < 4000L,
       s"IMI cross-join stages must stay O(n·k^(1/3)) with no frame fan-outs: bnlj=$imiBnlj")
     assert(imiBhj < 16000L,
       s"IMI two-region menu/rejoin stages must stay O(n·k^(1/3)): bhj=$imiBhj")

@@ -268,6 +268,28 @@ class QueryInvariantSpec extends SparkSpec {
     assert(wide === 0L, "at the fixture's k = 16 the derived p = 2 caps the list at one region")
   }
 
+  test("integer roots: ceilRoot is the exact ceiling of the cube and fourth roots") {
+    // the IMI level size k1 = ⌈k^(1/3)⌉ and the probe width's ⌈k^(1/4)⌉
+    // both come from ceilRoot; libm pow is not correctly rounded, so the
+    // snap must land on the true ceiling at and around every perfect power
+    def pow(c: Long, r: Int): Long = Iterator.fill(r)(c).product
+    for (r <- Seq(3, 4); k <- 1L to 200000L) {
+      val c = VectorOps.ceilRoot(k, r)
+      assert(pow(c - 1, r) < k && k <= pow(c, r), s"ceilRoot($k, $r) = $c")
+    }
+    val cube = Seq(27L -> 3L, 28L -> 4L, 19532L -> 27L, 19683L -> 27L,
+      19684L -> 28L, 1000000L -> 100L, 1000001L -> 101L)
+    for ((k, c) <- cube)
+      assert(VectorOps.ceilRoot(k, 3) === c, s"cube root of $k (19532 is the 10^7 tier's k)")
+  }
+
+  test("IVF corpus counts: the augmented corpora are exact multiples of the base count") {
+    // every codebook size derives from the one memoized base count, which
+    // holds only while augmented is 2 copies and ntAugmented 4 copies
+    assert(VectorOps.augmented(spark, dir).count() === VectorOps.augCount(spark, dir))
+    assert(VectorOps.ntAugmented(spark, dir).count() === 4L * VectorOps.embCount(spark, dir))
+  }
+
   test("margin-gated nprobe=2: the gate only ever removes clear-winner " +
     "probes, and holds the anchored recall at this fixture") {
     // round 11 (the FAISS refinement discipline): only boundary vectors
@@ -561,9 +583,8 @@ class QueryInvariantSpec extends SparkSpec {
     // arrivals in two batches and unioning must equal one-shot assignment
     VectorOps.register(spark)
     val arrivals = graft.Tables.embeddings(spark, dir).filter($"vec_id" % 4 === 0)
-    val nk = graft.Tables.embeddings(spark, dir)
-      .agg(greatest(lit(16L), ceil(count(lit(1)).cast("double") / lit(1024.0d))).as("k"))
-    val (fgrp, coarseNE) = VectorOps.coarseCodebook(spark, dir, nk)
+    val (fgrp, coarseNE) = VectorOps.coarseCodebook(spark, dir,
+      VectorOps.cellCount(VectorOps.embCount(spark, dir)))
     val whole = VectorOps.assignWithCodebook(arrivals, fgrp, coarseNE)
     val halves = VectorOps.assignWithCodebook(arrivals.filter($"vec_id" % 8 === 0), fgrp, coarseNE)
       .unionByName(VectorOps.assignWithCodebook(arrivals.filter($"vec_id" % 8 =!= 0), fgrp, coarseNE))

@@ -2,6 +2,12 @@
 """Local replica of the driver's correctness gate — STRICT edition.
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query ...]
+       python3 tools/check.py <sfDir> <verifyOutDir> --against <dumpDir> [query ...]
+
+With --against, the reference side is a second Verify dump (read the same
+way as the spark side) instead of DuckDB, compared row for row with the
+same canonicalization: an A/B of two builds. <sfDir> is then unused, and
+without query names every query either dump holds is compared.
 
 Replicates the driver's observed compare path:
   - spark side: pandas.read_parquet over the Verify dump (so parquet decimal
@@ -51,48 +57,68 @@ def frame_rows(df):
     return cols, sorted(rows)
 
 
+def read_dump(outdir, name):
+    paths = sorted(glob.glob(f"{outdir}/{name}/*.parquet"))
+    if not paths:
+        raise FileNotFoundError(f"no parquet under {outdir}/{name}")
+    return pd.concat([pd.read_parquet(p) for p in paths], ignore_index=True)
+
+
 def main():
-    sfdir, outdir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:])
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sfdir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
-    oracle = json.load(open(f"{outdir}/oracle_sql.json"))
-    if only:
-        # subset mode: the summary line must count what was CHECKED, not
-        # every oracle entry (a 2-query spot-check used to print 186/186)
-        unknown = only - set(oracle)
-        if unknown:
-            print(f"unknown query names: {sorted(unknown)}")
-            sys.exit(1)
-        oracle = {k: v for k, v in oracle.items() if k in only}
+    args = sys.argv[1:]
+    against = None
+    if "--against" in args:
+        i = args.index("--against")
+        against = args[i + 1]
+        del args[i:i + 2]
+    sfdir, outdir = args[0], args[1]
+    only = set(args[2:])
+    if against:
+        side = "against"
+        names = only or {os.path.basename(os.path.dirname(p))
+                         for d in (outdir, against) for p in glob.glob(f"{d}/*/*.parquet")}
+        refs = {n: (lambda n=n: read_dump(against, n)) for n in names}
+    else:
+        side = "oracle"
+        con = duckdb.connect()
+        for t in TABLES:
+            p = f"{sfdir}/{t}.parquet"
+            if os.path.exists(p):
+                con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
+        oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+        if only:
+            # subset mode: the summary line must count what was CHECKED, not
+            # every oracle entry (a 2-query spot-check used to print 186/186)
+            unknown = only - set(oracle)
+            if unknown:
+                print(f"unknown query names: {sorted(unknown)}")
+                sys.exit(1)
+            oracle = {k: v for k, v in oracle.items() if k in only}
+        refs = {k: (lambda sql=sql: con.execute(sql).df()) for k, sql in oracle.items()}
     failed = []
-    for name, sql in sorted(oracle.items()):
-        spark_glob = sorted(glob.glob(f"{outdir}/{name}/*.parquet"))
-        if not spark_glob:
+    for name, ref in sorted(refs.items()):
+        if not glob.glob(f"{outdir}/{name}/*.parquet"):
             print(f"[{name}] MISSING spark output")
             failed.append(name)
             continue
         try:
-            sdf = pd.concat([pd.read_parquet(p) for p in spark_glob], ignore_index=True)
+            sdf = read_dump(outdir, name)
         except Exception as e:
             print(f"[{name}] SPARK READ ERROR: {e}")
             failed.append(name)
             continue
         try:
-            odf = con.execute(sql).df()
+            odf = ref()
         except Exception as e:
-            print(f"[{name}] ORACLE ERROR: {e}")
+            print(f"[{name}] {side.upper()} ERROR: {e}")
             failed.append(name)
             continue
         ok = True
         if sorted(sdf.columns) != sorted(odf.columns):
-            print(f"[{name}] COLS mismatch: spark={sorted(sdf.columns)} oracle={sorted(odf.columns)}")
+            print(f"[{name}] COLS mismatch: spark={sorted(sdf.columns)} {side}={sorted(odf.columns)}")
             ok = False
         elif len(sdf) != len(odf):
-            print(f"[{name}] ROWS mismatch: spark={len(sdf)} oracle={len(odf)}")
+            print(f"[{name}] ROWS mismatch: spark={len(sdf)} {side}={len(odf)}")
             ok = False
         else:
             scols, srows = frame_rows(sdf)
@@ -101,15 +127,15 @@ def main():
                 diffs = [(x, y) for x, y in zip(srows, orows) if x != y]
                 print(f"[{name}] VALUES mismatch ({len(diffs)} differing rows); cols={scols}")
                 print(f"   spark dtypes : {dict(sdf.dtypes.astype(str))}")
-                print(f"   oracle dtypes: {dict(odf.dtypes.astype(str))}")
+                print(f"   {side} dtypes: {dict(odf.dtypes.astype(str))}")
                 for x, y in diffs[:3]:
-                    print(f"   spark : {x}\n   oracle: {y}")
+                    print(f"   spark : {x}\n   {side}: {y}")
                 ok = False
         if ok:
             print(f"[{name}] OK ({len(sdf)} rows)")
         else:
             failed.append(name)
-    print(f"\n{len(oracle) - len(failed)}/{len(oracle)} queries match")
+    print(f"\n{len(refs) - len(failed)}/{len(refs)} queries match")
     sys.exit(1 if failed else 0)
 
 
