@@ -8,11 +8,11 @@ import graft.expr.{ArgMax1, ArgTop2, ArgTopN, BloomMightContain, CmsEstimate, Fa
 
 /** Cluster-deployment registration of the engine's native expressions:
   * `--conf spark.sql.extensions=graft.GraftExtensions` makes
-  * `farm_fingerprint` and `vec_dot` available to EVERY session and SQL
-  * client on the cluster (JDBC/Thrift included) with no driver-side
-  * `register()` call. The per-session `register()` helpers on the
-  * expression objects remain for embedded use; both paths bind the same
-  * Expression classes, so plans and codegen are identical.
+  * `farm_fingerprint`, `vec_dot` and the rest callable by name from SQL
+  * text in EVERY session on the cluster (JDBC/Thrift included). It serves
+  * SQL-text clients only: DataFrame code binds the same Expression classes
+  * directly through [[graft.expr.Native]], so plans and codegen are
+  * identical on both paths.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -31,10 +31,8 @@ object GraftExtensions {
           "expectedNum" -> n.toString, "actualNum" -> exprs.length.toString,
           "docroot" -> "https://spark.apache.org/docs/latest"))
 
-  /** The injected function descriptions — the SINGLE source of truth for
-    * every registration path: the `spark.sql.extensions` deployment, the
-    * per-session `register()` helpers on the expression objects, and the
-    * registration spec all bind these same tuples.
+  /** The injected function descriptions: the `spark.sql.extensions`
+    * deployment and the specs' SQL-text sessions bind these same tuples.
     */
   val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("farm_fingerprint"),
@@ -64,9 +62,4 @@ object GraftExtensions {
     (FunctionIdentifier("vec_dot_half"),
       new ExpressionInfo(classOf[HalfVecDot].getName, "vec_dot_half"),
       arity("vec_dot_half", 2)(exprs => HalfVecDot(exprs.head, exprs(1)))))
-
-  /** Builder lookup for the per-session register() helpers. */
-  def builder(name: String): Seq[Expression] => Expression =
-    functions.collectFirst { case (id, _, b) if id.funcName == name => b }
-      .getOrElse(throw new IllegalArgumentException(s"unknown graft function: $name"))
 }

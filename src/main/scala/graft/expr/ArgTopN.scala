@@ -177,8 +177,8 @@ case class ArgTopN(ord: Expression, id: Expression, cap: Int,
 }
 
 object ArgTopN {
-  /** Builder for the function-registry path: third argument must be an
-    * integer literal (the buffer width is plan-static).
+  /** Builder for SQL text and [[Native.vecArgTopN]] alike: the third
+    * argument must be an integer literal (the buffer width is plan-static).
     */
   def fromArgs(exprs: Seq[Expression]): ArgTopN = exprs(2) match {
     case Literal(v: Int, IntegerType) => ArgTopN(exprs(0), exprs(1), v)

@@ -2,7 +2,6 @@ package graft.expr
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -68,10 +67,4 @@ object BloomMightContain {
     bf.writeTo(bos)
     bos.toByteArray
   }
-
-  /** Register `bloom_might_contain` for use via call_function()/SQL in this
-    * session — same builder the `spark.sql.extensions` deployment injects. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain", graft.GraftExtensions.builder("bloom_might_contain"), "built-in")
 }

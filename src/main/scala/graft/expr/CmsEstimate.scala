@@ -2,7 +2,6 @@ package graft.expr
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -70,10 +69,4 @@ object CmsEstimate {
     cms.writeTo(bos)
     bos.toByteArray
   }
-
-  /** Register `cms_estimate` for use via call_function()/SQL in this
-    * session — same builder the `spark.sql.extensions` deployment injects. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_estimate", graft.GraftExtensions.builder("cms_estimate"), "built-in")
 }

@@ -2,8 +2,6 @@ package graft.expr
 
 import com.google.common.hash.Hashing
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
@@ -45,15 +43,4 @@ object FarmFingerprint {
   /** Static entry point shared by interpreted eval and generated code. */
   def hash(s: UTF8String): Long =
     Hashing.farmHashFingerprint64().hashBytes(s.getBytes).asLong()
-
-  /** Register `farm_fingerprint` for use via expr()/SQL in this session —
-    * same builder the `spark.sql.extensions` deployment injects. A no-op
-    * when the session already has it, from an earlier call or the
-    * extensions, so callers may register on every use. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier("farm_fingerprint")))
-      registry.createOrReplaceTempFunction(
-        "farm_fingerprint", graft.GraftExtensions.builder("farm_fingerprint"), "built-in")
-  }
 }

@@ -1,6 +1,5 @@
 package graft.expr
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -104,13 +103,6 @@ object Halfs {
       i += 1
     }
     acc
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_pack_half", graft.GraftExtensions.builder("vec_pack_half"), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot_half", graft.GraftExtensions.builder("vec_dot_half"), "built-in")
   }
 }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.expr.FarmFingerprint
+import graft.expr.Native.farmFingerprint
 
 /** Mart models — tables in the reference (dbt_project.yml:47-48); the
   * ModelGraph materializes them to parquet. Dim joins broadcast: customer/
@@ -13,8 +13,6 @@ import graft.expr.FarmFingerprint
   * scale factor.
   */
 object Marts {
-
-  private def farm(c: Column): Column = call_function("farm_fingerprint", c)
 
   /** mart_dim_date.sql: calendar spine 2015-01-01..2050-12-31, in date
     * order. One seed row in one partition explodes an ascending sequence,
@@ -48,7 +46,6 @@ object Marts {
     * FARM_FINGERPRINT customer_key (no ABS — mart_dim_customer.sql:67).
     */
   def martDimCustomer(stgCustomer: DataFrame, snapshot: DataFrame): DataFrame = {
-    FarmFingerprint.register(stgCustomer.sparkSession)
     val customerEmails = stgCustomer
       .filter(col("email_address").isNotNull && trim(col("email_address")) =!= "")
       .select(col("user_db_id").cast(LongType).as("user_db_id"),
@@ -74,7 +71,7 @@ object Marts {
         when(col("latest_seen_email_address").isNotNull, col("latest_seen_email_address"))
           .otherwise(col("email_address")))
       .select(col("user_db_id"), col("email_address_final"), col("last_seen_ts"),
-        farm(col("email_address_final")).as("customer_key"))
+        farmFingerprint(col("email_address_final")).as("customer_key"))
   }
 
   /** fx_latest (mart_fact_order.sql:142): the rows of the max fx_date. */

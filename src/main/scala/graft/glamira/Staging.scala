@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.expr.FarmFingerprint
+import graft.expr.Native.farmFingerprint
 import graft.functions.LocaleNumeric
 
 /** Staging models — Spark-first re-expression of the dbt staging layer.
@@ -17,16 +17,11 @@ import graft.functions.LocaleNumeric
   */
 object Staging {
 
-  private def ff(spark: org.apache.spark.sql.SparkSession): Unit =
-    FarmFingerprint.register(spark)
-
-  private def farm(c: Column): Column = call_function("farm_fingerprint", c)
-
   /** Production item_key: ABS(FARM_FINGERPRINT(preimage)) as STRING
     * (stg_order.sql:88-102).
     */
   private def farmItemKey(preimage: Column): Column =
-    abs(call_function("farm_fingerprint", preimage)).cast(StringType)
+    abs(farmFingerprint(preimage)).cast(StringType)
 
   /** stg_order (stg_order.sql): checkout filter → double LEFT JOIN
     * UNNEST WITH OFFSET → locale price parse → FARM_FINGERPRINT item_key →
@@ -59,7 +54,6 @@ object Staging {
     */
   def stgOrderDetailed(summary: DataFrame, stgLocation: DataFrame,
       itemKey: Column => Column = farmItemKey): DataFrame = {
-    ff(summary.sparkSession)
     val base = summary
       .filter(col("collection") === "checkout_success")
       .select(
@@ -162,9 +156,8 @@ object Staging {
     * field once (ref stg_product.sql flattens unique paths).
     */
   def stgProduct(productRaw: DataFrame,
-      productKey: Column => Column = c => abs(call_function("farm_fingerprint", c)).cast(LongType))
+      productKey: Column => Column = c => abs(farmFingerprint(c)).cast(LongType))
       : DataFrame = {
-    ff(productRaw.sparkSession)
     val productSchema = StructType(Seq(StructField("product", StructType(Seq(
       "product_id", "productId", "id", "_id", "gender", "category_name",
       "name", "product_type", "store_code", "attribute_set", "category",
@@ -200,13 +193,12 @@ object Staging {
     * lower/trim country|region|city.
     */
   def stgLocation(ipLocationRaw: DataFrame): DataFrame = {
-    ff(ipLocationRaw.sparkSession)
     val preimage = concat(
       coalesce(lower(trim(col("country_code").cast(StringType))), lit("")), lit("|"),
       coalesce(lower(trim(col("region").cast(StringType))), lit("")), lit("|"),
       coalesce(lower(trim(col("city").cast(StringType))), lit("")))
     ipLocationRaw.select(
-      abs(call_function("farm_fingerprint", preimage)).cast(StringType).as("location_key"),
+      abs(farmFingerprint(preimage)).cast(StringType).as("location_key"),
       col("ip").cast(StringType).as("ip"),
       col("country_code").cast(StringType).as("country_code"),
       col("country_name").cast(StringType).as("country_name"),

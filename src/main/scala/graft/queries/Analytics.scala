@@ -559,10 +559,7 @@ object Analytics {
     * gets ~550 right-sized tasks instead. Outputs are partition-count
     * invariant — the same argument as DerivedRangeSpec's rank pinning:
     * only exchange widths change, never what flows through them. The
-    * child session shares context, catalog and cache with the parent; the
-    * ER chain resolves only Spark built-ins (substring/levenshtein/
-    * translate), so the round-16 child-session function-registry caveat
-    * (stream_ann_ingest's vec_*) does not apply here.
+    * child session shares context, catalog and cache with the parent.
     */
   private[queries] def erSession(s: SparkSession, nUniv: Long): SparkSession = {
     val sessionParts = s.conf.get("spark.sql.shuffle.partitions").toInt

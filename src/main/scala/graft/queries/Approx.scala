@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
 import graft.Tables
-import graft.expr.CmsEstimate
+import graft.expr.{CmsEstimate, Native}
 
 /** Approximate aggregates — the 100 TB replacements for exact operators
   * whose state doesn't fit: HyperLogLog++ for COUNT(DISTINCT) (constant
@@ -82,7 +82,6 @@ object Approx {
     // GROUP BY would retain it — filtering both twins keeps the gate
     // null-robust instead of fixture-dependent.
     "approx_heavy_hitters" -> ((s, dir) => {
-      CmsEstimate.register(s)
       val keyed = Tables.events(s, dir)
         .filter(col("user_id").isNotNull)
         .select(
@@ -94,7 +93,7 @@ object Approx {
         (count(lit(1)).cast(DoubleType) / countDistinct(col("k")) * 2.0d).as("hh_t"))
       val cand = keyed.distinct()
         .crossJoin(broadcast(thr))
-        .filter(call_function("cms_estimate", sketch, col("k")).cast(DoubleType) >= col("hh_t"))
+        .filter(Native.cmsEstimate(sketch, col("k")).cast(DoubleType) >= col("hh_t"))
         .select(col("k"))
       keyed.join(broadcast(cand), Seq("k"), "left_semi")
         .groupBy(col("k"))

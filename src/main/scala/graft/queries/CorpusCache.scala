@@ -58,15 +58,6 @@ object CorpusCache {
     */
   private[queries] val MaxLive = 32
 
-  /** Upper bound on the demand log ([[observedKeys]]) per session — the
-    * same LRU discipline as the live entries (round-9 verdict #6). The
-    * log is bytes-cheap (strings), but a session iterating corpus dirs
-    * indefinitely must not grow ANY per-session structure without bound.
-    * 8× MaxLive keeps every witness a sweep's specs could ask about while
-    * aging out keys from corpora long since evicted.
-    */
-  private[queries] val MaxObserved = 8 * MaxLive
-
   /** Upper bound on TRACKED SESSIONS (round-11 advice): the per-session
     * storage cap is [[MaxLive]], but a caller that loops `newSession()`
     * siblings without stopping the shared context would accumulate
@@ -270,15 +261,6 @@ object CorpusCache {
   private val cache = scala.collection.mutable.LinkedHashMap[
     SparkSession, scala.collection.mutable.LinkedHashMap[String, DataFrame]]()
 
-  // every key ever demanded per session, regardless of whether its entry
-  // is later LRU-evicted — the deterministic witness for the
-  // which-chain-did-this-consumer-build gates. Weak session keys: the log
-  // holds only strings, so it must not keep a stopped session reachable
-  // by itself. LinkedHashSet so the MaxObserved LRU below can age out the
-  // oldest demands.
-  private val observed = new java.util.WeakHashMap[
-    SparkSession, scala.collection.mutable.LinkedHashSet[String]]()
-
   // Drop every session whose context has stopped: its cached blocks died
   // with the context (unpersist would be a no-op at best), so only the
   // map entry and its plan objects need releasing.
@@ -292,13 +274,6 @@ object CorpusCache {
   def getOrBuild(s: SparkSession, key: String)(build: => DataFrame): DataFrame =
     cache.synchronized {
       purgeStopped()
-      val log = observed.computeIfAbsent(s,
-        _ => scala.collection.mutable.LinkedHashSet.empty)
-      // LRU touch (remove-then-add moves the key to the tail), then age
-      // out the oldest demands past the cap
-      log.remove(key)
-      log.add(key)
-      while (log.size > MaxObserved) log.remove(log.head)
       // outer LRU touch (the same remove-then-add discipline as the inner
       // map): the ACCESSED session moves to the tail, so head == the
       // least-recently-accessed session when the MaxSessions evictor runs
@@ -356,12 +331,5 @@ object CorpusCache {
   private[queries] def liveKeys(s: SparkSession): Set[String] = cache.synchronized {
     purgeStopped()
     cache.get(s).map(_.keySet.toSet).getOrElse(Set.empty)
-  }
-
-  /** Every key ever demanded through `s` — LRU-capped at [[MaxObserved]],
-    * so the consumer-chain witness cannot flicker with heap pressure.
-    */
-  private[queries] def observedKeys(s: SparkSession): Set[String] = cache.synchronized {
-    Option(observed.get(s)).map(_.toSet).getOrElse(Set.empty)
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.expr.Native
 import graft.functions.TextFns
 
 /** Training-data curation operators: deterministic stratified sampling,
@@ -130,14 +131,13 @@ object Curation {
     * Sketch build: distributed aggregation over the eval side's 64-bit
     * fingerprints, driver merge, broadcast back as a ~constant literal.
     */
-  private[queries] def bloomSandwich(s: SparkSession, corpus: DataFrame,
+  private[queries] def bloomSandwich(corpus: DataFrame,
       evalSet: DataFrame, capacity: Long): DataFrame = {
     val bf = evalSet.select(xxhash64(col("text")).as("fp"))
       .stat.bloomFilter("fp", capacity, 0.01)
     val bloomLit = lit(graft.expr.BloomMightContain.serialize(bf))
-    graft.expr.BloomMightContain.register(s)
     val flagged = corpus.select(col("doc_id"), md5(col("text")).as("fp"),
-      call_function("bloom_might_contain", bloomLit, xxhash64(col("text"))).as("maybe"))
+      Native.bloomMightContain(bloomLit, xxhash64(col("text"))).as("maybe"))
     val definiteKeep = flagged.filter(!col("maybe")).select(col("doc_id"))
     val verifiedKeep = flagged.filter(col("maybe"))
       .join(evalSet.select(md5(col("text")).as("fp")), Seq("fp"), "left_anti")
@@ -321,7 +321,7 @@ object Curation {
       // action whose bit-array size must be fixed before the build), so a
       // data-derived capacity cannot stay a Column the way IVF k does.
       val nEval = evalSet.agg(count(lit(1)).as("n")).first().getLong(0)
-      bloomSandwich(s, corpus, evalSet, bloomCapacityFor(nEval))
+      bloomSandwich(corpus, evalSet, bloomCapacityFor(nEval))
     }),
 
     // Greedy boundary-aligned sequence packing into fixed context windows —

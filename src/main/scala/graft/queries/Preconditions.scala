@@ -46,10 +46,6 @@ object Preconditions {
     }
   }
 
-  /** Whether (session, key) has already passed — the spec witness. */
-  private[queries] def passed(s: SparkSession, key: String): Boolean =
-    synchronized { keysOf(s).contains(key) }
-
   // ---- memoized scalar values (round 12) ----------------------------------
   //
   // The same construction-time shape as `once`, but for a derived LONG the

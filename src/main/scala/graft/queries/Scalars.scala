@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.expr.Native
 import graft.functions.{Keys, LocaleNumeric}
 
 /** Scalar-function operators (SURVEY.md §2.6). */
@@ -198,11 +199,10 @@ object Scalars {
     // (ref: stg_order.sql:88-102). A regression anywhere in eval, codegen,
     // or the UTF-8 byte path flips the hash compare.
     "x19_farm_fingerprint" -> ((s, dir) => {
-      graft.expr.FarmFingerprint.register(s)
       Tables.nation(s, dir).select(
         col("n_nationkey"),
-        call_function("farm_fingerprint", col("n_name")).as("fp_name"),
-        call_function("farm_fingerprint",
+        Native.farmFingerprint(col("n_name")).as("fp_name"),
+        Native.farmFingerprint(
           concat_ws("|", col("n_nationkey").cast(StringType), col("n_name")))
           .as("fp_key"))
     })

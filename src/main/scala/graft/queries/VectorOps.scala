@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.Tables
+import graft.expr.Native
 
 /** Embedding similarity operators over `embeddings` (Array[Float], 64-d).
   *
@@ -184,27 +185,12 @@ object VectorOps {
     * zip_with/aggregate spelling but allocation-free inside codegen, which
     * is what makes the quadratic similarity joins tractable.
     */
-  private def dot(a: Column, b: Column): Column =
-    call_function("vec_dot", a, b)
+  private def dot(a: Column, b: Column): Column = Native.vecDot(a, b)
 
   /** Dot over the PACKED (binary16) sketch heads — the tier-1 bound's
     * scoring kernel (graft.expr.HalfVecDot).
     */
-  private def dotHalf(a: Column, b: Column): Column =
-    call_function("vec_dot_half", a, b)
-
-  private[queries] def register(s: SparkSession): Unit = {
-    graft.expr.FloatVecDot.register(s)
-    graft.expr.Halfs.register(s)
-    // the assignment argmax aggregate (round 9) rides the same
-    // registration path as the deployment's spark.sql.extensions
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_arg_top2", graft.GraftExtensions.builder("vec_arg_top2"), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_arg_max1", graft.GraftExtensions.builder("vec_arg_max1"), "built-in")
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_arg_topn", graft.GraftExtensions.builder("vec_arg_topn"), "built-in")
-  }
+  private def dotHalf(a: Column, b: Column): Column = Native.vecDotHalf(a, b)
 
   /** Top-N (ord DESC, id ASC) rows per group as a null-padded ranked array
     * of struct(cs, cid) — the sort-free generalized beam (graft.expr
@@ -213,20 +199,20 @@ object VectorOps {
     * 2-slot buffers while the billion-vector regime gets [[PROBE_CAP]].
     */
   private def argTopN(ord: Column, id: Column, cap: Int): Column =
-    call_function("vec_arg_topn", ord, id, lit(cap))
+    Native.vecArgTopN(ord, id, lit(cap))
 
   /** Top-2 centroid ids per group under (ord DESC, id ASC) — the
     * sort-free argmax (graft.expr.ArgTop2); returns struct(cell, cell2).
     */
   private def argTop2(ord: Column, id: Column): Column =
-    call_function("vec_arg_top2", ord, id)
+    Native.vecArgTop2(ord, id)
 
   /** Argmax per group under (ord DESC, id ASC) CARRYING its score — the
     * sort-free score-keeping argmax (graft.expr.ArgMax1); returns
     * struct(cs, cid).
     */
   private def argMax1(ord: Column, id: Column): Column =
-    call_function("vec_arg_max1", ord, id)
+    Native.vecArgMax1(ord, id)
 
   private def norm(v: Column): Column = sqrt(dot(v, v))
 
@@ -305,7 +291,6 @@ object VectorOps {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Norm/stat sanity pass over the embedding column.
     "emb_norms" -> ((s, dir) => {
-      register(s)
       withNorm(Tables.embeddings(s, dir))
         .select(col("vec_id"), col("label"),
           round(col("nrm"), 6).as("l2_norm"),
@@ -317,7 +302,6 @@ object VectorOps {
     // against the FULL corpus: O(s·n) work, the production recall-estimation
     // shape, never O(n²). Anchors broadcast; the corpus never shuffles.
     "sim_topk_bruteforce" -> ((s, dir) => {
-      register(s)
       val n = AnchorSample.withAnchors(withNorm(Tables.embeddings(s, dir)), col("vec_id"))
       val a = n.filter(col("is_anchor"))
         .select(col("vec_id"), col("embedding").as("ea"), col("nrm").as("na"))
@@ -337,7 +321,6 @@ object VectorOps {
     // exact truth (every anchor vs the full corpus), the labeled metric
     // twin of the bucketed ANN paths.
     "dedup_embedding_cosine" -> ((s, dir) => {
-      register(s)
       anchoredCosinePairs(Tables.embeddings(s, dir), COS_T)
         .select(col("i"), col("j"), round(col("cos"), 6).as("cosine"))
     }),
@@ -351,7 +334,6 @@ object VectorOps {
     // real positives; looser thresholds need L multi-probe tables (same
     // bucket-join shape, L× signatures).
     "sim_ann_lsh" -> ((s, dir) => {
-      register(s)
       val emb = augmented(s, dir)
       val sigs = sharedLshSigs(s, dir)
       val e = withNorm(emb).join(sigs, Seq("vec_id"))
@@ -380,7 +362,6 @@ object VectorOps {
     // (hyperplanes derive from md5 of (plane, dim)), so signing the batch
     // alone is bit-identical to signing it inside any union.
     "sim_ann_incremental" -> ((s, dir) => {
-      register(s)
       val corpus = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       val idx = CorpusCache.getOrBuild(s, s"incsigs:$dir")(
         withNorm(corpus).join(lshSigs(s, corpus), Seq("vec_id"))
@@ -405,7 +386,6 @@ object VectorOps {
     // against EXACT signatures, so the join stays an equi-join on the
     // bucket string; exact-cosine verification unchanged.
     "sim_ann_lsh_multiprobe" -> ((s, dir) => {
-      register(s)
       val emb = augmented(s, dir)
       val cand = multiprobeCandidates(sharedLshSigs(s, dir))
       val n = withNorm(emb)
@@ -523,7 +503,6 @@ object VectorOps {
     */
   private[graft] def marginSweep(s: SparkSession, dir: String,
       taus: Seq[Double], nt: Boolean = false): Seq[(Double, String, Long, Long, Double, Double)] = {
-    register(s)
     // round 13: the sweep reports PER-BAND recall — the τ decision is
     // owned by the band the apparatus serves (near-twins that straddle
     // regions), and a blended number buries it under the geometric tail.
@@ -812,7 +791,6 @@ object VectorOps {
     */
   private[queries] def corpusAssign(s: SparkSession, dir: String): DataFrame =
     CorpusCache.getOrBuild(s, s"ivfplain:$dir") {
-      register(s)
       val (fgrp, coarseNE) = coarseCodebook(s, dir, cellCount(embCount(s, dir)))
       assignWithCodebook(Tables.embeddings(s, dir), fgrp, coarseNE)
     }
@@ -917,10 +895,9 @@ object VectorOps {
     */
   private[queries] def sharedPairSketch(s: SparkSession, dir: String): DataFrame =
     CorpusCache.getOrBuild(s, s"pairsketch:$dir") {
-      register(s)
       val e = withNorm(augmented(s, dir))
       e.select(col("vec_id"),
-        call_function("vec_pack_half", transform(slice(col("embedding"), 1, HEAD_D),
+        Native.vecPackHalf(transform(slice(col("embedding"), 1, HEAD_D),
           x => (x.cast(DoubleType) / col("nrm")).cast(FloatType))).as("hq"),
         (norm(slice(col("embedding"), HEAD_D + 1, RP_D - HEAD_D)) / col("nrm")).as("tn"))
     }
@@ -1187,7 +1164,6 @@ object VectorOps {
     */
   private[queries] def streamIngestAssign(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    register(s)
     val in = TempDirs.fresh("annin_in")
     val out = TempDirs.fresh("annin_out")
     val ckpt = TempDirs.fresh("annin_ck")
@@ -1202,11 +1178,10 @@ object VectorOps {
     coarseNE.write.mode("overwrite").parquet(s"$cb/coarse")
     // backlog-derived shuffle partitions for the per-batch assignment work
     // (broadcast joins + argmax aggregates) — see [[StreamGate.streamSession]].
-    // The child session has a FRESH function registry, so the vec_* temp
-    // functions must be re-registered on it (the micro-batch execution
-    // clones ITS state, not the parent's).
+    // The child session needs no setup: the vec_* expressions are bound
+    // into the batch's Columns directly, not looked up in its (fresh)
+    // function registry.
     val s2 = StreamGate.streamSession(s, in)
-    register(s2)
     val q = s2.readStream
       .schema(arrivals.schema).parquet(in)
       .writeStream
@@ -1248,21 +1223,15 @@ object VectorOps {
     * standard coarse-quantizer approximation; what both schemes guarantee,
     * and the invariant spec pins, is that identical vectors co-assign.)
     */
-  private[queries] def flatAssignProbe(s: SparkSession, dir: String): DataFrame = {
-    register(s)
+  private[queries] def flatAssignProbe(s: SparkSession, dir: String): DataFrame =
     assignCells(augmented(s, dir),
       hashSeeds(s, dir, cellCount(augCount(s, dir)), "ivfseed"))
-  }
 
-  private[queries] def coarseAssignProbe(s: SparkSession, dir: String): DataFrame = {
-    register(s)
+  private[queries] def coarseAssignProbe(s: SparkSession, dir: String): DataFrame =
     coarseAssignments(s, dir, augmented(s, dir), augCount(s, dir))
-  }
 
-  private[queries] def imiAssignProbe(s: SparkSession, dir: String): DataFrame = {
-    register(s)
+  private[queries] def imiAssignProbe(s: SparkSession, dir: String): DataFrame =
     imiAssignments(s, dir, augmented(s, dir), augCount(s, dir))
-  }
 
   /** The two-level assignment chain. Fine centroids are the seed codebook
     * (first k vec_ids — the PQ-codebook discipline; at scale the codebook
@@ -1629,7 +1598,6 @@ object VectorOps {
     // identical vectors assign identically under ANY centroid set, and only
     // identical (planted) pairs clear the 0.999 threshold.
     "sim_ann_ivf" -> ((s, dir) => {
-      register(s)
       val emb = augmented(s, dir)
       val assign = sharedIvfAssign(s, dir)
       val e = withNorm(emb).join(assign, Seq("vec_id"))
@@ -1675,7 +1643,6 @@ object VectorOps {
     // post-filter-distinct discipline of round 9), and tier-2 rescores
     // survivors exactly — output identical to inline exact scoring.
     "sim_ann_ivf_probe" -> ((s, dir) => {
-      register(s)
       probeVerifiedPairs(s, dir, sharedCoarseAssign(s, dir))
         .select(col("i"), col("j"), round(col("cos"), 6).as("cosine"))
     }),
@@ -1695,7 +1662,6 @@ object VectorOps {
     // [[QueryInvariantSpec]]. At scale the rescore
     // fetch is O(candidates), and the candidate scan reads 1/4 the bytes.
     "sim_ann_quantized_rescore" -> ((s, dir) => {
-      register(s)
       val emb = augmented(s, dir)
       val assign = sharedCoarseAssign(s, dir)
       val mx = aggregate(col("embedding"), lit(0.0d),
@@ -1741,7 +1707,6 @@ object VectorOps {
     // cost is 8 table adds. Planted-twin recall pinned in
     // [[QueryInvariantSpec]] (a twin shares cell AND codes).
     "sim_ann_ivf_pq" -> ((s, dir) => {
-      register(s)
       val emb = augmented(s, dir)
       val assign = sharedCoarseAssign(s, dir)
       val cb = pqCodebook(emb)
@@ -1812,7 +1777,6 @@ object VectorOps {
     // independent). Codebook-member vectors must self-encode at zero
     // distortion — pinned in [[QueryInvariantSpec]].
     "emb_pq_encode" -> ((s, dir) => {
-      register(s)
       val emb = Tables.embeddings(s, dir)
       val enc = pqAssign(pqSubvectors(emb), pqCodebook(emb))
         .withColumn("d2x", col("d2").cast(DecimalType(28, 12)))
@@ -1838,7 +1802,6 @@ object VectorOps {
     // random vectors is inherently low for any 16-entry codebook —
     // near-equidistant points — which is why the gate plants structure.)
     "sim_ann_pq_adc" -> ((s, dir) => {
-      register(s)
       val emb = augmented(s, dir)
       val cb = pqCodebook(emb)
       val codes = sharedPqCodes(s, dir)
@@ -1904,7 +1867,6 @@ object VectorOps {
     // curation pipeline consumes downstream; at 100 TB the cells shard the
     // corpus so each within-cell join is an equi-join on `cell`.
     "dedup_semantic" -> ((s, dir) => {
-      register(s)
       val emb = augmented(s, dir)
       // two-tier within-cell pair detection (round 10): sketch-bound
       // candidates, exact rescore — identical pair set, ~4× less pair-scan
@@ -1937,7 +1899,6 @@ object VectorOps {
     // stronger check than a recall floor), so recall governance no longer
     // pays — or legitimizes — the quadratic flat assignment.
     "ann_recall" -> ((s, dir) => {
-      register(s)
       // round 12: truth carries the cosine BAND — the blended recall over
       // all ≥COS_T pairs is composition-dominated at scale (a 64-dim
       // corpus's random geometric tail at barely-COS_T grows with n·s
@@ -2036,7 +1997,6 @@ object VectorOps {
     // anchored (O(s·n)); candidates are anchor-restricted (O(s·cell)); the
     // assignments are cached per (session, corpus) like every index.
     "ann_recall_neartwin" -> ((s, dir) => {
-      register(s)
       val truth = anchoredNtTruthBands(s, dir)
       val anchors = sharedNtAnchors(s, dir)
       def bandRows(method: String, cand: DataFrame): DataFrame =
@@ -2078,7 +2038,6 @@ object VectorOps {
     // provably identical to the single-tier exact join, so the oracle twin
     // below stays an exact-semantics replay).
     "sim_ann_ivf_coarse" -> ((s, dir) => {
-      register(s)
       cellVerifiedPairs(s, dir, sharedCoarseAssign(s, dir))
         .select(col("i"), col("j"), round(col("cos"), 6).as("cosine"))
     }),
@@ -2100,7 +2059,6 @@ object VectorOps {
     // (planted) vectors still co-assign at every level — pinned in
     // [[QueryInvariantSpec]].
     "sim_ann_ivf_imi" -> ((s, dir) => {
-      register(s)
       probeVerifiedPairs(s, dir, sharedImiAssign(s, dir))
         .select(col("i"), col("j"), round(col("cos"), 6).as("cosine"))
     }),
@@ -2122,7 +2080,6 @@ object VectorOps {
     // drop there, id-range-free, so the restriction survives shifted-id
     // probe fixtures).
     "fusion_rrf" -> ((s, dir) => {
-      register(s)
       val lex = Curation.bm25Ranked(s, dir, FUSE_N)
         .select(col("doc_id"), col("lex_rank"))
       val emb = Tables.embeddings(s, dir)

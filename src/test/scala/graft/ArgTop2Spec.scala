@@ -14,16 +14,11 @@ import org.apache.spark.sql.functions._
   */
 class ArgTop2Spec extends SparkSpec {
 
-  private def registerAggs(): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_arg_top2", GraftExtensions.builder("vec_arg_top2"), "built-in")
-
   private def compare(rows: Seq[(Long, java.lang.Double, Long)]): Unit = {
-    registerAggs()
     import spark.implicits._
     val df = rows.toDF("g", "ord", "id").repartition(7, col("id"))
     val agg = df.groupBy(col("g"))
-      .agg(call_function("vec_arg_top2", col("ord"), col("id")).as("t2"))
+      .agg(graft.expr.Native.vecArgTop2(col("ord"), col("id")).as("t2"))
       .select(col("g"), col("t2").getField("cell").as("cell"),
         col("t2").getField("cell2").as("cell2"))
     val w = Window.partitionBy(col("g")).orderBy(col("ord").desc, col("id").asc)
@@ -69,11 +64,10 @@ class ArgTop2Spec extends SparkSpec {
   }
 
   test("the aggregate plans as HashAggregate, never SortAggregate") {
-    registerAggs()
     import spark.implicits._
     val df = Seq((1L, 0.5, 1L), (1L, 0.7, 2L)).toDF("g", "ord", "id")
       .groupBy(col("g"))
-      .agg(call_function("vec_arg_top2", col("ord"), col("id")).as("t2"))
+      .agg(graft.expr.Native.vecArgTop2(col("ord"), col("id")).as("t2"))
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("HashAggregate") && !p.contains("SortAggregate"),
       s"ArgTop2 must keep the HashAggregate fast path:\n$p")

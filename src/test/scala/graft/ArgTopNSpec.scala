@@ -15,16 +15,11 @@ import org.apache.spark.sql.functions._
   */
 class ArgTopNSpec extends SparkSpec {
 
-  private def registerAggs(): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_arg_topn", GraftExtensions.builder("vec_arg_topn"), "built-in")
-
   private def compare(rows: Seq[(Long, java.lang.Double, Long)], cap: Int): Unit = {
-    registerAggs()
     import spark.implicits._
     val df = rows.toDF("g", "ord", "id").repartition(7, col("id"))
     val got = df.groupBy(col("g"))
-      .agg(call_function("vec_arg_topn", col("ord"), col("id"), lit(cap)).as("tops"))
+      .agg(graft.expr.Native.vecArgTopN(col("ord"), col("id"), lit(cap)).as("tops"))
       .select(col("g"), posexplode(col("tops")).as(Seq("pos", "t")))
       .filter(col("t").isNotNull)
       .select(col("g"), (col("pos") + 1).cast("long").as("rn"),
@@ -80,7 +75,6 @@ class ArgTopNSpec extends SparkSpec {
     // compare() filters nulls explicitly; here the NaN rows must vanish
     // from the aggregate the same way, leaving the finite rows' ranks
     // unshifted.
-    registerAggs()
     import spark.implicits._
     val rows = Seq(
       (1L, java.lang.Double.valueOf(Double.NaN), 10L),
@@ -90,7 +84,7 @@ class ArgTopNSpec extends SparkSpec {
       (2L, java.lang.Double.valueOf(Double.NaN), 21L))
     val got = rows.toDF("g", "ord", "id").repartition(3, col("id"))
       .groupBy(col("g"))
-      .agg(call_function("vec_arg_topn", col("ord"), col("id"), lit(4)).as("tops"))
+      .agg(graft.expr.Native.vecArgTopN(col("ord"), col("id"), lit(4)).as("tops"))
       .select(col("g"), explode(col("tops")).as("t"))
       .filter(col("t").isNotNull)
       .select(col("g"), col("t").getField("cid").as("cid"))
@@ -100,28 +94,26 @@ class ArgTopNSpec extends SparkSpec {
   }
 
   test("the aggregate plans as HashAggregate, never SortAggregate") {
-    registerAggs()
     import spark.implicits._
     val df = Seq((1L, 0.5, 1L), (1L, 0.7, 2L)).toDF("g", "ord", "id")
       .groupBy(col("g"))
-      .agg(call_function("vec_arg_topn", col("ord"), col("id"), lit(16)).as("tops"))
+      .agg(graft.expr.Native.vecArgTopN(col("ord"), col("id"), lit(16)).as("tops"))
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("HashAggregate") && !p.contains("SortAggregate"),
       s"ArgTopN must keep the HashAggregate fast path:\n$p")
   }
 
   test("capacity must be a literal int within bounds") {
-    registerAggs()
     import spark.implicits._
     val df = Seq((1L, 0.5, 1L)).toDF("g", "ord", "id")
     intercept[Exception] {
       df.groupBy(col("g"))
-        .agg(call_function("vec_arg_topn", col("ord"), col("id"), col("id")).as("t"))
+        .agg(graft.expr.Native.vecArgTopN(col("ord"), col("id"), col("id")).as("t"))
         .collect()
     }
     intercept[Exception] {
       df.groupBy(col("g"))
-        .agg(call_function("vec_arg_topn", col("ord"), col("id"), lit(1)).as("t"))
+        .agg(graft.expr.Native.vecArgTopN(col("ord"), col("id"), lit(1)).as("t"))
         .collect()
     }
   }

@@ -11,11 +11,14 @@ package graft
   */
 class ExtensionsSpec extends SparkSpec {
 
-  test("extension function descriptions answer through pure SQL") {
+  private def registerSqlFunctions(): Unit =
     GraftExtensions.functions.foreach { case (id, _, builder) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         id.funcName, builder, "built-in")
     }
+
+  test("extension function descriptions answer through pure SQL") {
+    registerSqlFunctions()
     val row = spark.sql(
       """SELECT farm_fingerprint('abc') AS f,
         |  vec_dot(array(CAST(1.5 AS FLOAT), CAST(2.0 AS FLOAT)),
@@ -47,10 +50,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("wrong arity is a clear analysis error, not an index crash") {
-    GraftExtensions.functions.foreach { case (id, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        id.funcName, builder, "built-in")
-    }
+    registerSqlFunctions()
     val e1 = intercept[Exception](spark.sql("SELECT farm_fingerprint('a', 'b')").collect())
     assert(e1.getMessage.contains("farm_fingerprint"))
     val e2 = intercept[Exception](spark.sql("SELECT vec_dot(array(CAST(1.0 AS FLOAT)))").collect())
@@ -64,10 +64,9 @@ class ExtensionsSpec extends SparkSpec {
     // shape in miniature
     val df = (Seq.fill(100)(7L) ++ (1L to 50L)).toDF("k")
     val cms = df.stat.countMinSketch("k", eps = 0.001, confidence = 0.99, seed = 42)
-    graft.expr.CmsEstimate.register(spark)
     val sketch = lit(graft.expr.CmsEstimate.serialize(cms))
     val rows = df.groupBy($"k").agg(count(lit(1)).as("exact"))
-      .withColumn("est", call_function("cms_estimate", sketch, $"k"))
+      .withColumn("est", graft.expr.Native.cmsEstimate(sketch, $"k"))
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -80,7 +79,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("cms_estimate rejects a null-folding sketch at analysis time") {
-    graft.expr.CmsEstimate.register(spark)
+    registerSqlFunctions()
     val e = intercept[Exception](
       spark.sql("SELECT cms_estimate(CAST(NULL AS BINARY), 1L)").collect())
     assert(e.getMessage.contains("non-null serialized sketch"))

@@ -248,9 +248,8 @@ class FarmFingerprintSpec extends SparkSpec {
   import spark.implicits._
 
   test("matches BigQuery FARM_FINGERPRINT on known values") {
-    graft.expr.FarmFingerprint.register(spark)
     val got = Seq("abc", "", "glamira").toDF("s")
-      .select(call_function("farm_fingerprint", $"s")).as[Long].collect()
+      .select(graft.expr.Native.farmFingerprint($"s")).as[Long].collect()
     // farmHashFingerprint64 reference values (BigQuery-compatible)
     assert(got(0) === 2640714258260161385L)
     assert(got(1) === com.google.common.hash.Hashing.farmHashFingerprint64()
@@ -260,12 +259,11 @@ class FarmFingerprintSpec extends SparkSpec {
   }
 
   test("null propagates; non-string input rejected at analysis") {
-    graft.expr.FarmFingerprint.register(spark)
     val n = Seq[Option[String]](None).toDF("s")
-      .select(call_function("farm_fingerprint", $"s")).collect().head
+      .select(graft.expr.Native.farmFingerprint($"s")).collect().head
     assert(n.isNullAt(0))
     intercept[Exception] {
-      Seq(1).toDF("i").select(call_function("farm_fingerprint", $"i")).collect()
+      Seq(1).toDF("i").select(graft.expr.Native.farmFingerprint($"i")).collect()
     }
   }
 }

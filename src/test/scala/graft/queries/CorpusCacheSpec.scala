@@ -158,25 +158,6 @@ class CorpusCacheSpec extends SparkSpec {
     assert((hot eq hot2) && (fill.size + newer.count() > 0))
   }
 
-  test("the demand log stays bounded across many more keys than MaxObserved") {
-    // round-10 (round-9 verdict #6): `observed` is the GC-independent
-    // consumer-chain witness, but a session that iterates corpus dirs
-    // forever must not grow it without bound — same LRU discipline as the
-    // live entries, at a cap comfortably above any one sweep's working set.
-    val s2 = spark.newSession()
-    import s2.implicits._
-    val n = CorpusCache.MaxObserved + 40
-    (0 until n).foreach { i =>
-      CorpusCache.getOrBuild(s2, s"cc-obs:$i")(Seq(i).toDF("v"))
-    }
-    val obs = CorpusCache.observedKeys(s2)
-    assert(obs.size <= CorpusCache.MaxObserved,
-      s"observed=${obs.size} must stay <= ${CorpusCache.MaxObserved}")
-    // recency survives: the latest keys are still observable witnesses
-    (n - 10 until n).foreach(i => assert(obs("cc-obs:" + i), s"cc-obs:$i should be observed"))
-    (0 until 10).foreach(i => assert(!obs("cc-obs:" + i), s"cc-obs:$i should have aged out"))
-  }
-
   test("the MaxLive cap is deterministic: eviction survives GC of all external references") {
     // round 11 (round-10 verdict #4, closing the "advisory under GC
     // pressure" gap): the prior weak-value design could only enforce

@@ -651,10 +651,11 @@ class PlanShapeSpec extends SparkSpec {
       "sim_ann_quantized_rescore", "sim_ann_ivf_pq", "dedup_semantic",
       "ann_recall")
     consumers.foreach(n => graft.SparkEntry.queries(n)(s2, dir))
-    // observedKeys, not liveKeys: cached Datasets are only weakly held
-    // once construction returns, so a GC mid-suite can erase a live entry
-    // and flake the witness — the demand log is GC-independent
-    val keys = CorpusCache.observedKeys(s2)
+    // entries are strongly held and evicted only past MaxLive, so a key
+    // count under the cap proves no entry (a flat one included) was evicted
+    val keys = CorpusCache.liveKeys(s2)
+    assert(keys.size < CorpusCache.MaxLive,
+      s"witness needs every demanded key still live, keys=$keys")
     assert(keys.exists(_.startsWith("ivfcoarse:")),
       s"consumers must build the coarse assignment, keys=$keys")
     assert(!keys.exists(_.startsWith("ivfassign:")),
@@ -662,7 +663,7 @@ class PlanShapeSpec extends SparkSpec {
     // positive control: the tagged baseline still builds (and is the only
     // builder of) the flat chain
     graft.SparkEntry.queries("sim_ann_ivf")(s2, dir)
-    assert(CorpusCache.observedKeys(s2).exists(_.startsWith("ivfassign:")),
+    assert(CorpusCache.liveKeys(s2).exists(_.startsWith("ivfassign:")),
       "control: the tagged baseline must register the flat key")
   }
 
@@ -696,7 +697,6 @@ class PlanShapeSpec extends SparkSpec {
     // fetch. A regression that rejoins embeddings below the ck join
     // re-inflates the shuffle 3.5× and the pair dot 4×.
     import org.apache.spark.sql.functions._
-    VectorOps.register(spark)
     val df = VectorOps.cellVerifiedPairs(spark, dir,
       VectorOps.sharedCoarseAssign(spark, dir))
     // the candidate PAIR join: keyed on ck AND two-sided (both pair ids in
@@ -725,7 +725,7 @@ class PlanShapeSpec extends SparkSpec {
     // negative control: the single-tier exact shape (the pre-round-10
     // plan) must trip the same probe — proves the guard can fail
     def vdot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      call_function("vec_dot", a, b)
+      graft.expr.Native.vecDot(a, b)
     val base = graft.Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val aug = base.unionByName(
       base.select((col("vec_id") + 100000).as("vec_id"), col("embedding")))

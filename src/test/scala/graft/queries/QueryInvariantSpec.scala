@@ -185,7 +185,6 @@ class QueryInvariantSpec extends SparkSpec {
     // 10⁶; per-tier numbers in SCALE.md round 13); and the apparatus is
     // non-vacuous — it strictly beats home-only search in the planted
     // bands.
-    VectorOps.register(spark)
     val emb = VectorOps.ntAugmented(spark, dir)
     val truth = VectorOps.anchoredNtTruthBands(spark, dir)
     val anchors = graft.queries.AnchorSample
@@ -256,7 +255,6 @@ class QueryInvariantSpec extends SparkSpec {
     // the emitted probe list obeys the law on the fixture: ranked extra
     // regions only (home excluded), margins non-negative and monotone,
     // and rank-2 consistent with the compat columns (cell2, mgn)
-    VectorOps.register(spark)
     val assign = VectorOps.sharedImiAssign(spark, dir)
     val bad = assign.filter(size($"probes") > 0).filter(
       $"probes".getItem(0).getField("pc") =!= $"cell2" ||
@@ -301,7 +299,6 @@ class QueryInvariantSpec extends SparkSpec {
     // truth vs ungated on this fixture — the calibration invariant the
     // SCALE.md sweep established; (c) the gate actually prunes (some
     // vector with cell2 has mgn > τ, else the predicate is vacuous).
-    VectorOps.register(spark)
     val emb = graft.Tables.embeddings(spark, dir).select($"vec_id", $"embedding")
     val aug = emb.unionByName(
       emb.select(($"vec_id" + 100000L).as("vec_id"), $"embedding"))
@@ -367,9 +364,8 @@ class QueryInvariantSpec extends SparkSpec {
     // must equal the single-tier exact join bit-for-bit. And the bound
     // must actually PRUNE (tier 2 exists to be rare): survivors ≤ 10% of
     // the within-cell candidate space on the random fixture.
-    VectorOps.register(spark)
     def vdot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      call_function("vec_dot", a, b)
+      graft.expr.Native.vecDot(a, b)
     val assign = VectorOps.sharedCoarseAssign(spark, dir)
     val base = graft.Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val aug = base.unionByName(
@@ -400,7 +396,7 @@ class QueryInvariantSpec extends SparkSpec {
     // norm-free spelling; round 17: the head is binary16-PACKED, scored
     // by vec_dot_half under the f16-quantization slack (SKETCH_EPS)
     val survivors = candAll
-      .filter(call_function("vec_dot_half", col("ha"), col("hb")) +
+      .filter(graft.expr.Native.vecDotHalf(col("ha"), col("hb")) +
           col("ta") * col("tb") >=
         lit(0.999) - lit(VectorOps.SKETCH_EPS))
       .count()
@@ -581,7 +577,6 @@ class QueryInvariantSpec extends SparkSpec {
     // the property stream_ann_ingest rides: given a fixed codebook, the
     // two-level descent is per-vector independent, so assigning the
     // arrivals in two batches and unioning must equal one-shot assignment
-    VectorOps.register(spark)
     val arrivals = graft.Tables.embeddings(spark, dir).filter($"vec_id" % 4 === 0)
     val (fgrp, coarseNE) = VectorOps.coarseCodebook(spark, dir,
       VectorOps.cellCount(VectorOps.embCount(spark, dir)))
@@ -889,7 +884,7 @@ class QueryInvariantSpec extends SparkSpec {
       .unionByName(evalSet.filter($"doc_id" % 100 === 0)
         .select(($"doc_id" + 1000000000L).as("doc_id"), $"text"))
     def kept(cap: Long): Set[Long] =
-      Curation.bloomSandwich(spark, corpus, evalSet, cap)
+      Curation.bloomSandwich(corpus, evalSet, cap)
         .collect().map(_.getLong(0)).toSet
     val exact = corpus
       .join(evalSet.select(md5($"text").as("fp")),
@@ -975,9 +970,8 @@ class QueryInvariantSpec extends SparkSpec {
     // under sim_ann_ivf_probe — the verified output must equal a
     // full-precision replay of the entire probe candidate space (home ∪
     // margin-gated regions) with NO sketch and NO tier-0.
-    VectorOps.register(spark)
     def vdot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      call_function("vec_dot", a, b)
+      graft.expr.Native.vecDot(a, b)
     val base = graft.Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val aug = base.unionByName(
       base.select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
