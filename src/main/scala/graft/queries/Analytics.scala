@@ -402,9 +402,10 @@ object Analytics {
     * independent of where the sampled range boundaries fall). The range
     * width DERIVES from the universe size (round-10 verdict: a fixed 8-way
     * split meant 8 tasks each sorting n/8 names — a parallelism ceiling at
-    * 100×): per-partition row volume stays ≈[[Curation.SHARD_PART_ROWS]]
+    * 100×): per-partition row volume stays ≈[[Widths.SHARD_PART_ROWS]]
     * while the offsets table — one row per partition, a single-task window
-    * and a broadcast — stays ≤[[Curation.LEVEL2_CAP]] rows. Honest
+    * and a broadcast — stays ≤[[Widths.LEVEL2_CAP]] rows; 8 floors tiny
+    * universes at the previous behavior. Honest
     * adjudication (round-11 A/B at 5M names, SCALE.md): 8-way and 80-way
     * measure EQUAL on this box — the ceiling does not bind at 5M/local[32]
     * because the sort is ~10 s of a ~115 s query whose long pole is the
@@ -426,7 +427,8 @@ object Analytics {
       nUniv: Long = -1L): DataFrame = {
     val n = if (nUniv >= 0L) nUniv else univ.count()
     val parted = univ.withColumn("sk", sk)
-      .repartitionByRange(snmPartCount(n), col("sk"))
+      .repartitionByRange(Widths.parts(n, Widths.SHARD_PART_ROWS, 8L, Widths.LEVEL2_CAP),
+        col("sk"))
       .withColumn("pid", spark_partition_id())
       .withColumn("pr",
         row_number().over(Window.partitionBy(col("pid")).orderBy(col("sk"))))
@@ -451,19 +453,6 @@ object Analytics {
       .filter(col("rj") > col("ri") && col("rj") - col("ri") <= wW)
       .select(col("i"), col("j"))
   }
-
-  /** Range-partition count for [[snmPairs]]' two-phase global rank over an
-    * n-name universe: per-partition sort volume stays ≈SHARD_PART_ROWS
-    * rows as n grows (parts scale linearly), capped at LEVEL2_CAP so the
-    * offsets window/broadcast stays a small table; 8 floors tiny
-    * universes at the previous behavior. Same constants as shardExport's
-    * [[Curation.shardPartCount]] — one derived-range discipline across
-    * the repo's two-phase prefix-sum/rank stages.
-    */
-  private[queries] def snmPartCount(n: Long): Int =
-    math.max(8L, math.min(
-      math.ceil(n / Curation.SHARD_PART_ROWS).toLong,
-      Curation.LEVEL2_CAP.toLong)).toInt
 
   /** Per-block size cap for ER blocking (block purging): any q-gram key
     * shared by more than this many records is uninformative — joining
@@ -536,42 +525,22 @@ object Analytics {
     else if (nUniv <= 8031810176L) 7 // 26^7
     else 8 // 26^8
 
-  /** Estimated UnsafeRow width of one keyed ER exchange row — the
-    * (name, blk) pair the blocking explode ships: 8 B null bitset + 2×8 B
-    * offset-and-length words + ~24 B padded name + ~16 B padded key ≈ 64.
-    * An estimate that only sizes partition counts (never results), so a
-    * factor-of-2 error moves per-task state between 32 and 128 MB —
-    * both fine.
-    */
-  private val ER_KEYED_ROW_BYTES = 64L
-
   /** Isolated child session whose shuffle-partition count derives from the
     * name-universe size — the [[StreamGate.streamSession]] /
     * `withBuildParallelism` discipline applied to the ER chain's
     * corpus-scale exchanges. The keyed explode ships 3 rows per name
-    * ([[erKeyed]]), so width = ⌈nUniv · 3 · [[ER_KEYED_ROW_BYTES]] /
-    * 64 MB⌉ (Spark's own advisory size), capped at 4096. Engages only when
-    * the derivation EXCEEDS the caller session's setting: gate-SF corpora
-    * derive ≤ 1 → same session back, byte-identical plans; a cluster
-    * session's higher own setting wins; and the 10⁸-name tier (round-15
-    * item #4's OOM: the groupBy("blk") hash aggregate holds ~600 MB of
-    * state per task at 32 partitions against a ~450 MB execution share)
-    * gets ~550 right-sized tasks instead. Outputs are partition-count
-    * invariant — the same argument as DerivedRangeSpec's rank pinning:
-    * only exchange widths change, never what flows through them. The
-    * child session shares context, catalog and cache with the parent.
+    * ([[erKeyed]]), so the width is [[Widths.widen]] over nUniv · 3 ·
+    * [[Widths.ER_KEYED_ROW_BYTES]] bytes at one 64 MB advisory partition
+    * each. The 10⁸-name tier (round-15 item #4's OOM: the groupBy("blk")
+    * hash aggregate holds ~600 MB of state per task at 32 partitions
+    * against a ~450 MB execution share) gets ~550 right-sized tasks
+    * instead. Outputs are partition-count invariant — the same argument as
+    * DerivedRangeSpec's rank pinning: only exchange widths change, never
+    * what flows through them.
     */
-  private[queries] def erSession(s: SparkSession, nUniv: Long): SparkSession = {
-    val sessionParts = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val derived = math.min(4096L,
-      math.ceil(nUniv * ER_KEYED_ROW_BYTES * 3.0 / (64L << 20)).toLong)
-    if (derived <= sessionParts) s
-    else {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", derived.toString)
-      s2
-    }
-  }
+  private[queries] def erSession(s: SparkSession, nUniv: Long): SparkSession =
+    Widths.widen(s, nUniv * 3L * Widths.ER_KEYED_ROW_BYTES, Widths.ADVISORY_BYTES)
+      .map(Widths.childSession(s, _)).getOrElse(s)
 
   /** Multi-key positional q-gram blocking: each name emits three q-gram
     * keys — prefix (P), middle (M), suffix (S) — tagged so identical grams

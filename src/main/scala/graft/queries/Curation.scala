@@ -86,20 +86,19 @@ object Curation {
     // The hash-range part count DERIVES from the corpus (round-10 verdict:
     // a fixed 16-way split meant n/16 rows through each per-part window
     // task — a hard parallelism ceiling that makes this stage the long
-    // pole at 100×). Broadcast 1-row count, the packRangeSize discipline;
-    // the OUTPUT is invariant to the part count (cum_tokens is the global
-    // prefix sum under the same (hs, doc_id) total order for any split).
-    val nDf = base.agg(count(lit(1)).as("n_docs"))
+    // pole at 100×), planned as a literal from the memoized documents
+    // count; the OUTPUT is invariant to the part count (cum_tokens is the
+    // global prefix sum under the same (hs, doc_id) total order for any
+    // split).
     // persisted: the tiny (id, n_tokens, hs, part) table feeds the local
     // cumsums AND the per-part offsets — one tokenize pass, not two (the
     // curation_token_budget discipline)
-    val docs = ScratchCache.register(base.crossJoin(broadcast(nDf))
+    val docs = ScratchCache.register(base
       // part boundaries are monotone in hs (hs·np/10⁶ is nondecreasing in
       // hs; equal hs → equal part), so the per-part sorts compose into
       // the global (hs, doc_id) order at ANY part count
       .withColumn("part",
-        floor(col("hs") * shardPartCount(col("n_docs")) / lit(1000000.0d)))
-      .drop("n_docs")
+        floor(col("hs") * lit(shardPartCount(docCount(s, dir))) / lit(1000000.0d)))
       .persist())
     val wIn = Window.partitionBy(col("part")).orderBy(col("hs"), col("doc_id"))
     val local = docs.withColumn("cum_local", sum(col("n_tokens")).over(wIn))
@@ -152,40 +151,31 @@ object Curation {
   // All three compare against 6-dp-rounded metrics whose cross-engine
   // equality is already hash-proven by their individual gates, so the
   // comparisons can never straddle an engine difference.
-  /** Upper bound on level-2 prefix-sum rows in pack_sequences
-    * (≈ shuffle.partitions × 10k): the single-partition offset window must
-    * stay a small table at any corpus size.
-    */
-  private[queries] val LEVEL2_CAP = 320000.0d
-
   /** pack_sequences range size for an n-doc corpus: √n balances both
     * prefix-sum levels; the n/LEVEL2_CAP term keeps the level-2 offset
-    * table under the cap once √n would exceed it; 100 floors tiny corpora.
+    * table under [[Widths.LEVEL2_CAP]] rows once √n would exceed it; 100
+    * floors tiny corpora.
     */
-  private[queries] def packRangeSize(nDocs: Column): Column =
-    greatest(lit(100L), ceil(sqrt(nDocs)), ceil(nDocs / lit(LEVEL2_CAP)))
-
-  /** Expected per-part row volume for shardExport's hash-range split: the
-    * constant that stays fixed as the corpus grows (parts scale, parts'
-    * work doesn't).
-    */
-  private[queries] val SHARD_PART_ROWS = 62500.0d
+  private[queries] def packRangeSize(nDocs: Long): Long =
+    Seq(100L, math.ceil(math.sqrt(nDocs.toDouble)).toLong,
+      (nDocs + Widths.LEVEL2_CAP - 1) / Widths.LEVEL2_CAP).max
 
   /** Hash-range part count for shardExport's two-level prefix sum over an
-    * n-doc corpus (round-10 verdict: the fixed 16 capped parallelism at
-    * any corpus size). Expected per-part row volume stays ≤
-    * [[SHARD_PART_ROWS]] (hs is md5-uniform over the 10⁶ hash space, so
-    * realized part sizes concentrate tightly around n/parts), while the
-    * per-part offsets table — a single-task window and a broadcast —
-    * stays ≤ [[LEVEL2_CAP]] rows. 16 floors tiny corpora at the previous
-    * behavior. Past n ≈ LEVEL2_CAP·SHARD_PART_ROWS (2×10¹⁰ docs) per-part
-    * volume grows linearly under the cap — the point at which a third
-    * prefix-sum level would take over (the [[packRangeSize]] trade, same
-    * cap constant).
+    * n-doc corpus (round-10 verdict: the fixed 16 capped parallelism).
+    * hs is md5-uniform over the 10⁶ hash space, so part sizes concentrate
+    * around n/parts. 16 floors tiny corpora at the previous behavior. Past
+    * n ≈ LEVEL2_CAP·SHARD_PART_ROWS (2×10¹⁰ docs) per-part volume grows
+    * under the cap, where a third prefix-sum level would take over.
     */
-  private[queries] def shardPartCount(nDocs: Column): Column =
-    greatest(lit(16L),
-      least(ceil(nDocs / lit(SHARD_PART_ROWS)), lit(LEVEL2_CAP.toLong)))
+  private[queries] def shardPartCount(nDocs: Long): Long =
+    Widths.parts(nDocs, Widths.SHARD_PART_ROWS, 16L, Widths.LEVEL2_CAP).toLong
+
+  /** Memoized documents row count — one count job per (session, corpus)
+    * for the shard-export, s19 and pack_sequences splits; s15's writer
+    * split reads the same memo key.
+    */
+  private def docCount(s: SparkSession, dir: String): Long =
+    Preconditions.longOnce(s, s"rowcount:documents:$dir")(Tables.documents(s, dir).count())
 
   private val QUALITY_T = 0.65
   private val DUP_T = 0.62
@@ -341,14 +331,11 @@ object Curation {
       // up to ~10¹¹ docs; past that the n/LEVEL2_CAP term pins level-2 at
       // ≤ ~320k rows (≈ shuffle.partitions × 10k) and level-1 tasks grow
       // linearly instead — the point at which a third prefix-sum level
-      // would take over. Broadcast 1-row count: no driver-side action, and
-      // the OUTPUT is invariant to the range choice (the prefix sum is
-      // exact integer math under the same doc_id total order).
-      val nDf = base.agg(count(lit(1)).as("n_docs"))
-      val toks = base.crossJoin(broadcast(nDf))
-        .withColumn("range_size", packRangeSize(col("n_docs")))
-        .withColumn("part", floor(col("doc_id") / col("range_size")))
-        .drop("n_docs", "range_size")
+      // would take over. A literal from the memoized documents count; the
+      // OUTPUT is invariant to the range choice (the prefix sum is exact
+      // integer math under the same doc_id total order).
+      val toks = base
+        .withColumn("part", floor(col("doc_id") / lit(packRangeSize(docCount(s, dir)))))
       val wIn = Window.partitionBy(col("part")).orderBy(col("doc_id"))
       val withLocal = toks.withColumn("cum_local", sum(col("n_tokens")).over(wIn))
       val wParts = Window.orderBy(col("part"))
@@ -616,10 +603,8 @@ object Curation {
       // files_ok below bounds the file count by the SAME derived value
       // (the oracle twin pins only the boolean, so the derivation is free
       // to scale).
-      val writeParts = math.max(4L, math.min(
-        math.ceil(Preconditions.longOnce(s, s"rowcount:documents:$dir")(
-          Tables.documents(s, dir).count()) / SHARD_PART_ROWS).toLong,
-        LEVEL2_CAP.toLong)).toInt
+      val writeParts = Widths.parts(docCount(s, dir), Widths.SHARD_PART_ROWS, 4L,
+        Widths.LEVEL2_CAP)
       shardExport(s, dir)
         .join(Tables.documents(s, dir).select(col("doc_id"), col("text")), Seq("doc_id"))
         .repartitionByRange(writeParts, col("shard_id"), col("ordinal"))

@@ -239,8 +239,7 @@ object Joins {
     // the same conf defaults detect 256 MB-plus partitions; here only the
     // thresholds differ, the mechanism is identical.
     "j17_skew_join_aqe" -> ((s, dir) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", "32")
+      val s2 = Widths.childSession(s, 32)
       s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       s2.conf.set("spark.sql.adaptive.enabled", "true")
       s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
@@ -292,8 +291,7 @@ object Joins {
     // predicate in the fact scan's partitionFilters (PlanProbe) is folded
     // into the hash-gated result.
     "j18_dynamic_partition_pruning" -> ((s, dir) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", "32")
+      val s2 = Widths.childSession(s, 32)
       // the cost heuristic compares fact-scan savings against the dim
       // subquery's ESTIMATED size; an aggregate dim has no stats, so its
       // default estimate dwarfs a test-scale fact and pruning is declined

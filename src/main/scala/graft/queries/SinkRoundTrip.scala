@@ -25,22 +25,15 @@ object SinkRoundTrip {
 
   private def freshDir(tag: String): String = TempDirs.fresh(s"sink_$tag")
 
-  /** Reference export chunk size: the chunked parquet exporter slices the
-    * source 5000 rows per chunk file (ETL/export_to_gcs.py:78), i.e. the
-    * CHUNK COUNT scales with the corpus while per-chunk volume stays fixed.
-    */
-  private[queries] val CHUNK_ROWS = 5000.0d
-
   /** Derived writer split for the sink gates (round 12 — the last members
     * of the fixed-split class the round-10/11 sweeps closed in the
     * prefix-sum and s19 families): a fixed `repartition(8)` /
     * `repartitionByRange(4|16, …)` means that many writer tasks each
     * carrying n/parts rows AT ANY CORPUS SIZE — at 100× the demonstrated
-    * layout is the one you would NOT run. Parts derive from the corpus row
-    * count over a fixed per-writer volume (the reference's own
-    * rows-PER-chunk discipline, [[CHUNK_ROWS]]); the floor keeps every
+    * layout is the one you would NOT run. Parts are [[Widths.parts]] of the
+    * corpus row count at a fixed per-writer volume; the floor keeps every
     * gate-scale file count at its previous fixed value so no oracle or
-    * layout band moves at sf0.001–0.1; [[Curation.LEVEL2_CAP]] bounds the
+    * layout band moves at sf0.001–0.1; [[Widths.LEVEL2_CAP]] bounds the
     * range-split side tables exactly as in the s19/shard derivations.
     *
     * The count job is parquet-meta-only AND memoized per (session, table,
@@ -48,12 +41,10 @@ object SinkRoundTrip {
     * fusion_rrf `Preconditions.once` discipline): repeated invocations —
     * plan-shape specs, multi-pass bench — pay it once per session.
     */
-  private[queries] def derivedParts(s: SparkSession, key: String, targetRows: Double,
-      floor: Int)(count: => Long): Int = {
-    val n = Preconditions.longOnce(s, s"rowcount:$key")(count)
-    math.max(floor.toLong,
-      math.min(math.ceil(n / targetRows).toLong, Curation.LEVEL2_CAP.toLong)).toInt
-  }
+  private[queries] def derivedParts(s: SparkSession, key: String, perPart: Long,
+      floor: Long)(count: => Long): Int =
+    Widths.parts(Preconditions.longOnce(s, s"rowcount:$key")(count), perPart, floor,
+      Widths.LEVEL2_CAP)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S4: chunked parquet writer — chunk count DERIVED from the corpus over
@@ -62,7 +53,7 @@ object SinkRoundTrip {
     // fixed repartition(8)), then a read-back aggregate over all chunks.
     "s4_parquet_roundtrip" -> ((s, dir) => {
       val out = freshDir("s4")
-      val parts = derivedParts(s, s"events:$dir", CHUNK_ROWS, 8)(
+      val parts = derivedParts(s, s"events:$dir", Widths.CHUNK_ROWS, 8)(
         Tables.events(s, dir).count())
       Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
@@ -127,7 +118,7 @@ object SinkRoundTrip {
       // stays ≈SHARD_PART_ROWS, floored at the previous 4 so gate-scale
       // file counts are unchanged, and files_ok bounds by the SAME derived
       // value (the oracle twin pins only the boolean).
-      val writeParts = derivedParts(s, s"orders:$dir", Curation.SHARD_PART_ROWS, 4)(
+      val writeParts = derivedParts(s, s"orders:$dir", Widths.SHARD_PART_ROWS, 4)(
         Tables.orders(s, dir).count())
       Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"), col("o_totalprice"))
@@ -204,7 +195,7 @@ object SinkRoundTrip {
       // writer count derived from the corpus (round 12, closing the fixed
       // repartition(8)): ≈SHARD_PART_ROWS rows per ORC writer so rowgroup
       // zone quality doesn't ride a split that stops fitting at 100×
-      val parts = derivedParts(s, s"lineitem:$dir", Curation.SHARD_PART_ROWS, 8)(
+      val parts = derivedParts(s, s"lineitem:$dir", Widths.SHARD_PART_ROWS, 8)(
         Tables.lineitem(s, dir).count())
       Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
@@ -229,7 +220,7 @@ object SinkRoundTrip {
       // shard count derived from the corpus (round 12): shards ≈ corpus /
       // target shard rows, exactly the production export knob the comment
       // above describes — previously a fixed repartition(8)
-      val parts = derivedParts(s, s"documents:$dir", Curation.SHARD_PART_ROWS, 8)(
+      val parts = derivedParts(s, s"documents:$dir", Widths.SHARD_PART_ROWS, 8)(
         Tables.documents(s, dir).count())
       Tables.documents(s, dir)
         .select(col("doc_id"), col("source"), col("lang"), col("text"))
@@ -262,8 +253,7 @@ object SinkRoundTrip {
     // backing dirs per-invocation (TempDirs), so parallel suites never race
     // and re-runs reclaim their predecessor's files.
     "s16_bucketed_join" -> ((s, dir) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", "32")
+      val s2 = Widths.childSession(s, 32)
       s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       s2.conf.set("spark.sql.adaptive.enabled", "false")
       val tag = Thread.currentThread().getId
@@ -301,8 +291,7 @@ object SinkRoundTrip {
     // optimized plan carries an injected BloomFilterMightContain (typed,
     // via PlanProbe), and folds the flag into the hash-gated result.
     "s18_runtime_bloom_join" -> ((s, dir) => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.shuffle.partitions", "32")
+      val s2 = Widths.childSession(s, 32)
       s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
@@ -347,7 +336,7 @@ object SinkRoundTrip {
       // ~10⁶ orders the grid refines with the data (per-writer volume
       // ≈SHARD_PART_ROWS). The extent assertion below is a MEAN per file,
       // so it is invariant to the derived count by construction.
-      val zParts = derivedParts(s, s"orders:$dir", Curation.SHARD_PART_ROWS, 16)(
+      val zParts = derivedParts(s, s"orders:$dir", Widths.SHARD_PART_ROWS, 16)(
         Tables.orders(s, dir).count())
       val o = Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"), col("o_totalprice"))

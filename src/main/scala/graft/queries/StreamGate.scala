@@ -41,30 +41,21 @@ object StreamGate {
     * and EVERY micro-batch then commits one state-store delta file per
     * partition per stateful operator (per side, for joins) — at 32
     * partitions that checkpoint I/O dominates these bounded-backlog gates.
-    * Partitions derive from the backlog's on-disk bytes at one
+    * Partitions are [[Widths.parts]] of the backlog's on-disk bytes at one
     * advisory-size (64 MB, Spark's own default) state partition each,
     * clamped to [8, the caller session's setting] — so the gate backlogs
     * land at 8 while a 100 TB backlog keeps the deployment's configured
-    * parallelism. The override lives on an isolated child session (same
-    * context and cache, own conf): the source, transform, sink, AND the
+    * parallelism. The override lives on an isolated child session
+    * ([[Widths.childSession]]): the source, transform, sink, AND the
     * memory-sink temp view all resolve against the child, and the
     * caller's session never observes the override.
     */
-  private[queries] def streamSession(s: SparkSession, backlogDirs: String*): SparkSession = {
-    def dirBytes(p: String): Long = {
-      def rec(f: java.io.File): Long =
-        if (f.isDirectory) Option(f.listFiles()).map(_.map(rec).sum).getOrElse(0L)
-        else f.length()
-      rec(new java.io.File(p))
-    }
-    val sessionParts = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val bytes = backlogDirs.map(dirBytes).sum
-    val parts = math.max(8L,
-      math.min(bytes / (64L * 1024 * 1024) + 1, sessionParts.toLong)).toInt
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    s2
-  }
+  private[queries] def streamSession(s: SparkSession, backlogDirs: String*): SparkSession =
+    Widths.childSession(s, streamParts(s, Widths.onDiskBytes(s, backlogDirs: _*)))
+
+  /** [[streamSession]]'s width over a `bytes`-byte backlog. */
+  private[queries] def streamParts(s: SparkSession, bytes: Long): Int =
+    Widths.parts(bytes, Widths.ADVISORY_BYTES, 8L, Widths.sessionParts(s))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_window_agg" -> ((s, dir) => {

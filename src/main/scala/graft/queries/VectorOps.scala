@@ -723,7 +723,7 @@ object VectorOps {
     * baseline the coarse approximation is measured against.
     */
   private[queries] def sharedIvfAssign(s: SparkSession, dir: String): DataFrame =
-    withBuildParallelism(s, dir) {
+    withBuildParallelism(s, dir, 2L) {
       CorpusCache.getOrBuild(s, s"ivfassign:$dir")(
         refinedAssign(ivfAssignments(s, dir, augmented(s, dir), augCount(s, dir))))
     }
@@ -743,7 +743,7 @@ object VectorOps {
     * survives only behind the tagged baseline `sim_ann_ivf`.
     */
   private[queries] def sharedCoarseAssign(s: SparkSession, dir: String): DataFrame =
-    withBuildParallelism(s, dir) {
+    withBuildParallelism(s, dir, 2L) {
       CorpusCache.getOrBuild(s, s"ivfcoarse:$dir")(
         refinedAssign(coarseAssignments(s, dir, augmented(s, dir), augCount(s, dir))))
     }
@@ -755,7 +755,7 @@ object VectorOps {
     * `ivf_imi` row. See [[imiAssignments]].
     */
   private[graft] def sharedImiAssign(s: SparkSession, dir: String): DataFrame =
-    withBuildParallelism(s, dir) {
+    withBuildParallelism(s, dir, 2L) {
       CorpusCache.getOrBuild(s, s"ivfimi:$dir")(
         refinedAssign(imiAssignments(s, dir, augmented(s, dir), augCount(s, dir))))
     }
@@ -767,7 +767,7 @@ object VectorOps {
     * sibling.
     */
   private[queries] def sharedCoarseAssignNt(s: SparkSession, dir: String): DataFrame =
-    withBuildParallelism(s, dir) {
+    withBuildParallelism(s, dir, 4L) {
       CorpusCache.getOrBuild(s, s"ivfcoarsent:$dir")(
         refinedAssign(coarseAssignments(s, dir, ntAugmented(s, dir), 4L * embCount(s, dir))))
     }
@@ -778,7 +778,7 @@ object VectorOps {
     * pairs that are NOT byte-identical (and so can straddle regions).
     */
   private[graft] def sharedImiAssignNt(s: SparkSession, dir: String): DataFrame =
-    withBuildParallelism(s, dir) {
+    withBuildParallelism(s, dir, 4L) {
       CorpusCache.getOrBuild(s, s"ivfimint:$dir")(
         refinedAssign(imiAssignments(s, dir, ntAugmented(s, dir), 4L * embCount(s, dir))))
     }
@@ -803,80 +803,26 @@ object VectorOps {
   private[queries] def augCount(s: SparkSession, dir: String): Long =
     2L * embCount(s, dir)
 
-  /** Rows of the pair scan's DOMINANT exchanged side per partition —
-    * ≈50–80 MB of raw UnsafeRows at the packed-sketch row width, the
-    * guide's 64 MB advisory target.
+  /** Scale-adaptive INDEX-BUILD parallelism (round 17, SCALE.md "the 10⁷
+    * wall ATTRIBUTED"): at the session's partition count the two 10⁷ build
+    * stages re-spilled 142 GB of memory bytes (16× the 11.75 GB exchanged),
+    * the largest share of the 1245 s probe wall. The build runs under a
+    * raised AQE initial partition count, [[buildWidth]].
     */
-  private val PAIR_PART_ROWS = 524288L
-
-  /** Derived pair-scan exchange width (round 17 — guide §2.2/§2.5/§5,
-    * driven by StageProbe's 10⁷ attribution): the probe-side
-    * exchange+sort ran at the SESSION's shuffle-partition count (32 on
-    * the local bench), i.e. ~1 GB of raw probe rows per task against a
-    * ~450 MB execution-memory share — measured 23 GB of memory-spill and
-    * 14 GB of disk-spill in the join stage alone. The pair join's
-    * exchanges therefore size themselves from the corpus count —
-    * [[PAIR_PART_ROWS]] dominant-side rows per partition — whenever that
-    * exceeds the session setting. Gate-scale corpora derive BELOW the
-    * session count and keep today's AQE-coalesced plans untouched, and a
-    * cluster session's own higher setting wins — this is the StreamGate
-    * backlog discipline, not a local[32] constant. Both join inputs
-    * repartition to the same (keys, N), so the join reuses the two
-    * exchanges (§2.4) and adds none.
-    */
-  private def pairScanParts(s: SparkSession, dominantRows: Long,
-      perPart: Long = PAIR_PART_ROWS): Option[Int] = {
-    val derived = (dominantRows + perPart - 1) / perPart
-    val session = s.sessionState.conf.numShufflePartitions
-    if (derived > session) Some(math.min(derived, 4096L).toInt) else None
-  }
-
-  /** Rows per partition for exchanges that move FULL embedding rows or
-    * probes-array assignment rows (~300 B raw) — half [[PAIR_PART_ROWS]],
-    * same ~64 MB advisory target.
-    */
-  private val EMB_PART_ROWS = 262144L
-
-  /** Scale-adaptive INDEX-BUILD parallelism (round 17 — guide §2.2/§5,
-    * driven by StageProbe's 10⁷ attribution): the assignment builds'
-    * corpus-scale exchanges (beam aggregations, the emb⋈beam join) also
-    * inherit the session's shuffle-partition count; at 10⁷ the two build
-    * stages re-spilled 142 GB of memory bytes (16× the 11.75 GB actually
-    * exchanged) and burned 15.1k task-cpu-seconds — the single largest
-    * share of the 1245 s probe wall. Raising AQE's INITIAL partition
-    * count for the build (coalescing then right-sizes every stage to the
-    * 64 MB advisory) bounds per-task state; the value derives from the
-    * corpus's on-disk bytes × a parquet→UnsafeRow expansion factor, so a
-    * gate corpus derives at-or-under the session setting (no-op, plans
-    * and the local bench untouched) and a cluster session's higher
-    * setting wins. Set/restore serializes on one lock so concurrent
-    * builds (ConcurrencySoakSpec) can never interleave a stale restore.
-    */
-  private val buildConfLock = new Object
-  private def withBuildParallelism[T](s: SparkSession, dir: String)(f: => T): T = {
+  private def withBuildParallelism[T](s: SparkSession, dir: String, copies: Long)(f: => T): T = {
     // memoized per (session, dir): hits of an already-built entry must
     // not pay a filesystem stat per consumer access
-    val bytes = Preconditions.longOnce(s, s"fsbytes:emb:$dir") {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-      try p.getFileSystem(s.sessionState.newHadoopConf()).getContentSummary(p).getLength
-      catch { case _: Throwable => 0L }
-    }
-    // ×2: the augmented union; ×8: measured parquet→exchange expansion
-    // (1.7 GB fixture → ~12 GB exchanged + agg buffers at 10⁷)
-    val derived = math.ceil(bytes * 2.0 * 8.0 / (64L << 20)).toLong
-    val session = s.sessionState.conf.numShufflePartitions
-    if (derived <= session) f
-    else buildConfLock.synchronized {
-      val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, math.min(derived, 4096L).toString)
-      try f
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-    }
+    val bytes = Preconditions.longOnce(s, s"fsbytes:emb:$dir")(
+      Widths.onDiskBytes(s, s"$dir/embeddings.parquet"))
+    Widths.withInitialParts(s, buildWidth(s, bytes, copies))(f)
   }
+
+  /** Build width over `copies` whole copies of an `embBytes`-byte
+    * embeddings table ([[augmented]] 2, [[ntAugmented]] 4); ×8 is the
+    * measured parquet→exchange expansion (1.7 GB → ~12 GB at 10⁷).
+    */
+  private[queries] def buildWidth(s: SparkSession, embBytes: Long, copies: Long): Option[Int] =
+    Widths.widen(s, embBytes * copies * 8L, Widths.ADVISORY_BYTES)
 
   /** Per-vector pair-scoring sketch over the augmented corpus, built ONCE
     * per (session, corpus) like the assignment tables it joins: the first
@@ -937,8 +883,8 @@ object VectorOps {
     // round 17: the head itself ships packed (binary16), scored by the
     // codegen vec_dot_half — see [[sharedPairSketch]] / [[SKETCH_EPS]].
     // round 17: the sketch⋈assignment join widens like the probe path's
-    // (see [[probeVerifiedPairs]]); None at gate scale → unchanged.
-    val nSk = pairScanParts(s, augCount(s, dir), EMB_PART_ROWS)
+    // (see [[probeVerifiedPairs]])
+    val nSk = Widths.widen(s, augCount(s, dir), Widths.EMB_PART_ROWS)
     def wsk(df: DataFrame): DataFrame =
       nSk.map(p => df.repartition(p, col("vec_id"))).getOrElse(df)
     val sk = wsk(sharedPairSketch(s, dir))
@@ -947,13 +893,11 @@ object VectorOps {
       col("tn").as("ta"), col("s1").as("su"))
     val r0 = sk.select(col("ck"), col("vec_id").as("j"), col("hq").as("hb"),
       col("tn").as("tb"), col("s1").as("sv"))
-    // round 17 (derived exchange width, [[pairScanParts]]): each side of
-    // the corpus-sized self-join carries n sketch rows; under the
-    // session's partition count the per-task sort state outruns its
-    // execution share at probe tiers (the StageProbe-measured spill
-    // pathology). Gate corpora derive below the session count → None →
-    // plans unchanged.
-    val (l, r) = pairScanParts(s, augCount(s, dir)) match {
+    // round 17 (derived exchange width): each side of the corpus-sized
+    // self-join carries n sketch rows; under the session's partition
+    // count the per-task sort state outruns its execution share at probe
+    // tiers (the StageProbe-measured spill pathology)
+    val (l, r) = Widths.widen(s, augCount(s, dir), Widths.PAIR_PART_ROWS) match {
       case Some(np) => (l0.repartition(np, col("ck")),
         r0.repartition(np, col("ck")))
       case None => (l0, r0)
@@ -1008,9 +952,9 @@ object VectorOps {
     // round 17: the sketch⋈assignment vec_id join also widens to the
     // derived width — its sort at the session count spilled ~19 GB in
     // the 10⁷ StageProbe run (assignment rows carry the probes array,
-    // ~270 B raw). None at gate scale → unchanged.
+    // ~270 B raw)
     val nAug = augCount(s, dir)
-    val nSk = pairScanParts(s, nAug, EMB_PART_ROWS)
+    val nSk = Widths.widen(s, nAug, Widths.EMB_PART_ROWS)
     def wsk(df: DataFrame): DataFrame =
       nSk.map(p => df.repartition(p, col("vec_id"))).getOrElse(df)
     val sk = wsk(sharedPairSketch(s, dir))
@@ -1078,17 +1022,15 @@ object VectorOps {
     // draining, while sort-merge spills gracefully under the same
     // pressure. The round-9 rescore lesson generalizes to every join
     // that lives inside the pair-scan's memory envelope.
-    // round 17 (derived exchange width, [[pairScanParts]]): the probe
-    // side is the dominant relation — worst case widthP rows per vector
-    // (home + τ-admitted regions; StageProbe measured 6.1n at the 10⁷
-    // tier's widthP = 12). Under the session's 32 partitions its sort ran
-    // at ~1 GB/task and spilled 37 GB; sized to ~PAIR_PART_ROWS rows the
-    // sort fits its execution share. Both sides repartition to the same
-    // (pc, N), so the join reuses these two exchanges — same Exchange
-    // count, wider. Gate corpora derive below the session count → None →
-    // plans byte-identical to round 16.
+    // round 17 (derived exchange width): the probe side is the dominant
+    // relation — worst case widthP rows per vector (home + τ-admitted
+    // regions; StageProbe measured 6.1n at the 10⁷ tier's widthP = 12).
+    // Under the session's 32 partitions its sort ran at ~1 GB/task and
+    // spilled 37 GB; sized to ~PAIR_PART_ROWS rows the sort fits its
+    // execution share. Both sides repartition to the same (pc, N), so the
+    // join reuses these two exchanges — same Exchange count, wider.
     val (widthP, _) = staticProbeWidth(nAug)
-    val (probesW, homeW) = pairScanParts(s, nAug * widthP) match {
+    val (probesW, homeW) = Widths.widen(s, nAug * widthP, Widths.PAIR_PART_ROWS) match {
       case Some(np) => (probes.repartition(np, col("pc")),
         home.repartition(np, col("pc")))
       case None => (probes, home)
@@ -1121,9 +1063,8 @@ object VectorOps {
     // spill pathology as the pair scans): the fetch joins move full
     // 64-float embedding rows (~300 B raw); at the session's partition
     // count the 10⁷ rescore stages re-spilled ~15 GB. Width derives from
-    // the corpus count ([[EMB_PART_ROWS]] rows ≈ the 64 MB advisory);
-    // gate corpora derive below the session setting → None → unchanged.
-    val np = pairScanParts(s, augCount(s, dir), EMB_PART_ROWS)
+    // the corpus count ([[Widths.EMB_PART_ROWS]] rows ≈ the 64 MB advisory)
+    val np = Widths.widen(s, augCount(s, dir), Widths.EMB_PART_ROWS)
     def w(df: DataFrame, k: String): DataFrame =
       np.map(p => df.repartition(p, col(k))).getOrElse(df)
     val withA = w(cand, "i")

@@ -241,7 +241,7 @@ class QueryInvariantSpec extends SparkSpec {
     assert(pb(1048577L) === ((32, 6)), "capacity clamp engages")
     assert(pb(4000000000L) === ((32, 6)), "clamped at PROBE_CAP past 10^12 vectors")
     // the p = 2 floor that the ArgTopN beam buffers and the probe join's
-    // pairScanParts width key on: it holds from an empty-ish corpus (k at
+    // exchange width key on: it holds from an empty-ish corpus (k at
     // the MIN_CENTROIDS floor) through exactly k = 16 (n ≤ 16·1024), and
     // the first count past it derives p = 3
     assert(VectorOps.staticProbeWidth(1L)._1 === 2,
@@ -900,10 +900,8 @@ class QueryInvariantSpec extends SparkSpec {
   }
 
   test("pack_sequences: the derived range size bounds both prefix-sum levels") {
-    def rsFor(n: Long): Long = spark.range(1)
-      .select(Curation.packRangeSize(lit(n)).as("rs")).collect()(0).getLong(0)
     for (n <- Seq(1000L, 100000L, 10000000L, 1000000000L, 1000000000000L)) {
-      val rs = rsFor(n)
+      val rs = Curation.packRangeSize(n)
       // level-1 window partitions hold ≤ rs rows (doc_id ranges of width
       // rs); the level-2 offset table is ceil(n/rs) rows — both must stay
       // under the single-task comfort zone at every corpus size
