@@ -59,9 +59,6 @@ final class ModelGraph(spark: SparkSession, workDir: String) {
       }
     } finally building.remove(name)
   })
-
-  def runAll(): Map[String, DataFrame] =
-    nodes.keys.map(n => n -> resolve(n)).toMap
 }
 
 /** The full Glamira DAG wired per the reference lineage

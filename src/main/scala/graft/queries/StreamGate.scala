@@ -26,11 +26,12 @@ object StreamGate {
     * a partial result, and the leaked active query would make the next
     * invocation of the same queryName fail.
     */
-  private def awaitOrFail(q: StreamingQuery, ms: Long): Unit =
+  private[queries] def awaitOrFail(q: StreamingQuery, ms: Long): Unit =
     if (!q.awaitTermination(ms)) {
       q.stop()
+      // unnamed queries (foreachBatch sinks) report their id
       throw new IllegalStateException(
-        s"streaming query '${q.name}' did not terminate within ${ms}ms")
+        s"streaming query '${Option(q.name).getOrElse(q.id)}' did not terminate within ${ms}ms")
     }
 
   /** Isolated child session with shuffle/state partitions sized to the

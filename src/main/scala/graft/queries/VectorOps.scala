@@ -398,13 +398,6 @@ object VectorOps {
     })
   )
 
-  /** Distinct within-bucket candidate pairs (i < j) from exact signatures. */
-  private def lshCandidates(sigs: DataFrame): DataFrame =
-    sigs.select(col("bucket"), col("vec_id").as("i"))
-      .join(sigs.select(col("bucket"), col("vec_id").as("j")), Seq("bucket"))
-      .filter(col("i") < col("j"))
-      .select(col("i"), col("j")).distinct()
-
   /** The one-bit-flip probe expansion shared by full and anchor-restricted
     * multiprobe: each row of `sigs` probes its exact bucket (f = 0) plus
     * every bucket at hamming distance 1.
@@ -574,18 +567,9 @@ object VectorOps {
     * at any scale (10⁹ vectors → ~10⁶ cells). On the test fixture the
     * derived k is exactly MIN_CENTROIDS, so the gates pin the same
     * partitioning.
-    *
-    * CELL_CAP is the hot-cell guard (SemDeDup's own split discipline): a
-    * cell with more members than the cap — skewed data piling onto one
-    * centroid — refines its join key with the SECOND-nearest centroid
-    * (residual-quantization-style sub-split along real geometric
-    * boundaries), bounding per-key pair volume without dropping the cell.
-    * Identical vectors have identical (cell, cell2), so planted duplicates
-    * can never be separated by the split.
     */
   private val MIN_CENTROIDS = 16
   private val TARGET_CELL = 1024.0d
-  private[queries] val CELL_CAP = 4096L
 
   /** The cell-count law k = max(MIN_CENTROIDS, ⌈n/TARGET_CELL⌉) — its only
     * Scala spelling (the DuckDB oracle SQL spells it over its own count).
@@ -711,7 +695,7 @@ object VectorOps {
     CorpusCache.getOrBuild(s, s"lshsigs:$dir")(lshSigs(s, augmented(s, dir)))
 
   /** FLAT IVF cell assignment over the augmented corpus — seeds, Lloyd
-    * step, final assignment, hot-cell split. Round 9: this chain serves
+    * step, final assignment. Round 9: this chain serves
     * ONLY the tagged baseline `sim_ann_ivf` (bench_full.json tags it as
     * the flat O(n·k) twin). Every production consumer — probe, rescore,
     * IVF-PQ, semantic dedup, recall governance — runs on
@@ -725,7 +709,7 @@ object VectorOps {
   private[queries] def sharedIvfAssign(s: SparkSession, dir: String): DataFrame =
     withBuildParallelism(s, dir, 2L) {
       CorpusCache.getOrBuild(s, s"ivfassign:$dir")(
-        refinedAssign(ivfAssignments(s, dir, augmented(s, dir), augCount(s, dir))))
+        ivfAssignments(s, dir, augmented(s, dir), augCount(s, dir)))
     }
 
   /** Two-level (coarse-quantized) IVF cell assignment, built ONCE per
@@ -745,7 +729,7 @@ object VectorOps {
   private[queries] def sharedCoarseAssign(s: SparkSession, dir: String): DataFrame =
     withBuildParallelism(s, dir, 2L) {
       CorpusCache.getOrBuild(s, s"ivfcoarse:$dir")(
-        refinedAssign(coarseAssignments(s, dir, augmented(s, dir), augCount(s, dir))))
+        coarseAssignments(s, dir, augmented(s, dir), augCount(s, dir)))
     }
 
   /** Three-level (IMI-shaped) assignment, cached like the two chains
@@ -757,7 +741,7 @@ object VectorOps {
   private[graft] def sharedImiAssign(s: SparkSession, dir: String): DataFrame =
     withBuildParallelism(s, dir, 2L) {
       CorpusCache.getOrBuild(s, s"ivfimi:$dir")(
-        refinedAssign(imiAssignments(s, dir, augmented(s, dir), augCount(s, dir))))
+        imiAssignments(s, dir, augmented(s, dir), augCount(s, dir)))
     }
 
   /** Two-level assignment over the NEAR-TWIN corpus ([[ntAugmented]]) —
@@ -769,7 +753,7 @@ object VectorOps {
   private[queries] def sharedCoarseAssignNt(s: SparkSession, dir: String): DataFrame =
     withBuildParallelism(s, dir, 4L) {
       CorpusCache.getOrBuild(s, s"ivfcoarsent:$dir")(
-        refinedAssign(coarseAssignments(s, dir, ntAugmented(s, dir), 4L * embCount(s, dir))))
+        coarseAssignments(s, dir, ntAugmented(s, dir), 4L * embCount(s, dir)))
     }
 
   /** Three-level (IMI) assignment over the NEAR-TWIN corpus — the index
@@ -780,7 +764,7 @@ object VectorOps {
   private[graft] def sharedImiAssignNt(s: SparkSession, dir: String): DataFrame =
     withBuildParallelism(s, dir, 4L) {
       CorpusCache.getOrBuild(s, s"ivfimint:$dir")(
-        refinedAssign(imiAssignments(s, dir, ntAugmented(s, dir), 4L * embCount(s, dir))))
+        imiAssignments(s, dir, ntAugmented(s, dir), 4L * embCount(s, dir)))
     }
 
   /** Plain-corpus (non-augmented) two-level assignment, cached per
@@ -853,7 +837,7 @@ object VectorOps {
     * `sim_ann_ivf_probe` rides the same sketch through its nprobe=2
     * candidate join) — the round-10 cut of the family's dominant constant,
     * the ~1.1×10¹⁰ exact-cosine candidate pairs (~320 s of every 10⁷
-    * gate). Tier 1: candidates join on the refined cell key `ck` carrying
+    * gate). Tier 1: candidates join on the cell id `cell` carrying
     * ONLY the sketch, and survive iff the Cauchy–Schwarz upper bound
     * clears the threshold — dot(hd_a,hd_b) + tn_a·tn_b ≥ T·nrm_a·nrm_b −
     * [[BOUND_EPS]] — a 16-d dot per candidate instead of 64-d, on a
@@ -872,11 +856,11 @@ object VectorOps {
     // round 15: each side also carries its ASSIGNMENT SCORE s1 = cos(v,
     // c(v)) and its sine — the angular-prune anchor (computed once per
     // ROW, before the pair-scan exchange, never per candidate). Within
-    // one cell key both directions of the anchor argument hold (c(u) and
+    // one cell both directions of the anchor argument hold (c(u) and
     // c(v) both live in the joined cell), so the symmetric spelling
     // applies.
     // round 16 (the exchange-row narrowing): each side carries ONLY
-    // (ck, id, hq, tn, s1) — the sine column and the norm column are gone
+    // (cell, id, hq, tn, s1) — the sine column and the norm column are gone
     // from the corpus-sized self-join exchange (two 8-byte slots per row
     // per side). The sine is folded into the SQUARED spelling of the
     // angular test below; the norm is pre-divided into the sketch.
@@ -888,21 +872,21 @@ object VectorOps {
     def wsk(df: DataFrame): DataFrame =
       nSk.map(p => df.repartition(p, col("vec_id"))).getOrElse(df)
     val sk = wsk(sharedPairSketch(s, dir))
-      .join(wsk(assign.select(col("vec_id"), col("ck"), col("s1"))), Seq("vec_id"))
-    val l0 = sk.select(col("ck"), col("vec_id").as("i"), col("hq").as("ha"),
+      .join(wsk(assign.select(col("vec_id"), col("cell"), col("s1"))), Seq("vec_id"))
+    val l0 = sk.select(col("cell"), col("vec_id").as("i"), col("hq").as("ha"),
       col("tn").as("ta"), col("s1").as("su"))
-    val r0 = sk.select(col("ck"), col("vec_id").as("j"), col("hq").as("hb"),
+    val r0 = sk.select(col("cell"), col("vec_id").as("j"), col("hq").as("hb"),
       col("tn").as("tb"), col("s1").as("sv"))
     // round 17 (derived exchange width): each side of the corpus-sized
     // self-join carries n sketch rows; under the session's partition
     // count the per-task sort state outruns its execution share at probe
     // tiers (the StageProbe-measured spill pathology)
     val (l, r) = Widths.widen(s, augCount(s, dir), Widths.PAIR_PART_ROWS) match {
-      case Some(np) => (l0.repartition(np, col("ck")),
-        r0.repartition(np, col("ck")))
+      case Some(np) => (l0.repartition(np, col("cell")),
+        r0.repartition(np, col("cell")))
       case None => (l0, r0)
     }
-    val cand = l.join(r, Seq("ck")).filter(col("i") < col("j"))
+    val cand = l.join(r, Seq("cell")).filter(col("i") < col("j"))
       // tier 0 (scalar, short-circuits tier 1's 16-d dot): cos(u,v) ≤
       // cos(θ_u − θ_v) by the angular triangle inequality around the
       // shared cell anchor — prune when even that ceiling misses ANN_T.
@@ -1134,9 +1118,7 @@ object VectorOps {
       }
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow()).start()
-    if (!q.awaitTermination(300000)) {
-      q.stop(); sys.error("stream_ann_ingest did not terminate in time")
-    }
+    StreamGate.awaitOrFail(q, 300000)
     s.read.parquet(out).select(col("vec_id"), col("cell"), col("cell2"))
   }
 
@@ -1441,7 +1423,7 @@ object VectorOps {
     // s1 − s_r — how much better the home region's best centroid fits
     // than region r's — the boundary-ness the margin-gated probe search
     // keys on, per region. cell2/mgn stay as the rank-2 columns (the
-    // hot-cell split key and the margin-distribution stat).
+    // margin-distribution stat).
     val s1 = col("tops").getItem(0).getField("cs")
     winners.groupBy(col("vec_id")).agg(argTopN(col("cs"), col("cid"), capP).as("tops"))
       .select(col("vec_id"),
@@ -1464,8 +1446,7 @@ object VectorOps {
     * k-means step): broadcast the centroid table, argmax via the sort-free
     * [[graft.expr.ArgTop2]] aggregate ((cos DESC, cid ASC) — identical
     * selection to a row_number ≤ 2 window, which the oracle twins still
-    * spell). `cell2` (the runner-up, null when k = 1) is the hot-cell
-    * sub-split key, unused until a cell exceeds CELL_CAP. Round 9: the
+    * spell). `cell2` is the runner-up, null when k = 1. Round 9: the
     * window spelling forced the n·k candidate relation through a sort
     * (0.4 TB of sorter traffic at the 10⁷ probe); as an aggregate the
     * candidates collapse in the partial HashAggregate ABOVE the broadcast
@@ -1483,23 +1464,6 @@ object VectorOps {
         (col("t2").getField("s1") - col("t2").getField("s2")).as("mgn"),
         col("t2").getField("s1").as("s1"))
       .withColumn("probes", rankTwoProbes)
-
-  /** Refined join key over an IVF assignment: cells at or under CELL_CAP
-    * keep the plain cell id; hot cells split by the second-nearest
-    * centroid. One tiny per-cell count broadcast back — the corpus-sized
-    * side never reshuffles, and the candidate join stays a single equi-join
-    * on `ck`.
-    */
-  private[queries] def refinedAssign(assign: DataFrame): DataFrame = {
-    val sizes = assign.groupBy(col("cell")).agg(count(lit(1)).as("cn"))
-    assign.join(broadcast(sizes), Seq("cell"))
-      .withColumn("ck", when(col("cn") > CELL_CAP,
-        concat_ws(":", col("cell"), coalesce(col("cell2"), col("cell"))))
-        .otherwise(col("cell").cast(StringType)))
-      // pass the chain's own columns through (the IMI chain adds the
-      // derived-width probe list); only the size scratch column drops
-      .select(assign.columns.map(col) :+ col("ck"): _*)
-  }
 
   /** Deterministic IVF cell assignments: k-means seeds = the first vec_ids,
     * one Lloyd refinement (assign → component-wise means → re-assign).
@@ -1542,9 +1506,9 @@ object VectorOps {
       val emb = augmented(s, dir)
       val assign = sharedIvfAssign(s, dir)
       val e = withNorm(emb).join(assign, Seq("vec_id"))
-      val l = e.select(col("ck"), col("vec_id").as("i"), col("embedding").as("ea"), col("nrm").as("na"))
-      val r = e.select(col("ck"), col("vec_id").as("j"), col("embedding").as("eb"), col("nrm").as("nb"))
-      l.join(r, Seq("ck")).filter(col("i") < col("j"))
+      val l = e.select(col("cell"), col("vec_id").as("i"), col("embedding").as("ea"), col("nrm").as("na"))
+      val r = e.select(col("cell"), col("vec_id").as("j"), col("embedding").as("eb"), col("nrm").as("nb"))
+      l.join(r, Seq("cell")).filter(col("i") < col("j"))
         .withColumn("cos", dot(col("ea"), col("eb")) / (col("na") * col("nb")))
         .filter(col("cos") >= ANN_T)
         .select(col("i"), col("j"), round(col("cos"), 6).as("cosine"))
@@ -1555,10 +1519,9 @@ object VectorOps {
     // centroid's cell (`cell2` rides along from the same assignment window
     // at zero extra cost), so pairs split across a cell boundary — the
     // boundary-loss failure mode of nprobe=1 IVF — become candidates.
-    // Probes join the home-cell index on the raw cell id as a plain
-    // equi-join (candidate volume is nprobe× the nprobe=1 path; at
-    // production scale the probed join reuses the identical CELL_CAP
-    // refined-key discipline, which the home cells here already carry).
+    // Probes join the home-cell index on the cell id as a plain
+    // equi-join, the same key every nprobe=1 scan joins on (candidate
+    // volume is nprobe× the nprobe=1 path).
     // Round 9: runs on the COARSE two-level assignment (the production
     // index — flat assignment quadratizes with k ∝ n, see
     // [[sharedCoarseAssign]]). By construction the candidate set is a
@@ -1615,12 +1578,12 @@ object VectorOps {
         .withColumn("sc", lit(127.0d) / mx)
         .withColumn("qv", transform(col("embedding"),
           x => floor(x.cast(DoubleType) * col("sc") + 0.5d).cast(FloatType)))
-        .select(col("ck"), col("vec_id"), col("qv"), col("sc"), col("nrm"))
-      val l = q8.select(col("ck"), col("vec_id").as("i"), col("qv").as("qa"),
+        .select(col("cell"), col("vec_id"), col("qv"), col("sc"), col("nrm"))
+      val l = q8.select(col("cell"), col("vec_id").as("i"), col("qv").as("qa"),
         col("sc").as("sa"), col("nrm").as("na"))
-      val r = q8.select(col("ck"), col("vec_id").as("j"), col("qv").as("qb"),
+      val r = q8.select(col("cell"), col("vec_id").as("j"), col("qv").as("qb"),
         col("sc").as("sb"), col("nrm").as("nb"))
-      val cand = l.join(r, Seq("ck")).filter(col("i") < col("j"))
+      val cand = l.join(r, Seq("cell")).filter(col("i") < col("j"))
         .withColumn("qcos",
           dot(col("qa"), col("qb")) / (col("sa") * col("sb") * col("na") * col("nb")))
         .filter(col("qcos") >= ANN_T - QP_MARGIN)
@@ -1640,10 +1603,9 @@ object VectorOps {
     // IVF*,PQ*): the COARSE two-level IVF assignment (round 9 — the flat
     // assignment quadratizes with k ∝ n; [[sharedCoarseAssign]] is the
     // billion-vector discipline) restricts candidates to the anchor's
-    // cell (the shared refined-key discipline), and those candidates are
-    // scored from their 8 one-byte PQ codes via the anchor's broadcast
-    // lookup table — so the pair scan touches neither full vectors nor
-    // even int8 vectors, only codes. Composes the two shared indexes a
+    // cell, and those candidates are scored from their 8 one-byte PQ
+    // codes via the anchor's broadcast lookup table — so the pair scan
+    // touches neither full vectors nor even int8 vectors, only codes. Composes the two shared indexes a
     // deployment maintains (cell assignment + code table); per-candidate
     // cost is 8 table adds. Planted-twin recall pinned in
     // [[QueryInvariantSpec]] (a twin shares cell AND codes).
@@ -1662,8 +1624,8 @@ object VectorOps {
         .withColumn("ld2", pqDist2(col("sv"), col("cb")))
         .select(col("q"), col("m"), col("code"), col("ld2"))
       val cand = anch.select(col("vec_id").as("q"))
-        .join(assign.select(col("vec_id").as("q"), col("ck")), Seq("q"))
-        .join(assign.select(col("ck"), col("vec_id").as("nb")), Seq("ck"))
+        .join(assign.select(col("vec_id").as("q"), col("cell")), Seq("q"))
+        .join(assign.select(col("cell"), col("vec_id").as("nb")), Seq("cell"))
         .filter(col("q") =!= col("nb"))
         .select(col("q"), col("nb"))
       val w = Window.partitionBy(col("q"))
@@ -1877,7 +1839,7 @@ object VectorOps {
       // uncached builders, so the cache can never mask a drift between
       // the two.
       val ivfCand = CorpusCache.getOrBuild(s, s"candivf:$dir")(
-        anchorCandidates(sharedCoarseAssign(s, dir), "ck", anchors))
+        anchorCandidates(sharedCoarseAssign(s, dir), "cell", anchors))
       // round 13 (round-12 verdict #3): the BLENDED recall is a
       // composition-sensitive DIAGNOSTIC, not a gated floor — at 10⁶⁺ the
       // random geometric tail dominates n_true and the blended number
@@ -1958,7 +1920,7 @@ object VectorOps {
       // the same maintained-candidate discipline as `ann_recall` (the
       // sweep/spec seams audit the uncached builders)
       bandRows("ivf", CorpusCache.getOrBuild(s, s"candivfnt:$dir")(
-        anchorCandidates(sharedCoarseAssignNt(s, dir), "ck", anchors)))
+        anchorCandidates(sharedCoarseAssignNt(s, dir), "cell", anchors)))
         .unionByName(bandRows("ivf_imi", CorpusCache.getOrBuild(s, s"candimint:$dir")(
           probeAnchorCandidates(sharedImiAssignNt(s, dir), anchors))))
     }),
@@ -1970,7 +1932,7 @@ object VectorOps {
     // Here assignment is two-level (nearest coarse group of ⌈√k⌉, then
     // nearest fine centroid within the group — see [[coarseAssignments]]):
     // O(n·√k·d), sub-quadratic at any corpus size. The within-cell pair
-    // join, hot-cell split, and 0.999 verification are identical to the
+    // join and 0.999 verification are identical to the
     // flat path; identical (planted) vectors co-assign under either
     // scheme, so both recover exactly the planted duplicate set — pinned
     // against `sim_ann_ivf` in [[QueryInvariantSpec]].
@@ -2008,7 +1970,7 @@ object VectorOps {
     // 2009 — the standard RAG-corpus curation step): the lexical arm is
     // the maintained BM25 postings index (Curation.bm25Ranked, the
     // text_bm25_topk chain at depth FUSE_N) and the semantic arm is the
-    // maintained coarse IVF index (the anchor's refined cell, exact-cosine
+    // maintained coarse IVF index (the anchor's cell, exact-cosine
     // ranked) — both for the SAME query-by-example anchor (min doc_id;
     // documents and embeddings share the id space). Each arm contributes
     // 1/(RRF_K + rank); absent docs contribute 0; fused top-10 by (score
@@ -2044,10 +2006,10 @@ object VectorOps {
       val qvec = withNorm(emb).crossJoin(broadcast(qdoc))
         .filter(col("vec_id") === col("qid"))
         .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
-      val qck = assign.join(broadcast(qvec.select(col("qid"))),
-        col("vec_id") === col("qid")).select(col("ck"))
+      val qcell = assign.join(broadcast(qvec.select(col("qid"))),
+        col("vec_id") === col("qid")).select(col("cell"))
       val wsem = Window.orderBy(col("cos").desc, col("vec_id").asc)
-      val sem = assign.join(broadcast(qck), Seq("ck"))
+      val sem = assign.join(broadcast(qcell), Seq("cell"))
         .select(col("vec_id"))
         .join(withNorm(emb), Seq("vec_id"))
         .crossJoin(broadcast(qvec))
@@ -2231,22 +2193,16 @@ object VectorOps {
        |      ORDER BY ${dSql("a.embedding", "cent.ce")} / (a.nrm * cent.nc) DESC, cent.cid ASC) AS rn
        |    FROM a CROSS JOIN cent)
        |  WHERE rn <= 2 GROUP BY vec_id),
-       |cellsz AS (SELECT cell, count(*) AS cn FROM assign GROUP BY cell),
        |e AS (
-       |  SELECT a.vec_id, a.embedding, a.nrm, assign.cell,
-       |    CASE WHEN cellsz.cn > $CELL_CAP THEN
-       |      CAST(assign.cell AS VARCHAR) || ':' ||
-       |        CAST(coalesce(assign.cell2, assign.cell) AS VARCHAR)
-       |    ELSE CAST(assign.cell AS VARCHAR) END AS ck
-       |  FROM a JOIN assign ON a.vec_id = assign.vec_id
-       |  JOIN cellsz ON cellsz.cell = assign.cell)""".stripMargin
+       |  SELECT a.vec_id, a.embedding, a.nrm, assign.cell
+       |  FROM a JOIN assign ON a.vec_id = assign.vec_id)""".stripMargin
 
   def ivfOracleSql: Map[String, String] = Map(
     "sim_ann_ivf" ->
       s"""WITH $ivfCellCtes
          |SELECT x.vec_id AS i, y.vec_id AS j,
          |  round(${dSql("x.embedding", "y.embedding")} / (x.nrm * y.nrm), 6) AS cosine
-         |FROM e x JOIN e y ON x.ck = y.ck AND x.vec_id < y.vec_id
+         |FROM e x JOIN e y ON x.cell = y.cell AND x.vec_id < y.vec_id
          |WHERE ${dSql("x.embedding", "y.embedding")} / (x.nrm * y.nrm) >= $ANN_T""".stripMargin,
 
     // the nprobe=2 twin: the same COARSE assignment chain the Spark side
@@ -2320,7 +2276,7 @@ object VectorOps {
 
     // the IVF-PQ twin composes the two shared CTE chains (the COARSE cell
     // assignment and the code table, both over aug), restricts candidates
-    // to the anchor's refined cell key, and replays the 8-entry DECIMAL sums
+    // to the anchor's cell, and replays the 8-entry DECIMAL sums
     "sim_ann_ivf_pq" ->
       s"""WITH $coarseCellCtes,
          |${pqCtes("aug")},
@@ -2337,7 +2293,7 @@ object VectorOps {
          |cand AS (
          |  SELECT a.q, t.vec_id AS nb
          |  FROM anch a JOIN e x ON x.vec_id = a.q
-         |  JOIN e t ON t.ck = x.ck
+         |  JOIN e t ON t.cell = x.cell
          |  WHERE t.vec_id <> a.q),
          |adc AS (
          |  SELECT c.q, c.nb, sum(CAST(l.ld2 AS DECIMAL(28,12))) AS adist
@@ -2381,7 +2337,7 @@ object VectorOps {
     "sim_ann_quantized_rescore" ->
       s"""WITH $coarseCellCtes,
          |qe AS (
-         |  SELECT vec_id, embedding, nrm, ck,
+         |  SELECT vec_id, embedding, nrm, cell,
          |    127.0 / list_aggregate(
          |      list_transform(embedding, x -> abs(CAST(x AS DOUBLE))), 'max') AS sc,
          |    list_transform(embedding,
@@ -2392,7 +2348,7 @@ object VectorOps {
          |    ${dSql("x.qv", "y.qv")}
          |      / (x.sc * y.sc * x.nrm * y.nrm) AS qcos,
          |    ${dSql("x.embedding", "y.embedding")} / (x.nrm * y.nrm) AS cos
-         |  FROM qe x JOIN qe y ON x.ck = y.ck AND x.vec_id < y.vec_id)
+         |  FROM qe x JOIN qe y ON x.cell = y.cell AND x.vec_id < y.vec_id)
          |WHERE qcos >= ${ANN_T - QP_MARGIN} AND cos >= $ANN_T""".stripMargin,
 
     // the dedup_semantic twin replays the COARSE IVF chain, finds
@@ -2403,7 +2359,7 @@ object VectorOps {
       s"""WITH RECURSIVE $coarseCellCtes,
          |pairs AS (
          |  SELECT x.vec_id AS i, y.vec_id AS j
-         |  FROM e x JOIN e y ON x.ck = y.ck AND x.vec_id < y.vec_id
+         |  FROM e x JOIN e y ON x.cell = y.cell AND x.vec_id < y.vec_id
          |  WHERE ${dSql("x.embedding", "y.embedding")} / (x.nrm * y.nrm) >= $ANN_T),
          |edges AS (
          |  SELECT i, j FROM pairs
@@ -2457,7 +2413,7 @@ object VectorOps {
          |${coarseAssignCtes("n", "c")},
          |ivf_cand AS (
          |  SELECT DISTINCT x.vec_id AS i, y.vec_id AS j
-         |  FROM crk x JOIN crk y ON x.ck = y.ck AND x.vec_id < y.vec_id),
+         |  FROM cassign x JOIN cassign y ON x.cell = y.cell AND x.vec_id < y.vec_id),
          |${imiAssignCtes("n", "m")},
          |imi_probes AS (
          |  SELECT vec_id, cell AS pc FROM massign
@@ -2551,7 +2507,7 @@ object VectorOps {
          |${coarseAssignCtes("nu", "c")},
          |ivf_cand AS (
          |  SELECT DISTINCT x.vec_id AS i, y.vec_id AS j
-         |  FROM crk x JOIN crk y ON x.ck = y.ck AND x.vec_id < y.vec_id),
+         |  FROM cassign x JOIN cassign y ON x.cell = y.cell AND x.vec_id < y.vec_id),
          |${imiAssignCtes("nu", "m")},
          |imi_probes AS (
          |  SELECT vec_id, cell AS pc FROM massign
@@ -2585,13 +2541,13 @@ object VectorOps {
     // ⌈√k⌉ vectors as coarse centroids, fine→coarse grouping by the same
     // (cos DESC, id ASC) argmax, vectors restricted to NON-EMPTY coarse
     // groups, then the within-group fine argmax — the exact replica of
-    // [[coarseAssignments]] — and the flat path's cell-cap key and
+    // [[coarseAssignments]] — and the flat path's within-cell
     // 0.999-pair verification
     "sim_ann_ivf_coarse" ->
       s"""WITH $coarseCellCtes
          |SELECT x.vec_id AS i, y.vec_id AS j,
          |  round(${dSql("x.embedding", "y.embedding")} / (x.nrm * y.nrm), 6) AS cosine
-         |FROM e x JOIN e y ON x.ck = y.ck AND x.vec_id < y.vec_id
+         |FROM e x JOIN e y ON x.cell = y.cell AND x.vec_id < y.vec_id
          |WHERE ${dSql("x.embedding", "y.embedding")} / (x.nrm * y.nrm) >= $ANN_T""".stripMargin,
 
     // the three-level (IMI) twin: exact replica of [[imiAssignments]] —
@@ -2633,12 +2589,12 @@ object VectorOps {
          |qv AS (
          |  SELECT nb.vec_id AS qid, nb.embedding AS qe, nb.nrm AS qn
          |  FROM nb, qd WHERE nb.vec_id = qd.qid),
-         |qk AS (SELECT rk.ck FROM rk, qd WHERE rk.vec_id = qd.qid),
+         |qk AS (SELECT assign.cell FROM assign, qd WHERE assign.vec_id = qd.qid),
          |sems AS (
          |  SELECT nb.vec_id,
          |    ${dSql("nb.embedding", "qv.qe")} / (nb.nrm * qv.qn) AS cos
-         |  FROM rk JOIN qk ON rk.ck = qk.ck
-         |  JOIN nb ON nb.vec_id = rk.vec_id, qv
+         |  FROM assign JOIN qk ON assign.cell = qk.cell
+         |  JOIN nb ON nb.vec_id = assign.vec_id, qv
          |  WHERE nb.vec_id <> qv.qid),
          |semr AS (
          |  SELECT vec_id AS doc_id, CAST(rn AS INTEGER) AS sem_rank
@@ -2754,18 +2710,14 @@ object VectorOps {
          |WHERE ${dSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm) >= $ANN_T""".stripMargin
   )
 
-  /** Shared CTE chain for the LSH oracles, parameterized by the vector-set
-    * CTE body: aug → planes → component projections → bit-string
-    * signatures → normed vectors.
-    */
   /** DuckDB twin of [[coarseAssignments]] as a reusable CTE chain: seeds
     * codebook fine centroids, first ⌈√k⌉ vectors as coarse centroids,
     * fine→coarse grouping by the (cos DESC, id ASC) argmax, vectors
     * restricted to NON-EMPTY coarse groups, then the within-group fine
-    * argmax and the flat path's cell-cap key. `univ` must expose
-    * (vec_id, embedding, nrm); every emitted CTE name carries `p` so two
-    * chains (or a chain plus the flat one) can coexist in one oracle.
-    * Terminal CTE: `${p}rk` = (vec_id, ck).
+    * argmax. `univ` must expose (vec_id, embedding, nrm); every emitted
+    * CTE name carries `p` so two chains (or a chain plus the flat one) can
+    * coexist in one oracle.
+    * Terminal CTE: `${p}assign` = (vec_id, cell, cell2, mgn).
     */
   private def coarseAssignCtes(univ: String, p: String): String =
     s"""${p}nk AS (
@@ -2809,20 +2761,12 @@ object VectorOps {
        |        f.cid ASC) AS rn
        |    FROM ${p}vg v JOIN $univ ax ON ax.vec_id = v.vec_id
        |    JOIN ${p}fgrp f ON f.gid = v.gid)
-       |  WHERE rn <= 2 GROUP BY vec_id),
-       |${p}cellsz AS (SELECT cell, count(*) AS cn FROM ${p}assign GROUP BY cell),
-       |${p}rk AS (
-       |  SELECT a.vec_id,
-       |    CASE WHEN z.cn > $CELL_CAP THEN
-       |      CAST(a.cell AS VARCHAR) || ':' ||
-       |        CAST(coalesce(a.cell2, a.cell) AS VARCHAR)
-       |    ELSE CAST(a.cell AS VARCHAR) END AS ck
-       |  FROM ${p}assign a JOIN ${p}cellsz z ON z.cell = a.cell)""".stripMargin
+       |  WHERE rn <= 2 GROUP BY vec_id)""".stripMargin
 
   /** The full coarse-assignment oracle prelude over the AUGMENTED corpus:
-    * aug → normed universe `a` → [[coarseAssignCtes]] (terminal `rk`) →
-    * `e` = (vec_id, embedding, nrm, ck). Round 9: this is the shared twin
-    * of [[sharedCoarseAssign]] + the refined cell key, reused by every
+    * aug → normed universe `a` → [[coarseAssignCtes]] (terminal `assign`)
+    * → `e` = (vec_id, embedding, nrm, cell). Round 9: this is the shared
+    * twin of [[sharedCoarseAssign]], reused by every
     * production IVF oracle (`sim_ann_ivf_coarse`, `sim_ann_ivf_probe`,
     * `sim_ann_quantized_rescore`, `sim_ann_ivf_pq`, `dedup_semantic`) the
     * same way the Spark side shares one cached assignment.
@@ -2838,16 +2782,16 @@ object VectorOps {
        |  FROM aug),
        |${coarseAssignCtes("a", "")},
        |e AS (
-       |  SELECT a.vec_id, a.embedding, a.nrm, rk.ck
-       |  FROM a JOIN rk ON a.vec_id = rk.vec_id)""".stripMargin
+       |  SELECT a.vec_id, a.embedding, a.nrm, assign.cell
+       |  FROM a JOIN assign ON a.vec_id = assign.vec_id)""".stripMargin
 
   /** DuckDB twin of [[imiAssignments]] as a reusable CTE chain — the
     * three-level descent replica: integer-exact ⌈k^(1/3)⌉ (the same
     * cube-snapped correction as [[ceilRoot]], since C pow and Math.pow
     * may disagree by an ulp), three hash-ranked codebooks, level-2→level-1
     * grouping, fine→level-2 via the descent, bottom-up non-empty guards,
-    * the three-step vector descent, and the shared cell-cap key.
-    * Terminal CTE: `${p}rk` = (vec_id, ck).
+    * and the three-step vector descent. Terminal CTEs: `${p}assign` =
+    * (vec_id, cell, cell2, mgn) and `${p}probes` = (vec_id, pc, mgn).
     */
   private def imiAssignCtes(univ: String, p: String): String =
     s"""${p}nk AS (
@@ -2945,20 +2889,12 @@ object VectorOps {
        |    max(CASE WHEN rn = 1 THEN cs END)
        |      - max(CASE WHEN rn = 2 THEN cs END) AS mgn
        |  FROM ${p}rw
-       |  WHERE rn <= 2 GROUP BY vec_id),
-       |${p}cellsz AS (SELECT cell, count(*) AS cn FROM ${p}assign GROUP BY cell),
-       |${p}rk AS (
-       |  SELECT a.vec_id,
-       |    CASE WHEN z.cn > $CELL_CAP THEN
-       |      CAST(a.cell AS VARCHAR) || ':' ||
-       |        CAST(coalesce(a.cell2, a.cell) AS VARCHAR)
-       |    ELSE CAST(a.cell AS VARCHAR) END AS ck
-       |  FROM ${p}assign a JOIN ${p}cellsz z ON z.cell = a.cell)""".stripMargin
+       |  WHERE rn <= 2 GROUP BY vec_id)""".stripMargin
 
   /** The full IMI-assignment oracle prelude over the AUGMENTED corpus
     * (prefix `m` so it can coexist with the coarse chain in one oracle):
-    * aug → normed universe → [[imiAssignCtes]] → `me` = (vec_id,
-    * embedding, nrm, ck) — the twin of [[sharedImiAssign]].
+    * aug → normed universe `a` → [[imiAssignCtes]] (terminals `massign`,
+    * `mprobes`) — the twin of [[sharedImiAssign]].
     */
   private lazy val imiCellCtes: String =
     s"""aug AS (
@@ -2969,11 +2905,12 @@ object VectorOps {
        |  SELECT vec_id, embedding,
        |    sqrt(${dSql("embedding", "embedding")}) AS nrm
        |  FROM aug),
-       |${imiAssignCtes("a", "m")},
-       |me AS (
-       |  SELECT a.vec_id, a.embedding, a.nrm, mrk.ck
-       |  FROM a JOIN mrk ON a.vec_id = mrk.vec_id)""".stripMargin
+       |${imiAssignCtes("a", "m")}""".stripMargin
 
+  /** Shared CTE chain for the LSH oracles, parameterized by the vector-set
+    * CTE body: aug → planes → component projections → bit-string
+    * signatures → normed vectors.
+    */
   private def sigChain(augBody: String): String =
     s"""aug AS ($augBody),
        |planes AS (

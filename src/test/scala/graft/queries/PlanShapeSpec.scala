@@ -533,8 +533,8 @@ class PlanShapeSpec extends SparkSpec {
     // Σ n_g·k_g ≈ n·√k ≈ 4000 (+ coarseNE ≤ √k); the 8000 ceiling fails
     // if the in-group restriction is ever lost (which would put this
     // stage at the full n·k = 16000). NOT a worst-case guarantee: total
-    // fine-centroid skew would re-quadratize this stage — that skew is
-    // what the recall gate + CELL_CAP discipline bound in production.
+    // fine-centroid skew would re-quadratize this stage (SCALE.md records
+    // the largest cells measured at each probed scale).
     assert(coarseBhj < 8000L,
       s"in-group fine pick must stay ~n·√k on this fixture: bhj=$coarseBhj")
     // and the headline: two-level total well under flat's candidate volume
@@ -689,28 +689,27 @@ class PlanShapeSpec extends SparkSpec {
       s"per-part offsets must broadcast into the corpus:\n${p.take(800)}")
   }
 
-  test("two-tier cell scan: the ck candidate join carries the sketch, never full vectors") {
+  test("two-tier cell scan: the cell candidate join carries the sketch, never full vectors") {
     // round 10: the within-cell candidate join (the family's dominant
     // cost at 10⁷ — ~1.1×10¹⁰ pairs over a ~5.6 GB/side spilling shuffle)
     // must shuffle ONLY the pair sketch (16-d head + tail norm + norm);
     // full 64-float vectors may appear only in the per-survivor rescore
-    // fetch. A regression that rejoins embeddings below the ck join
+    // fetch. A regression that rejoins embeddings below the cell join
     // re-inflates the shuffle 3.5× and the pair dot 4×.
     import org.apache.spark.sql.functions._
     val df = VectorOps.cellVerifiedPairs(spark, dir,
       VectorOps.sharedCoarseAssign(spark, dir))
-    // the candidate PAIR join: keyed on ck AND two-sided (both pair ids in
-    // its output) — the round-15 band split adds per-side boundary joins
-    // that also key on ck but are one-sided k-row broadcasts, not the pair
-    // space this pin guards
-    def ckJoins(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+    // the candidate PAIR join: keyed on cell AND two-sided (both pair ids
+    // in its output) — a one-sided join that also keys on cell is not the
+    // pair space this pin guards
+    def cellJoins(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
       p.collect {
         case j: org.apache.spark.sql.catalyst.plans.logical.Join
-            if j.condition.exists(_.references.exists(_.name == "ck")) &&
+            if j.condition.exists(_.references.exists(_.name == "cell")) &&
               Set("i", "j").subsetOf(j.output.map(_.name).toSet) => j
       }
-    val joins = ckJoins(df.queryExecution.optimizedPlan)
-    assert(joins.nonEmpty, "pair scan must join on the refined cell key")
+    val joins = cellJoins(df.queryExecution.optimizedPlan)
+    assert(joins.nonEmpty, "pair scan must join on the cell id")
     joins.foreach { j =>
       val names = j.output.map(_.name)
       assert(!names.exists(Set("ea", "eb", "embedding")),
@@ -731,14 +730,70 @@ class PlanShapeSpec extends SparkSpec {
       base.select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
     val n = aug.withColumn("nrm", sqrt(vdot(col("embedding"), col("embedding"))))
       .join(VectorOps.sharedCoarseAssign(spark, dir), Seq("vec_id"))
-    val l = n.select(col("ck"), col("vec_id").as("i"), col("embedding").as("ea"), col("nrm").as("na"))
-    val r = n.select(col("ck"), col("vec_id").as("j"), col("embedding").as("eb"), col("nrm").as("nb"))
-    val exact = l.join(r, Seq("ck")).filter(col("i") < col("j"))
+    val l = n.select(col("cell"), col("vec_id").as("i"), col("embedding").as("ea"), col("nrm").as("na"))
+    val r = n.select(col("cell"), col("vec_id").as("j"), col("embedding").as("eb"), col("nrm").as("nb"))
+    val exact = l.join(r, Seq("cell")).filter(col("i") < col("j"))
       .withColumn("cos", vdot(col("ea"), col("eb")) / (col("na") * col("nb")))
       .filter(col("cos") >= 0.999)
       .select(col("i"), col("j"))
-    val badJoins = ckJoins(exact.queryExecution.optimizedPlan)
+    val badJoins = cellJoins(exact.queryExecution.optimizedPlan)
     assert(badJoins.exists(_.output.exists(a => Set("ea", "eb")(a.name))),
-      "control: the single-tier shape should carry full vectors through the ck join")
+      "control: the single-tier shape should carry full vectors through the cell join")
+  }
+
+  test("shared IVF builds cache the assignment as built: nothing keyed on cell above the descent") {
+    // every IVF consumer joins on the Long cell id, so a shared build ends
+    // at its final argmax: no per-cell aggregate and no cell-keyed join
+    // may run above it. Read off the executed plan of each build's
+    // checkpoint action (the descent's own aggregates — the flat chain's
+    // Lloyd means group by cell — sit below the final argmax)
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val s2 = spark.newSession()
+    val built = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    s2.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") built.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    })
+    object Walk extends AdaptiveSparkPlanHelper {
+      def argmax(p: SparkPlan): Boolean = p match {
+        case a: BaseAggregateExec => a.aggregateExpressions.exists(e =>
+          e.aggregateFunction.isInstanceOf[graft.expr.ArgTop2] ||
+            e.aggregateFunction.isInstanceOf[graft.expr.ArgTopN])
+        case _ => false
+      }
+      // every node outside the subtrees of the chain's argmax aggregates
+      def above(p: SparkPlan): Seq[SparkPlan] =
+        if (argmax(p)) Nil else p +: allChildren(p).flatMap(above)
+    }
+    def onCell(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      es.exists(_.references.exists(_.name == "cell"))
+    for ((name, build) <- Seq[(String, () => Unit)](
+        "flat" -> (() => VectorOps.sharedIvfAssign(s2, dir)),
+        "coarse" -> (() => VectorOps.sharedCoarseAssign(s2, dir)),
+        "imi" -> (() => VectorOps.sharedImiAssign(s2, dir)),
+        "coarse_nt" -> (() => VectorOps.sharedCoarseAssignNt(s2, dir)),
+        "imi_nt" -> (() => VectorOps.sharedImiAssignNt(s2, dir)))) {
+      built.clear()
+      build()
+      org.apache.spark.GraftListenerBus.drain(s2.sparkContext)
+      assert(built.size === 1, s"$name: expected one checkpoint build, saw ${built.size}")
+      val p = built.peek()
+      assert(Walk.collect(p) { case n if Walk.argmax(n) => n }.nonEmpty,
+        s"$name: the build plan must hold its argmax descent:\n$p")
+      val top = Walk.above(p)
+      val cellAggs = top.collect {
+        case a: BaseAggregateExec if onCell(a.groupingExpressions) => a.nodeName
+      }
+      val cellJoins = top.collect {
+        case j: BaseJoinExec if onCell(j.leftKeys ++ j.rightKeys ++ j.condition) => j.nodeName
+      }
+      assert(cellAggs.isEmpty && cellJoins.isEmpty,
+        s"$name: cell-keyed work above the descent: $cellAggs $cellJoins\n$p")
+    }
   }
 }

@@ -372,9 +372,9 @@ class QueryInvariantSpec extends SparkSpec {
       base.select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
     val n = aug.withColumn("nrm", sqrt(vdot(col("embedding"), col("embedding"))))
       .join(assign, Seq("vec_id"))
-    val l = n.select(col("ck"), col("vec_id").as("i"), col("embedding").as("ea"), col("nrm").as("na"))
-    val r = n.select(col("ck"), col("vec_id").as("j"), col("embedding").as("eb"), col("nrm").as("nb"))
-    val exact = l.join(r, Seq("ck")).filter(col("i") < col("j"))
+    val l = n.select(col("cell"), col("vec_id").as("i"), col("embedding").as("ea"), col("nrm").as("na"))
+    val r = n.select(col("cell"), col("vec_id").as("j"), col("embedding").as("eb"), col("nrm").as("nb"))
+    val exact = l.join(r, Seq("cell")).filter(col("i") < col("j"))
       .withColumn("cos", vdot(col("ea"), col("eb")) / (col("na") * col("nb")))
       .filter(col("cos") >= 0.999)   // = ANN_T
       .select(col("i"), col("j"))
@@ -385,12 +385,12 @@ class QueryInvariantSpec extends SparkSpec {
     assert(tiered === exact, "two-tier verification must equal the exact join")
     // pruning is real: re-run tier 1 alone and compare volumes
     val sk = VectorOps.sharedPairSketch(spark, dir)
-      .join(assign.select(col("vec_id"), col("ck")), Seq("vec_id"))
-    val ll = sk.select(col("ck"), col("vec_id").as("i"), col("hq").as("ha"),
+      .join(assign.select(col("vec_id"), col("cell")), Seq("vec_id"))
+    val ll = sk.select(col("cell"), col("vec_id").as("i"), col("hq").as("ha"),
       col("tn").as("ta"))
-    val rr = sk.select(col("ck"), col("vec_id").as("j"), col("hq").as("hb"),
+    val rr = sk.select(col("cell"), col("vec_id").as("j"), col("hq").as("hb"),
       col("tn").as("tb"))
-    val candAll = ll.join(rr, Seq("ck")).filter(col("i") < col("j"))
+    val candAll = ll.join(rr, Seq("cell")).filter(col("i") < col("j"))
     val total = candAll.count()
     // round 16: the sketch is pre-normalized, so the bound replay is the
     // norm-free spelling; round 17: the head is binary16-PACKED, scored
@@ -920,31 +920,8 @@ class QueryInvariantSpec extends SparkSpec {
       r.getAs[Long]("offset_in_shard") < 4096L))
   }
 
-  test("IVF hot-cell split: the refined join key bounds per-key membership") {
-    // synthetic skew: 5000 members pile onto cell 1 (> CELL_CAP), with the
-    // second-nearest centroid spread over 7 values; cell 2 stays cold
-    val assign = spark.range(0, 5000).select(col("id").as("vec_id"),
-        lit(1).as("cell"), (col("id") % 7).cast("int").as("cell2"),
-        lit(0.01d).as("mgn"))
-      .unionByName(spark.range(5000, 5100).select(col("id").as("vec_id"),
-        lit(2).as("cell"), lit(5).cast("int").as("cell2"),
-        lit(0.01d).as("mgn")))
-    val rk = VectorOps.refinedAssign(assign)
-    // the hot cell splits by cell2 (7 sub-keys); the cold cell keeps its id
-    val hotKeys = rk.filter($"vec_id" < 5000).select("ck").distinct()
-      .collect().map(_.getString(0))
-    assert(hotKeys.length === 7 && hotKeys.forall(_.startsWith("1:")))
-    val coldKeys = rk.filter($"vec_id" >= 5000).select("ck").distinct()
-      .collect().map(_.getString(0))
-    assert(coldKeys.toSeq === Seq("2"))
-    // per-key membership — the quadratic driver of the within-cell pair
-    // join — is back under the cap after the split
-    val maxSz = rk.groupBy("ck").count().agg(max("count")).collect()(0).getLong(0)
-    assert(maxSz <= VectorOps.CELL_CAP)
-  }
-
   test("IVF nprobe=2 output is a superset of the nprobe=1 output") {
-    // same-ck pairs share a home cell, so every nprobe=1 candidate is also
+    // same-cell pairs share a home cell, so every nprobe=1 candidate is also
     // an nprobe=2 candidate; both verify at the same cosine threshold —
     // the recall lever must only ever ADD pairs. Round 9: both run on the
     // shared COARSE assignment, so the nprobe=1 anchor is
