@@ -6,7 +6,7 @@ import org.apache.spark.storage.StorageLevel
 /** Keyed per-(session, corpus) cache for derived tables that production
   * pipelines materialize ONCE and serve to every consumer: the shingle
   * inverted index, the LSH-verified near-dup pair set, LSH signature
-  * tables, the refined IVF cell assignment. Rebuilding any of these per
+  * tables, the IVF codebooks and cell assignments. Rebuilding any of these per
   * query is the thing no 100 TB deployment would do — an index is built
   * once, then queried.
   *

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.SparkSession
 
-/** Memoized eager corpus preconditions (round-10 advice).
+/** Memoized eager corpus preconditions and derived counts (round-10 advice).
   *
   * Some queries enforce a data-shape assumption with a fail-fast scan at
   * DataFrame CONSTRUCTION time (the Bloom-capacity `.first()` discipline):
@@ -25,35 +25,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Preconditions {
 
-  private val seen = new java.util.WeakHashMap[
-    SparkSession, scala.collection.mutable.HashSet[String]]()
-
-  private def keysOf(s: SparkSession): scala.collection.mutable.HashSet[String] =
-    synchronized {
-      val e = seen.get(s)
-      if (e != null) e
-      else { val n = scala.collection.mutable.HashSet.empty[String]; seen.put(s, n); n }
-    }
-
-  /** Run `check` (which throws on violation) once per (session, key);
-    * later invocations with the same key on the same session are no-ops.
-    */
-  def once(s: SparkSession, key: String)(check: => Unit): Unit = {
-    val needed = synchronized { !keysOf(s).contains(key) }
-    if (needed) {
-      check
-      synchronized { keysOf(s).add(key) }
-    }
-  }
-
-  // ---- memoized scalar values (round 12) ----------------------------------
-  //
-  // The same construction-time shape as `once`, but for a derived LONG the
-  // caller needs (a corpus row count feeding a derived writer split): the
-  // count job is parquet-meta-cheap but construction happens per invocation,
-  // and the s19 plan trace should not carry a count job the corpus can't
-  // have changed under (round-11 verdict #4). Weak session keys as above.
-
   private val vals = new java.util.WeakHashMap[
     SparkSession, scala.collection.mutable.HashMap[String, Long]]()
 
@@ -64,9 +35,18 @@ object Preconditions {
       else { val n = scala.collection.mutable.HashMap.empty[String, Long]; vals.put(s, n); n }
     }
 
-  /** Compute `value` once per (session, key) and serve the memo afterwards.
-    * A throwing compute is not memoized (the `once` discipline): the key is
-    * recorded only after `value` returns.
+  /** Run `check` (which throws on violation) once per (session, key);
+    * later invocations with the same key on the same session are no-ops.
+    * A check is a [[longOnce]] whose value is a constant.
+    */
+  def once(s: SparkSession, key: String)(check: => Unit): Unit =
+    longOnce(s, key) { check; 0L }
+
+  /** Compute `value` once per (session, key) and serve the memo afterwards:
+    * a derived Long such as a corpus row count feeding a derived width,
+    * whose count job construction would otherwise repeat per invocation. A
+    * throwing compute is not memoized: the key is recorded only after
+    * `value` returns.
     */
   def longOnce(s: SparkSession, key: String)(value: => Long): Long = {
     val hit = synchronized { valsOf(s).get(key) }

@@ -67,20 +67,29 @@ object VectorOps {
   private val RP_K = 16
   private val RP_D = 64
 
-  /** sign[k][d] ∈ {±1}: Scala twin of md5Key64 (md5 hex → first 15 nibbles
-    * as a 60-bit long), parity-mapped. Pinned against the Column-side
-    * md5Key64 in [[QueryInvariantSpec]] so the three spellings (Scala,
-    * Spark md5, DuckDB md5) can never drift apart silently.
+  /** ±1 signs: +1 where md5Key64(key(r, c)) (md5 hex → first 15 nibbles
+    * as a 60-bit long) has parity `plus`. Pinned against the Column md5 in
+    * [[QueryInvariantSpec]] so the three spellings (Scala, Spark md5,
+    * DuckDB md5) can never drift apart silently.
     */
-  private[queries] lazy val rpSigns: IndexedSeq[IndexedSeq[Double]] =
-    (0 until RP_K).map { k =>
-      (0 until RP_D).map { d =>
+  private def md5Signs(rows: Int, cols: Int, plus: Long)(
+      key: (Int, Int) => String): IndexedSeq[IndexedSeq[Double]] =
+    (0 until rows).map { r =>
+      (0 until cols).map { c =>
         val hex = java.security.MessageDigest.getInstance("MD5")
-          .digest(s"$d:$k".getBytes("UTF-8"))
+          .digest(key(r, c).getBytes("UTF-8"))
           .map(b => f"$b%02x").mkString.take(15)
-        if (java.lang.Long.parseLong(hex, 16) % 2 == 0) 1.0d else -1.0d
+        if (java.lang.Long.parseLong(hex, 16) % 2 == plus) 1.0d else -1.0d
       }
     }
+
+  /** sign[k][d] ∈ {±1}: key "d:k", even parity → +1. */
+  private[queries] lazy val rpSigns: IndexedSeq[IndexedSeq[Double]] =
+    md5Signs(RP_K, RP_D, 0L)((k, d) => s"$d:$k")
+
+  /** LSH plane[p][d] ∈ {±1}: key "p:d", odd parity → +1. */
+  private[queries] lazy val lshPlanes: IndexedSeq[IndexedSeq[Double]] =
+    md5Signs(NPLANES, RP_D, 1L)((p, d) => s"$p:$d")
 
   /** Exact L2² between two float subvectors — sequential fold, the
     * oracle-portable spelling (matches list_sum over list_zip).
@@ -364,12 +373,12 @@ object VectorOps {
     "sim_ann_incremental" -> ((s, dir) => {
       val corpus = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
       val idx = CorpusCache.getOrBuild(s, s"incsigs:$dir")(
-        withNorm(corpus).join(lshSigs(s, corpus), Seq("vec_id"))
+        lshSigs(withNorm(corpus))
           .select(col("bucket"), col("vec_id").as("match_id"),
             col("embedding").as("eb"), col("nrm").as("nb")))
       val batch = corpus.filter(col("vec_id") % 4 === 0)
         .select((col("vec_id") + 200000).as("vec_id"), col("embedding"))
-      val q = withNorm(batch).join(lshSigs(s, batch), Seq("vec_id"))
+      val q = lshSigs(withNorm(batch))
         .select(col("bucket"), col("vec_id").as("query_id"),
           col("embedding").as("ea"), col("nrm").as("na"))
       q.join(idx, Seq("bucket"))
@@ -540,24 +549,14 @@ object VectorOps {
         greatest(col("u"), col("v")).as("j"))
       .distinct()
 
-  /** Random-hyperplane signatures: w ∈ {+1,-1} from md5 parity of "p:d",
-    * projections via one shuffle on (vec_id, p), bit-string bucket.
+  /** Random-hyperplane signatures: `emb` plus its bit-string `bucket`, one
+    * sign bit per [[lshPlanes]] plane, each a d-order [[dot]] fold against
+    * the plane literal — a per-row projection, no shuffle.
     */
-  private def lshSigs(s: SparkSession, emb: DataFrame): DataFrame = {
-    val planes = s.range(NPLANES).select(col("id").cast(IntegerType).as("p"))
-      .crossJoin(s.range(64).select(col("id").cast(IntegerType).as("d")))
-      .withColumn("w",
-        (conv(substring(md5(concat_ws(":", col("p"), col("d"))), 1, 15), 16, 10)
-          .cast(LongType) % 2 * 2 - 1).cast(DoubleType))
-    val comps = emb.select(col("vec_id"), posexplode(col("embedding")).as(Seq("d", "x")))
-    comps.join(broadcast(planes), Seq("d"))
-      .groupBy(col("vec_id"), col("p"))
-      .agg(sum(col("x").cast(DoubleType) * col("w")).as("proj"))
-      .groupBy(col("vec_id"))
-      .agg(concat_ws("", transform(array_sort(collect_list(struct(col("p"),
-        when(col("proj") > 0, lit(1)).otherwise(lit(0)).as("bit")))),
-        x => x.getField("bit").cast(StringType))).as("bucket"))
-  }
+  private def lshSigs(emb: DataFrame): DataFrame =
+    emb.withColumn("bucket", concat(lshPlanes.map(w =>
+      when(dot(col("embedding"), typedlit(w.map(_.toFloat))) > 0, lit("1"))
+        .otherwise(lit("0"))): _*))
 
   /** IVF scale parameters (round-5 advice: a FIXED k means cell size grows
     * O(n/k) and the within-cell pair join re-quadratizes as the corpus
@@ -691,8 +690,9 @@ object VectorOps {
     * model: an index is maintained, not rebuilt per search
     * (`sim_ann_lsh`, `sim_ann_lsh_multiprobe`, `ann_recall`).
     */
-  private def sharedLshSigs(s: SparkSession, dir: String): DataFrame =
-    CorpusCache.getOrBuild(s, s"lshsigs:$dir")(lshSigs(s, augmented(s, dir)))
+  private[queries] def sharedLshSigs(s: SparkSession, dir: String): DataFrame =
+    CorpusCache.getOrBuild(s, s"lshsigs:$dir")(
+      lshSigs(augmented(s, dir)).select(col("vec_id"), col("bucket")))
 
   /** FLAT IVF cell assignment over the augmented corpus — seeds, Lloyd
     * step, final assignment. Round 9: this chain serves
@@ -774,10 +774,8 @@ object VectorOps {
     * augmentation. Same O(n·√k·d) algebra as [[sharedCoarseAssign]].
     */
   private[queries] def corpusAssign(s: SparkSession, dir: String): DataFrame =
-    CorpusCache.getOrBuild(s, s"ivfplain:$dir") {
-      val (fgrp, coarseNE) = coarseCodebook(s, dir, cellCount(embCount(s, dir)))
-      assignWithCodebook(Tables.embeddings(s, dir), fgrp, coarseNE)
-    }
+    CorpusCache.getOrBuild(s, s"ivfplain:$dir")(
+      coarseAssignments(s, dir, Tables.embeddings(s, dir), embCount(s, dir)))
 
   /** Augmented-corpus row count: exactly twice [[embCount]], since
     * [[augmented]] is the base corpus plus one shifted copy — so the IMI
@@ -1095,12 +1093,11 @@ object VectorOps {
     val cb = TempDirs.fresh("annin_cb")
     val arrivals = Tables.embeddings(s, dir).filter(col("vec_id") % 4 === 0)
     arrivals.write.mode("overwrite").parquet(in)
-    // train the codebook from the corpus (k from the CORPUS size — the
-    // index's k, not the batch's) and publish it as the artifact the
-    // per-batch assigner reads
-    val (fgrp, coarseNE) = coarseCodebook(s, dir, cellCount(embCount(s, dir)))
-    fgrp.write.mode("overwrite").parquet(s"$cb/fgrp")
-    coarseNE.write.mode("overwrite").parquet(s"$cb/coarse")
+    // the corpus-trained codebook (k from the CORPUS size — the index's k,
+    // not the batch's), published as the one artifact the per-batch
+    // assigner reads
+    coarseCodebook(s, dir, cellCount(embCount(s, dir)))
+      .write.mode("overwrite").parquet(cb)
     // backlog-derived shuffle partitions for the per-batch assignment work
     // (broadcast joins + argmax aggregates) — see [[StreamGate.streamSession]].
     // The child session needs no setup: the vec_* expressions are bound
@@ -1112,8 +1109,7 @@ object VectorOps {
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val ss = batch.sparkSession
-        assignWithCodebook(batch,
-          ss.read.parquet(s"$cb/fgrp"), ss.read.parquet(s"$cb/coarse"))
+        assignWithCodebook(batch, ss.read.parquet(cb))
           .write.mode("append").parquet(out)
       }
       .option("checkpointLocation", ckpt)
@@ -1156,67 +1152,66 @@ object VectorOps {
   private[queries] def imiAssignProbe(s: SparkSession, dir: String): DataFrame =
     imiAssignments(s, dir, augmented(s, dir), augCount(s, dir))
 
-  /** The two-level assignment chain. Fine centroids are the seed codebook
-    * (first k vec_ids — the PQ-codebook discipline; at scale the codebook
+  /** The two-level assignment chain: `emb` descends the [[coarseCodebook]]
+    * for k = [[cellCount]](`nRows`) (seed centroids — at scale the codebook
     * trains offline on a bounded sample, which is why this path gates
     * ASSIGNMENT cost, while the flat `sim_ann_ivf` chain gates the Lloyd
-    * step). Coarse centroids are the first ⌈√k⌉ vec_ids; every fine
-    * centroid joins its nearest coarse centroid (k·√k rows, tiny), and
-    * vectors only ever compare against (a) the non-empty coarse table
-    * (n·√k rows) and (b) the fine centroids of their own coarse group
-    * (n·E[k/√k] rows). Both centroid tables broadcast — the corpus never
-    * shuffles for assignment; at n = 10⁹, k = 10⁶ fine centroids × 64
-    * floats ≈ 256 MB, the standard residency assumption of an IVF
-    * codebook on every index node.
+    * step). Vectors only ever compare against (a) the non-empty coarse
+    * groups (n·√k rows) and (b) the fine centroids of their own group
+    * (n·E[k/√k] rows). Both broadcast — the corpus never shuffles for
+    * assignment; at n = 10⁹, k = 10⁶ fine centroids × 64 floats ≈ 256 MB,
+    * the standard residency assumption of an IVF codebook on every node.
     *
     * Determinism: identical vectors take identical coarse and fine argmax
     * decisions (cos desc, id asc tie-break), so planted duplicates can
     * never be separated — the property the gate verifies.
     */
   private def coarseAssignments(s: SparkSession, dir: String, emb: DataFrame,
-      nRows: Long): DataFrame = {
-    val (fgrp, coarseNE) = coarseCodebook(s, dir, cellCount(nRows))
-    assignWithCodebook(emb, fgrp, coarseNE)
-  }
+      nRows: Long): DataFrame =
+    assignWithCodebook(emb, coarseCodebook(s, dir, cellCount(nRows)))
 
-  /** The two-level codebook alone — (fine-centroids-grouped-by-coarse,
-    * non-empty coarse table) for a given cell count k. Split out of
-    * [[coarseAssignments]] so the streaming ingest gate can train the
-    * codebook once from the corpus (the offline-index discipline) and
-    * assign micro-batches of arrivals against it.
+  /** The two-level codebook for cell count k, shared by every chain that
+    * descends it (augmented, near-twin, plain, streaming ingest): k fine
+    * centroids from the flat chain's "ivfseed" universe in ⌈√k⌉ coarse
+    * groups (IEEE-exact sqrt) from an independent one.
     */
-  private[queries] def coarseCodebook(
-      s: SparkSession, dir: String, k: Long): (DataFrame, DataFrame) = {
-    // fine codebook shares the flat chain's "ivfseed" hash universe (the
-    // seeds-as-codebook discipline, now id-distribution-free); the coarse
-    // table draws ⌈√k⌉ rows (IEEE-exact sqrt) from an independent universe
-    val fine = hashSeeds(s, dir, k, "ivfseed")
-    val coarse = hashSeeds(s, dir, math.ceil(math.sqrt(k.toDouble)).toLong, "ivfgrp")
-      .select(col("cid").as("gid"), col("ce").as("ge"), col("nc").as("ng"))
-    // fine centroid → coarse group: k×√k candidate rows, never
-    // corpus-sized. The pick is the sort-free ArgTop2 argmax (cos DESC,
-    // gid ASC — same selection as the oracle's row_number twin), with a
-    // tiny k-row join-back to re-attach (ce, nc).
-    val fpick = fine.crossJoin(broadcast(coarse))
-      .withColumn("cos_g", dot(col("ce"), col("ge")) / (col("nc") * col("ng")))
-      .groupBy(col("cid"))
-      .agg(argTop2(col("cos_g"), col("gid")).as("t2"))
-      .select(col("cid"), col("t2").getField("cell").as("gid"))
-    val fgrp = fpick.join(fine, Seq("cid"))
-      .select(col("gid"), col("cid"), col("ce"), col("nc"))
-    // a coarse centroid that wins no fine members must not strand the
-    // vectors that would pick it: vectors choose among NON-EMPTY groups
-    val coarseNE = coarse.join(broadcast(fgrp.select(col("gid")).distinct()), Seq("gid"))
-    (fgrp, coarseNE)
-  }
+  private[queries] def coarseCodebook(s: SparkSession, dir: String, k: Long): DataFrame =
+    groupedCodebook(s, dir, "ivfseed", k, "ivfgrp", math.ceil(math.sqrt(k.toDouble)).toLong)
 
-  /** The two-level descent of `emb` against a prebuilt codebook —
-    * (vec_id, cell, cell2). Per-vector independent given the codebook, so
-    * the result is invariant to how `emb` is batched (the property the
-    * streaming ingest gate rides).
+  /** `k` hash-ranked centroids (cid, ce, nc), each carrying the nearest of
+    * `kg` group centroids (gid, ge, ng), built ONCE per (session, corpus,
+    * universe, k). A group that wins no centroid has no row. The pick is
+    * k×kg rows, never corpus-sized: the sort-free ArgTop2 argmax (cos DESC,
+    * gid ASC — the oracle's row_number twin), then k-row join-backs.
     */
-  private[queries] def assignWithCodebook(
-      emb: DataFrame, fgrp: DataFrame, coarseNE: DataFrame): DataFrame = {
+  private def groupedCodebook(s: SparkSession, dir: String, tag: String, k: Long,
+      groupTag: String, kg: Long): DataFrame =
+    CorpusCache.getOrBuild(s, s"ivfcb:$dir:$tag:$k") {
+      val cent = hashSeeds(s, dir, k, tag)
+      val groups = hashSeeds(s, dir, kg, groupTag)
+        .select(col("cid").as("gid"), col("ce").as("ge"), col("nc").as("ng"))
+      cent.crossJoin(broadcast(groups))
+        .withColumn("cos_g", dot(col("ce"), col("ge")) / (col("nc") * col("ng")))
+        .groupBy(col("cid"))
+        .agg(argTop2(col("cos_g"), col("gid")).as("t2"))
+        .select(col("cid"), col("t2").getField("cell").as("gid"))
+        .join(cent, Seq("cid"))
+        .join(broadcast(groups), Seq("gid"))
+        .select(col("gid"), col("ge"), col("ng"), col("cid"), col("ce"), col("nc"))
+    }
+
+  /** The two-level descent of `emb` against a [[coarseCodebook]] —
+    * (vec_id, cell, cell2, mgn, s1, probes). Per-vector independent given
+    * the codebook, so the result is invariant to how `emb` is batched (the
+    * property the streaming ingest gate rides).
+    */
+  private[queries] def assignWithCodebook(emb: DataFrame, cb: DataFrame): DataFrame = {
+    // vectors choose among NON-EMPTY coarse groups only (an empty group
+    // would strand its vectors). distinct, not dropDuplicates("gid"),
+    // whose first() of an array falls back to SortAggregate; its -0.0 →
+    // 0.0 key normalization leaves every dot (a fold from +0.0) unchanged
+    val coarseNE = cb.select(col("gid"), col("ge"), col("ng")).distinct()
+    val fgrp = cb.select(col("gid"), col("cid"), col("ce"), col("nc"))
     // vector → coarse group: the n·√k candidate relation collapses in the
     // partial aggregate above the broadcast join (round 9 — the window
     // spelling sorted these candidates: the 10⁷ probe's spill cliff); the
@@ -1315,6 +1310,28 @@ object VectorOps {
     (p, b1)
   }
 
+  /** The three-level codebook for cell count k, built ONCE per (session,
+    * corpus, k): one row per "ivfseed" fine centroid (cid, ce, nc) carrying
+    * its level-2 centroid (g2, e2, n2) and that one's level-1 group
+    * (g1, e1, n1). The level-2 table is a [[groupedCodebook]] of its own
+    * (k1² centroids in k1 = ⌈k^(1/3)⌉ groups), cached because two
+    * consumers read it, and fine centroids descend it as vectors descend
+    * the two-level codebook: k·k1 + k·E[k1] rows, never k·k2 = k^(5/3).
+    */
+  private[queries] def imiCodebook(s: SparkSession, dir: String, k: Long): DataFrame =
+    CorpusCache.getOrBuild(s, s"ivfimicb:$dir:$k") {
+      val k1 = ceilRoot(k, 3)
+      val l2 = groupedCodebook(s, dir, "ivfl2", k1 * k1, "ivfl1", k1)
+      val fine = hashSeeds(s, dir, k, "ivfseed")
+      assignWithCodebook(fine.select(col("cid").as("vec_id"), col("ce").as("embedding")), l2)
+        .select(col("vec_id").as("cid"), col("cell").as("g2"))
+        .join(fine, Seq("cid"))
+        .join(broadcast(l2.select(col("gid").as("g1"), col("ge").as("e1"), col("ng").as("n1"),
+          col("cid").as("g2"), col("ce").as("e2"), col("nc").as("n2"))), Seq("g2"))
+        .select(col("g1"), col("e1"), col("n1"), col("g2"), col("e2"), col("n2"),
+          col("cid"), col("ce"), col("nc"))
+    }
+
   /** The three-level (IMI-shaped) assignment chain: descend level-1
     * (⌈k^(1/3)⌉ centroids) → level-2 (k^(2/3), restricted to the chosen
     * level-1 group) → fine top-2 (restricted to the chosen level-2
@@ -1329,51 +1346,20 @@ object VectorOps {
     * linear shuffle traded against a √k/k^(1/3)-factor of broadcast-join
     * compute, which wins whenever k outgrows ~10⁴.
     *
-    * All three codebooks are hash-ranked ([[hashSeeds]]); the fine
-    * codebook shares the flat and two-level chains' "ivfseed" universe,
-    * so identical vectors co-assign under every scheme (the property the
-    * invariant spec pins). Level sizes are k1 = ⌈k^(1/3)⌉ exactly
-    * ([[ceilRoot]]) and k2 = k1² — driver Longs from the memoized count
-    * `nRows`, integer-exact in both engines.
-    * Non-empty-group guards run bottom-up (a level-2 centroid with no
-    * fine members, a level-1 centroid with no surviving level-2) so no
-    * vector can strand, mirroring [[coarseAssignments]]'s coarseNE.
+    * The codebook is [[imiCodebook]], built once per (corpus, k); the
+    * bottom-up non-empty guards (a level-2 centroid with no fine members,
+    * a level-1 centroid with no surviving level-2) are projections of it,
+    * so no vector can strand — [[assignWithCodebook]]'s discipline.
     */
   private def imiAssignments(s: SparkSession, dir: String, emb: DataFrame,
       nRows: Long): DataFrame = {
-    // codebook sizes and ArgTopN beam widths all from the count of `emb`,
+    // codebook size and ArgTopN beam widths all from the count of `emb`,
     // which the caller derives from the one memoized [[embCount]]
-    val k = cellCount(nRows)
     val (capP, capB1) = staticProbeWidth(nRows)
-    val k1 = ceilRoot(k, 3)
-    val fine = hashSeeds(s, dir, k, "ivfseed")
-    val l1 = hashSeeds(s, dir, k1, "ivfl1")
-      .select(col("cid").as("g1"), col("ce").as("e1"), col("nc").as("n1"))
-    val l2 = hashSeeds(s, dir, k1 * k1, "ivfl2")
-      .select(col("cid").as("g2"), col("ce").as("e2"), col("nc").as("n2"))
-    // level-2 centroid → level-1 group: k2·k1 rows, codebook-scale
-    val l2pick = l2.crossJoin(broadcast(l1))
-      .withColumn("cs", dot(col("e2"), col("e1")) / (col("n2") * col("n1")))
-      .groupBy(col("g2")).agg(argTop2(col("cs"), col("g1")).as("t2"))
-      .select(col("g2"), col("t2").getField("cell").as("g1"))
-    val l2g = l2pick.join(l2, Seq("g2"))
-    // fine centroid → level-2, via the same descent (k·k1 + k·E[k1] rows,
-    // never k·k2 = k^(5/3) — at k = 10⁶ that flat pass would be 10¹⁰ rows)
-    val l1withL2 = l1.join(broadcast(l2g.select(col("g1")).distinct()), Seq("g1"))
-    val fpick1 = fine.crossJoin(broadcast(l1withL2))
-      .withColumn("cs", dot(col("ce"), col("e1")) / (col("nc") * col("n1")))
-      .groupBy(col("cid")).agg(argTop2(col("cs"), col("g1")).as("t2"))
-      .select(col("cid"), col("t2").getField("cell").as("g1"))
-    val fpick2 = fpick1.join(fine, Seq("cid")).join(broadcast(l2g), Seq("g1"))
-      .withColumn("cs", dot(col("ce"), col("e2")) / (col("nc") * col("n2")))
-      .groupBy(col("cid")).agg(argTop2(col("cs"), col("g2")).as("t2"))
-      .select(col("cid"), col("t2").getField("cell").as("g2"))
-    val fgrp = fpick2.join(fine, Seq("cid"))
-      .select(col("g2"), col("cid"), col("ce"), col("nc"))
-    // bottom-up non-empty guards: vectors descend only into chains that
-    // end at ≥1 fine centroid
-    val l2ne = l2g.join(broadcast(fgrp.select(col("g2")).distinct()), Seq("g2"))
-    val l1ne = l1.join(broadcast(l2ne.select(col("g1")).distinct()), Seq("g1"))
+    val cb = imiCodebook(s, dir, cellCount(nRows))
+    val l1ne = cb.select(col("g1"), col("e1"), col("n1")).distinct()
+    val l2ne = cb.select(col("g2"), col("g1"), col("e2"), col("n2")).distinct()
+    val fgrp = cb.select(col("g2"), col("cid"), col("ce"), col("nc"))
     // Vector descent (round 10 — multi-probe-shaped; round 14 — DERIVED
     // width): level-1 keeps the top-b1 groups, level-2 ranks the union
     // of those groups' centroids and keeps the top-p CELLS, and the fine
@@ -1465,8 +1451,8 @@ object VectorOps {
         col("t2").getField("s1").as("s1"))
       .withColumn("probes", rankTwoProbes)
 
-  /** Deterministic IVF cell assignments: k-means seeds = the first vec_ids,
-    * one Lloyd refinement (assign → component-wise means → re-assign).
+  /** Deterministic IVF cell assignments: k-means seeds = the hash-ranked
+    * [[hashSeeds]] (inline), one Lloyd refinement (assign → means → re-assign).
     * Empty cells simply vanish (their members re-assign elsewhere) — the
     * standard k-means degenerate-cell behavior. Centroids re-quantize to
     * float32: vec_dot is an array<float> kernel, and the oracle applies the
@@ -1492,8 +1478,8 @@ object VectorOps {
   }
 
   def ivfQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // ANN via IVF with k-means centroids: deterministic seeds (the first
-    // vec_ids) refined by one Lloyd step — assign all vectors to their
+    // ANN via IVF with k-means centroids: deterministic (hash-ranked)
+    // seeds refined by one Lloyd step — assign all vectors to their
     // nearest seed, recompute each cell's component-wise mean declaratively
     // (explode → groupBy(cell, dim) → re-assemble ordered array), then the
     // FINAL assignment and the within-cell pair join use the refined
@@ -2710,8 +2696,8 @@ object VectorOps {
          |WHERE ${dSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm) >= $ANN_T""".stripMargin
   )
 
-  /** DuckDB twin of [[coarseAssignments]] as a reusable CTE chain: seeds
-    * codebook fine centroids, first ⌈√k⌉ vectors as coarse centroids,
+  /** DuckDB twin of [[coarseAssignments]] as a reusable CTE chain:
+    * hash-ranked fine and ⌈√k⌉ coarse centroids ([[hashSeedsSql]]),
     * fine→coarse grouping by the (cos DESC, id ASC) argmax, vectors
     * restricted to NON-EMPTY coarse groups, then the within-group fine
     * argmax. `univ` must expose (vec_id, embedding, nrm); every emitted

@@ -477,35 +477,61 @@ class PlanShapeSpec extends SparkSpec {
     // the SCALE.md n=10⁶ claim as an executed-metrics assertion. The cost
     // that quadratizes (k ∝ n) is the CANDIDATE volume out of the
     // vector×centroid broadcast joins: flat materializes n·k rows, the
-    // two-level chain n·√k (coarse pick) + n·E[k/√k] (in-group fine pick)
-    // + k·√k (fgrp, tiny). Shuffle volume stays O(n) for BOTH chains —
-    // Catalyst pushes the corpus shuffle below the broadcast join, so the
-    // window's n·k input never crosses the wire; that is exactly why the
-    // mechanism must be gated on join output rows, not shuffle records.
+    // two-level chain n·√k (coarse pick) + n·E[k/√k] (in-group fine pick).
+    // The codebook picks (k·√k rows, tiny) run once, in the codebook's own
+    // cached build, and are pinned separately below. Shuffle volume stays
+    // O(n) for BOTH chains — Catalyst pushes the corpus shuffle below the
+    // broadcast join, so the window's n·k input never crosses the wire;
+    // that is exactly why the mechanism must be gated on join output rows,
+    // not shuffle records.
     // AQE off so the static plan's metrics are directly collectible.
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
+    import org.apache.spark.sql.util.QueryExecutionListener
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", "8")
     s2.conf.set("spark.sql.adaptive.enabled", "false")
+    // the codebook builds, read off each build's checkpoint action
+    val built = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    s2.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") built.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    })
+    object Walk extends AdaptiveSparkPlanHelper
     // (bnlj, bhj) output rows, asserted SEPARATELY (round-9 advice): the
-    // cross joins (BNLJ — codebook picks + vector×coarse picks) are bounded
-    // O(n·√k) UNCONDITIONALLY, while the in-group fine pick (BHJ, equi on
+    // cross joins (BNLJ — vector×coarse picks) are bounded O(n·√k)
+    // UNCONDITIONALLY, while the in-group fine pick (BHJ, equi on
     // gid) is bounded n·max_g k_g — a bound that DEPENDS on the fine→
     // coarse distribution. A single summed assert would let worst-case
     // fine-centroid skew (all k fine centroids in one coarse group → the
     // in-group join alone is n·k) hide behind a healthy cross-join side.
-    def joinRows(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-      df.collect() // executes THIS queryExecution (count() would plan its own)
-      val p = df.queryExecution.executedPlan
-      val bnlj = p.collect {
-        case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec =>
+    def rows(p: SparkPlan): (Long, Long) = {
+      val bnlj = Walk.collect(p) {
+        case j: BroadcastNestedLoopJoinExec =>
           j.metrics.get("numOutputRows").map(_.value).getOrElse(0L)
       }.sum
-      val bhj = p.collect {
-        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec =>
+      val bhj = Walk.collect(p) {
+        case j: BroadcastHashJoinExec =>
           j.metrics.get("numOutputRows").map(_.value).getOrElse(0L)
       }.sum
       (bnlj, bhj)
     }
+    def joinRows(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+      df.collect() // executes THIS queryExecution (count() would plan its own)
+      rows(df.queryExecution.executedPlan)
+    }
+    // the cross-join rows of the codebook builds a probe's construction ran
+    def buildBnlj(probe: => org.apache.spark.sql.DataFrame): (Int, Long) = {
+      built.clear()
+      probe
+      org.apache.spark.GraftListenerBus.drain(s2.sparkContext)
+      (built.size, built.toArray(Array.empty[SparkPlan]).map(rows(_)._1).sum)
+    }
+    val (flatBuilds, _) = buildBnlj(VectorOps.flatAssignProbe(s2, dir))
+    val (coarseBuilds, coarseBuildBnlj) = buildBnlj(VectorOps.coarseAssignProbe(s2, dir))
+    val (imiBuilds, imiBuildBnlj) = buildBnlj(VectorOps.imiAssignProbe(s2, dir))
     val (flatBnlj, flatBhj) = joinRows(VectorOps.flatAssignProbe(s2, dir))
     val (coarseBnlj, coarseBhj) = joinRows(VectorOps.coarseAssignProbe(s2, dir))
     val (imiBnlj, imiBhj) = joinRows(VectorOps.imiAssignProbe(s2, dir))
@@ -513,24 +539,35 @@ class PlanShapeSpec extends SparkSpec {
     val coarse = coarseBnlj + coarseBhj
     info(s"join output rows: flat=$flat (bnlj=$flatBnlj bhj=$flatBhj) " +
       s"coarse=$coarse (bnlj=$coarseBnlj bhj=$coarseBhj) " +
-      s"imi=${imiBnlj + imiBhj} (bnlj=$imiBnlj bhj=$imiBhj)")
-    // fixture: n=1000 (augmented), nbase=500, k=16, √k=4.
+      s"imi=${imiBnlj + imiBhj} (bnlj=$imiBnlj bhj=$imiBhj); codebook builds: " +
+      s"coarse $coarseBuilds (bnlj=$coarseBuildBnlj) imi $imiBuilds (bnlj=$imiBuildBnlj)")
+    // fixture: n=1000 (augmented), nbase=500, k=16, √k=4, k1=3, k2=9.
     // flat: BNLJ = n·k = 16000 exactly (the quadratizing candidate set);
     // the seed builds cross no 1-row k/count frames over the base corpus
-    // (k and the count are plan literals), so nothing else is a BNLJ.
+    // (k and the count are plan literals), so nothing else is a BNLJ. Its
+    // seeds stay inline: nothing is built at construction.
+    assert(flatBuilds === 0, "the flat chain's seeds are not a cached codebook")
     assert(flat >= 16000L, s"flat probe must materialize the full n·k candidate set, saw $flat")
+    // each codebook's picks run exactly once, in its own build: the
+    // two-level fine×coarse pick k·√k = 64; the IMI level-2×level-1 pick
+    // k2·k1 = 27 (the level-2 table, a build of its own) and the
+    // fine×level-1 pick k·k1 = 48. Built inline, the probes re-ran them
+    // per unshared consumer (4128 = 4000 + 2·64, 3204 = 3000 + 4·27 + 2·48)
+    assert(coarseBuilds === 1 && coarseBuildBnlj === 64L,
+      s"two-level codebook: one build running its k·√k pick once, saw " +
+        s"$coarseBuilds builds, bnlj=$coarseBuildBnlj")
+    assert(imiBuilds === 2 && imiBuildBnlj === 75L,
+      s"IMI codebook: level-2 and fine builds running their picks once (27 + 48), " +
+        s"saw $imiBuilds builds, bnlj=$imiBuildBnlj")
     // coarse cross-join side — UNCONDITIONAL bound, holds under any
-    // fine-centroid distribution: vector×coarse n·√k = 4000 + the fgrp
-    // pick k·√k = 64, planned twice (fgrp feeds both the in-group join
-    // and the non-empty guard) = 4128, measured 4128. The seed builds
-    // used to cross a 1-row k frame and a 1-row base count over all
-    // nbase rows apiece: 5688 measured then, which this bound rejects.
-    assert(coarseBnlj < 5000L,
-      s"coarse cross-join stage must stay O(n·√k): bnlj=$coarseBnlj")
+    // fine-centroid distribution: vector×coarse n·√k = 4000 exactly; the
+    // codebook is a cached leaf, so no pick of it re-runs here
+    assert(coarseBnlj === 4000L,
+      s"coarse cross-join stage must be exactly n·√k: bnlj=$coarseBnlj")
     // coarse in-group side — bound is n·max_g k_g, which DEPENDS on the
     // fine→coarse distribution. On this fixture the seed codebook spreads
     // the 16 fine centroids across the 4 coarse groups (E[k_g]=√k), so
-    // Σ n_g·k_g ≈ n·√k ≈ 4000 (+ coarseNE ≤ √k); the 8000 ceiling fails
+    // Σ n_g·k_g ≈ n·√k ≈ 4000; the 8000 ceiling fails
     // if the in-group restriction is ever lost (which would put this
     // stage at the full n·k = 16000). NOT a worst-case guarantee: total
     // fine-centroid skew would re-quadratize this stage (SCALE.md records
@@ -541,13 +578,10 @@ class PlanShapeSpec extends SparkSpec {
     assert(coarse < (flat * 3) / 4,
       s"two-level assignment must materialize <75% of flat's candidates: coarse=$coarse flat=$flat")
     // three-level descent, cross-join side — UNCONDITIONAL O(n·k^(1/3))
-    // bound: vector×l1 n·3 = 3000 + the codebook picks l2×l1 (9·3 = 27)
-    // and fine×l1 (16·3 = 48), which each unshared consumer re-runs (4×
-    // and 2× here) = 3000 + 108 + 96 = 3204, measured 3204.
-    // Codebook sizes and beam widths are plan literals: with the seed
-    // builds crossing 1-row k and count frames over nbase this side
-    // measured 5784, and with the beams' three (p, b1) frame fan-outs
-    // too, 8784; the bound rejects both. Round 10: the
+    // bound: vector×l1 n·k1 = 3000 exactly. Codebook sizes and beam widths
+    // are plan literals: with the seed builds crossing 1-row k and count
+    // frames over nbase this side measured 5784, and with the beams'
+    // three (p, b1) frame fan-outs too, 8784. Round 10: the
     // descent is two-REGION at this fixture's derived p = 2 (top-2 kept
     // at levels 1 and 2 so `cell2` is the
     // second-best level-2 cell's winner — the nprobe=2 probe target),
@@ -560,8 +594,8 @@ class PlanShapeSpec extends SparkSpec {
     // may pay its constant factor but must never re-quadratize; the
     // shape's payoff is measured at the 10⁶/10⁷ probes where k^(1/3)/√k
     // is 27/140.
-    assert(imiBnlj < 4000L,
-      s"IMI cross-join stages must stay O(n·k^(1/3)) with no frame fan-outs: bnlj=$imiBnlj")
+    assert(imiBnlj === 3000L,
+      s"IMI cross-join stage must be exactly n·k1 with no re-picks or fan-outs: bnlj=$imiBnlj")
     assert(imiBhj < 16000L,
       s"IMI two-region menu/rejoin stages must stay O(n·k^(1/3)): bhj=$imiBhj")
     assert(imiBnlj + imiBhj < 2 * flat,
@@ -665,6 +699,61 @@ class PlanShapeSpec extends SparkSpec {
     graft.SparkEntry.queries("sim_ann_ivf")(s2, dir)
     assert(CorpusCache.liveKeys(s2).exists(_.startsWith("ivfassign:")),
       "control: the tagged baseline must register the flat key")
+  }
+
+  test("each IVF codebook is built once per (corpus, k) and shared by every chain that descends it") {
+    // at gate scale every chain's cell count is k = 16 (n = 500 plain,
+    // 1000 augmented, 2000 near-twin), so the four two-level descents
+    // share one codebook key and the two IMI descents one IMI codebook
+    // key (plus its one level-2 table); a key per chain would mean a
+    // codebook re-picked per consumer
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.shuffle.partitions", "8")
+    def codebookKeys(): (Seq[String], Seq[String], Seq[String]) = {
+      val keys = CorpusCache.liveKeys(s2).toSeq.sorted
+      (keys.filter(_.startsWith(s"ivfcb:$dir:ivfseed:")),
+        keys.filter(_.startsWith(s"ivfimicb:$dir:")),
+        keys.filter(_.startsWith(s"ivfcb:$dir:ivfl2:")))
+    }
+    VectorOps.sharedCoarseAssign(s2, dir)
+    VectorOps.sharedCoarseAssignNt(s2, dir)
+    VectorOps.corpusAssign(s2, dir)
+    graft.SparkEntry.queries("stream_ann_ingest")(s2, dir).collect()
+    val (twoLevel, imi0, _) = codebookKeys()
+    assert(twoLevel === Seq(s"ivfcb:$dir:ivfseed:16") && imi0.isEmpty,
+      s"the two-level chains must share one k = 16 codebook: ${CorpusCache.liveKeys(s2)}")
+    VectorOps.sharedImiAssign(s2, dir)
+    VectorOps.sharedImiAssignNt(s2, dir)
+    val (twoLevel1, imi, level2) = codebookKeys()
+    assert(twoLevel1 === twoLevel, "the IMI chains must not build a two-level codebook")
+    assert(imi === Seq(s"ivfimicb:$dir:16") && level2 === Seq(s"ivfcb:$dir:ivfl2:9"),
+      s"the IMI chains must share one k = 16 codebook: ${CorpusCache.liveKeys(s2)}")
+    assert(CorpusCache.liveKeys(s2).size < CorpusCache.MaxLive,
+      "witness needs every demanded key still live")
+  }
+
+  test("LSH signatures are a per-row projection: the lshsigs build plans no exchange") {
+    // each bucket bit is one d-order fold against a plane literal, so the
+    // signature table is the corpus scan plus a projection — no exploded
+    // (vector, plane) relation, no shuffle, no broadcast
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val s2 = spark.newSession()
+    val built = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    s2.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") built.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    })
+    VectorOps.sharedLshSigs(s2, dir)
+    org.apache.spark.GraftListenerBus.drain(s2.sparkContext)
+    assert(built.size === 1, s"expected one lshsigs build, saw ${built.size}")
+    object Walk extends AdaptiveSparkPlanHelper
+    val p = built.peek()
+    val exchanges = Walk.collect(p) { case e: Exchange => e.nodeName }
+    assert(exchanges.isEmpty, s"the lshsigs build must plan no exchange: $exchanges\n$p")
   }
 
   test("shard export: no corpus-sized unpartitioned window; offsets broadcast") {
@@ -772,12 +861,22 @@ class PlanShapeSpec extends SparkSpec {
     }
     def onCell(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
       es.exists(_.references.exists(_.name == "cell"))
-    for ((name, build) <- Seq[(String, () => Unit)](
-        "flat" -> (() => VectorOps.sharedIvfAssign(s2, dir)),
-        "coarse" -> (() => VectorOps.sharedCoarseAssign(s2, dir)),
-        "imi" -> (() => VectorOps.sharedImiAssign(s2, dir)),
-        "coarse_nt" -> (() => VectorOps.sharedCoarseAssignNt(s2, dir)),
-        "imi_nt" -> (() => VectorOps.sharedImiAssignNt(s2, dir)))) {
+    // each chain's codebook is its own cached build (pinned above); warm
+    // it first so the one checkpoint read here is the assignment's
+    val k = VectorOps.cellCount(VectorOps.augCount(s2, dir))
+    val kNt = VectorOps.cellCount(4L * VectorOps.embCount(s2, dir))
+    for ((name, warm, build) <- Seq[(String, () => Unit, () => Unit)](
+        ("flat", () => (), () => VectorOps.sharedIvfAssign(s2, dir)),
+        ("coarse", () => VectorOps.coarseCodebook(s2, dir, k),
+          () => VectorOps.sharedCoarseAssign(s2, dir)),
+        ("imi", () => VectorOps.imiCodebook(s2, dir, k),
+          () => VectorOps.sharedImiAssign(s2, dir)),
+        ("coarse_nt", () => VectorOps.coarseCodebook(s2, dir, kNt),
+          () => VectorOps.sharedCoarseAssignNt(s2, dir)),
+        ("imi_nt", () => VectorOps.imiCodebook(s2, dir, kNt),
+          () => VectorOps.sharedImiAssignNt(s2, dir)))) {
+      warm()
+      org.apache.spark.GraftListenerBus.drain(s2.sparkContext)
       built.clear()
       build()
       org.apache.spark.GraftListenerBus.drain(s2.sparkContext)

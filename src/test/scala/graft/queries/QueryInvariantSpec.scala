@@ -578,11 +578,11 @@ class QueryInvariantSpec extends SparkSpec {
     // two-level descent is per-vector independent, so assigning the
     // arrivals in two batches and unioning must equal one-shot assignment
     val arrivals = graft.Tables.embeddings(spark, dir).filter($"vec_id" % 4 === 0)
-    val (fgrp, coarseNE) = VectorOps.coarseCodebook(spark, dir,
+    val cb = VectorOps.coarseCodebook(spark, dir,
       VectorOps.cellCount(VectorOps.embCount(spark, dir)))
-    val whole = VectorOps.assignWithCodebook(arrivals, fgrp, coarseNE)
-    val halves = VectorOps.assignWithCodebook(arrivals.filter($"vec_id" % 8 === 0), fgrp, coarseNE)
-      .unionByName(VectorOps.assignWithCodebook(arrivals.filter($"vec_id" % 8 =!= 0), fgrp, coarseNE))
+    val whole = VectorOps.assignWithCodebook(arrivals, cb)
+    val halves = VectorOps.assignWithCodebook(arrivals.filter($"vec_id" % 8 === 0), cb)
+      .unionByName(VectorOps.assignWithCodebook(arrivals.filter($"vec_id" % 8 =!= 0), cb))
     assert(whole.exceptAll(halves).isEmpty && halves.exceptAll(whole).isEmpty)
     assert(whole.count() === arrivals.count())
   }
@@ -1098,6 +1098,17 @@ class QueryInvariantSpec extends SparkSpec {
     probe.foreach { case (d, k) =>
       assert(colSigns((d, k)) === VectorOps.rpSigns(k)(d),
         s"sign($d,$k) diverges between Scala and Column md5")
+    }
+    // the LSH planes: key "p:d", odd parity → +1, against the Column
+    // spelling the signature fold replaced (md5 hex → 15 nibbles → long)
+    val planeProbe = for (p <- 0 until 12; d <- Seq(0, 1, 31, 62, 63)) yield (p, d)
+    val colPlanes = planeProbe.toDF("p", "d")
+      .withColumn("w", (conv(substring(md5(concat_ws(":", $"p", $"d")), 1, 15), 16, 10)
+        .cast("long") % 2 * 2 - 1).cast("double"))
+      .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2))).toMap
+    planeProbe.foreach { case (p, d) =>
+      assert(colPlanes((p, d)) === VectorOps.lshPlanes(p)(d),
+        s"plane($p,$d) diverges between Scala and Column md5")
     }
     // JL: E[‖Px‖²] = ‖x‖² under ±1/√k signs; the corpus mean concentrates
     val proj = q("emb_random_projection")
