@@ -208,12 +208,13 @@ object Staging {
   }
 
   /** customer_email_scd snapshot feed (snapshots/customer_email_scd.sql):
-    * orders joined to valid customers, per-user recency rank.
+    * orders of valid customers (a semi join: only order columns are kept,
+    * and null ids match nothing), per-user recency rank.
     */
   def customerEmailScdFeed(stgOrder: DataFrame, stgCustomer: DataFrame): DataFrame = {
     val fact = stgOrder.alias("o")
-      .join(stgCustomer.select(col("user_db_id")).distinct().alias("c"),
-        col("o.user_db_id") === col("c.user_db_id"))
+      .join(stgCustomer.select(col("user_db_id")).alias("c"),
+        col("o.user_db_id") === col("c.user_db_id"), "left_semi")
       .filter(col("o.user_db_id").isNotNull &&
         col("o.email_address").isNotNull && trim(col("o.email_address")) =!= "")
       .select(

@@ -73,18 +73,23 @@ object Scd2 {
       .withColumn("dbt_valid_from", col(updatedAt))
       .withColumn("dbt_valid_to", lit(null).cast(TimestampType))
 
-    // Close superseded open versions at the newest incoming updatedAt per key:
-    // the `_rn = 1` filter already left incNew one row per key, that newest
-    // row, so its updatedAt is the per-key max without a second aggregate.
-    val closeAt = incNew.select(col("_key"), col(updatedAt).as("_close_ts"))
-    val curClosed = cur.join(closeAt, Seq("_key"), "left")
+    // Close superseded open versions at the newest incoming updatedAt per
+    // key, read off the change rows in one window over cur ∪ changes, so
+    // incNew (its join, broadcast and row_number) is planned once. The
+    // `_rn = 1` filter left at most one change row per key, so its
+    // dbt_updated_at is the per-key max; `_key` is never null (a concat_ws
+    // of coalesced parts), so the partition matches a join on it. A change
+    // row's own close time equals its dbt_updated_at and leaves it open.
+    val keyW = Window.partitionBy(col("_key"))
+    cur.withColumn("_chg", lit(false))
+      .unionByName(changes.select(cur.columns.map(col): _*).withColumn("_chg", lit(true)))
+      .withColumn("_close_ts",
+        max(when(col("_chg"), col("dbt_updated_at"))).over(keyW))
       .withColumn("dbt_valid_to",
         when(col("dbt_valid_to").isNull && col("_close_ts").isNotNull
           && col("_close_ts") > col("dbt_updated_at"), col("_close_ts"))
           .otherwise(col("dbt_valid_to")))
-      .drop("_close_ts")
-
-    curClosed.unionByName(changes.select(curClosed.columns.map(col): _*)).drop("_key")
+      .drop("_close_ts", "_chg", "_key")
   }
 
   /** Entity-state history via LEAD — each key's consecutive states get

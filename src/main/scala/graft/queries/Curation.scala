@@ -707,12 +707,13 @@ object Curation {
     // the lexical-retrieval half of quality-targeted curation: rank the
     // corpus against a query and keep/inspect the best matches. The query
     // is BY EXAMPLE (the distinct tokens of the anchor document, min
-    // doc_id) so both engines derive it from the data. Scale shape: tf/df/
-    // dl are the standard one-shuffle inverted-index aggregates a
-    // production deployment precomputes once (the CorpusCache model); the
-    // query-term set broadcasts, so scoring touches only postings of query
-    // terms; the top-k is TakeOrderedAndProject (never a global sort), and
-    // the rank window runs over k rows. Per-term scores cast to
+    // doc_id) so both engines derive it from the data. Scale shape: tf and
+    // dl live in the postings index a production deployment precomputes
+    // once (the CorpusCache model), the document count and avgdl are
+    // memoized driver literals, and df is counted over query terms only;
+    // the query-term set broadcasts, so scoring touches only postings of
+    // query terms; the top-k is TakeOrderedAndProject (never a global
+    // sort), and the rank window runs over k rows. Per-term scores cast to
     // DECIMAL(28,12) BEFORE the per-doc sum — the repo's exact-sum
     // discipline — so aggregation order can't drift the hash; every
     // arithmetic step is spelled with identical literals/associativity in
@@ -723,45 +724,72 @@ object Curation {
           round(col("score").cast(DoubleType), 6).as("bm25")))
   )
 
-  /** BM25 top-`n` ranking for the query-by-example anchor — the full
-    * chain behind `text_bm25_topk`, extracted (round 9) so the hybrid
-    * retrieval fusion gate (`fusion_rrf`, [[VectorOps]]) can consume the
-    * same maintained lexical index at a different depth. Returns
-    * (doc_id, lex_rank, score) with lex_rank 1-based (score desc, doc_id
-    * asc tie-break).
-    */
-  /** (doc_id, tok, tf) postings — THE maintained lexical inverted index,
+  /** (doc_id, tok, tf, dl) postings — THE maintained lexical inverted index,
     * built once per (session, corpus) like the shingle/signature/IVF
     * tables (round 16; the rationale was already written on the
     * text_bm25_topk gate: "the standard one-shuffle inverted-index
     * aggregates a production deployment precomputes once — the
-    * CorpusCache model"). Serves bm25Ranked (text_bm25_topk AND
-    * fusion_rrf's lexical arm) and text_tfidf_terms; the per-QUERY
+    * CorpusCache model"). `dl` is the document's token count, computed in
+    * the same build pass from the same split, so it equals Σ tf over the
+    * document's postings and scoring reads it off the query-term rows
+    * instead of re-aggregating the corpus. doc_id is the documents key, so
+    * rows stay unique per (doc_id, tok). Serves bm25Ranked (text_bm25_topk
+    * AND fusion_rrf's lexical arm) and text_tfidf_terms; the per-QUERY
     * derivations (query-term postings, df over them) stay per-query
     * scratch.
     */
   private[queries] def sharedPostings(s: SparkSession, dir: String): DataFrame =
     CorpusCache.getOrBuild(s, s"postings:$dir")(
       Tables.documents(s, dir)
-        .select(col("doc_id"), explode(TextFns.rawTokens(col("text"))).as("tok"))
-        .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf")))
+        .select(col("doc_id"), TextFns.rawTokens(col("text")).as("toks"))
+        .select(col("doc_id"), col("toks"), size(col("toks")).cast(LongType).as("dl"))
+        .select(col("doc_id"), explode(col("toks")).as("tok"), col("dl"))
+        .groupBy(col("doc_id"), col("tok"), col("dl")).agg(count(lit(1)).as("tf"))
+        .select(col("doc_id"), col("tok"), col("tf"), col("dl")))
 
+  /** The corpus figures a BM25 query ranks with, as driver Longs memoized
+    * once per (session, corpus): the query-by-example anchor (min doc_id,
+    * absent when no document has an id), the documents with postings
+    * (dl > 0) and their total tokens. One documents scan fills all four
+    * memo entries on the first call; later calls run no job.
+    */
+  private[queries] final case class CorpusStats(anchor: Option[Long], nDocs: Long, tokens: Long) {
+    /** Bit-equal to Spark's `avg(cast(dl as double))` over those documents:
+      * a sum of integer-valued doubles below 2^53 is exact. NaN on a
+      * corpus without postings, where no score row exists to read it.
+      */
+    def avgdl: Double = tokens.toDouble / nDocs.toDouble
+  }
+
+  private[queries] def corpusStats(s: SparkSession, dir: String): CorpusStats = {
+    lazy val row = Tables.documents(s, dir)
+      .select(col("doc_id"), size(TextFns.rawTokens(col("text"))).cast(LongType).as("dl"))
+      .agg(count(col("doc_id")), min(col("doc_id")), count(when(col("dl") > 0, lit(1))),
+        coalesce(sum(when(col("dl") > 0, col("dl"))), lit(0L)))
+      .head()
+    def memo(name: String, i: Int): Long =
+      Preconditions.longOnce(s, s"bm25:$name:$dir")(row.getLong(i))
+    CorpusStats(if (memo("ids", 0) == 0L) None else Some(memo("anchor", 1)),
+      memo("docs", 2), memo("tokens", 3))
+  }
+
+  /** BM25 top-`n` ranking for the query-by-example anchor — the full
+    * chain behind `text_bm25_topk`, extracted (round 9) so the hybrid
+    * retrieval fusion gate (`fusion_rrf`, [[VectorOps]]) can consume the
+    * same maintained lexical index at a different depth. Returns
+    * (doc_id, lex_rank, score) with lex_rank 1-based (score desc, doc_id
+    * asc tie-break). The collection statistics and the anchor are
+    * literals from [[corpusStats]] and dl rides on the postings, so the
+    * plan holds no aggregate over all postings: only the query terms' df
+    * and the per-doc score sum.
+    */
   private[queries] def bm25Ranked(s: SparkSession, dir: String, n: Int): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    // tf feeds the dl aggregate, the query-term derivation, and the
-    // scoring join — served from the shared postings index
+    val st = corpusStats(s, dir)
     val tf = sharedPostings(s, dir)
-    // dl re-aggregates the PERSISTED postings (dl = Σ tf per doc), not the
-    // raw token explode — the round-9 5M-doc probe measured the second
-    // corpus explode+shuffle as a material slice of a 30× superlinear wall
-    val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    val stats = dl.agg(count(lit(1)).cast(DoubleType).as("n_docs"),
-      avg(col("dl").cast(DoubleType)).as("avgdl"))
-    val qdoc = docs.agg(min(col("doc_id")).as("qid"))
-    // the anchor doc's distinct tokens, read from the postings (a token is
-    // in the doc iff it has a postings row — same set as the raw explode)
-    val qterms = tf.crossJoin(broadcast(qdoc))
-      .filter(col("doc_id") === col("qid")).select(col("tok")).distinct()
+    // the anchor doc's tokens, read from the postings (a token is in the
+    // doc iff it has a postings row — same set as the raw explode)
+    val qterms = tf.filter(st.anchor.fold(lit(false))(a => col("doc_id") === lit(a)))
+      .select(col("tok"))
     // qpost = the query terms' postings — restricting BEFORE the df
     // aggregate matters: df(t) = count of t's postings, so df restricted
     // to query terms is exact, while a full-vocabulary df table shuffles
@@ -771,14 +799,12 @@ object Curation {
     val qpost = ScratchCache.register(
       tf.join(broadcast(qterms), Seq("tok")).persist())
     val dfreq = qpost.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val idf = log((col("n_docs") - col("df") + lit(0.5d)) /
+    val idf = log((lit(st.nDocs.toDouble) - col("df") + lit(0.5d)) /
       (col("df") + lit(0.5d)) + lit(1.0d))
     val tfp = (col("tf") * lit(2.2d)) /
-      (col("tf") + lit(1.2d) * (lit(0.25d) + lit(0.75d) * col("dl") / col("avgdl")))
+      (col("tf") + lit(1.2d) * (lit(0.25d) + lit(0.75d) * col("dl") / lit(st.avgdl)))
     val scores = qpost
       .join(broadcast(dfreq), Seq("tok"))
-      .join(dl, Seq("doc_id"))
-      .crossJoin(broadcast(stats))
       .withColumn("sc", (idf * tfp).cast(DecimalType(28, 12)))
       .groupBy(col("doc_id")).agg(sum(col("sc")).as("score"))
     val w = Window.orderBy(col("score").desc, col("doc_id").asc)

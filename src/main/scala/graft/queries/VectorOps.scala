@@ -1988,12 +1988,12 @@ object VectorOps {
           "fusion_rrf: the +100000 augment offset aliases real vec_ids in this corpus")
       }
       val assign = sharedCoarseAssign(s, dir)
-      val qdoc = Tables.documents(s, dir).agg(min(col("doc_id")).as("qid"))
-      val qvec = withNorm(emb).crossJoin(broadcast(qdoc))
-        .filter(col("vec_id") === col("qid"))
+      // the anchor is the memoized driver Long bm25Ranked ranks for
+      val isAnchor = Curation.corpusStats(s, dir).anchor
+        .fold(lit(false))(a => col("vec_id") === lit(a))
+      val qvec = withNorm(emb).filter(isAnchor)
         .select(col("vec_id").as("qid"), col("embedding").as("qe"), col("nrm").as("qn"))
-      val qcell = assign.join(broadcast(qvec.select(col("qid"))),
-        col("vec_id") === col("qid")).select(col("cell"))
+      val qcell = assign.filter(isAnchor).select(col("cell"))
       val wsem = Window.orderBy(col("cos").desc, col("vec_id").asc)
       val sem = assign.join(broadcast(qcell), Seq("cell"))
         .select(col("vec_id"))

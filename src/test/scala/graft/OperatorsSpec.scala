@@ -1,8 +1,13 @@
 package graft
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.TimestampType
 
+import graft.functions.Keys
 import graft.operators.{Assertions, Merge, Multimodal, Scd2}
 
 class Scd2Spec extends SparkSpec {
@@ -70,6 +75,85 @@ class Scd2Spec extends SparkSpec {
     val s1 = Scd2.firstRun(b, Seq("user_id"), "updated_at")
     val s2 = Scd2.snapshot(s1, b, Seq("user_id"), "updated_at")
     assert(s2.count() === 1 && s2.filter($"dbt_valid_to".isNull).count() === 1)
+  }
+
+  /** The earlier spelling of `Scd2.snapshot`, kept as the reference: the
+    * superseded versions close through a left join of the current state
+    * against the change rows' (_key, updatedAt), which plans the incoming
+    * left join and its row_number window a second time.
+    */
+  private def snapshotByJoin(current: DataFrame, incoming: DataFrame,
+                             uniqueKey: Seq[String], updatedAt: String): DataFrame = {
+    val keyCol = Keys.preimage(uniqueKey.map(col)).as("_key")
+    val cur = current.withColumn("_key", keyCol)
+    val inc = incoming.withColumn("_key", keyCol)
+    val curState = cur.filter($"dbt_valid_to".isNull)
+      .select($"_key", $"dbt_updated_at".as("_cur_ts"))
+    val latestW = Window.partitionBy($"_key").orderBy(col(updatedAt).desc)
+    val incNew = inc.join(curState, Seq("_key"), "left")
+      .filter($"_cur_ts".isNull || col(updatedAt) > $"_cur_ts")
+      .drop("_cur_ts")
+      .withColumn("_rn", row_number().over(latestW))
+      .filter($"_rn" === 1)
+      .drop("_rn")
+    val changes = incNew
+      .withColumn("dbt_scd_id", Keys.md5Key64(Keys.preimage(uniqueKey.map(col))))
+      .withColumn("dbt_updated_at", col(updatedAt))
+      .withColumn("dbt_valid_from", col(updatedAt))
+      .withColumn("dbt_valid_to", lit(null).cast(TimestampType))
+    val closeAt = incNew.select($"_key", col(updatedAt).as("_close_ts"))
+    val curClosed = cur.join(closeAt, Seq("_key"), "left")
+      .withColumn("dbt_valid_to",
+        when($"dbt_valid_to".isNull && $"_close_ts".isNotNull
+          && $"_close_ts" > $"dbt_updated_at", $"_close_ts")
+          .otherwise($"dbt_valid_to"))
+      .drop("_close_ts")
+    curClosed.unionByName(changes.select(curClosed.columns.map(col): _*)).drop("_key")
+  }
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  test("one window over current and changes closes exactly as the join-back did") {
+    // day 1, then a day that closes user 1 and opens user 3: the current
+    // state below holds a closed history row as well as open ones
+    val s1 = Scd2.firstRun(batch((1L, "a@x.com", 100L), (2L, "b@x.com", 100L),
+      (4L, "d@x.com", 100L)), Seq("user_id"), "updated_at")
+    val cur = Scd2.snapshot(s1, batch((1L, "a2@x.com", 200L), (3L, "c@x.com", 150L)),
+      Seq("user_id"), "updated_at").cache()
+    assert(cur.filter($"dbt_valid_to".isNotNull).count() === 1)
+    val cases = Seq(
+      // a newer row closes the open version, not the closed history row
+      "newer" -> batch((1L, "a3@x.com", 300L)),
+      // stale and equal rows are no-ops
+      "stale or equal" -> batch((2L, "old@x.com", 50L), (3L, "c@x.com", 150L)),
+      // several new rows for one key open one version
+      "several for one key" -> batch((4L, "d1@x.com", 120L), (4L, "d2@x.com", 180L),
+        (4L, "d3@x.com", 160L), (5L, "e@x.com", 110L), (5L, "e2@x.com", 130L)),
+      "mixed" -> batch((1L, "a4@x.com", 250L), (2L, "b2@x.com", 100L),
+        (3L, "c2@x.com", 400L), (6L, "f@x.com", 10L)))
+    cases.foreach { case (name, inc) =>
+      val got = rows(Scd2.snapshot(cur, inc, Seq("user_id"), "updated_at"))
+      val want = rows(snapshotByJoin(cur, inc, Seq("user_id"), "updated_at"))
+      assert(got === want, name)
+    }
+  }
+
+  test("the day-2 snapshot plans its row_number window once") {
+    val s1 = Scd2.firstRun(batch((1L, "a@x.com", 100L), (2L, "b@x.com", 100L)),
+      Seq("user_id"), "updated_at")
+    val inc = batch((1L, "a2@x.com", 200L), (3L, "c@x.com", 150L))
+    def rowNumberWindows(df: DataFrame): Int = {
+      val p = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case other => other
+      }
+      p.collect {
+        case w: WindowExec if w.windowExpression.exists(_.toString.contains("row_number")) => w
+      }.size
+    }
+    assert(rowNumberWindows(Scd2.snapshot(s1, inc, Seq("user_id"), "updated_at")) === 1)
+    assert(rowNumberWindows(snapshotByJoin(s1, inc, Seq("user_id"), "updated_at")) === 2)
   }
 }
 

@@ -1046,6 +1046,38 @@ class QueryInvariantSpec extends SparkSpec {
       "bm25 scores must be non-increasing in rank order")
   }
 
+  test("bm25 index: dl is the sum of tf per doc; the memoized corpus figures equal the aggregates") {
+    val post = Curation.sharedPostings(spark, dir)
+    val perDoc = post.groupBy($"doc_id")
+      .agg(sum($"tf").as("sum_tf"), min($"dl").as("dl_lo"), max($"dl").as("dl_hi"))
+      .cache()
+    assert(perDoc.count() > 0)
+    assert(perDoc.filter($"sum_tf" =!= $"dl_lo" || $"sum_tf" =!= $"dl_hi").count() === 0L)
+    // the statistics bm25Ranked aggregated per query before they were memoized
+    val old = perDoc.agg(count(lit(1)).cast("double"), avg($"sum_tf".cast("double"))).head
+    val st = Curation.corpusStats(spark, dir)
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    assert(bits(st.nDocs.toDouble) === bits(old.getDouble(0)))
+    assert(bits(st.avgdl) === bits(old.getDouble(1)), s"${st.avgdl} vs ${old.getDouble(1)}")
+    assert(st.anchor ===
+      Some(graft.Tables.documents(spark, dir).agg(min($"doc_id")).head.getLong(0)))
+  }
+
+  test("bm25 on an empty documents table or one without postings: an empty top-k") {
+    val docs = graft.Tables.documents(spark, dir)
+    val empty = java.nio.file.Files.createTempDirectory("bm25empty").toString
+    docs.limit(0).write.parquet(s"$empty/documents.parquet")
+    val noText = java.nio.file.Files.createTempDirectory("bm25notext").toString
+    docs.withColumn("text", lit(null).cast("string")).write.parquet(s"$noText/documents.parquet")
+    for (d <- Seq(empty, noText)) {
+      val out = graft.SparkEntry.queries("text_bm25_topk")(spark, d)
+      assert(out.schema === q("text_bm25_topk").schema, d)
+      assert(out.collect().isEmpty, d)
+    }
+    assert(Curation.corpusStats(spark, empty).anchor === None)
+    assert(Curation.corpusStats(spark, noText).nDocs === 0L)
+  }
+
   test("rrf fusion: scores recompute from the arm ranks, both arms contribute, order holds") {
     val rows = q("fusion_rrf").collect()
     assert(rows.length === 10)
