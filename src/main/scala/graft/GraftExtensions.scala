@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.expr.{ArgMax1, ArgTop2, ArgTopN, BloomMightContain, CmsEstimate, FarmFingerprint, FloatVecDot, HalfVecDot, PackHalfVec}
+import graft.expr.{ArgTop2, ArgTopN, BloomMightContain, CmsEstimate, FarmFingerprint, FloatVecDot, HalfVecDot, PackHalfVec}
 
 /** Cluster-deployment registration of the engine's native expressions:
   * `--conf spark.sql.extensions=graft.GraftExtensions` makes
@@ -50,9 +50,6 @@ object GraftExtensions {
     (FunctionIdentifier("vec_arg_top2"),
       new ExpressionInfo(classOf[ArgTop2].getName, "vec_arg_top2"),
       arity("vec_arg_top2", 2)(exprs => ArgTop2(exprs.head, exprs(1)))),
-    (FunctionIdentifier("vec_arg_max1"),
-      new ExpressionInfo(classOf[ArgMax1].getName, "vec_arg_max1"),
-      arity("vec_arg_max1", 2)(exprs => ArgMax1(exprs.head, exprs(1)))),
     (FunctionIdentifier("vec_arg_topn"),
       new ExpressionInfo(classOf[ArgTopN].getName, "vec_arg_topn"),
       arity("vec_arg_topn", 3)(ArgTopN.fromArgs)),

@@ -33,13 +33,18 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, 
   * arrival or partial-merge order — the oracle's row_number twin is
   * replayed exactly.
   *
-  * FINITE-INPUT PRECONDITION: a NaN ord loses every GreaterThan here
-  * (ranks last) while the row_number twins sort NaN FIRST under ORDER BY
-  * ord DESC — the two spellings disagree on NaN input. Unreachable from
-  * the cosine chains (Spark's Divide nulls on zero norms, and null ords
-  * are skipped), so this declarative spelling documents the precondition
-  * rather than paying an IsNaN branch per candidate row in its hottest
-  * path; the imperative [[ArgTopN]] skips NaN like null in update().
+  * Ordering: GreaterThan and EqualTo on doubles follow Spark's SQL
+  * ordering (NaN above every number and equal to itself, −0.0 = 0.0), so
+  * a NaN ord ranks FIRST, as it does in the row_number twins under ORDER
+  * BY ord DESC (Spark and DuckDB alike); [[ArgTopN]] orders the same way.
+  *
+  * Why both this and [[ArgTopN]]: HashAggregateExec whole-stage-codegens
+  * a DeclarativeAggregate but not an ImperativeAggregate (on Spark 4.1.2
+  * `max` plans as `*(1) HashAggregate`, `approx_count_distinct` with no
+  * `*(n)`). The two-level picks run this one fused into the broadcast
+  * join that produces their candidates; ArgTopN at width 2 would split
+  * that stage. ArgTopN serves the derived-width beams, whose declarative
+  * spelling outgrows the 64 KB method limit.
   */
 case class ArgTop2(ord: Expression, id: Expression) extends DeclarativeAggregate {
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.ImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Argmax-top-N aggregate: per group, the `cap` best (ord, id) rows under
@@ -43,10 +43,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   * one slot down); merge inserts the ≤cap entries of the input buffer
   * the same way.
   *
-  * Determinism: ids are unique per group (each candidate row carries a
-  * distinct id), so (ord DESC, id ASC) is a strict total order and the
-  * top-N is unique regardless of row arrival or partial-merge order —
-  * the oracle's row_number twin replays it exactly.
+  * Ordering: Spark's double ordering (`SQLOrderingUtil.compareDoubles`:
+  * NaN above every number, −0.0 = 0.0), the order of the row_number
+  * twins in Spark and DuckDB and of [[ArgTop2]]'s GreaterThan. Ids are
+  * unique per group (each candidate row carries a distinct id), so
+  * (ord DESC, id ASC) is a strict total order and the top-N is unique
+  * regardless of row arrival or partial-merge order. Null ords are
+  * skipped, as the twins' callers filter them.
   */
 case class ArgTopN(ord: Expression, id: Expression, cap: Int,
     mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
@@ -102,8 +105,8 @@ case class ArgTopN(ord: Expression, id: Expression, cap: Int,
     */
   private def beats(buffer: InternalRow, base: Int, r: Int, c: Double, i: Long): Boolean = {
     if (buffer.isNullAt(base + 2 * r)) return true
-    val cr = buffer.getDouble(base + 2 * r)
-    c > cr || (c == cr && i < buffer.getLong(base + 2 * r + 1))
+    val o = SQLOrderingUtil.compareDoubles(c, buffer.getDouble(base + 2 * r))
+    o > 0 || (o == 0 && i < buffer.getLong(base + 2 * r + 1))
   }
 
   /** In-place sorted insert of (c, i) into the buffer's rank slots. */
@@ -132,18 +135,8 @@ case class ArgTopN(ord: Expression, id: Expression, cap: Int,
   override def update(buffer: InternalRow, input: InternalRow): Unit = {
     val c = ord.eval(input)
     if (c != null) {
-      val cd = c.asInstanceOf[Double]
-      // skip NaN like null (round-15 ADVICE): beats() would rank a NaN
-      // LAST (every comparison false) while the row_number oracle twins
-      // sort NaN FIRST under ORDER BY ord DESC — dropping it at the door
-      // keeps the aggregate and the window/DuckDB spellings agreeing
-      // should a NaN score ever become reachable (today the cosine
-      // chains null out on zero norms before any NaN can form). NaN can
-      // only enter a buffer through update, so merge needs no guard.
-      if (cd == cd) {
-        val i = id.eval(input)
-        if (i != null) insert(buffer, cd, i.asInstanceOf[Long])
-      }
+      val i = id.eval(input)
+      if (i != null) insert(buffer, c.asInstanceOf[Double], i.asInstanceOf[Long])
     }
   }
 

@@ -23,9 +23,6 @@ object Native {
   def vecArgTop2(ord: Column, id: Column): Column =
     aggregate(ArgTop2(expression(ord), expression(id)))
 
-  def vecArgMax1(ord: Column, id: Column): Column =
-    aggregate(ArgMax1(expression(ord), expression(id)))
-
   /** `cap` must be an integer literal in [2, 64] (the buffer width is
     * plan-static); anything else throws here, as SQL text fails analysis. */
   def vecArgTopN(ord: Column, id: Column, cap: Column): Column =

@@ -527,7 +527,7 @@ object Analytics {
 
   /** Isolated child session whose shuffle-partition count derives from the
     * name-universe size — the [[StreamGate.streamSession]] /
-    * `withBuildParallelism` discipline applied to the ER chain's
+    * [[Ivf.buildWidth]] discipline applied to the ER chain's
     * corpus-scale exchanges. The keyed explode ships 3 rows per name
     * ([[erKeyed]]), so the width is [[Widths.widen]] over nUniv · 3 ·
     * [[Widths.ER_KEYED_ROW_BYTES]] bytes at one 64 MB advisory partition

@@ -6,9 +6,12 @@ import org.apache.spark.storage.StorageLevel
 /** Keyed per-(session, corpus) cache for derived tables that production
   * pipelines materialize ONCE and serve to every consumer: the shingle
   * inverted index, the LSH-verified near-dup pair set, LSH signature
-  * tables, the IVF codebooks and cell assignments. Rebuilding any of these per
-  * query is the thing no 100 TB deployment would do — an index is built
-  * once, then queried.
+  * tables, the IVF codebooks and cell assignments (keyed `ivfcb:`,
+  * `ivfimicb:`, and per (corpus, family) `ivfassign:`, `ivfcoarse:`,
+  * `ivfimi:`, their near-twin `…nt:` twins and `ivfplain:`, all built by
+  * [[Ivf]], the assignments through [[Ivf.assignment]]). Rebuilding any of
+  * these per query is the thing no 100 TB deployment would do — an index
+  * is built once, then queried.
   *
   * Unlike [[ScratchCache]] (per-query scratch, drained after each query's
   * terminal action), entries here deliberately survive a whole sweep:

@@ -545,7 +545,7 @@ object Curation {
     // the rn ≤ Q predicate pushes into WindowGroupLimit map-side.
     "curation_cluster_sample" -> ((s, dir) => {
       val Q = 8
-      val assign = VectorOps.corpusAssign(s, dir)
+      val assign = Ivf.assignment(s, dir, Ivf.Plain, Ivf.TwoLevel)
         .select(col("vec_id").as("doc_id"), col("cell"))
       val w = Window.partitionBy(col("cell")).orderBy(col("hs"), col("doc_id"))
       Tables.documents(s, dir).select(col("doc_id"), col("source"))

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.expr.Native
+import graft.queries.Ivf.{Augmented, Imi, NearTwin, TwoLevel, assignment, norm, withNorm}
 
 /** Embedding similarity operators over `embeddings` (Array[Float], 64-d).
   *
@@ -123,7 +124,7 @@ object VectorOps {
     */
   private def sharedPqCodes(s: SparkSession, dir: String): DataFrame =
     CorpusCache.getOrBuild(s, s"pqcodes:$dir") {
-      val aug = augmented(s, dir)
+      val aug = Augmented.frame(s, dir)
       pqAssign(pqSubvectors(aug), pqCodebook(aug))
         .select(col("vec_id"), col("m"), col("code"))
     }
@@ -201,33 +202,6 @@ object VectorOps {
     */
   private def dotHalf(a: Column, b: Column): Column = Native.vecDotHalf(a, b)
 
-  /** Top-N (ord DESC, id ASC) rows per group as a null-padded ranked array
-    * of struct(cs, cid) — the sort-free generalized beam (graft.expr
-    * .ArgTopN). `cap` is the plan-static buffer width: callers pass the
-    * corpus-derived width ([[staticProbeWidth]]) so a gate corpus plans
-    * 2-slot buffers while the billion-vector regime gets [[PROBE_CAP]].
-    */
-  private def argTopN(ord: Column, id: Column, cap: Int): Column =
-    Native.vecArgTopN(ord, id, lit(cap))
-
-  /** Top-2 centroid ids per group under (ord DESC, id ASC) — the
-    * sort-free argmax (graft.expr.ArgTop2); returns struct(cell, cell2).
-    */
-  private def argTop2(ord: Column, id: Column): Column =
-    Native.vecArgTop2(ord, id)
-
-  /** Argmax per group under (ord DESC, id ASC) CARRYING its score — the
-    * sort-free score-keeping argmax (graft.expr.ArgMax1); returns
-    * struct(cs, cid).
-    */
-  private def argMax1(ord: Column, id: Column): Column =
-    Native.vecArgMax1(ord, id)
-
-  private def norm(v: Column): Column = sqrt(dot(v, v))
-
-  private def withNorm(df: DataFrame): DataFrame =
-    df.withColumn("nrm", norm(col("embedding")))
-
   /** Anchored exact-cosine threshold pairs — the scale-safe ground-truth
     * kernel (see [[AnchorSample]]): every ANCHOR vector is compared against
     * the FULL corpus (O(s·n), s ≈ 128 at any scale, never O(n²)), and the
@@ -264,26 +238,26 @@ object VectorOps {
     */
   private[queries] def sharedAnnTruth(s: SparkSession, dir: String): DataFrame =
     CorpusCache.getOrBuild(s, s"anntruth:$dir")(
-      anchoredCosinePairs(augmented(s, dir), COS_T))
+      anchoredCosinePairs(Augmented.frame(s, dir), COS_T))
 
   /** Anchored governance truth over the NEAR-TWIN corpus, cached like
     * [[sharedAnnTruth]].
     */
   private[queries] def sharedNtTruth(s: SparkSession, dir: String): DataFrame =
     CorpusCache.getOrBuild(s, s"nttruth:$dir")(
-      anchoredCosinePairs(ntAugmented(s, dir), COS_T))
+      anchoredCosinePairs(NearTwin.frame(s, dir), COS_T))
 
   /** The governance anchor sets (vec_id rows, ~[[AnchorSample.TargetAnchors]]
     * at any scale), cached with their truth tables.
     */
   private[queries] def sharedAnnAnchors(s: SparkSession, dir: String): DataFrame =
     CorpusCache.getOrBuild(s, s"annanchors:$dir")(
-      AnchorSample.withAnchors(augmented(s, dir).select(col("vec_id")), col("vec_id"))
+      AnchorSample.withAnchors(Augmented.frame(s, dir).select(col("vec_id")), col("vec_id"))
         .filter(col("is_anchor")).select(col("vec_id")))
 
   private[queries] def sharedNtAnchors(s: SparkSession, dir: String): DataFrame =
     CorpusCache.getOrBuild(s, s"ntanchors:$dir")(
-      AnchorSample.withAnchors(ntAugmented(s, dir).select(col("vec_id")), col("vec_id"))
+      AnchorSample.withAnchors(NearTwin.frame(s, dir).select(col("vec_id")), col("vec_id"))
         .filter(col("is_anchor")).select(col("vec_id")))
 
   /** Anchored banded exact-cosine truth over the near-twin corpus —
@@ -343,7 +317,7 @@ object VectorOps {
     // real positives; looser thresholds need L multi-probe tables (same
     // bucket-join shape, L× signatures).
     "sim_ann_lsh" -> ((s, dir) => {
-      val emb = augmented(s, dir)
+      val emb = Augmented.frame(s, dir)
       val sigs = sharedLshSigs(s, dir)
       val e = withNorm(emb).join(sigs, Seq("vec_id"))
       val a = e.select(col("bucket"), col("vec_id").as("i"), col("embedding").as("ea"), col("nrm").as("na"))
@@ -395,7 +369,7 @@ object VectorOps {
     // against EXACT signatures, so the join stays an equi-join on the
     // bucket string; exact-cosine verification unchanged.
     "sim_ann_lsh_multiprobe" -> ((s, dir) => {
-      val emb = augmented(s, dir)
+      val emb = Augmented.frame(s, dir)
       val cand = multiprobeCandidates(sharedLshSigs(s, dir))
       val n = withNorm(emb)
       cand
@@ -516,7 +490,7 @@ object VectorOps {
           .when(col("cos") >= NT_BAND_LO, "b_neartwin")
           .otherwise("c_tail").as("band"))
     val anchors = if (nt) sharedNtAnchors(s, dir) else sharedAnnAnchors(s, dir)
-    val assign = if (nt) sharedImiAssignNt(s, dir) else sharedImiAssign(s, dir)
+    val assign = assignment(s, dir, if (nt) NearTwin else Augmented, Imi)
     val nVec = assign.count()
     taus.flatMap { tau =>
       val cand = probeAnchorCandidatesAt(assign, anchors, tau)
@@ -558,133 +532,6 @@ object VectorOps {
       when(dot(col("embedding"), typedlit(w.map(_.toFloat))) > 0, lit("1"))
         .otherwise(lit("0"))): _*))
 
-  /** IVF scale parameters (round-5 advice: a FIXED k means cell size grows
-    * O(n/k) and the within-cell pair join re-quadratizes as the corpus
-    * grows). k now derives from the corpus: k = [[cellCount]](n), worked
-    * out on the driver from the one memoized base count [[embCount]] and
-    * planned as a literal, so expected cell membership stays ~TARGET_CELL
-    * at any scale (10⁹ vectors → ~10⁶ cells). On the test fixture the
-    * derived k is exactly MIN_CENTROIDS, so the gates pin the same
-    * partitioning.
-    */
-  private val MIN_CENTROIDS = 16
-  private val TARGET_CELL = 1024.0d
-
-  /** The cell-count law k = max(MIN_CENTROIDS, ⌈n/TARGET_CELL⌉) — its only
-    * Scala spelling (the DuckDB oracle SQL spells it over its own count).
-    */
-  private[queries] def cellCount(n: Long): Long =
-    math.max(MIN_CENTROIDS.toLong, (n + TARGET_CELL.toLong - 1L) / TARGET_CELL.toLong)
-
-  /** Memoized base-corpus row count — ONE count job per (session, corpus).
-    * Every IVF size derives from it: [[augmented]] is exactly 2× the base
-    * ([[augCount]]) and [[ntAugmented]] exactly 4×, both being unions of
-    * whole copies. Column-pruned to a row-count scan.
-    */
-  private[queries] def embCount(s: SparkSession, dir: String): Long =
-    Preconditions.longOnce(s, s"rowcount:emb:$dir")(Tables.embeddings(s, dir).count())
-
-  /** Integer-exact ⌈k^(1/r)⌉: libm `pow` is not correctly rounded (unlike
-    * sqrt, which IEEE 754 requires exact), so the rounded estimate is
-    * snapped with exact integer r-th-power comparisons — the true ceiling
-    * whenever the estimate is within ±1 (any libm is). The DuckDB twins
-    * spell the same snap in SQL.
-    */
-  private[queries] def ceilRoot(k: Long, r: Int): Long = {
-    def pow(c: Long): Long = Iterator.fill(r)(c).product
-    val c = math.round(math.pow(k.toDouble, 1.0 / r))
-    if (pow(c - 1) >= k) c - 1 else if (pow(c) >= k) c else c + 1
-  }
-
-  /** Hash-ranked seed codebook (round 9): EXACTLY `k` centroid rows —
-    * the `k` smallest (md5-hash, vec_id) pairs of a 4×-oversampled
-    * hash-threshold slice of the base corpus. Replaces `vec_id < k`,
-    * which silently STARVES the codebook on any corpus whose ids are not
-    * dense from 0: the n = 10⁷ probe's shifted-id fixture left only 2000
-    * of the intended 19532 seeds live, cells grew 10×, and the
-    * within-cell pair join exploded to 7.1·10¹⁰ candidates (1319 s vs the
-    * 69 s the assignment itself costs). The fixture made it visible, but
-    * production ids are NEVER dense — codebook selection must be
-    * id-distribution-free, like every other derived constant in this
-    * repo (AnchorSample's modulus, the sampling gates' hash buckets).
-    * Scale shape: the hash threshold is a map-side filter; the exact-k
-    * rank window sorts only the ~4k-row oversample (codebook-training
-    * scale, never the corpus). The 4× oversample puts the undersample
-    * probability below e^{-k/3} (Chernoff) — deterministic per corpus,
-    * not flaky. The base corpus is always the embeddings table; k and the
-    * base count [[embCount]] arrive as driver Longs, so the threshold and the
-    * rank cut are plan literals (the threshold keeps the oracle's
-    * double-operation order, so both engines compute the same bound).
-    */
-  private def hashSeeds(s: SparkSession, dir: String, k: Long, tag: String): DataFrame = {
-    val w = Window.orderBy(col("hs").asc, col("vec_id").asc)
-    Tables.embeddings(s, dir)
-      .withColumn("hs",
-        graft.functions.TextFns.md5Hash60(
-          concat(lit(tag + ":"), col("vec_id").cast(StringType))) % lit(1000000L))
-      .filter(col("hs") < lit(math.ceil(4000000.0d * k / embCount(s, dir).toDouble).toLong))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= lit(k))
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-      .withColumn("nc", norm(col("ce")))
-  }
-
-  /** Augmented corpus with planted duplicate vectors (vec_id + 100000). */
-  private[queries] def augmented(s: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddings(s, dir)
-    base.select(col("vec_id"), col("embedding"))
-      .unionByName(base.select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
-  }
-
-  /** Deterministically PERTURBED copy of `base`: component d of vector v
-    * moves by ±delta, sign = md5-parity of "tag:v:d" — the same portable
-    * hash derivation as the LSH planes/JL signs, so the DuckDB twin
-    * regenerates the identical float corpus (double add, one REAL
-    * rounding; both engines parse the delta literal to the same double
-    * and take the same IEEE path). On a unit-norm corpus the perturbation
-    * vector has norm 8·delta and a random direction, so
-    * cos(v, twin) ≈ 1/√(1+64·delta²) with O(delta²) spread — the twin
-    * lands in a DESIGNED cosine band without the band membership ever
-    * being assumed: truth always banded by the exactly-computed cosine.
-    */
-  private def perturbedTwins(base: DataFrame, offset: Long, tag: String,
-      delta: Double): DataFrame =
-    // shift FIRST, in its own projection, so the sign key unambiguously
-    // reads the twin's own (shifted) id — a single select would hit
-    // Spark's lateral-column-alias resolution and key half the corpus on
-    // the wrong id (found by the round-13 bitwise corpus diff)
-    base.select((col("vec_id") + offset).as("vec_id"), col("embedding"))
-      .select(col("vec_id"),
-        transform(col("embedding"), (x, d) =>
-          (x.cast(DoubleType) + lit(delta) *
-            (graft.functions.TextFns.md5Hash60(
-              concat_ws(":", lit(tag), col("vec_id"), d)) % 2 * 2 - 1)
-          ).cast(org.apache.spark.sql.types.FloatType)).as("embedding"))
-
-  /** Near-twin-augmented corpus — the round-13 recall-governance fixture.
-    * [[augmented]]'s byte-identical copies co-assign under every index BY
-    * CONSTRUCTION, so a dup-band recall of 1.0 over them cannot detect
-    * boundary loss — the failure mode the margin-gated nprobe=2 apparatus
-    * exists to fix (round-12 verdict). This corpus adds two PERTURBED
-    * cohorts whose twins genuinely can straddle cell boundaries:
-    *   - +200000: per-dim ±[[NT_DELTA_NEAR]] → cos ≈ 0.978–0.986, the
-    *     near-duplicate band [0.95, 0.999) of perturbed re-uploads /
-    *     paraphrase-grade pairs (BELOW the ANN_T emission threshold —
-    *     these govern candidate GENERATION, not output);
-    *   - +300000: per-dim ±[[NT_DELTA_DUP]] → cos ≈ 0.9996, INSIDE the
-    *     ≥ANN_T emission band but not byte-identical — the first
-    *     non-tautological occupant of the dup-band governance floor.
-    * Offset discipline = [[augmented]]'s: distinct +k·100000 shifts stay
-    * collision-free on the gate corpora and on synth_scale fixtures
-    * (within-copy ids sit far below the 10⁷ copy stride).
-    */
-  private[queries] def ntAugmented(s: SparkSession, dir: String): DataFrame = {
-    val base = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    augmented(s, dir)
-      .unionByName(perturbedTwins(base, 200000L, "nta", NT_DELTA_NEAR))
-      .unionByName(perturbedTwins(base, 300000L, "ntb", NT_DELTA_DUP))
-  }
-
   /** LSH signature table over the augmented corpus, built ONCE per
     * (session, corpus) and served to every ANN query — the production
     * model: an index is maintained, not rebuilt per search
@@ -692,119 +539,7 @@ object VectorOps {
     */
   private[queries] def sharedLshSigs(s: SparkSession, dir: String): DataFrame =
     CorpusCache.getOrBuild(s, s"lshsigs:$dir")(
-      lshSigs(augmented(s, dir)).select(col("vec_id"), col("bucket")))
-
-  /** FLAT IVF cell assignment over the augmented corpus — seeds, Lloyd
-    * step, final assignment. Round 9: this chain serves
-    * ONLY the tagged baseline `sim_ann_ivf` (bench_full.json tags it as
-    * the flat O(n·k) twin). Every production consumer — probe, rescore,
-    * IVF-PQ, semantic dedup, recall governance — runs on
-    * [[sharedCoarseAssign]], because with the derived k ∝ n the flat
-    * nearest-centroid pass is O(n²·d/1024): the round-8 n=10⁶ probe
-    * measured it as the family's scale cliff (57.3 s at n=2·10⁵,
-    * unrunnable at 10⁶) while the two-level path ran 3.4× wall on 5×
-    * data. Kept (and still oracle-gated) as the Lloyd-refined quality
-    * baseline the coarse approximation is measured against.
-    */
-  private[queries] def sharedIvfAssign(s: SparkSession, dir: String): DataFrame =
-    withBuildParallelism(s, dir, 2L) {
-      CorpusCache.getOrBuild(s, s"ivfassign:$dir")(
-        ivfAssignments(s, dir, augmented(s, dir), augCount(s, dir)))
-    }
-
-  /** Two-level (coarse-quantized) IVF cell assignment, built ONCE per
-    * (session, corpus) — the fix for the flat chain's scale cliff: with
-    * k = ⌈n/TARGET_CELL⌉ fine centroids, a flat nearest-centroid pass
-    * ([[assignCells]]) costs O(n·k·d) = O(n²·d/1024) — quadratic in the
-    * corpus, measured as the dominant term at n = 10⁶ (SCALE.md round-8
-    * probe). Here each vector first picks its nearest of ⌈√k⌉ COARSE
-    * centroids, then its nearest FINE centroid within that coarse group
-    * only: O(n·√k·d) total — the coarse-quantizer discipline of
-    * billion-scale IVF indexes (FAISS's IVF coarse quantizer / IMI).
-    * Round 9: this is THE shared production assignment — `sim_ann_ivf_coarse`,
-    * `sim_ann_ivf_probe`, `sim_ann_quantized_rescore`, `sim_ann_ivf_pq`,
-    * `dedup_semantic`, and `ann_recall` all build on it; the flat chain
-    * survives only behind the tagged baseline `sim_ann_ivf`.
-    */
-  private[queries] def sharedCoarseAssign(s: SparkSession, dir: String): DataFrame =
-    withBuildParallelism(s, dir, 2L) {
-      CorpusCache.getOrBuild(s, s"ivfcoarse:$dir")(
-        coarseAssignments(s, dir, augmented(s, dir), augCount(s, dir)))
-    }
-
-  /** Three-level (IMI-shaped) assignment, cached like the two chains
-    * above — the next decade's shape: O(n·k^(1/3)·d) assignment for when
-    * even the ⌈√k⌉ coarse table outgrows broadcast residency (k ≈ 10⁵⁺,
-    * n ≈ 10⁸⁺). Gated by `sim_ann_ivf_imi`; governed by `ann_recall`'s
-    * `ivf_imi` row. See [[imiAssignments]].
-    */
-  private[graft] def sharedImiAssign(s: SparkSession, dir: String): DataFrame =
-    withBuildParallelism(s, dir, 2L) {
-      CorpusCache.getOrBuild(s, s"ivfimi:$dir")(
-        imiAssignments(s, dir, augmented(s, dir), augCount(s, dir)))
-    }
-
-  /** Two-level assignment over the NEAR-TWIN corpus ([[ntAugmented]]) —
-    * the index under `ann_recall_neartwin`'s coarse row. Same codebook
-    * machinery (k from this corpus's count, seeds hash-ranked from the
-    * base corpus), cached once per (session, corpus) like its augmented
-    * sibling.
-    */
-  private[queries] def sharedCoarseAssignNt(s: SparkSession, dir: String): DataFrame =
-    withBuildParallelism(s, dir, 4L) {
-      CorpusCache.getOrBuild(s, s"ivfcoarsent:$dir")(
-        coarseAssignments(s, dir, ntAugmented(s, dir), 4L * embCount(s, dir)))
-    }
-
-  /** Three-level (IMI) assignment over the NEAR-TWIN corpus — the index
-    * whose margin-gated nprobe=2 search `ann_recall_neartwin`'s imi row
-    * governs: the first fixture on which the τ apparatus is exercised by
-    * pairs that are NOT byte-identical (and so can straddle regions).
-    */
-  private[graft] def sharedImiAssignNt(s: SparkSession, dir: String): DataFrame =
-    withBuildParallelism(s, dir, 4L) {
-      CorpusCache.getOrBuild(s, s"ivfimint:$dir")(
-        imiAssignments(s, dir, ntAugmented(s, dir), 4L * embCount(s, dir)))
-    }
-
-  /** Plain-corpus (non-augmented) two-level assignment, cached per
-    * (session, corpus) — the cluster structure consumers outside the ANN
-    * family ride (cluster-balanced sampling): every corpus vector
-    * descends the corpus-trained codebook, no planted-duplicate
-    * augmentation. Same O(n·√k·d) algebra as [[sharedCoarseAssign]].
-    */
-  private[queries] def corpusAssign(s: SparkSession, dir: String): DataFrame =
-    CorpusCache.getOrBuild(s, s"ivfplain:$dir")(
-      coarseAssignments(s, dir, Tables.embeddings(s, dir), embCount(s, dir)))
-
-  /** Augmented-corpus row count: exactly twice [[embCount]], since
-    * [[augmented]] is the base corpus plus one shifted copy — so the IMI
-    * beam sizing, the pair-scan width gates and the codebook sizes all
-    * read the one memoized base count.
-    */
-  private[queries] def augCount(s: SparkSession, dir: String): Long =
-    2L * embCount(s, dir)
-
-  /** Scale-adaptive INDEX-BUILD parallelism (round 17, SCALE.md "the 10⁷
-    * wall ATTRIBUTED"): at the session's partition count the two 10⁷ build
-    * stages re-spilled 142 GB of memory bytes (16× the 11.75 GB exchanged),
-    * the largest share of the 1245 s probe wall. The build runs under a
-    * raised AQE initial partition count, [[buildWidth]].
-    */
-  private def withBuildParallelism[T](s: SparkSession, dir: String, copies: Long)(f: => T): T = {
-    // memoized per (session, dir): hits of an already-built entry must
-    // not pay a filesystem stat per consumer access
-    val bytes = Preconditions.longOnce(s, s"fsbytes:emb:$dir")(
-      Widths.onDiskBytes(s, s"$dir/embeddings.parquet"))
-    Widths.withInitialParts(s, buildWidth(s, bytes, copies))(f)
-  }
-
-  /** Build width over `copies` whole copies of an `embBytes`-byte
-    * embeddings table ([[augmented]] 2, [[ntAugmented]] 4); ×8 is the
-    * measured parquet→exchange expansion (1.7 GB → ~12 GB at 10⁷).
-    */
-  private[queries] def buildWidth(s: SparkSession, embBytes: Long, copies: Long): Option[Int] =
-    Widths.widen(s, embBytes * copies * 8L, Widths.ADVISORY_BYTES)
+      lshSigs(Augmented.frame(s, dir)).select(col("vec_id"), col("bucket")))
 
   /** Per-vector pair-scoring sketch over the augmented corpus, built ONCE
     * per (session, corpus) like the assignment tables it joins: the first
@@ -823,7 +558,7 @@ object VectorOps {
     */
   private[queries] def sharedPairSketch(s: SparkSession, dir: String): DataFrame =
     CorpusCache.getOrBuild(s, s"pairsketch:$dir") {
-      val e = withNorm(augmented(s, dir))
+      val e = withNorm(Augmented.frame(s, dir))
       e.select(col("vec_id"),
         Native.vecPackHalf(transform(slice(col("embedding"), 1, HEAD_D),
           x => (x.cast(DoubleType) / col("nrm")).cast(FloatType))).as("hq"),
@@ -866,7 +601,7 @@ object VectorOps {
     // codegen vec_dot_half — see [[sharedPairSketch]] / [[SKETCH_EPS]].
     // round 17: the sketch⋈assignment join widens like the probe path's
     // (see [[probeVerifiedPairs]])
-    val nSk = Widths.widen(s, augCount(s, dir), Widths.EMB_PART_ROWS)
+    val nSk = Widths.widen(s, Augmented.rows(s, dir), Widths.EMB_PART_ROWS)
     def wsk(df: DataFrame): DataFrame =
       nSk.map(p => df.repartition(p, col("vec_id"))).getOrElse(df)
     val sk = wsk(sharedPairSketch(s, dir))
@@ -879,7 +614,7 @@ object VectorOps {
     // self-join carries n sketch rows; under the session's partition
     // count the per-task sort state outruns its execution share at probe
     // tiers (the StageProbe-measured spill pathology)
-    val (l, r) = Widths.widen(s, augCount(s, dir), Widths.PAIR_PART_ROWS) match {
+    val (l, r) = Widths.widen(s, Augmented.rows(s, dir), Widths.PAIR_PART_ROWS) match {
       case Some(np) => (l0.repartition(np, col("cell")),
         r0.repartition(np, col("cell")))
       case None => (l0, r0)
@@ -935,7 +670,7 @@ object VectorOps {
     // derived width — its sort at the session count spilled ~19 GB in
     // the 10⁷ StageProbe run (assignment rows carry the probes array,
     // ~270 B raw)
-    val nAug = augCount(s, dir)
+    val nAug = Augmented.rows(s, dir)
     val nSk = Widths.widen(s, nAug, Widths.EMB_PART_ROWS)
     def wsk(df: DataFrame): DataFrame =
       nSk.map(p => df.repartition(p, col("vec_id"))).getOrElse(df)
@@ -948,7 +683,7 @@ object VectorOps {
     // are single fine cells in every chain (the coarse chain's probe is
     // the runner-up fine centroid with s2 = cos(u, c_pc); the IMI
     // chain's ranked regions are per-explored-cell fine WINNERS, each
-    // carrying cs = cos(u, c_pc) — see [[imiAssignments]]'s region
+    // carrying cs = cos(u, c_pc) — see [[Ivf.Imi]]'s region
     // emission), and a member v of cell pc scores sv = cos(v, c_pc)
     // against the SAME centroid. The prune anchor is therefore shared
     // and exact on both sides, so the symmetric angular test applies to
@@ -1011,7 +746,7 @@ object VectorOps {
     // spilled 37 GB; sized to ~PAIR_PART_ROWS rows the sort fits its
     // execution share. Both sides repartition to the same (pc, N), so the
     // join reuses these two exchanges — same Exchange count, wider.
-    val (widthP, _) = staticProbeWidth(nAug)
+    val (widthP, _) = Ivf.staticProbeWidth(nAug)
     val (probesW, homeW) = Widths.widen(s, nAug * widthP, Widths.PAIR_PART_ROWS) match {
       case Some(np) => (probes.repartition(np, col("pc")),
         home.repartition(np, col("pc")))
@@ -1040,13 +775,13 @@ object VectorOps {
     * cell scan and the nprobe=2 probe path.
     */
   private def rescoreExact(s: SparkSession, dir: String, cand: DataFrame): DataFrame = {
-    val n = withNorm(augmented(s, dir))
+    val n = withNorm(Augmented.frame(s, dir))
     // round 17 (derived exchange width — the same StageProbe-measured
     // spill pathology as the pair scans): the fetch joins move full
     // 64-float embedding rows (~300 B raw); at the session's partition
     // count the 10⁷ rescore stages re-spilled ~15 GB. Width derives from
     // the corpus count ([[Widths.EMB_PART_ROWS]] rows ≈ the 64 MB advisory)
-    val np = Widths.widen(s, augCount(s, dir), Widths.EMB_PART_ROWS)
+    val np = Widths.widen(s, Augmented.rows(s, dir), Widths.EMB_PART_ROWS)
     def w(df: DataFrame, k: String): DataFrame =
       np.map(p => df.repartition(p, col(k))).getOrElse(df)
     val withA = w(cand, "i")
@@ -1059,17 +794,6 @@ object VectorOps {
       .filter(col("cos") >= ANN_T)
       .select(col("i"), col("j"), col("cos"))
   }
-
-  /** DuckDB prelude shared by the plain-corpus assignment twins
-    * ([[streamIngestOracle]], the cluster-sample oracle): normed corpus
-    * universe `a` → [[coarseAssignCtes]] (terminal `assign`).
-    */
-  private[queries] lazy val plainAssignCtes: String =
-    s"""a AS (
-       |  SELECT vec_id, embedding,
-       |    sqrt(${dSql("embedding", "embedding")}) AS nrm
-       |  FROM embeddings),
-       |${coarseAssignCtes("a", "")}""".stripMargin
 
   /** Streaming index ingest (`stream_ann_ingest` — registered in
     * [[StreamGate]] with the other stream gates): "today's arrivals"
@@ -1096,7 +820,7 @@ object VectorOps {
     // the corpus-trained codebook (k from the CORPUS size — the index's k,
     // not the batch's), published as the one artifact the per-batch
     // assigner reads
-    coarseCodebook(s, dir, cellCount(embCount(s, dir)))
+    Ivf.coarseCodebook(s, dir, Ivf.cellCount(Ivf.Plain.rows(s, dir)))
       .write.mode("overwrite").parquet(cb)
     // backlog-derived shuffle partitions for the per-batch assignment work
     // (broadcast joins + argmax aggregates) — see [[StreamGate.streamSession]].
@@ -1109,7 +833,7 @@ object VectorOps {
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val ss = batch.sparkSession
-        assignWithCodebook(batch, ss.read.parquet(cb))
+        Ivf.assignWithCodebook(batch, ss.read.parquet(cb))
           .write.mode("append").parquet(out)
       }
       .option("checkpointLocation", ckpt)
@@ -1128,355 +852,6 @@ object VectorOps {
        |SELECT vec_id, cell, cell2 FROM assign
        |WHERE vec_id % 4 = 0""".stripMargin
 
-  /** Mechanism probes for the assignment-cost claim (PlanShapeSpec): the
-    * FLAT seed-codebook assignment (every vector vs every fine centroid —
-    * n·k candidate rows out of the broadcast join into the argmax window;
-    * the corpus shuffle itself stays O(n), pushed below the broadcast
-    * join) and the two-level chain over the same seeds (n·√k + n·E[k/√k]
-    * candidate rows). Both
-    * return the same (vec_id, cell, cell2) shape over the same augmented
-    * corpus, so the spec can compare executed broadcast-join output-row
-    * metrics on equal work — NOT shuffle records, which stay O(n) for both
-    * chains and carry no signal. (Cell choices may differ for boundary
-    * vectors — the
-    * standard coarse-quantizer approximation; what both schemes guarantee,
-    * and the invariant spec pins, is that identical vectors co-assign.)
-    */
-  private[queries] def flatAssignProbe(s: SparkSession, dir: String): DataFrame =
-    assignCells(augmented(s, dir),
-      hashSeeds(s, dir, cellCount(augCount(s, dir)), "ivfseed"))
-
-  private[queries] def coarseAssignProbe(s: SparkSession, dir: String): DataFrame =
-    coarseAssignments(s, dir, augmented(s, dir), augCount(s, dir))
-
-  private[queries] def imiAssignProbe(s: SparkSession, dir: String): DataFrame =
-    imiAssignments(s, dir, augmented(s, dir), augCount(s, dir))
-
-  /** The two-level assignment chain: `emb` descends the [[coarseCodebook]]
-    * for k = [[cellCount]](`nRows`) (seed centroids — at scale the codebook
-    * trains offline on a bounded sample, which is why this path gates
-    * ASSIGNMENT cost, while the flat `sim_ann_ivf` chain gates the Lloyd
-    * step). Vectors only ever compare against (a) the non-empty coarse
-    * groups (n·√k rows) and (b) the fine centroids of their own group
-    * (n·E[k/√k] rows). Both broadcast — the corpus never shuffles for
-    * assignment; at n = 10⁹, k = 10⁶ fine centroids × 64 floats ≈ 256 MB,
-    * the standard residency assumption of an IVF codebook on every node.
-    *
-    * Determinism: identical vectors take identical coarse and fine argmax
-    * decisions (cos desc, id asc tie-break), so planted duplicates can
-    * never be separated — the property the gate verifies.
-    */
-  private def coarseAssignments(s: SparkSession, dir: String, emb: DataFrame,
-      nRows: Long): DataFrame =
-    assignWithCodebook(emb, coarseCodebook(s, dir, cellCount(nRows)))
-
-  /** The two-level codebook for cell count k, shared by every chain that
-    * descends it (augmented, near-twin, plain, streaming ingest): k fine
-    * centroids from the flat chain's "ivfseed" universe in ⌈√k⌉ coarse
-    * groups (IEEE-exact sqrt) from an independent one.
-    */
-  private[queries] def coarseCodebook(s: SparkSession, dir: String, k: Long): DataFrame =
-    groupedCodebook(s, dir, "ivfseed", k, "ivfgrp", math.ceil(math.sqrt(k.toDouble)).toLong)
-
-  /** `k` hash-ranked centroids (cid, ce, nc), each carrying the nearest of
-    * `kg` group centroids (gid, ge, ng), built ONCE per (session, corpus,
-    * universe, k). A group that wins no centroid has no row. The pick is
-    * k×kg rows, never corpus-sized: the sort-free ArgTop2 argmax (cos DESC,
-    * gid ASC — the oracle's row_number twin), then k-row join-backs.
-    */
-  private def groupedCodebook(s: SparkSession, dir: String, tag: String, k: Long,
-      groupTag: String, kg: Long): DataFrame =
-    CorpusCache.getOrBuild(s, s"ivfcb:$dir:$tag:$k") {
-      val cent = hashSeeds(s, dir, k, tag)
-      val groups = hashSeeds(s, dir, kg, groupTag)
-        .select(col("cid").as("gid"), col("ce").as("ge"), col("nc").as("ng"))
-      cent.crossJoin(broadcast(groups))
-        .withColumn("cos_g", dot(col("ce"), col("ge")) / (col("nc") * col("ng")))
-        .groupBy(col("cid"))
-        .agg(argTop2(col("cos_g"), col("gid")).as("t2"))
-        .select(col("cid"), col("t2").getField("cell").as("gid"))
-        .join(cent, Seq("cid"))
-        .join(broadcast(groups), Seq("gid"))
-        .select(col("gid"), col("ge"), col("ng"), col("cid"), col("ce"), col("nc"))
-    }
-
-  /** The two-level descent of `emb` against a [[coarseCodebook]] —
-    * (vec_id, cell, cell2, mgn, s1, probes). Per-vector independent given
-    * the codebook, so the result is invariant to how `emb` is batched (the
-    * property the streaming ingest gate rides).
-    */
-  private[queries] def assignWithCodebook(emb: DataFrame, cb: DataFrame): DataFrame = {
-    // vectors choose among NON-EMPTY coarse groups only (an empty group
-    // would strand its vectors). distinct, not dropDuplicates("gid"),
-    // whose first() of an array falls back to SortAggregate; its -0.0 →
-    // 0.0 key normalization leaves every dot (a fold from +0.0) unchanged
-    val coarseNE = cb.select(col("gid"), col("ge"), col("ng")).distinct()
-    val fgrp = cb.select(col("gid"), col("cid"), col("ce"), col("nc"))
-    // vector → coarse group: the n·√k candidate relation collapses in the
-    // partial aggregate above the broadcast join (round 9 — the window
-    // spelling sorted these candidates: the 10⁷ probe's spill cliff); the
-    // group id rejoins the corpus by vec_id, an O(n) equi-join.
-    val vpick = withNorm(emb).crossJoin(broadcast(coarseNE))
-      .withColumn("cos_g", dot(col("embedding"), col("ge")) / (col("nrm") * col("ng")))
-      .groupBy(col("vec_id"))
-      .agg(argTop2(col("cos_g"), col("gid")).as("t2"))
-      .select(col("vec_id"), col("t2").getField("cell").as("gid"))
-    val vg = withNorm(emb).join(vpick, Seq("vec_id"))
-      .select(col("vec_id"), col("embedding"), col("nrm"), col("gid"))
-    // vector → nearest fine centroid WITHIN its coarse group: the equi-join
-    // on gid restricts candidates to E[k/√k] = √k per vector; the top-2
-    // pick again collapses map-side, and since vg is already partitioned
-    // by vec_id after its rejoin, the final aggregate needs no exchange
-    vg.join(broadcast(fgrp), Seq("gid"))
-      .withColumn("cos_c", dot(col("embedding"), col("ce")) / (col("nrm") * col("nc")))
-      .groupBy(col("vec_id"))
-      .agg(argTop2(col("cos_c"), col("cid")).as("t2"))
-      .select(col("vec_id"),
-        col("t2").getField("cell").as("cell"),
-        col("t2").getField("cell2").as("cell2"),
-        // assignment margin (round 11): how decisively the winner beat
-        // the runner-up — the nprobe=2 search probes the second cell
-        // only for boundary vectors (small margin); null when k = 1
-        (col("t2").getField("s1") - col("t2").getField("s2")).as("mgn"),
-        // cos to the winning centroid — here the cell IS one centroid, so
-        // this is the exact anchor score of the round-15 angular prune
-        col("t2").getField("s1").as("s1"))
-      .withColumn("probes", rankTwoProbes)
-  }
-
-  /** The two-level/flat chains' probe list: exactly the runner-up cell
-    * with its margin — these chains' region structure is one level deep,
-    * so their probe search keeps the round-11 nprobe=2 shape, expressed
-    * in the shared (pc, mgn)-array contract the probe consumers read
-    * (the IMI chain's list is the derived-width [[staticProbeWidth]] one).
-    * Empty when k = 1 leaves no runner-up.
-    */
-  private def rankTwoProbes: Column =
-    filter(array(struct(col("cell2").as("pc"), col("mgn").as("mgn"))),
-      t => t.getField("pc").isNotNull)
-
-  /** Ceiling of the derived probe width [[staticProbeWidth]] — the law's
-    * clamp, not a buffer width (round 15): the ArgTopN beams size their
-    * buffers to the corpus-derived width, so the ceiling costs nothing at
-    * tiers where the law stays under it.
-    * 32 covers the k^(1/4) law through k = 32⁴ = 1,048,576 cells — the
-    * ~10⁹-vector regime at TARGET_CELL the law exists for (the round-14
-    * cap of 16 saturated at k = 65,536, an order of magnitude under the
-    * design target). ArgTopN is IMPERATIVE — a fixed primitive buffer
-    * with Scala update/merge the JIT compiles once — so the lift has no
-    * generated-code size to manage (the round-14 declarative spelling
-    * breached the JVM 64 KB method limit at cap 16); the only bound is
-    * ArgTopN's require(cap <= 64).
-    */
-  private[queries] val PROBE_CAP = 32
-
-  /** Level-1 beam ceiling: b1 = ⌈√p⌉ ≤ ⌈√PROBE_CAP⌉ = 6 at the lifted
-    * ceiling; 8 keeps headroom through a future PROBE_CAP = 64.
-    */
-  private[queries] val L1_BEAM_CAP = 8
-
-  /** The derived probe width (round 14 — replacing the fixed two-region
-    * probe whose 10⁷ emission-band recall ceiling, 0.9217, sat under the
-    * 0.95 governance floor; SCALE.md round 13), from an exact corpus
-    * count n:
-    *   k  = max(MIN_CENTROIDS, ⌈n/TARGET_CELL⌉) — the cell count,
-    *   p  = min(PROBE_CAP, max(2, ⌈k^(1/4)⌉))  — the searched regions,
-    *   b1 = min(L1_BEAM_CAP, ⌈√p⌉)             — the level-1 beam.
-    * The k^(1/4) law is the FAISS discipline of growing nprobe with the
-    * cell count, pinned to the IMI chain's cost algebra: the descent
-    * explores b1·k^(1/3) level-2 candidates and p·k^(1/3) fine
-    * candidates per vector, so assignment stays O(n·k^(1/3+1/4)·d) ≪
-    * O(n·√k·d) (the two-level chain it undercuts), and the probe join's
-    * candidate volume grows as p·E[cell] with the τ margin gate pruning
-    * the clear-winner majority of extra regions. At k = 16 (every gate
-    * sf) the law lands exactly on p = 2, b1 = 2 — the round-13 probe
-    * shape. ⌈k^(1/4)⌉ is [[ceilRoot]]'s integer-snapped root; ⌈√p⌉ is
-    * IEEE-exact. The DuckDB twin of `sim_ann_ivf_imi` spells the same law
-    * in SQL over its own count.
-    *
-    * (p, b1) are the ArgTopN beam widths of [[imiAssignments]] — plan-
-    * static by nature, and exactly the number of slots each beam emits,
-    * so nothing is sliced at run time. The count is memoized once per
-    * session and corpus (the erQ/Bloom-capacity discipline). Sizing the
-    * beams to the tier's own p is what makes the PROBE_CAP = 32 ceiling
-    * free: a gate corpus plans 2-slot buffers, the 10⁷ tier 12, and only
-    * a ~10⁹-vector corpus pays the full 32. [[probeVerifiedPairs]] sizes
-    * its probe-side exchange from the same p.
-    */
-  private[queries] def staticProbeWidth(n: Long): (Int, Int) = {
-    val p = math.min(PROBE_CAP.toLong, math.max(2L, ceilRoot(cellCount(n), 4))).toInt
-    val b1 = math.min(L1_BEAM_CAP.toLong,
-      math.ceil(math.sqrt(p.toDouble)).toLong).toInt
-    (p, b1)
-  }
-
-  /** The three-level codebook for cell count k, built ONCE per (session,
-    * corpus, k): one row per "ivfseed" fine centroid (cid, ce, nc) carrying
-    * its level-2 centroid (g2, e2, n2) and that one's level-1 group
-    * (g1, e1, n1). The level-2 table is a [[groupedCodebook]] of its own
-    * (k1² centroids in k1 = ⌈k^(1/3)⌉ groups), cached because two
-    * consumers read it, and fine centroids descend it as vectors descend
-    * the two-level codebook: k·k1 + k·E[k1] rows, never k·k2 = k^(5/3).
-    */
-  private[queries] def imiCodebook(s: SparkSession, dir: String, k: Long): DataFrame =
-    CorpusCache.getOrBuild(s, s"ivfimicb:$dir:$k") {
-      val k1 = ceilRoot(k, 3)
-      val l2 = groupedCodebook(s, dir, "ivfl2", k1 * k1, "ivfl1", k1)
-      val fine = hashSeeds(s, dir, k, "ivfseed")
-      assignWithCodebook(fine.select(col("cid").as("vec_id"), col("ce").as("embedding")), l2)
-        .select(col("vec_id").as("cid"), col("cell").as("g2"))
-        .join(fine, Seq("cid"))
-        .join(broadcast(l2.select(col("gid").as("g1"), col("ge").as("e1"), col("ng").as("n1"),
-          col("cid").as("g2"), col("ce").as("e2"), col("nc").as("n2"))), Seq("g2"))
-        .select(col("g1"), col("e1"), col("n1"), col("g2"), col("e2"), col("n2"),
-          col("cid"), col("ce"), col("nc"))
-    }
-
-  /** The three-level (IMI-shaped) assignment chain: descend level-1
-    * (⌈k^(1/3)⌉ centroids) → level-2 (k^(2/3), restricted to the chosen
-    * level-1 group) → fine top-2 (restricted to the chosen level-2
-    * group): O(3·n·k^(1/3)·d) candidate rows against the two-level
-    * chain's O(2·n·√k·d). At the 10⁷ probe's k = 19532 that is 81 vs 280
-    * candidates per vector (3.5×); at n = 10⁹, k = 10⁶ it is 300 vs 2000
-    * (6.7×), and the broadcast tables a node must hold shrink from the
-    * full √k-row coarse table to k^(2/3) rows — the multi-index descent
-    * FAISS's IMI applies when even the coarse codebook outgrows
-    * residency. The price is one extra O(n) vec_id equi-join (each
-    * descent level rejoins the corpus to pick within its group): a
-    * linear shuffle traded against a √k/k^(1/3)-factor of broadcast-join
-    * compute, which wins whenever k outgrows ~10⁴.
-    *
-    * The codebook is [[imiCodebook]], built once per (corpus, k); the
-    * bottom-up non-empty guards (a level-2 centroid with no fine members,
-    * a level-1 centroid with no surviving level-2) are projections of it,
-    * so no vector can strand — [[assignWithCodebook]]'s discipline.
-    */
-  private def imiAssignments(s: SparkSession, dir: String, emb: DataFrame,
-      nRows: Long): DataFrame = {
-    // codebook size and ArgTopN beam widths all from the count of `emb`,
-    // which the caller derives from the one memoized [[embCount]]
-    val (capP, capB1) = staticProbeWidth(nRows)
-    val cb = imiCodebook(s, dir, cellCount(nRows))
-    val l1ne = cb.select(col("g1"), col("e1"), col("n1")).distinct()
-    val l2ne = cb.select(col("g2"), col("g1"), col("e2"), col("n2")).distinct()
-    val fgrp = cb.select(col("g2"), col("cid"), col("ce"), col("nc"))
-    // Vector descent (round 10 — multi-probe-shaped; round 14 — DERIVED
-    // width): level-1 keeps the top-b1 groups, level-2 ranks the union
-    // of those groups' centroids and keeps the top-p CELLS, and the fine
-    // step picks the best centroid within EACH cell; `cell` is the
-    // overall argmax and the remaining ranked cell winners are the
-    // probe REGIONS — never a same-menu runner-up (round 10 measured
-    // that probing one adds ZERO recall: truth pairs that separate,
-    // separate at levels 1–2, where the menus don't overlap at all).
-    // Round 14: the region count p derives from the cell count
-    // ([[staticProbeWidth]] — the fixed p = 2 left the 10⁷ emission-band
-    // recall ceiling at 0.9217 against the 0.95 governance floor), so
-    // the beams are the sort-free ArgTopN collapse at widths (b1, p),
-    // each emitting exactly that many (null-padded) slots; identical
-    // vectors take identical decisions at every step, so planted twins
-    // still co-assign. Cost: O((b1+p+2)·
-    // n·k^(1/3)·d) chain candidates — k^(1/4+1/3) per vector, still
-    // k^(1/6)/k^(1/4)-factors under the two-level chain's O(n·√k·d).
-    val v1 = withNorm(emb).crossJoin(broadcast(l1ne))
-      .withColumn("cs", dot(col("embedding"), col("e1")) / (col("nrm") * col("n1")))
-      .groupBy(col("vec_id")).agg(argTopN(col("cs"), col("g1"), capB1).as("tops"))
-      .select(col("vec_id"), explode(col("tops")).as("t"))
-      .filter(col("t").isNotNull)
-      .select(col("vec_id"), col("t").getField("cid").as("g1"))
-    val v2 = withNorm(emb).join(v1, Seq("vec_id")).join(broadcast(l2ne), Seq("g1"))
-      .withColumn("cs", dot(col("embedding"), col("e2")) / (col("nrm") * col("n2")))
-      .groupBy(col("vec_id")).agg(argTopN(col("cs"), col("g2"), capP).as("tops"))
-      .select(col("vec_id"), explode(col("tops")).as("t"))
-      .filter(col("t").isNotNull)
-      .select(col("vec_id"), col("t").getField("cid").as("g2"))
-    val fineCand = withNorm(emb).join(v2, Seq("vec_id")).join(broadcast(fgrp), Seq("g2"))
-      .withColumn("cs", dot(col("embedding"), col("ce")) / (col("nrm") * col("nc")))
-    // per-(vector, cell) winner CARRYING its score for the cross-cell
-    // rank: the ArgMax1 declarative aggregate — (cs DESC, cid ASC)
-    // selection with two PRIMITIVE buffer slots, so the fine-candidate
-    // relation collapses in a map-side HashAggregate (a max(struct(...))
-    // spelling keeps the score too, but its struct buffer demotes the
-    // aggregation to SortAggregateExec and re-sorts the O(n·k^(1/3))
-    // candidates — the sorter tax ArgTop2 killed, caught by the
-    // PlanShapeSpec sort-free gate)
-    val winners = fineCand.groupBy(col("vec_id"), col("g2"))
-      .agg(argMax1(col("cs"), col("cid")).as("w"))
-      .select(col("vec_id"), col("w").getField("cs").as("cs"),
-        col("w").getField("cid").as("cid"))
-    // Region emission (round 14): the ≤p explored cells' winners rank
-    // into ONE ArgTopN pass; `cell` is the overall argmax, `probes` the
-    // ranked extra regions 2..p each carrying its cross-REGION margin
-    // s1 − s_r — how much better the home region's best centroid fits
-    // than region r's — the boundary-ness the margin-gated probe search
-    // keys on, per region. cell2/mgn stay as the rank-2 columns (the
-    // margin-distribution stat).
-    val s1 = col("tops").getItem(0).getField("cs")
-    winners.groupBy(col("vec_id")).agg(argTopN(col("cs"), col("cid"), capP).as("tops"))
-      .select(col("vec_id"),
-        col("tops").getItem(0).getField("cid").as("cell"),
-        get(col("tops"), lit(1)).getField("cid").as("cell2"),
-        (s1 - get(col("tops"), lit(1)).getField("cs")).as("mgn"),
-        // the home-region score (cos to the winning fine centroid — by
-        // construction the max over the home cell's full codebook): the
-        // probe search's angular-prune anchor (round 15, see
-        // [[probeVerifiedPairs]])
-        s1.as("s1"),
-        transform(
-          filter(slice(col("tops"), lit(2), lit(capP - 1)),
-            t => t.isNotNull),
-          t => struct(t.getField("cid").as("pc"),
-            (s1 - t.getField("cs")).as("mgn"))).as("probes"))
-  }
-
-  /** Nearest- and second-nearest-centroid assignment by cosine (spherical
-    * k-means step): broadcast the centroid table, argmax via the sort-free
-    * [[graft.expr.ArgTop2]] aggregate ((cos DESC, cid ASC) — identical
-    * selection to a row_number ≤ 2 window, which the oracle twins still
-    * spell). `cell2` is the runner-up, null when k = 1. Round 9: the
-    * window spelling forced the n·k candidate relation through a sort
-    * (0.4 TB of sorter traffic at the 10⁷ probe); as an aggregate the
-    * candidates collapse in the partial HashAggregate ABOVE the broadcast
-    * join — same codegen stage, nothing sorted, one 4-slot buffer per
-    * vector reaches the exchange.
-    */
-  private def assignCells(emb: DataFrame, cent: DataFrame): DataFrame =
-    withNorm(emb).crossJoin(broadcast(cent))
-      .withColumn("cos_c", dot(col("embedding"), col("ce")) / (col("nrm") * col("nc")))
-      .groupBy(col("vec_id"))
-      .agg(argTop2(col("cos_c"), col("cid")).as("t2"))
-      .select(col("vec_id"),
-        col("t2").getField("cell").as("cell"),
-        col("t2").getField("cell2").as("cell2"),
-        (col("t2").getField("s1") - col("t2").getField("s2")).as("mgn"),
-        col("t2").getField("s1").as("s1"))
-      .withColumn("probes", rankTwoProbes)
-
-  /** Deterministic IVF cell assignments: k-means seeds = the hash-ranked
-    * [[hashSeeds]] (inline), one Lloyd refinement (assign → means → re-assign).
-    * Empty cells simply vanish (their members re-assign elsewhere) — the
-    * standard k-means degenerate-cell behavior. Centroids re-quantize to
-    * float32: vec_dot is an array<float> kernel, and the oracle applies the
-    * identical DOUBLE→REAL rounding.
-    */
-  private def ivfAssignments(s: SparkSession, dir: String, emb: DataFrame,
-      nRows: Long): DataFrame = {
-    // k from the corpus count `nRows`, not a constant ([[cellCount]]).
-    // cid stays BIGINT (here and in coarseAssignments — the round-8 ANSI
-    // overflow lesson past 2^31 vec_ids); seeds come from the hash-ranked
-    // codebook (round 9 — id-distribution-free, see [[hashSeeds]]).
-    val assign0 = assignCells(emb, hashSeeds(s, dir, cellCount(nRows), "ivfseed"))
-    val refined = emb.join(assign0, Seq("vec_id"))
-      .select(col("cell"), posexplode(col("embedding")).as(Seq("d", "x")))
-      .groupBy(col("cell"), col("d"))
-      .agg(avg(col("x").cast(DoubleType)).as("m"))
-      .groupBy(col("cell"))
-      .agg(transform(array_sort(collect_list(struct(col("d"), col("m")))),
-        t => t.getField("m")).as("ce"))
-      .select(col("cell").as("cid"), col("ce").cast(ArrayType(FloatType)).as("ce"))
-      .withColumn("nc", norm(col("ce")))
-    assignCells(emb, refined)
-  }
-
   def ivfQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ANN via IVF with k-means centroids: deterministic (hash-ranked)
     // seeds refined by one Lloyd step — assign all vectors to their
@@ -1489,8 +864,8 @@ object VectorOps {
     // identical vectors assign identically under ANY centroid set, and only
     // identical (planted) pairs clear the 0.999 threshold.
     "sim_ann_ivf" -> ((s, dir) => {
-      val emb = augmented(s, dir)
-      val assign = sharedIvfAssign(s, dir)
+      val emb = Augmented.frame(s, dir)
+      val assign = assignment(s, dir, Augmented, Ivf.Flat)
       val e = withNorm(emb).join(assign, Seq("vec_id"))
       val l = e.select(col("cell"), col("vec_id").as("i"), col("embedding").as("ea"), col("nrm").as("na"))
       val r = e.select(col("cell"), col("vec_id").as("j"), col("embedding").as("eb"), col("nrm").as("nb"))
@@ -1510,7 +885,7 @@ object VectorOps {
     // volume is nprobe× the nprobe=1 path).
     // Round 9: runs on the COARSE two-level assignment (the production
     // index — flat assignment quadratizes with k ∝ n, see
-    // [[sharedCoarseAssign]]). By construction the candidate set is a
+    // [[Ivf.TwoLevel]]). By construction the candidate set is a
     // superset of `sim_ann_ivf_coarse`'s same-cell pairs, so probe
     // recall ≥ nprobe=1 recall — pinned in [[QueryInvariantSpec]].
     // SCALE SHAPE (round 9, from the n=10⁶ probe): candidates are FILTERED
@@ -1533,7 +908,7 @@ object VectorOps {
     // post-filter-distinct discipline of round 9), and tier-2 rescores
     // survivors exactly — output identical to inline exact scoring.
     "sim_ann_ivf_probe" -> ((s, dir) => {
-      probeVerifiedPairs(s, dir, sharedCoarseAssign(s, dir))
+      probeVerifiedPairs(s, dir, assignment(s, dir, Augmented, TwoLevel))
         .select(col("i"), col("j"), round(col("cos"), 6).as("cosine"))
     }),
 
@@ -1548,12 +923,12 @@ object VectorOps {
     // (~(4/127)·(max_a/‖a‖ + max_b/‖b‖) ≈ 0.024 at 64-d), so the prefilter
     // can only drop pairs whose EXACT cosine is also below ANN_T — output ≡
     // `sim_ann_ivf_coarse` (round 9: the candidate cells come from the
-    // production two-level assignment, [[sharedCoarseAssign]]), pinned in
+    // production two-level assignment, [[Ivf.TwoLevel]]), pinned in
     // [[QueryInvariantSpec]]. At scale the rescore
     // fetch is O(candidates), and the candidate scan reads 1/4 the bytes.
     "sim_ann_quantized_rescore" -> ((s, dir) => {
-      val emb = augmented(s, dir)
-      val assign = sharedCoarseAssign(s, dir)
+      val emb = Augmented.frame(s, dir)
+      val assign = assignment(s, dir, Augmented, TwoLevel)
       val mx = aggregate(col("embedding"), lit(0.0d),
         (acc, x) => greatest(acc, abs(x.cast(DoubleType))))
       // The candidate join carries ONLY the int8 codes (float-exact ≤ 127,
@@ -1587,7 +962,7 @@ object VectorOps {
 
     // IVF-PQ search — THE production trillion-vector ANN shape (FAISS's
     // IVF*,PQ*): the COARSE two-level IVF assignment (round 9 — the flat
-    // assignment quadratizes with k ∝ n; [[sharedCoarseAssign]] is the
+    // assignment quadratizes with k ∝ n; [[Ivf.TwoLevel]] is the
     // billion-vector discipline) restricts candidates to the anchor's
     // cell, and those candidates are scored from their 8 one-byte PQ
     // codes via the anchor's broadcast lookup table — so the pair scan
@@ -1596,8 +971,8 @@ object VectorOps {
     // cost is 8 table adds. Planted-twin recall pinned in
     // [[QueryInvariantSpec]] (a twin shares cell AND codes).
     "sim_ann_ivf_pq" -> ((s, dir) => {
-      val emb = augmented(s, dir)
-      val assign = sharedCoarseAssign(s, dir)
+      val emb = Augmented.frame(s, dir)
+      val assign = assignment(s, dir, Augmented, TwoLevel)
       val cb = pqCodebook(emb)
       val codes = sharedPqCodes(s, dir)
         .select(col("vec_id").as("nb"), col("m"), col("code"))
@@ -1691,7 +1066,7 @@ object VectorOps {
     // random vectors is inherently low for any 16-entry codebook —
     // near-equidistant points — which is why the gate plants structure.)
     "sim_ann_pq_adc" -> ((s, dir) => {
-      val emb = augmented(s, dir)
+      val emb = Augmented.frame(s, dir)
       val cb = pqCodebook(emb)
       val codes = sharedPqCodes(s, dir)
       val anchSv = AnchorSample.withAnchors(emb, col("vec_id"))
@@ -1744,7 +1119,7 @@ object VectorOps {
     }),
 
     // SemDeDup-shaped semantic dedup: cluster the corpus (round 9: the
-    // COARSE two-level IVF cells — [[sharedCoarseAssign]], the assignment
+    // COARSE two-level IVF cells — [[Ivf.TwoLevel]], the assignment
     // that stays O(n·√k·d) as the corpus and the derived k grow — flat
     // assignment was the round-8 probe's scale cliff), detect within-cell
     // cosine-≥T pairs, close the pair
@@ -1756,12 +1131,12 @@ object VectorOps {
     // curation pipeline consumes downstream; at 100 TB the cells shard the
     // corpus so each within-cell join is an equi-join on `cell`.
     "dedup_semantic" -> ((s, dir) => {
-      val emb = augmented(s, dir)
+      val emb = Augmented.frame(s, dir)
       // two-tier within-cell pair detection (round 10): sketch-bound
       // candidates, exact rescore — identical pair set, ~4× less pair-scan
       // compute and a ~3.5×-slimmer candidate shuffle (see
       // [[cellVerifiedPairs]])
-      val pairs = cellVerifiedPairs(s, dir, sharedCoarseAssign(s, dir))
+      val pairs = cellVerifiedPairs(s, dir, assignment(s, dir, Augmented, TwoLevel))
         .select(col("i"), col("j"))
       val labels = graft.operators.Components.connectedComponents(pairs)
       val w = Window.partitionBy(col("group_id"))
@@ -1783,7 +1158,7 @@ object VectorOps {
     // recall estimate is unbiased — and the planted duplicates guarantee
     // anchored positives at every sf. Round 9: the `ivf` row governs the
     // PRODUCTION index — the coarse two-level assignment every IVF
-    // consumer now runs on ([[sharedCoarseAssign]]); the flat chain is
+    // consumer now runs on ([[Ivf.TwoLevel]]); the flat chain is
     // governed by `sim_ann_ivf`'s own exact oracle gate (a strictly
     // stronger check than a recall floor), so recall governance no longer
     // pays — or legitimizes — the quadratic flat assignment.
@@ -1825,7 +1200,7 @@ object VectorOps {
       // uncached builders, so the cache can never mask a drift between
       // the two.
       val ivfCand = CorpusCache.getOrBuild(s, s"candivf:$dir")(
-        anchorCandidates(sharedCoarseAssign(s, dir), "cell", anchors))
+        anchorCandidates(assignment(s, dir, Augmented, TwoLevel), "cell", anchors))
       // round 13 (round-12 verdict #3): the BLENDED recall is a
       // composition-sensitive DIAGNOSTIC, not a gated floor — at 10⁶⁺ the
       // random geometric tail dominates n_true and the blended number
@@ -1859,7 +1234,7 @@ object VectorOps {
         // round 10: the imi row audits the nprobe=2 candidate shape the
         // sim_ann_ivf_imi gate actually searches (probeVerifiedPairs)
         .unionByName(recallRow("ivf_imi", CorpusCache.getOrBuild(s, s"candimi:$dir")(
-          probeAnchorCandidates(sharedImiAssign(s, dir), anchors))))
+          probeAnchorCandidates(assignment(s, dir, Augmented, Imi), anchors))))
         .unionByName(recallRow("lsh", CorpusCache.getOrBuild(s, s"candlsh:$dir")(
           anchorCandidates(sigs, "bucket", anchors))))
         .unionByName(recallRow("lsh_multiprobe", CorpusCache.getOrBuild(s, s"candmp:$dir")(
@@ -1867,7 +1242,7 @@ object VectorOps {
     }),
 
     // Near-twin recall governance (round 13 — the round-12 verdict's top
-    // item): [[ntAugmented]] plants two PERTURBED cohorts — near-dup twins
+    // item): [[Ivf.NearTwin]] plants two PERTURBED cohorts — near-dup twins
     // at cos ≈ 0.98 (the [0.95, 0.999) band a production corpus's
     // re-uploads/paraphrases occupy) and emission-band twins at ≈ 0.9996
     // (≥ANN_T but NOT byte-identical) — and this gate measures per-band
@@ -1906,9 +1281,9 @@ object VectorOps {
       // the same maintained-candidate discipline as `ann_recall` (the
       // sweep/spec seams audit the uncached builders)
       bandRows("ivf", CorpusCache.getOrBuild(s, s"candivfnt:$dir")(
-        anchorCandidates(sharedCoarseAssignNt(s, dir), "cell", anchors)))
+        anchorCandidates(assignment(s, dir, NearTwin, TwoLevel), "cell", anchors)))
         .unionByName(bandRows("ivf_imi", CorpusCache.getOrBuild(s, s"candimint:$dir")(
-          probeAnchorCandidates(sharedImiAssignNt(s, dir), anchors))))
+          probeAnchorCandidates(assignment(s, dir, NearTwin, Imi), anchors))))
     }),
 
     // IVF under a COARSE QUANTIZER — the billion-vector assignment shape.
@@ -1916,7 +1291,7 @@ object VectorOps {
     // centroid: O(n·k·d), and since the derived k is n/1024, O(n²·d/1024)
     // — the round-8 n=10⁶ probe measured this as the family's scale cliff.
     // Here assignment is two-level (nearest coarse group of ⌈√k⌉, then
-    // nearest fine centroid within the group — see [[coarseAssignments]]):
+    // nearest fine centroid within the group — see [[Ivf.assignWithCodebook]]):
     // O(n·√k·d), sub-quadratic at any corpus size. The within-cell pair
     // join and 0.999 verification are identical to the
     // flat path; identical (planted) vectors co-assign under either
@@ -1927,7 +1302,7 @@ object VectorOps {
     // provably identical to the single-tier exact join, so the oracle twin
     // below stays an exact-semantics replay).
     "sim_ann_ivf_coarse" -> ((s, dir) => {
-      cellVerifiedPairs(s, dir, sharedCoarseAssign(s, dir))
+      cellVerifiedPairs(s, dir, assignment(s, dir, Augmented, TwoLevel))
         .select(col("i"), col("j"), round(col("cos"), 6).as("cosine"))
     }),
 
@@ -1936,7 +1311,7 @@ object VectorOps {
     // outgrows broadcast residency: level-1 (⌈k^(1/3)⌉) → level-2 (k^(2/3),
     // within the chosen level-1 group) → fine top-2 (within the chosen
     // level-2 group), O(3·n·k^(1/3)·d) candidate rows vs the two-level
-    // O(2·n·√k·d) — see [[imiAssignments]]. Round 10: the SEARCH is
+    // O(2·n·√k·d) — see [[Ivf.Imi]]. Round 10: the SEARCH is
     // nprobe=2 ([[probeVerifiedPairs]] — home ∪ second-nearest cell,
     // sketch-bound tier-1, exact rescore): the deeper descent is a
     // coarser approximation, and the FAISS-IMI discipline buys the
@@ -1948,7 +1323,7 @@ object VectorOps {
     // (planted) vectors still co-assign at every level — pinned in
     // [[QueryInvariantSpec]].
     "sim_ann_ivf_imi" -> ((s, dir) => {
-      probeVerifiedPairs(s, dir, sharedImiAssign(s, dir))
+      probeVerifiedPairs(s, dir, assignment(s, dir, Augmented, Imi))
         .select(col("i"), col("j"), round(col("cos"), 6).as("cosine"))
     }),
 
@@ -1987,7 +1362,7 @@ object VectorOps {
             .join(emb.select(col("vec_id")), Seq("vec_id"), "left_semi").isEmpty,
           "fusion_rrf: the +100000 augment offset aliases real vec_ids in this corpus")
       }
-      val assign = sharedCoarseAssign(s, dir)
+      val assign = assignment(s, dir, Augmented, TwoLevel)
       // the anchor is the memoized driver Long bm25Ranked ranks for
       val isAnchor = Curation.corpusStats(s, dir).anchor
         .fold(lit(false))(a => col("vec_id") === lit(a))
@@ -2045,17 +1420,6 @@ object VectorOps {
     */
   private val RECALL_DUP_T = 0.95
 
-  /** Near-twin fixture constants (round 13 — making the recall governance
-    * non-tautological; see [[ntAugmented]]). Deltas are per-dimension
-    * perturbation magnitudes on the unit-norm corpus: ±0.025/dim → twin
-    * cosine ≈ 0.978–0.986 (the [0.95, 0.999) near-duplicate band);
-    * ±0.00375/dim → ≈ 0.9996 (inside the ≥ANN_T emission band, NOT
-    * byte-identical). Spelled as exact decimal literals both engines
-    * parse to the same double.
-    */
-  private[queries] val NT_DELTA_NEAR = 0.025d
-  private[queries] val NT_DELTA_DUP = 0.00375d
-
   /** Lower edge of the near-twin governance band. */
   private[queries] val NT_BAND_LO = 0.95d
 
@@ -2086,6 +1450,21 @@ object VectorOps {
   private def dSql(a: String, b: String): String =
     dotSql.replace("%A", a).replace("%B", b)
 
+  /** The cosine of vectors `a` and `b` with norms `na` and `nb`. */
+  private def cosSql(a: String, na: String, b: String, nb: String): String =
+    s"${dSql(a, b)} / ($na * $nb)"
+
+  /** CTE `name` = (vec_id, embedding) of `src` with its norm `nrm`. */
+  private def normedSql(name: String, src: String): String =
+    s"$name AS (SELECT vec_id, embedding, sqrt(${dSql("embedding", "embedding")}) AS nrm FROM $src)"
+
+  /** The augmented corpus: the base vectors and their planted duplicates. */
+  private val augSql =
+    """aug AS (
+      |  SELECT vec_id, embedding FROM embeddings
+      |  UNION ALL
+      |  SELECT vec_id + 100000 AS vec_id, embedding FROM embeddings)""".stripMargin
+
   /** DuckDB twin of [[pqDist2]] — the exact-L2² fold between two lists. */
   private def pqD2Sql(a: String, b: String): String =
     s"""list_sum(list_transform(list_zip($a, $b),
@@ -2114,10 +1493,15 @@ object VectorOps {
        |    PARTITION BY vec_id, m ORDER BY d2 ASC, code ASC) AS rn
        |  FROM d)""".stripMargin
 
-  /** DuckDB twin of [[hashSeeds]]: emits `${out}nb` and `$out` = (cid,
-    * ce, nc) — exactly k codebook rows ranked by (hash, vec_id) from the
-    * 4×-oversampled hash-threshold slice of the base corpus. `kCte` must
-    * be an earlier 1-row CTE exposing `k`.
+  /** The cell-count law over the rows of `univ`: 1-row CTE `out` = (k). */
+  private def nkSql(out: String, univ: String): String =
+    s"""$out AS (SELECT greatest(${Ivf.MIN_CENTROIDS},
+       |  CAST(ceil(count(*) / ${Ivf.TARGET_CELL.toDouble}) AS BIGINT)) AS k FROM $univ)""".stripMargin
+
+  /** The seed table: emits `${out}nb` and `$out` = (cid, ce, nc), exactly
+    * k codebook rows ranked by (hash, vec_id) from the 4×-oversampled
+    * hash-threshold slice of the base corpus. `kCte` must be an earlier
+    * 1-row CTE exposing `k`.
     */
   private def hashSeedsSql(out: String, kCte: String, tag: String): String =
     s"""${out}nb AS (SELECT CAST(count(*) AS DOUBLE) AS nb FROM embeddings),
@@ -2132,30 +1516,105 @@ object VectorOps {
        |    WHERE hs < ceil(4000000.0 * k / nb)) s
        |  WHERE rn <= k)""".stripMargin
 
-  /** Shared IVF chain CTEs (aug → seeds → assign0 → Lloyd means → refined
-    * centroids → final assignment → `e`) — the oracle twin of
-    * `ivfAssignments` over the augmented corpus, reused by `sim_ann_ivf`
-    * and `dedup_semantic`.
+  /** One descent step: CTE `out` keeps `cols` of the rows of `from`
+    * (columns `sel`) ranked within `keep` per `part` under (`ord` DESC,
+    * `id` ASC), the row_number spelling of the ArgTop2/ArgTopN picks.
     */
-  private lazy val ivfCellCtes: String =
-    s"""aug AS (
-       |  SELECT vec_id, embedding FROM embeddings
+  private def pickSql(out: String, cols: String, sel: String, from: String,
+      part: String, ord: String, id: String, keep: String): String =
+    s"""$out AS (
+       |  SELECT $cols FROM (
+       |    SELECT $sel, row_number() OVER (
+       |      PARTITION BY $part
+       |      ORDER BY $ord DESC, $id ASC) AS rn
+       |    FROM $from)
+       |  WHERE rn <= $keep)""".stripMargin
+
+  /** CTE `out` = (vec_id, cell, cell2, mgn) from a ranked pick (vec_id,
+    * cid, cs, rn): ArgTop2's winner, runner-up and margin s1 − s2.
+    */
+  private def assignSql(out: String, ranked: String): String =
+    s"""$out AS (
+       |  SELECT vec_id,
+       |    max(CASE WHEN rn = 1 THEN cid END) AS cell,
+       |    max(CASE WHEN rn = 2 THEN cid END) AS cell2,
+       |    max(CASE WHEN rn = 1 THEN cs END)
+       |      - max(CASE WHEN rn = 2 THEN cs END) AS mgn
+       |  FROM $ranked
+       |  WHERE rn <= 2 GROUP BY vec_id)""".stripMargin
+
+  /** CTE `out` = the nprobe=2 candidate pairs (i < j) over an assignment
+    * (vec_id, cell): each vector probes its home cell and every region
+    * (vec_id, pc, mgn) of `regions` within the margin gate, against the
+    * home cells of all others.
+    */
+  private def probeCandSql(out: String, assign: String, regions: String): String =
+    s"""${out}p AS (
+       |  SELECT vec_id, cell AS pc FROM $assign
        |  UNION ALL
-       |  SELECT vec_id + 100000 AS vec_id, embedding FROM embeddings),
-       |k0 AS (SELECT greatest($MIN_CENTROIDS,
-       |  CAST(ceil(count(*) / $TARGET_CELL) AS BIGINT)) AS k FROM aug),
+       |  SELECT vec_id, pc FROM $regions WHERE mgn <= $PROBE_MARGIN_T),
+       |$out AS (
+       |  SELECT DISTINCT least(p.vec_id, t.vec_id) AS i,
+       |    greatest(p.vec_id, t.vec_id) AS j
+       |  FROM ${out}p p JOIN $assign t ON p.pc = t.cell
+       |  WHERE p.vec_id <> t.vec_id)""".stripMargin
+
+  /** The exact-cosine verification of candidate pairs `cand` (i, j) against
+    * the normed vectors `a`.
+    */
+  private val candVerifySql =
+    s"""SELECT c.i, c.j,
+       |  round(${cosSql("x.embedding", "x.nrm", "y.embedding", "y.nrm")}, 6) AS cosine
+       |FROM cand c
+       |JOIN a x ON x.vec_id = c.i
+       |JOIN a y ON y.vec_id = c.j
+       |WHERE ${cosSql("x.embedding", "x.nrm", "y.embedding", "y.nrm")} >= $ANN_T""".stripMargin
+
+  /** The verified within-cell pairs of `e` (vec_id, embedding, nrm, cell). */
+  private val cellPairsSql =
+    s"""SELECT x.vec_id AS i, y.vec_id AS j,
+       |  round(${cosSql("x.embedding", "x.nrm", "y.embedding", "y.nrm")}, 6) AS cosine
+       |FROM e x JOIN e y ON x.cell = y.cell AND x.vec_id < y.vec_id
+       |WHERE ${cosSql("x.embedding", "x.nrm", "y.embedding", "y.nrm")} >= $ANN_T""".stripMargin
+
+  /** `e` = the normed universe `a` with its `assign` cell. */
+  private val cellSql =
+    """e AS (
+      |  SELECT a.vec_id, a.embedding, a.nrm, assign.cell
+      |  FROM a JOIN assign ON a.vec_id = assign.vec_id)""".stripMargin
+
+  /** The same-cell candidate pairs of the `cassign` chain. */
+  private val ivfCandSql =
+    """ivf_cand AS (
+      |  SELECT DISTINCT x.vec_id AS i, y.vec_id AS j
+      |  FROM cassign x JOIN cassign y ON x.cell = y.cell AND x.vec_id < y.vec_id)""".stripMargin
+
+  /** The hamming-≤1 multiprobe candidates of the LSH chain's `sigs`. */
+  private val mpCandSql =
+    s"""probes AS (
+       |  SELECT vec_id,
+       |    CASE WHEN f = 0 THEN bucket
+       |         ELSE substr(bucket, 1, f - 1) ||
+       |           (CASE WHEN substr(bucket, f, 1) = '0' THEN '1' ELSE '0' END) ||
+       |           substr(bucket, f + 1, $NPLANES)
+       |    END AS probe
+       |  FROM sigs, (SELECT unnest(range(0, ${NPLANES + 1})) AS f)),
+       |mp_cand AS (
+       |  SELECT DISTINCT p.vec_id AS i, s.vec_id AS j
+       |  FROM probes p JOIN sigs s ON p.probe = s.bucket AND p.vec_id < s.vec_id)""".stripMargin
+
+  /** The flat chain over the augmented corpus (aug → seeds → seed pick →
+    * Lloyd means → refined centroids → final pick → `e`), the oracle twin
+    * of the [[Ivf.Flat]] assignment.
+    */
+  private lazy val ivfCellCtes: String = {
+    val c = cosSql("a.embedding", "a.nrm", "cent.ce", "cent.nc")
+    s"""$augSql,
+       |${nkSql("k0", "aug")},
        |${hashSeedsSql("cent0", "k0", "ivfseed")},
-       |a AS (
-       |  SELECT vec_id, embedding,
-       |    sqrt(${dSql("embedding", "embedding")}) AS nrm
-       |  FROM aug),
-       |assign0 AS (
-       |  SELECT vec_id, cid AS cell FROM (
-       |    SELECT a.vec_id, cent0.cid, row_number() OVER (
-       |      PARTITION BY a.vec_id
-       |      ORDER BY ${dSql("a.embedding", "cent0.ce")} / (a.nrm * cent0.nc) DESC, cent0.cid ASC) AS rn
-       |    FROM a CROSS JOIN cent0)
-       |  WHERE rn = 1),
+       |${normedSql("a", "aug")},
+       |${pickSql("assign0", "vec_id, cid AS cell", "a.vec_id, cent0.cid", "a CROSS JOIN cent0",
+             "a.vec_id", cosSql("a.embedding", "a.nrm", "cent0.ce", "cent0.nc"), "cent0.cid", "1")},
        |comps AS (
        |  SELECT assign0.cell, generate_subscripts(a.embedding, 1) AS d,
        |    unnest(a.embedding) AS x
@@ -2169,50 +1628,22 @@ object VectorOps {
        |  FROM means GROUP BY cell),
        |cent AS (
        |  SELECT cid, ce, sqrt(${dSql("ce", "ce")}) AS nc FROM cent1),
-       |assign AS (
-       |  SELECT vec_id,
-       |    max(CASE WHEN rn = 1 THEN cid END) AS cell,
-       |    max(CASE WHEN rn = 2 THEN cid END) AS cell2
-       |  FROM (
-       |    SELECT a.vec_id, cent.cid, row_number() OVER (
-       |      PARTITION BY a.vec_id
-       |      ORDER BY ${dSql("a.embedding", "cent.ce")} / (a.nrm * cent.nc) DESC, cent.cid ASC) AS rn
-       |    FROM a CROSS JOIN cent)
-       |  WHERE rn <= 2 GROUP BY vec_id),
-       |e AS (
-       |  SELECT a.vec_id, a.embedding, a.nrm, assign.cell
-       |  FROM a JOIN assign ON a.vec_id = assign.vec_id)""".stripMargin
+       |${pickSql("ranked", "vec_id, cid, cs, rn", s"a.vec_id, cent.cid, $c AS cs",
+             "a CROSS JOIN cent", "a.vec_id", c, "cent.cid", "2")},
+       |${assignSql("assign", "ranked")},
+       |$cellSql""".stripMargin
+  }
 
   def ivfOracleSql: Map[String, String] = Map(
-    "sim_ann_ivf" ->
-      s"""WITH $ivfCellCtes
-         |SELECT x.vec_id AS i, y.vec_id AS j,
-         |  round(${dSql("x.embedding", "y.embedding")} / (x.nrm * y.nrm), 6) AS cosine
-         |FROM e x JOIN e y ON x.cell = y.cell AND x.vec_id < y.vec_id
-         |WHERE ${dSql("x.embedding", "y.embedding")} / (x.nrm * y.nrm) >= $ANN_T""".stripMargin,
+    "sim_ann_ivf" -> s"WITH $ivfCellCtes\n$cellPairsSql",
 
     // the nprobe=2 twin: the same COARSE assignment chain the Spark side
     // shares, probes = home cell ∪ second-nearest cell, candidates
     // normalized to i < j, exact-cosine verification at the same threshold
     "sim_ann_ivf_probe" ->
       s"""WITH $coarseCellCtes,
-         |probes AS (
-         |  SELECT vec_id, cell AS pc FROM assign
-         |  UNION ALL
-         |  SELECT vec_id, cell2 AS pc FROM assign
-         |  WHERE cell2 IS NOT NULL AND mgn <= $PROBE_MARGIN_T),
-         |cand AS (
-         |  SELECT DISTINCT least(p.vec_id, t.vec_id) AS i,
-         |    greatest(p.vec_id, t.vec_id) AS j
-         |  FROM probes p JOIN assign t ON p.pc = t.cell
-         |  WHERE p.vec_id <> t.vec_id)
-         |SELECT c.i, c.j,
-         |  round(${dSql("x.embedding", "y.embedding")} / (x.nrm * y.nrm), 6) AS cosine
-         |FROM cand c
-         |JOIN a x ON x.vec_id = c.i
-         |JOIN a y ON y.vec_id = c.j
-         |WHERE ${dSql("x.embedding", "y.embedding")} / (x.nrm * y.nrm) >= $ANN_T""".stripMargin,
-
+         |${probeCandSql("cand", "assign", "(SELECT vec_id, cell2 AS pc, mgn FROM assign)")}
+         |$candVerifySql""".stripMargin,
     // the PQ twin: same seeded codebook (vector c's subvector for code c),
     // same exact-L2 fold, same (d2, code) tie-break, DECIMAL distortions
     "emb_pq_encode" -> {
@@ -2231,10 +1662,7 @@ object VectorOps {
     // the ADC twin: anchors via the shared modulus, per-anchor lookup
     // tables from the same fold, 8-entry DECIMAL sums, (adist, id) ranks
     "sim_ann_pq_adc" ->
-      s"""WITH aug AS (
-         |  SELECT vec_id, embedding FROM embeddings
-         |  UNION ALL
-         |  SELECT vec_id + 100000 AS vec_id, embedding FROM embeddings),
+      s"""WITH $augSql,
          |${pqCtes("aug")},
          |codes AS (SELECT vec_id, m, code FROM best WHERE rn = 1),
          |m0 AS (${AnchorSample.modSql("aug")}),
@@ -2369,7 +1797,14 @@ object VectorOps {
     // COARSE two-level centroid chain (the production index — the flat
     // chain is governed by sim_ann_ivf's own exact oracle), then counts
     // truth ∩ candidates per method
-    "ann_recall" ->
+    "ann_recall" -> {
+      val found = Seq("ivf" -> "ivf_cand", "ivf_imi" -> "imi_cand", "lsh" -> "lsh_cand",
+          "lsh_multiprobe" -> "mp_cand").map { case (m, c) =>
+        s"""SELECT '$m',
+           |    (SELECT count(*) FROM truth t JOIN $c c ON t.i = c.i AND t.j = c.j),
+           |    (SELECT count(*) FROM truth t JOIN $c c ON t.i = c.i AND t.j = c.j
+           |     WHERE t.is_dup)""".stripMargin
+      }.mkString("\n  UNION ALL ")
       s"""WITH $lshSigCtes,
          |m AS (${AnchorSample.modSql("n")}),
          |anch AS (SELECT n.* FROM n, m WHERE ${AnchorSample.predSql("vec_id")}),
@@ -2385,48 +1820,13 @@ object VectorOps {
          |lsh_cand AS (
          |  SELECT DISTINCT x.vec_id AS i, y.vec_id AS j
          |  FROM sigs x JOIN sigs y ON x.bucket = y.bucket AND x.vec_id < y.vec_id),
-         |probes AS (
-         |  SELECT vec_id,
-         |    CASE WHEN f = 0 THEN bucket
-         |         ELSE substr(bucket, 1, f - 1)
-         |           || (CASE WHEN substr(bucket, f, 1) = '0' THEN '1' ELSE '0' END)
-         |           || substr(bucket, f + 1, $NPLANES)
-         |    END AS probe
-         |  FROM sigs, (SELECT unnest(range(0, ${NPLANES + 1})) AS f)),
-         |mp_cand AS (
-         |  SELECT DISTINCT p.vec_id AS i, s.vec_id AS j
-         |  FROM probes p JOIN sigs s ON p.probe = s.bucket AND p.vec_id < s.vec_id),
+         |$mpCandSql,
          |${coarseAssignCtes("n", "c")},
-         |ivf_cand AS (
-         |  SELECT DISTINCT x.vec_id AS i, y.vec_id AS j
-         |  FROM cassign x JOIN cassign y ON x.cell = y.cell AND x.vec_id < y.vec_id),
+         |$ivfCandSql,
          |${imiAssignCtes("n", "m")},
-         |imi_probes AS (
-         |  SELECT vec_id, cell AS pc FROM massign
-         |  UNION ALL
-         |  SELECT vec_id, pc FROM mprobes WHERE mgn <= $PROBE_MARGIN_T),
-         |imi_cand AS (
-         |  SELECT DISTINCT least(p.vec_id, t.vec_id) AS i,
-         |    greatest(p.vec_id, t.vec_id) AS j
-         |  FROM imi_probes p JOIN massign t ON p.pc = t.cell
-         |  WHERE p.vec_id <> t.vec_id),
+         |${probeCandSql("imi_cand", "massign", "mprobes")},
          |found(method, n_found, n_found_dup) AS (
-         |  SELECT 'ivf',
-         |    (SELECT count(*) FROM truth t JOIN ivf_cand c ON t.i = c.i AND t.j = c.j),
-         |    (SELECT count(*) FROM truth t JOIN ivf_cand c ON t.i = c.i AND t.j = c.j
-         |     WHERE t.is_dup)
-         |  UNION ALL SELECT 'ivf_imi',
-         |    (SELECT count(*) FROM truth t JOIN imi_cand c ON t.i = c.i AND t.j = c.j),
-         |    (SELECT count(*) FROM truth t JOIN imi_cand c ON t.i = c.i AND t.j = c.j
-         |     WHERE t.is_dup)
-         |  UNION ALL SELECT 'lsh',
-         |    (SELECT count(*) FROM truth t JOIN lsh_cand c ON t.i = c.i AND t.j = c.j),
-         |    (SELECT count(*) FROM truth t JOIN lsh_cand c ON t.i = c.i AND t.j = c.j
-         |     WHERE t.is_dup)
-         |  UNION ALL SELECT 'lsh_multiprobe',
-         |    (SELECT count(*) FROM truth t JOIN mp_cand c ON t.i = c.i AND t.j = c.j),
-         |    (SELECT count(*) FROM truth t JOIN mp_cand c ON t.i = c.i AND t.j = c.j
-         |     WHERE t.is_dup))
+         |  $found)
          |SELECT method, (SELECT n_true FROM tc) AS n_true, n_found,
          |  round(CAST(n_found AS DOUBLE) / (SELECT n_true FROM tc), 6) AS recall,
          |  (SELECT n_true_dup FROM tc) AS n_true_dup, n_found_dup,
@@ -2434,7 +1834,8 @@ object VectorOps {
          |    AS recall_dup,
          |  CAST(n_found_dup AS DOUBLE) / (SELECT n_true_dup FROM tc) >= $RECALL_DUP_T
          |    AS dup_ok
-         |FROM found""".stripMargin,
+         |FROM found""".stripMargin
+    },
 
     // the near-twin governance twin regenerates the SAME perturbed corpus
     // from the shared md5-parity derivation (double add at the identically
@@ -2444,40 +1845,26 @@ object VectorOps {
     // ever touches anchors, so the semi-join counts match the Spark side's
     // anchor-restricted candidates exactly (the [[anchorCandidates]]
     // equality [[QueryInvariantSpec]] pins).
-    "ann_recall_neartwin" ->
+    "ann_recall_neartwin" -> {
+      val rows = Seq("ivf" -> "ivf_cand", "ivf_imi" -> "imi_cand").map { case (m, c) =>
+        s"""SELECT '$m' AS method, t.band, count(*) AS n_true,
+           |    CAST(sum(CASE WHEN c.i IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+           |      AS n_found
+           |  FROM truth t LEFT JOIN $c c ON t.i = c.i AND t.j = c.j
+           |  GROUP BY t.band""".stripMargin
+      }.mkString("\n  UNION ALL\n  ")
       s"""WITH ntp AS (
          |  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
          |    unnest(embedding) AS x
          |  FROM embeddings),
-         |nta AS (
-         |  SELECT sid AS vec_id,
-         |    list(CAST(CAST(x AS DOUBLE) + $NT_DELTA_NEAR * s AS REAL) ORDER BY d)
-         |      AS embedding
-         |  FROM (SELECT vec_id + 200000 AS sid, d, x,
-         |      (${graft.functions.Keys.md5Key64Sql(
-                  "concat('nta:', CAST(vec_id + 200000 AS VARCHAR), ':', CAST(d AS VARCHAR))")}
-         |        % 2) * 2 - 1 AS s
-         |    FROM ntp) t
-         |  GROUP BY sid),
-         |ntb AS (
-         |  SELECT sid AS vec_id,
-         |    list(CAST(CAST(x AS DOUBLE) + $NT_DELTA_DUP * s AS REAL) ORDER BY d)
-         |      AS embedding
-         |  FROM (SELECT vec_id + 300000 AS sid, d, x,
-         |      (${graft.functions.Keys.md5Key64Sql(
-                  "concat('ntb:', CAST(vec_id + 300000 AS VARCHAR), ':', CAST(d AS VARCHAR))")}
-         |        % 2) * 2 - 1 AS s
-         |    FROM ntp) t
-         |  GROUP BY sid),
+         |${twinSql("nta", 200000L, Ivf.NT_DELTA_NEAR)},
+         |${twinSql("ntb", 300000L, Ivf.NT_DELTA_DUP)},
+         |$augSql,
          |ntaug AS (
-         |  SELECT vec_id, embedding FROM embeddings
-         |  UNION ALL SELECT vec_id + 100000 AS vec_id, embedding FROM embeddings
+         |  SELECT vec_id, embedding FROM aug
          |  UNION ALL SELECT vec_id, embedding FROM nta
          |  UNION ALL SELECT vec_id, embedding FROM ntb),
-         |nu AS (
-         |  SELECT vec_id, embedding,
-         |    sqrt(${dSql("embedding", "embedding")}) AS nrm
-         |  FROM ntaug),
+         |${normedSql("nu", "ntaug")},
          |m0 AS (${AnchorSample.modSql("nu")}),
          |truth AS (
          |  SELECT DISTINCT least(x.vec_id, y.vec_id) AS i,
@@ -2491,75 +1878,35 @@ object VectorOps {
          |  WHERE ${AnchorSample.predSql("x.vec_id")} AND x.vec_id <> y.vec_id
          |    AND ${dSql("x.embedding", "y.embedding")} / (x.nrm * y.nrm) >= $COS_T),
          |${coarseAssignCtes("nu", "c")},
-         |ivf_cand AS (
-         |  SELECT DISTINCT x.vec_id AS i, y.vec_id AS j
-         |  FROM cassign x JOIN cassign y ON x.cell = y.cell AND x.vec_id < y.vec_id),
+         |$ivfCandSql,
          |${imiAssignCtes("nu", "m")},
-         |imi_probes AS (
-         |  SELECT vec_id, cell AS pc FROM massign
-         |  UNION ALL
-         |  SELECT vec_id, pc FROM mprobes WHERE mgn <= $PROBE_MARGIN_T),
-         |imi_cand AS (
-         |  SELECT DISTINCT least(p.vec_id, t.vec_id) AS i,
-         |    greatest(p.vec_id, t.vec_id) AS j
-         |  FROM imi_probes p JOIN massign t ON p.pc = t.cell
-         |  WHERE p.vec_id <> t.vec_id),
+         |${probeCandSql("imi_cand", "massign", "mprobes")},
          |rows0 AS (
-         |  SELECT 'ivf' AS method, t.band, count(*) AS n_true,
-         |    CAST(sum(CASE WHEN c.i IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_found
-         |  FROM truth t LEFT JOIN ivf_cand c ON t.i = c.i AND t.j = c.j
-         |  GROUP BY t.band
-         |  UNION ALL
-         |  SELECT 'ivf_imi' AS method, t.band, count(*) AS n_true,
-         |    CAST(sum(CASE WHEN c.i IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |      AS n_found
-         |  FROM truth t LEFT JOIN imi_cand c ON t.i = c.i AND t.j = c.j
-         |  GROUP BY t.band)
+         |  $rows)
          |SELECT method, band, n_true, n_found,
          |  round(CAST(n_found AS DOUBLE) / n_true, 6) AS recall,
          |  CASE WHEN band = 'a_dup'
          |         THEN CAST(n_found AS DOUBLE) / n_true >= $RECALL_DUP_T
          |       ELSE TRUE END AS band_ok
-         |FROM rows0""".stripMargin,
+         |FROM rows0""".stripMargin
+    },
 
-    // the coarse-quantizer twin: seeds-as-codebook fine centroids, first
-    // ⌈√k⌉ vectors as coarse centroids, fine→coarse grouping by the same
-    // (cos DESC, id ASC) argmax, vectors restricted to NON-EMPTY coarse
-    // groups, then the within-group fine argmax — the exact replica of
-    // [[coarseAssignments]] — and the flat path's within-cell
-    // 0.999-pair verification
-    "sim_ann_ivf_coarse" ->
-      s"""WITH $coarseCellCtes
-         |SELECT x.vec_id AS i, y.vec_id AS j,
-         |  round(${dSql("x.embedding", "y.embedding")} / (x.nrm * y.nrm), 6) AS cosine
-         |FROM e x JOIN e y ON x.cell = y.cell AND x.vec_id < y.vec_id
-         |WHERE ${dSql("x.embedding", "y.embedding")} / (x.nrm * y.nrm) >= $ANN_T""".stripMargin,
+    // the coarse-quantizer twin: hash-ranked fine and ⌈√k⌉ coarse
+    // centroids, fine→coarse grouping by the same (cos DESC, id ASC)
+    // argmax, vectors restricted to NON-EMPTY coarse groups, then the
+    // within-group fine argmax — the replica of [[Ivf.assignWithCodebook]]
+    // — and the flat path's within-cell 0.999-pair verification
+    "sim_ann_ivf_coarse" -> s"WITH $coarseCellCtes\n$cellPairsSql",
 
-    // the three-level (IMI) twin: exact replica of [[imiAssignments]] —
+    // the three-level (IMI) twin: replica of the [[Ivf.Imi]] descent —
     // integer-snapped ⌈k^(1/3)⌉, three hash-ranked codebooks, the
     // level-2→level-1 grouping, the fine descent, the bottom-up non-empty
-    // guards, the three-step vector descent — then (round 10) the
-    // nprobe=2 search: probes = home cell ∪ second-nearest cell,
-    // candidates normalized to i < j, exact-cosine verification — the
-    // same probe shape as the coarse chain's `sim_ann_ivf_probe` twin
+    // guards, the beam descent — then the margin-gated probe search over
+    // its ranked regions, exact-cosine verification
     "sim_ann_ivf_imi" ->
       s"""WITH $imiCellCtes,
-         |probes AS (
-         |  SELECT vec_id, cell AS pc FROM massign
-         |  UNION ALL
-         |  SELECT vec_id, pc FROM mprobes WHERE mgn <= $PROBE_MARGIN_T),
-         |cand AS (
-         |  SELECT DISTINCT least(p.vec_id, t.vec_id) AS i,
-         |    greatest(p.vec_id, t.vec_id) AS j
-         |  FROM probes p JOIN massign t ON p.pc = t.cell
-         |  WHERE p.vec_id <> t.vec_id)
-         |SELECT c.i, c.j,
-         |  round(${dSql("x.embedding", "y.embedding")} / (x.nrm * y.nrm), 6) AS cosine
-         |FROM cand c
-         |JOIN a x ON x.vec_id = c.i
-         |JOIN a y ON y.vec_id = c.j
-         |WHERE ${dSql("x.embedding", "y.embedding")} / (x.nrm * y.nrm) >= $ANN_T""".stripMargin,
+         |${probeCandSql("cand", "massign", "mprobes")}
+         |$candVerifySql""".stripMargin,
 
     // the fusion twin composes the two arm chains — the shared BM25 CTE
     // ladder at depth FUSE_N and the shared coarse-assignment chain — then
@@ -2567,10 +1914,7 @@ object VectorOps {
     "fusion_rrf" ->
       s"""WITH ${graft.queries.Curation.bm25RankSql(FUSE_N)},
          |$coarseCellCtes,
-         |nb AS (
-         |  SELECT vec_id, embedding,
-         |    sqrt(${dSql("embedding", "embedding")}) AS nrm
-         |  FROM embeddings),
+         |${normedSql("nb", "embeddings")},
          |qd AS (SELECT min(doc_id) AS qid FROM documents),
          |qv AS (
          |  SELECT nb.vec_id AS qid, nb.embedding AS qe, nb.nrm AS qn
@@ -2622,10 +1966,7 @@ object VectorOps {
         |FROM m""".stripMargin,
 
     "sim_topk_bruteforce" ->
-      s"""WITH n AS (
-         |  SELECT vec_id, embedding,
-         |    sqrt(${dSql("embedding", "embedding")}) AS nrm
-         |  FROM embeddings),
+      s"""WITH ${normedSql("n", "embeddings")},
          |m AS (${AnchorSample.modSql("n")}),
          |anch AS (SELECT n.* FROM n, m WHERE ${AnchorSample.predSql("vec_id")}),
          |pairs AS (
@@ -2641,10 +1982,7 @@ object VectorOps {
          |FROM ranked WHERE rn <= $TOPK""".stripMargin,
 
     "dedup_embedding_cosine" ->
-      s"""WITH n AS (
-         |  SELECT vec_id, embedding,
-         |    sqrt(${dSql("embedding", "embedding")}) AS nrm
-         |  FROM embeddings),
+      s"""WITH ${normedSql("n", "embeddings")},
          |m AS (${AnchorSample.modSql("n")}),
          |anch AS (SELECT n.* FROM n, m WHERE ${AnchorSample.predSql("vec_id")})
          |SELECT DISTINCT least(a.vec_id, b.vec_id) AS i,
@@ -2660,137 +1998,93 @@ object VectorOps {
          |FROM n a JOIN n b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
          |WHERE ${dSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm) >= $ANN_T""".stripMargin,
 
+    // the batch (side 1) and the corpus (side 0) are signed as two sets, as
+    // the Spark query keeps them in two frames: their ids may overlap
     "sim_ann_incremental" -> {
-      val incAug =
-        """
-          |  SELECT vec_id, embedding FROM embeddings
+      val sides =
+        """SELECT vec_id, embedding, 0 AS side FROM embeddings
           |  UNION ALL
-          |  SELECT vec_id + 200000 AS vec_id, embedding FROM embeddings
+          |  SELECT vec_id + 200000 AS vec_id, embedding, 1 AS side FROM embeddings
           |  WHERE vec_id % 4 = 0""".stripMargin
-      s"""WITH ${sigChain(incAug)}
+      s"""WITH ${sigChain(sides)}
          |SELECT a.vec_id AS query_id, b.vec_id AS match_id,
          |  round(${dSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm), 6) AS cosine
-         |FROM n a JOIN n b ON a.bucket = b.bucket
-         |  AND a.vec_id >= 200000 AND b.vec_id < 200000
+         |FROM n a JOIN n b ON a.bucket = b.bucket AND a.side = 1 AND b.side = 0
          |WHERE ${dSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm) >= $ANN_T""".stripMargin
     },
 
     "sim_ann_lsh_multiprobe" ->
       s"""WITH $lshSigCtes,
-         |probes AS (
-         |  SELECT vec_id,
-         |    CASE WHEN f = 0 THEN bucket
-         |         ELSE substr(bucket, 1, f - 1)
-         |           || (CASE WHEN substr(bucket, f, 1) = '0' THEN '1' ELSE '0' END)
-         |           || substr(bucket, f + 1, $NPLANES)
-         |    END AS probe
-         |  FROM sigs, (SELECT unnest(range(0, ${NPLANES + 1})) AS f)),
-         |cand AS (
-         |  SELECT DISTINCT p.vec_id AS i, s.vec_id AS j
-         |  FROM probes p JOIN sigs s ON p.probe = s.bucket AND p.vec_id < s.vec_id)
+         |$mpCandSql
          |SELECT a.vec_id AS i, b.vec_id AS j,
          |  round(${dSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm), 6) AS cosine
-         |FROM cand
+         |FROM mp_cand cand
          |JOIN n a ON cand.i = a.vec_id
          |JOIN n b ON cand.j = b.vec_id
          |WHERE ${dSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm) >= $ANN_T""".stripMargin
   )
 
-  /** DuckDB twin of [[coarseAssignments]] as a reusable CTE chain:
-    * hash-ranked fine and ⌈√k⌉ coarse centroids ([[hashSeedsSql]]),
-    * fine→coarse grouping by the (cos DESC, id ASC) argmax, vectors
+  /** The two-level descent as a reusable CTE chain, the twin of
+    * [[Ivf.assignWithCodebook]] over [[Ivf.coarseCodebook]]: hash-ranked
+    * fine and ⌈√k⌉ coarse centroids, fine→coarse grouping, vectors
     * restricted to NON-EMPTY coarse groups, then the within-group fine
-    * argmax. `univ` must expose (vec_id, embedding, nrm); every emitted
-    * CTE name carries `p` so two chains (or a chain plus the flat one) can
-    * coexist in one oracle.
+    * pick. `univ` must expose (vec_id, embedding, nrm); every CTE name
+    * carries `p`, so several chains can share one oracle.
     * Terminal CTE: `${p}assign` = (vec_id, cell, cell2, mgn).
     */
-  private def coarseAssignCtes(univ: String, p: String): String =
-    s"""${p}nk AS (
-       |  SELECT greatest($MIN_CENTROIDS,
-       |    CAST(ceil(count(*) / $TARGET_CELL) AS BIGINT)) AS k FROM $univ),
+  private def coarseAssignCtes(univ: String, p: String): String = {
+    val c = cosSql("ax.embedding", "ax.nrm", "f.ce", "f.nc")
+    s"""${nkSql(s"${p}nk", univ)},
        |${p}ks AS (
        |  SELECT CAST(ceil(sqrt(CAST(k AS DOUBLE))) AS BIGINT) AS k FROM ${p}nk),
        |${hashSeedsSql(s"${p}fine", s"${p}nk", "ivfseed")},
        |${hashSeedsSql(s"${p}coarse0", s"${p}ks", "ivfgrp")},
        |${p}coarse AS (
        |  SELECT cid AS gid, ce AS ge, nc AS ng FROM ${p}coarse0),
-       |${p}fgrp AS (
-       |  SELECT gid, cid, ce, nc FROM (
-       |    SELECT c.gid, f.cid, f.ce, f.nc, row_number() OVER (
-       |      PARTITION BY f.cid
-       |      ORDER BY ${dSql("f.ce", "c.ge")} / (f.nc * c.ng) DESC,
-       |        c.gid ASC) AS rn
-       |    FROM ${p}fine f CROSS JOIN ${p}coarse c)
-       |  WHERE rn = 1),
-       |${p}vg AS (
-       |  SELECT vec_id, gid FROM (
-       |    SELECT a.vec_id, c.gid, row_number() OVER (
-       |      PARTITION BY a.vec_id
-       |      ORDER BY ${dSql("a.embedding", "c.ge")} / (a.nrm * c.ng) DESC,
-       |        c.gid ASC) AS rn
-       |    FROM $univ a CROSS JOIN ${p}coarse c
-       |    WHERE c.gid IN (SELECT DISTINCT gid FROM ${p}fgrp))
-       |  WHERE rn = 1),
-       |${p}assign AS (
-       |  SELECT vec_id,
-       |    max(CASE WHEN rn = 1 THEN cid END) AS cell,
-       |    max(CASE WHEN rn = 2 THEN cid END) AS cell2,
-       |    max(CASE WHEN rn = 1 THEN cs END)
-       |      - max(CASE WHEN rn = 2 THEN cs END) AS mgn
-       |  FROM (
-       |    SELECT v.vec_id, f.cid,
-       |      ${dSql("ax.embedding", "f.ce")} / (ax.nrm * f.nc) AS cs,
-       |      row_number() OVER (
-       |      PARTITION BY v.vec_id
-       |      ORDER BY ${dSql("ax.embedding", "f.ce")} / (ax.nrm * f.nc) DESC,
-       |        f.cid ASC) AS rn
-       |    FROM ${p}vg v JOIN $univ ax ON ax.vec_id = v.vec_id
-       |    JOIN ${p}fgrp f ON f.gid = v.gid)
-       |  WHERE rn <= 2 GROUP BY vec_id)""".stripMargin
+       |${pickSql(s"${p}fgrp", "gid, cid, ce, nc", "c.gid, f.cid, f.ce, f.nc",
+             s"${p}fine f CROSS JOIN ${p}coarse c", "f.cid",
+             cosSql("f.ce", "f.nc", "c.ge", "c.ng"), "c.gid", "1")},
+       |${pickSql(s"${p}vg", "vec_id, gid", "a.vec_id, c.gid",
+             s"$univ a CROSS JOIN ${p}coarse c WHERE c.gid IN (SELECT DISTINCT gid FROM ${p}fgrp)",
+             "a.vec_id", cosSql("a.embedding", "a.nrm", "c.ge", "c.ng"), "c.gid", "1")},
+       |${pickSql(s"${p}ranked", "vec_id, cid, cs, rn", s"v.vec_id, f.cid, $c AS cs",
+             s"${p}vg v JOIN $univ ax ON ax.vec_id = v.vec_id JOIN ${p}fgrp f ON f.gid = v.gid",
+             "v.vec_id", c, "f.cid", "2")},
+       |${assignSql(s"${p}assign", s"${p}ranked")}""".stripMargin
+  }
 
-  /** The full coarse-assignment oracle prelude over the AUGMENTED corpus:
-    * aug → normed universe `a` → [[coarseAssignCtes]] (terminal `assign`)
-    * → `e` = (vec_id, embedding, nrm, cell). Round 9: this is the shared
-    * twin of [[sharedCoarseAssign]], reused by every
-    * production IVF oracle (`sim_ann_ivf_coarse`, `sim_ann_ivf_probe`,
-    * `sim_ann_quantized_rescore`, `sim_ann_ivf_pq`, `dedup_semantic`) the
-    * same way the Spark side shares one cached assignment.
+  /** The plain-corpus two-level chain (terminal `assign`), shared by the
+    * stream ingest and cluster-sample twins.
+    */
+  private[queries] lazy val plainAssignCtes: String =
+    s"${normedSql("a", "embeddings")},\n${coarseAssignCtes("a", "")}"
+
+  /** The two-level chain over the AUGMENTED corpus (aug → `a` → `assign`
+    * → `e`), the twin every production IVF oracle shares, as the Spark
+    * side shares one cached assignment.
     */
   private lazy val coarseCellCtes: String =
-    s"""aug AS (
-       |  SELECT vec_id, embedding FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 100000 AS vec_id, embedding FROM embeddings),
-       |a AS (
-       |  SELECT vec_id, embedding,
-       |    sqrt(${dSql("embedding", "embedding")}) AS nrm
-       |  FROM aug),
-       |${coarseAssignCtes("a", "")},
-       |e AS (
-       |  SELECT a.vec_id, a.embedding, a.nrm, assign.cell
-       |  FROM a JOIN assign ON a.vec_id = assign.vec_id)""".stripMargin
+    s"$augSql,\n${normedSql("a", "aug")},\n${coarseAssignCtes("a", "")},\n$cellSql"
 
-  /** DuckDB twin of [[imiAssignments]] as a reusable CTE chain — the
-    * three-level descent replica: integer-exact ⌈k^(1/3)⌉ (the same
-    * cube-snapped correction as [[ceilRoot]], since C pow and Math.pow
-    * may disagree by an ulp), three hash-ranked codebooks, level-2→level-1
-    * grouping, fine→level-2 via the descent, bottom-up non-empty guards,
-    * and the three-step vector descent. Terminal CTEs: `${p}assign` =
+  /** The three-level descent as a reusable CTE chain, the twin of the
+    * [[Ivf.Imi]] assignment: integer-exact ⌈k^(1/3)⌉ and probe widths (the
+    * same power-snapped correction as [[Ivf.ceilRoot]], since C pow and
+    * Math.pow may disagree by an ulp), three hash-ranked codebooks,
+    * level-2→level-1 grouping, fine→level-2 via the descent, bottom-up
+    * non-empty guards, and the beam descent. Terminal CTEs: `${p}assign` =
     * (vec_id, cell, cell2, mgn) and `${p}probes` = (vec_id, pc, mgn).
     */
-  private def imiAssignCtes(univ: String, p: String): String =
-    s"""${p}nk AS (
-       |  SELECT greatest($MIN_CENTROIDS,
-       |    CAST(ceil(count(*) / $TARGET_CELL) AS BIGINT)) AS k FROM $univ),
+  private def imiAssignCtes(univ: String, p: String): String = {
+    val cf = cosSql("ax.embedding", "ax.nrm", "f.ce", "f.nc")
+    s"""${nkSql(s"${p}nk", univ)},
        |${p}pq AS (
-       |  SELECT least($PROBE_CAP, greatest(2,
+       |  SELECT least(${Ivf.PROBE_CAP}, greatest(2,
        |    CASE WHEN (c-1)*(c-1)*(c-1)*(c-1) >= k THEN c-1
        |         WHEN c*c*c*c >= k THEN c ELSE c+1 END)) AS p
        |  FROM (SELECT k, CAST(round(pow(CAST(k AS DOUBLE), 0.25)) AS BIGINT) AS c
        |        FROM ${p}nk)),
        |${p}bw AS (
-       |  SELECT least($L1_BEAM_CAP,
+       |  SELECT least(${Ivf.L1_BEAM_CAP},
        |    CAST(ceil(sqrt(CAST(p AS DOUBLE))) AS BIGINT)) AS b1 FROM ${p}pq),
        |${p}k1 AS (
        |  SELECT CASE WHEN (c-1)*(c-1)*(c-1) >= k THEN c-1
@@ -2803,125 +2097,88 @@ object VectorOps {
        |${hashSeedsSql(s"${p}l2s", s"${p}k2", "ivfl2")},
        |${p}l1 AS (SELECT cid AS g1, ce AS e1, nc AS n1 FROM ${p}l1s),
        |${p}l2 AS (SELECT cid AS g2, ce AS e2, nc AS n2 FROM ${p}l2s),
-       |${p}l2g AS (
-       |  SELECT g1, g2, e2, n2 FROM (
-       |    SELECT a.g1, b.g2, b.e2, b.n2, row_number() OVER (
-       |      PARTITION BY b.g2
-       |      ORDER BY ${dSql("b.e2", "a.e1")} / (b.n2 * a.n1) DESC, a.g1 ASC) AS rn
-       |    FROM ${p}l2 b CROSS JOIN ${p}l1 a)
-       |  WHERE rn = 1),
-       |${p}fp1 AS (
-       |  SELECT cid, g1 FROM (
-       |    SELECT f.cid, a.g1, row_number() OVER (
-       |      PARTITION BY f.cid
-       |      ORDER BY ${dSql("f.ce", "a.e1")} / (f.nc * a.n1) DESC, a.g1 ASC) AS rn
-       |    FROM ${p}fine f CROSS JOIN ${p}l1 a
-       |    WHERE a.g1 IN (SELECT DISTINCT g1 FROM ${p}l2g))
-       |  WHERE rn = 1),
-       |${p}fgrp AS (
-       |  SELECT g2, cid, ce, nc FROM (
-       |    SELECT b.g2, f.cid, f.ce, f.nc, row_number() OVER (
-       |      PARTITION BY f.cid
-       |      ORDER BY ${dSql("f.ce", "b.e2")} / (f.nc * b.n2) DESC, b.g2 ASC) AS rn
-       |    FROM ${p}fine f JOIN ${p}fp1 p1 ON p1.cid = f.cid
-       |    JOIN ${p}l2g b ON b.g1 = p1.g1)
-       |  WHERE rn = 1),
+       |${pickSql(s"${p}l2g", "g1, g2, e2, n2", "a.g1, b.g2, b.e2, b.n2",
+             s"${p}l2 b CROSS JOIN ${p}l1 a", "b.g2",
+             cosSql("b.e2", "b.n2", "a.e1", "a.n1"), "a.g1", "1")},
+       |${pickSql(s"${p}fp1", "cid, g1", "f.cid, a.g1",
+             s"${p}fine f CROSS JOIN ${p}l1 a WHERE a.g1 IN (SELECT DISTINCT g1 FROM ${p}l2g)",
+             "f.cid", cosSql("f.ce", "f.nc", "a.e1", "a.n1"), "a.g1", "1")},
+       |${pickSql(s"${p}fgrp", "g2, cid, ce, nc", "b.g2, f.cid, f.ce, f.nc",
+             s"${p}fine f JOIN ${p}fp1 p1 ON p1.cid = f.cid JOIN ${p}l2g b ON b.g1 = p1.g1",
+             "f.cid", cosSql("f.ce", "f.nc", "b.e2", "b.n2"), "b.g2", "1")},
        |${p}l2ne AS (
        |  SELECT g1, g2, e2, n2 FROM ${p}l2g
        |  WHERE g2 IN (SELECT DISTINCT g2 FROM ${p}fgrp)),
        |${p}l1ne AS (
        |  SELECT g1, e1, n1 FROM ${p}l1
        |  WHERE g1 IN (SELECT DISTINCT g1 FROM ${p}l2ne)),
-       |${p}v1 AS (
-       |  SELECT vec_id, g1 FROM (
-       |    SELECT a.vec_id, c.g1, row_number() OVER (
-       |      PARTITION BY a.vec_id
-       |      ORDER BY ${dSql("a.embedding", "c.e1")} / (a.nrm * c.n1) DESC,
-       |        c.g1 ASC) AS rn
-       |    FROM $univ a CROSS JOIN ${p}l1ne c)
-       |  WHERE rn <= (SELECT b1 FROM ${p}bw)),
-       |${p}v2 AS (
-       |  SELECT vec_id, g2 FROM (
-       |    SELECT v.vec_id, b.g2, row_number() OVER (
-       |      PARTITION BY v.vec_id
-       |      ORDER BY ${dSql("ax.embedding", "b.e2")} / (ax.nrm * b.n2) DESC,
-       |        b.g2 ASC) AS rn
-       |    FROM ${p}v1 v JOIN $univ ax ON ax.vec_id = v.vec_id
-       |    JOIN ${p}l2ne b ON b.g1 = v.g1)
-       |  WHERE rn <= (SELECT p FROM ${p}pq)),
-       |${p}fw AS (
-       |  SELECT vec_id, g2, cid, cs FROM (
-       |    SELECT v.vec_id, v.g2, f.cid,
-       |      ${dSql("ax.embedding", "f.ce")} / (ax.nrm * f.nc) AS cs,
-       |      row_number() OVER (
-       |        PARTITION BY v.vec_id, v.g2
-       |        ORDER BY ${dSql("ax.embedding", "f.ce")} / (ax.nrm * f.nc) DESC,
-       |          f.cid ASC) AS rn
-       |    FROM ${p}v2 v JOIN $univ ax ON ax.vec_id = v.vec_id
-       |    JOIN ${p}fgrp f ON f.g2 = v.g2)
-       |  WHERE rn = 1),
-       |${p}rw AS (
-       |  SELECT vec_id, cid, cs,
-       |    row_number() OVER (PARTITION BY vec_id ORDER BY cs DESC, cid ASC) AS rn,
-       |    max(cs) OVER (PARTITION BY vec_id) AS s1
-       |  FROM ${p}fw),
+       |${pickSql(s"${p}v1", "vec_id, g1", "a.vec_id, c.g1", s"$univ a CROSS JOIN ${p}l1ne c",
+             "a.vec_id", cosSql("a.embedding", "a.nrm", "c.e1", "c.n1"), "c.g1",
+             s"(SELECT b1 FROM ${p}bw)")},
+       |${pickSql(s"${p}v2", "vec_id, g2", "v.vec_id, b.g2",
+             s"${p}v1 v JOIN $univ ax ON ax.vec_id = v.vec_id JOIN ${p}l2ne b ON b.g1 = v.g1",
+             "v.vec_id", cosSql("ax.embedding", "ax.nrm", "b.e2", "b.n2"), "b.g2",
+             s"(SELECT p FROM ${p}pq)")},
+       |${pickSql(s"${p}fw", "vec_id, g2, cid, cs", s"v.vec_id, v.g2, f.cid, $cf AS cs",
+             s"${p}v2 v JOIN $univ ax ON ax.vec_id = v.vec_id JOIN ${p}fgrp f ON f.g2 = v.g2",
+             "v.vec_id, v.g2", cf, "f.cid", "1")},
+       |${pickSql(s"${p}rw", "vec_id, cid, cs, rn, s1",
+             "vec_id, cid, cs, max(cs) OVER (PARTITION BY vec_id) AS s1", s"${p}fw",
+             "vec_id", "cs", "cid", s"(SELECT p FROM ${p}pq)")},
        |${p}probes AS (
-       |  SELECT vec_id, cid AS pc, s1 - cs AS mgn FROM ${p}rw
-       |  WHERE rn >= 2 AND rn <= (SELECT p FROM ${p}pq)),
-       |${p}assign AS (
-       |  SELECT vec_id,
-       |    max(CASE WHEN rn = 1 THEN cid END) AS cell,
-       |    max(CASE WHEN rn = 2 THEN cid END) AS cell2,
-       |    max(CASE WHEN rn = 1 THEN cs END)
-       |      - max(CASE WHEN rn = 2 THEN cs END) AS mgn
-       |  FROM ${p}rw
-       |  WHERE rn <= 2 GROUP BY vec_id)""".stripMargin
+       |  SELECT vec_id, cid AS pc, s1 - cs AS mgn FROM ${p}rw WHERE rn >= 2),
+       |${assignSql(s"${p}assign", s"${p}rw")}""".stripMargin
+  }
 
-  /** The full IMI-assignment oracle prelude over the AUGMENTED corpus
-    * (prefix `m` so it can coexist with the coarse chain in one oracle):
-    * aug → normed universe `a` → [[imiAssignCtes]] (terminals `massign`,
-    * `mprobes`) — the twin of [[sharedImiAssign]].
+  /** The IMI chain over the AUGMENTED corpus (prefix `m`: terminals
+    * `massign`, `mprobes`).
     */
   private lazy val imiCellCtes: String =
-    s"""aug AS (
-       |  SELECT vec_id, embedding FROM embeddings
-       |  UNION ALL
-       |  SELECT vec_id + 100000 AS vec_id, embedding FROM embeddings),
-       |a AS (
-       |  SELECT vec_id, embedding,
-       |    sqrt(${dSql("embedding", "embedding")}) AS nrm
-       |  FROM aug),
-       |${imiAssignCtes("a", "m")}""".stripMargin
+    s"$augSql,\n${normedSql("a", "aug")},\n${imiAssignCtes("a", "m")}"
 
-  /** Shared CTE chain for the LSH oracles, parameterized by the vector-set
-    * CTE body: aug → planes → component projections → bit-string
-    * signatures → normed vectors.
+  /** One perturbed near-twin cohort over `ntp` (vec_id, d, x), the twin of
+    * [[Ivf.NearTwin]]'s: shifted by `offset`, each component moved by
+    * ±delta by the md5 parity of "tag:id:d".
     */
-  private def sigChain(augBody: String): String =
-    s"""aug AS ($augBody),
+  private def twinSql(tag: String, offset: Long, delta: Double): String =
+    s"""$tag AS (
+       |  SELECT sid AS vec_id,
+       |    list(CAST(CAST(x AS DOUBLE) + $delta * s AS REAL) ORDER BY d)
+       |      AS embedding
+       |  FROM (SELECT vec_id + $offset AS sid, d, x,
+       |      (${graft.functions.Keys.md5Key64Sql(
+                s"concat('$tag:', CAST(vec_id + $offset AS VARCHAR), ':', CAST(d AS VARCHAR))")}
+       |        % 2) * 2 - 1 AS s
+       |    FROM ntp) t
+       |  GROUP BY sid)""".stripMargin
+
+  /** Shared CTE chain for the LSH oracles over the vector set `src`
+    * (vec_id, embedding, side): planes → component projections →
+    * bit-string signatures `sigs` → normed vectors `n`, all keyed by
+    * (side, vec_id), so two sets may share ids.
+    */
+  private def sigChain(src: String): String =
+    s"""lshin AS ($src),
        |planes AS (
        |  SELECT p, d,
        |    CAST((CAST(concat('0x', substr(md5(concat(p, ':', d)), 1, 15)) AS BIGINT) % 2) * 2 - 1 AS DOUBLE) AS w
        |  FROM (SELECT unnest(range(0, $NPLANES)) AS p), (SELECT unnest(range(0, 64)) AS d)),
        |comps AS (
-       |  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS d,
+       |  SELECT side, vec_id, generate_subscripts(embedding, 1) - 1 AS d,
        |    unnest(embedding) AS x
-       |  FROM aug),
+       |  FROM lshin),
        |projs AS (
-       |  SELECT vec_id, p, sum(CAST(x AS DOUBLE) * w) AS proj
-       |  FROM comps JOIN planes USING (d) GROUP BY vec_id, p),
+       |  SELECT side, vec_id, p, sum(CAST(x AS DOUBLE) * w) AS proj
+       |  FROM comps JOIN planes USING (d) GROUP BY side, vec_id, p),
        |sigs AS (
-       |  SELECT vec_id,
+       |  SELECT side, vec_id,
        |    string_agg(CASE WHEN proj > 0 THEN '1' ELSE '0' END, '' ORDER BY p) AS bucket
-       |  FROM projs GROUP BY vec_id),
+       |  FROM projs GROUP BY side, vec_id),
        |n AS (
-       |  SELECT e.vec_id, e.embedding, s.bucket,
+       |  SELECT e.side, e.vec_id, e.embedding, s.bucket,
        |    sqrt(${dSql("e.embedding", "e.embedding")}) AS nrm
-       |  FROM aug e JOIN sigs s ON e.vec_id = s.vec_id)""".stripMargin
+       |  FROM lshin e JOIN sigs s ON e.side = s.side AND e.vec_id = s.vec_id)""".stripMargin
 
-  private lazy val lshSigCtes: String = sigChain(
-    """
-      |  SELECT vec_id, embedding FROM embeddings
-      |  UNION ALL
-      |  SELECT vec_id + 100000 AS vec_id, embedding FROM embeddings""".stripMargin)
+  private lazy val lshSigCtes: String =
+    s"$augSql,\n${sigChain("SELECT vec_id, embedding, 0 AS side FROM aug")}"
 }

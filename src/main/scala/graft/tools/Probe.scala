@@ -8,7 +8,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, S
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.queries.{ScratchCache, VectorOps}
+import graft.queries.{Ivf, ScratchCache, VectorOps}
 
 /** The diagnostic main. Two forms:
   *
@@ -142,7 +142,7 @@ object Probe {
   private def margin(s: SparkSession, dir: String, taus: Seq[Double], nt: Boolean): Unit = {
     val t0 = System.nanoTime()
     val sweep = VectorOps.marginSweep(s, dir, taus, nt)
-    val assign = if (nt) VectorOps.sharedImiAssignNt(s, dir) else VectorOps.sharedImiAssign(s, dir)
+    val assign = Ivf.assignment(s, dir, if (nt) Ivf.NearTwin else Ivf.Augmented, Ivf.Imi)
     val dist = assign.filter(col("mgn").isNotNull).agg(
       count(lit(1)).as("n"),
       expr("percentile(mgn, array(0.01, 0.05, 0.1, 0.25, 0.5, 0.75, 0.9))").as("pcts"))

@@ -63,6 +63,19 @@ class ArgTop2Spec extends SparkSpec {
       (4L, java.lang.Double.valueOf(0.2), 40L)))
   }
 
+  test("NaN ranks first, -0.0 ties 0.0 and ties break on the lower id, as in the window") {
+    // GreaterThan and EqualTo on doubles follow Spark's ordering, the
+    // row_number twin's: NaN above every number and equal to itself,
+    // -0.0 equal to 0.0
+    def d(v: Double): java.lang.Double = java.lang.Double.valueOf(v)
+    compare(Seq(
+      (1L, d(Double.NaN), 10L), (1L, d(0.7), 11L), (1L, d(0.9), 12L), (1L, d(Double.NaN), 13L),
+      (2L, d(-0.0), 20L), (2L, d(0.0), 21L), (2L, d(-0.0), 22L), (2L, d(-0.5), 23L),
+      (3L, d(1.0), 31L), (3L, d(1.0), 30L), (3L, d(Double.NaN), 32L), (3L, d(1.0), 29L),
+      (4L, d(Double.NaN), 41L), (4L, d(Double.NaN), 40L),
+      (5L, d(0.0), 51L), (5L, d(-0.0), 50L), (5L, d(-1.0), 52L)))
+  }
+
   test("the aggregate plans as HashAggregate, never SortAggregate") {
     import spark.implicits._
     val df = Seq((1L, 0.5, 1L), (1L, 0.7, 2L)).toDF("g", "ord", "id")

@@ -15,6 +15,10 @@ import org.apache.spark.sql.functions._
   */
 class ArgTopNSpec extends SparkSpec {
 
+  // the score as its bits, so NaN equals itself and -0.0 differs from 0.0
+  private def row(r: org.apache.spark.sql.Row): (Long, Long, Long, Long) =
+    (r.getLong(0), r.getLong(1), java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getLong(3))
+
   private def compare(rows: Seq[(Long, java.lang.Double, Long)], cap: Int): Unit = {
     import spark.implicits._
     val df = rows.toDF("g", "ord", "id").repartition(7, col("id"))
@@ -24,14 +28,12 @@ class ArgTopNSpec extends SparkSpec {
       .filter(col("t").isNotNull)
       .select(col("g"), (col("pos") + 1).cast("long").as("rn"),
         col("t").getField("cs").as("cs"), col("t").getField("cid").as("cid"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-      .toSet
+      .collect().map(row).toSet
     val w = Window.partitionBy(col("g")).orderBy(col("ord").desc, col("id").asc)
     val want = df.filter(col("ord").isNotNull)
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= cap)
       .select(col("g"), col("rn").cast("long"), col("ord"), col("id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
-      .toSet
+      .collect().map(row).toSet
     assert(got === want, s"cap=$cap agg=${got.size} window=${want.size} " +
       s"diff=${(got diff want).take(5)} / ${(want diff got).take(5)}")
   }
@@ -68,29 +70,16 @@ class ArgTopNSpec extends SparkSpec {
       (4L, java.lang.Double.valueOf(0.4), 40L)), cap = 4)
   }
 
-  test("NaN ords are skipped like null, so the row_number twin keeps agreeing") {
-    // round-15 ADVICE: beats() makes a NaN lose every comparison (ranks
-    // last) while ORDER BY ord DESC sorts NaN first — update() therefore
-    // drops NaN at the door, exactly like null. The window twin in
-    // compare() filters nulls explicitly; here the NaN rows must vanish
-    // from the aggregate the same way, leaving the finite rows' ranks
-    // unshifted.
-    import spark.implicits._
-    val rows = Seq(
-      (1L, java.lang.Double.valueOf(Double.NaN), 10L),
-      (1L, java.lang.Double.valueOf(0.7), 11L),
-      (1L, java.lang.Double.valueOf(0.9), 12L),
-      (2L, java.lang.Double.valueOf(Double.NaN), 20L),
-      (2L, java.lang.Double.valueOf(Double.NaN), 21L))
-    val got = rows.toDF("g", "ord", "id").repartition(3, col("id"))
-      .groupBy(col("g"))
-      .agg(graft.expr.Native.vecArgTopN(col("ord"), col("id"), lit(4)).as("tops"))
-      .select(col("g"), explode(col("tops")).as("t"))
-      .filter(col("t").isNotNull)
-      .select(col("g"), col("t").getField("cid").as("cid"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got === Set((1L, 12L), (1L, 11L)),
-      s"NaN ords must be dropped like null, got $got")
+  test("NaN ranks first, -0.0 ties 0.0 and ties break on the lower id, as in the window") {
+    // Spark's double ordering, the row_number twin's: NaN above every
+    // number and equal to itself, -0.0 equal to 0.0
+    def d(v: Double): java.lang.Double = java.lang.Double.valueOf(v)
+    compare(Seq(
+      (1L, d(Double.NaN), 10L), (1L, d(0.7), 11L), (1L, d(0.9), 12L), (1L, d(Double.NaN), 13L),
+      (2L, d(-0.0), 20L), (2L, d(0.0), 21L), (2L, d(-0.0), 22L), (2L, d(0.5), 23L),
+      (3L, d(1.0), 31L), (3L, d(1.0), 30L), (3L, d(Double.NaN), 32L), (3L, d(1.0), 29L),
+      (4L, d(Double.NaN), 41L), (4L, d(Double.NaN), 40L),
+      (5L, d(0.0), 51L), (5L, d(-0.0), 50L), (5L, d(-1.0), 52L)), cap = 3)
   }
 
   test("the aggregate plans as HashAggregate, never SortAggregate") {

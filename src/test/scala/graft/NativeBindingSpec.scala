@@ -41,7 +41,7 @@ class NativeBindingSpec extends SparkSpec {
     rows.toDF("id", "s", "a", "b", "g", "ord")
   }
 
-  test("the nine Column constructors run in a bare session and match SQL text") {
+  test("the eight Column constructors run in a bare session and match SQL text") {
     val probe = spark.range(1, 4).toDF("id")
     val bloom = BloomMightContain.serialize(probe.stat.bloomFilter("id", 100L, 0.01))
     val cms = CmsEstimate.serialize(
@@ -61,7 +61,6 @@ class NativeBindingSpec extends SparkSpec {
       .orderBy("id").collect().toSeq
     val aggs = in.groupBy(col("g")).agg(
       Native.vecArgTop2(col("ord"), col("id")),
-      Native.vecArgMax1(col("ord"), col("id")),
       Native.vecArgTopN(col("ord"), col("id"), lit(3)))
       .orderBy("g").collect().toSeq
 
@@ -78,7 +77,7 @@ class NativeBindingSpec extends SparkSpec {
          |  cms_estimate(X'${hex(cms)}', id)
          |FROM t ORDER BY id""".stripMargin).collect().toSeq
     val sqlAggs = named.sql(
-      """SELECT g, vec_arg_top2(ord, id), vec_arg_max1(ord, id), vec_arg_topn(ord, id, 3)
+      """SELECT g, vec_arg_top2(ord, id), vec_arg_topn(ord, id, 3)
         |FROM t GROUP BY g ORDER BY g""".stripMargin).collect().toSeq
 
     assert(scalars.size == rows.size && aggs.size == 2)

@@ -145,7 +145,7 @@ class DerivedRangeSpec extends SparkSpec {
       // and the probe side of the nprobe=2 scan (VectorOps)
       assert(Widths.widen(s, n, Widths.EMB_PART_ROWS) === Before.pairScan(sp, n, 262144L))
       assert(Widths.widen(s, n, Widths.PAIR_PART_ROWS) === Before.pairScan(sp, n, 524288L))
-      val probeRows = n * VectorOps.staticProbeWidth(n)._1
+      val probeRows = n * Ivf.staticProbeWidth(n)._1
       assert(Widths.widen(s, probeRows, Widths.PAIR_PART_ROWS) ===
         Before.pairScan(sp, probeRows, 524288L), s"probe side, session $sp, n_aug=$n")
       val er = Analytics.erSession(s, n)
@@ -154,11 +154,11 @@ class DerivedRangeSpec extends SparkSpec {
     }
     for (sp <- Seq(1, SparkSpec.Cores, 32); s = session(sp); b <- byteGrid) {
       // the augmented chains build over 2 copies of the embeddings bytes
-      assert(VectorOps.buildWidth(s, b, 2L) === Before.build(sp, b), s"build, session $sp, $b B")
+      assert(Ivf.buildWidth(s, b, 2L) === Before.build(sp, b), s"build, session $sp, $b B")
       // the near-twin chains build over 4: twice the earlier (×2) width
       // wherever neither value is capped or under the session count
       if (Before.build(sp, 2 * b).exists(_ < 4096))
-        assert(VectorOps.buildWidth(s, b, 4L) === Before.build(sp, 2 * b))
+        assert(Ivf.buildWidth(s, b, 4L) === Before.build(sp, 2 * b))
       // the stream gates' [8, session] clamp. One difference from the
       // earlier ⌊bytes/64 MB⌋ + 1: at an exact multiple k·64 MB the law
       // gives k, not k + 1
@@ -168,16 +168,16 @@ class DerivedRangeSpec extends SparkSpec {
     }
     val bench = session(32)
     // SCALE.md round 17: the probe side at n_aug = 2×10⁷ ran 458 partitions
-    assert(Widths.widen(bench, 20000000L * VectorOps.staticProbeWidth(20000000L)._1,
+    assert(Widths.widen(bench, 20000000L * Ivf.staticProbeWidth(20000000L)._1,
       Widths.PAIR_PART_ROWS) === Some(458))
     assert(Widths.widen(bench, 20000000L, Widths.PAIR_PART_ROWS) === Some(39))
     assert(Widths.widen(bench, 20000000L, Widths.EMB_PART_ROWS) === Some(77))
     // the 1.7 GB 10⁷ fixture: 406 build partitions over the augmented
     // corpus, 811 over the near-twin corpus
-    assert(VectorOps.buildWidth(bench, 1700000000L, 2L) === Some(406))
-    assert(VectorOps.buildWidth(bench, 1700000000L, 4L) === Some(811))
+    assert(Ivf.buildWidth(bench, 1700000000L, 2L) === Some(406))
+    assert(Ivf.buildWidth(bench, 1700000000L, 4L) === Some(811))
     // gate corpora (< 1 MB of embeddings) never widen the build
-    assert(VectorOps.buildWidth(session(1), 800000L, 4L) === None)
+    assert(Ivf.buildWidth(session(1), 800000L, 4L) === None)
     assert(StreamGate.streamParts(bench, 10 * MB64) === 10)
     assert(StreamGate.streamParts(bench, 10 * MB64 + 1) === 11)
     assert(StreamGate.streamParts(bench, 0L) === 8)
@@ -190,7 +190,7 @@ class DerivedRangeSpec extends SparkSpec {
     val huge = 1000000000000L
     assert(Widths.widen(wide, huge, Widths.PAIR_PART_ROWS) === None)
     assert(Widths.widen(wide, huge, Widths.EMB_PART_ROWS) === None)
-    assert(VectorOps.buildWidth(wide, huge, 4L) === None)
+    assert(Ivf.buildWidth(wide, huge, 4L) === None)
     assert(Analytics.erSession(wide, huge) eq wide)
     assert(StreamGate.streamParts(wide, 10000000000000L) === 5000)
     // the earlier pair-scan and build spellings narrowed it to 4096
@@ -242,6 +242,18 @@ class DerivedRangeSpec extends SparkSpec {
     val readers = sources.filter(p => named.findFirstIn(Files.readString(p)).nonEmpty)
       .map(_.getFileName.toString)
     assert(readers === Seq("Widths.scala"), readers)
+  }
+
+  test("only Ivf names an IVF cache key or builds a seed table under src/main") {
+    // so the codebook sizes and the probe width reach every chain from
+    // one file
+    val sources = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    for (r <- Seq("\"(ivfcb|ivfimicb|ivfassign|ivfcoarse|ivfimi|ivfplain)".r, "\\bhashSeeds\\(".r)) {
+      val named = sources.filter(p => r.findFirstIn(Files.readString(p)).nonEmpty)
+        .map(_.getFileName.toString)
+      assert(named === Seq("Ivf.scala"), s"$r: $named")
+    }
   }
 
   test("snmPairs output is invariant to the derived partition count") {

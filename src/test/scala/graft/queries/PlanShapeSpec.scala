@@ -1,5 +1,10 @@
 package graft.queries
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.SparkSpec
 
 /** Plan-shape gates: the scale claims in SCALE.md as assertions, so a
@@ -17,6 +22,31 @@ class PlanShapeSpec extends SparkSpec {
 
   private def count(hay: String, needle: String): Int =
     hay.sliding(needle.length).count(_ == needle)
+
+  /** The executed plans of the index builds (CorpusCache's
+    * `localCheckpoint` actions) that run in `session`.
+    */
+  private class Builds(val session: SparkSession) {
+    private val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    session.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") plans.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    })
+
+    /** The plans of the builds `f` runs, in order: a nested build (a
+      * codebook) completes before the build that demands it.
+      */
+    def of(f: => Any): Seq[SparkPlan] = {
+      org.apache.spark.GraftListenerBus.drain(session.sparkContext)
+      plans.clear()
+      f
+      org.apache.spark.GraftListenerBus.drain(session.sparkContext)
+      plans.toArray(Array.empty[SparkPlan]).toSeq
+    }
+  }
+
+  private object Walk extends AdaptiveSparkPlanHelper
 
   test("flagship star: every dim hop broadcasts, no nested loop, no cartesian") {
     val p = plan("q0_flagship_star")
@@ -498,21 +528,11 @@ class PlanShapeSpec extends SparkSpec {
     // that is exactly why the mechanism must be gated on join output rows,
     // not shuffle records.
     // AQE off so the static plan's metrics are directly collectible.
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
-    import org.apache.spark.sql.util.QueryExecutionListener
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", "8")
     s2.conf.set("spark.sql.adaptive.enabled", "false")
-    // the codebook builds, read off each build's checkpoint action
-    val built = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    s2.listenerManager.register(new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (funcName == "localCheckpoint") built.add(qe.executedPlan)
-      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    })
-    object Walk extends AdaptiveSparkPlanHelper
+    val builds = new Builds(s2)
     // (bnlj, bhj) output rows, asserted SEPARATELY (round-9 advice): the
     // cross joins (BNLJ — vector×coarse picks) are bounded O(n·√k)
     // UNCONDITIONALLY, while the in-group fine pick (BHJ, equi on
@@ -531,36 +551,32 @@ class PlanShapeSpec extends SparkSpec {
       }.sum
       (bnlj, bhj)
     }
-    def joinRows(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-      df.collect() // executes THIS queryExecution (count() would plan its own)
-      rows(df.queryExecution.executedPlan)
+    // an assignment's construction runs its codebook builds, then its own
+    // build last: (codebook builds, their cross-join rows, the
+    // assignment's (bnlj, bhj) rows)
+    def build(family: Ivf.Family): (Int, Long, (Long, Long)) = {
+      val plans = builds.of(Ivf.assignment(s2, dir, Ivf.Augmented, family))
+      (plans.size - 1, plans.init.map(rows(_)._1).sum, rows(plans.last))
     }
-    // the cross-join rows of the codebook builds a probe's construction ran
-    def buildBnlj(probe: => org.apache.spark.sql.DataFrame): (Int, Long) = {
-      built.clear()
-      probe
-      org.apache.spark.GraftListenerBus.drain(s2.sparkContext)
-      (built.size, built.toArray(Array.empty[SparkPlan]).map(rows(_)._1).sum)
-    }
-    val (flatBuilds, _) = buildBnlj(VectorOps.flatAssignProbe(s2, dir))
-    val (coarseBuilds, coarseBuildBnlj) = buildBnlj(VectorOps.coarseAssignProbe(s2, dir))
-    val (imiBuilds, imiBuildBnlj) = buildBnlj(VectorOps.imiAssignProbe(s2, dir))
-    val (flatBnlj, flatBhj) = joinRows(VectorOps.flatAssignProbe(s2, dir))
-    val (coarseBnlj, coarseBhj) = joinRows(VectorOps.coarseAssignProbe(s2, dir))
-    val (imiBnlj, imiBhj) = joinRows(VectorOps.imiAssignProbe(s2, dir))
-    val flat = flatBnlj + flatBhj
+    val (flatBuilds, _, (flatBnlj, flatBhj)) = build(Ivf.Flat)
+    val (coarseBuilds, coarseBuildBnlj, (coarseBnlj, coarseBhj)) = build(Ivf.TwoLevel)
+    val (imiBuilds, imiBuildBnlj, (imiBnlj, imiBhj)) = build(Ivf.Imi)
+    // the flat chain picks twice, from the seeds and from the Lloyd means;
+    // one pick is the n·k candidate set the other chains are measured by
+    val flat = flatBnlj / 2
     val coarse = coarseBnlj + coarseBhj
     info(s"join output rows: flat=$flat (bnlj=$flatBnlj bhj=$flatBhj) " +
       s"coarse=$coarse (bnlj=$coarseBnlj bhj=$coarseBhj) " +
       s"imi=${imiBnlj + imiBhj} (bnlj=$imiBnlj bhj=$imiBhj); codebook builds: " +
       s"coarse $coarseBuilds (bnlj=$coarseBuildBnlj) imi $imiBuilds (bnlj=$imiBuildBnlj)")
     // fixture: n=1000 (augmented), nbase=500, k=16, √k=4, k1=3, k2=9.
-    // flat: BNLJ = n·k = 16000 exactly (the quadratizing candidate set);
-    // the seed builds cross no 1-row k/count frames over the base corpus
-    // (k and the count are plan literals), so nothing else is a BNLJ. Its
-    // seeds stay inline: nothing is built at construction.
+    // flat: BNLJ = 2·n·k = 32000 exactly, two picks of the quadratizing
+    // n·k candidate set (every seed keeps its own vector, so no Lloyd cell
+    // empties); the seed builds cross no 1-row k/count frames over the
+    // base corpus (k and the count are plan literals), so nothing else is
+    // a BNLJ. Its seeds stay inline: no codebook is built.
     assert(flatBuilds === 0, "the flat chain's seeds are not a cached codebook")
-    assert(flat >= 16000L, s"flat probe must materialize the full n·k candidate set, saw $flat")
+    assert(flatBnlj === 32000L, s"flat chain must materialize n·k candidates per pick, saw $flatBnlj")
     // each codebook's picks run exactly once, in its own build: the
     // two-level fine×coarse pick k·√k = 64; the IMI level-2×level-1 pick
     // k2·k1 = 27 (the level-2 table, a build of its own) and the
@@ -659,16 +675,15 @@ class PlanShapeSpec extends SparkSpec {
     // ~4k-row oversample by the md5 hash — codebook-training scale, never
     // the corpus), so the assert is on WHAT the windows sort: no window
     // may order by a cosine score, which is what a candidate argmax
-    // window would do. Assert on BOTH chains.
-    for ((name, df) <- Seq(
-        "coarse" -> VectorOps.coarseAssignProbe(spark, dir),
-        "flat" -> VectorOps.flatAssignProbe(spark, dir),
-        "imi" -> VectorOps.imiAssignProbe(spark, dir))) {
+    // window would do. Assert on every chain, read off each assignment's
+    // own build (its last: the codebooks it demands build first).
+    val builds = new Builds(spark.newSession())
+    for ((name, family) <- Seq("coarse" -> Ivf.TwoLevel, "flat" -> Ivf.Flat, "imi" -> Ivf.Imi)) {
       // line-level check (TreeNode.collect does not descend through the
       // AdaptiveSparkPlanExec wrapper): a WindowExec node prints its
       // orderSpec on its own line, so a candidate-argmax window would
-      // show "Window [...cos_...]"
-      val p = df.queryExecution.executedPlan.toString
+      // show "Window [...cos...]"
+      val p = builds.of(Ivf.assignment(builds.session, dir, Ivf.Augmented, family)).last.toString
       val candidateWindows =
         p.linesIterator.filter(l => l.contains("Window") && l.contains("cos")).toList
       assert(candidateWindows.isEmpty,
@@ -687,7 +702,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("every production IVF consumer builds ONLY the coarse assignment; flat = tagged baseline") {
     // round 9: the in-band witness that the five consumer chains run on
-    // sharedCoarseAssign — constructing each query in a FRESH session must
+    // the two-level assignment — constructing each query in a FRESH session must
     // register the `ivfcoarse:` cache key and never the flat `ivfassign:`
     // one. Construction is where getOrBuild fires, so this needs no
     // execution; the tagged baseline sim_ann_ivf is the positive control
@@ -728,15 +743,12 @@ class PlanShapeSpec extends SparkSpec {
         keys.filter(_.startsWith(s"ivfimicb:$dir:")),
         keys.filter(_.startsWith(s"ivfcb:$dir:ivfl2:")))
     }
-    VectorOps.sharedCoarseAssign(s2, dir)
-    VectorOps.sharedCoarseAssignNt(s2, dir)
-    VectorOps.corpusAssign(s2, dir)
+    for (c <- Seq(Ivf.Augmented, Ivf.NearTwin, Ivf.Plain)) Ivf.assignment(s2, dir, c, Ivf.TwoLevel)
     graft.SparkEntry.queries("stream_ann_ingest")(s2, dir).collect()
     val (twoLevel, imi0, _) = codebookKeys()
     assert(twoLevel === Seq(s"ivfcb:$dir:ivfseed:16") && imi0.isEmpty,
       s"the two-level chains must share one k = 16 codebook: ${CorpusCache.liveKeys(s2)}")
-    VectorOps.sharedImiAssign(s2, dir)
-    VectorOps.sharedImiAssignNt(s2, dir)
+    for (c <- Seq(Ivf.Augmented, Ivf.NearTwin)) Ivf.assignment(s2, dir, c, Ivf.Imi)
     val (twoLevel1, imi, level2) = codebookKeys()
     assert(twoLevel1 === twoLevel, "the IMI chains must not build a two-level codebook")
     assert(imi === Seq(s"ivfimicb:$dir:16") && level2 === Seq(s"ivfcb:$dir:ivfl2:9"),
@@ -745,26 +757,45 @@ class PlanShapeSpec extends SparkSpec {
       "witness needs every demanded key still live")
   }
 
+  test("a codebook build reads the corpus once per seed table, at one scan partition and at several") {
+    // every use of a seed table in a build (the pick, the join-back, the
+    // level-2 descent) shares the one exchange under its rank window, so
+    // the md5-filtered corpus scan runs once per table: a one-partition
+    // scan plans no exchange of its own, and the gate corpus read the
+    // embeddings 4 times for the two-level codebook's 2 seed tables
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    for (maxBytes <- Seq(None, Some("4096")); aqe <- Seq("true", "false")) {
+      val builds = new Builds(spark.newSession())
+      val s2 = builds.session
+      val name = s"${if (maxBytes.isEmpty) "one scan partition" else "several"}, AQE $aqe"
+      s2.conf.set("spark.sql.adaptive.enabled", aqe)
+      maxBytes.foreach { b =>
+        s2.conf.set("spark.sql.files.maxPartitionBytes", b)
+        s2.conf.set("spark.sql.files.openCostInBytes", "0")
+      }
+      val parts = graft.Tables.embeddings(s2, dir).rdd.getNumPartitions
+      assert(if (maxBytes.isEmpty) parts == 1 else parts >= 2, s"$name: the scan reads $parts partitions")
+      val plans = builds.of {
+        Ivf.coarseCodebook(s2, dir, 16L)
+        Ivf.imiCodebook(s2, dir, 16L)
+      }
+      val seedScans = plans.map(p => Walk.collect(p) {
+        case f: FileSourceScanExec if f.dataFilters.exists(_.toString.contains("md5(")) => f
+      }.size)
+      // two-level (fine, coarse), IMI level 2 (level 2, level 1), IMI fine
+      assert(seedScans === Seq(2, 2, 1), s"$name: md5-filtered scans per build:\n${plans.mkString("\n")}")
+    }
+  }
+
   test("LSH signatures are a per-row projection: the lshsigs build plans no exchange") {
     // each bucket bit is one d-order fold against a plane literal, so the
     // signature table is the corpus scan plus a projection — no exploded
     // (vector, plane) relation, no shuffle, no broadcast
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.exchange.Exchange
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val s2 = spark.newSession()
-    val built = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    s2.listenerManager.register(new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (funcName == "localCheckpoint") built.add(qe.executedPlan)
-      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    })
-    VectorOps.sharedLshSigs(s2, dir)
-    org.apache.spark.GraftListenerBus.drain(s2.sparkContext)
+    val builds = new Builds(spark.newSession())
+    val built = builds.of(VectorOps.sharedLshSigs(builds.session, dir))
     assert(built.size === 1, s"expected one lshsigs build, saw ${built.size}")
-    object Walk extends AdaptiveSparkPlanHelper
-    val p = built.peek()
+    val p = built.head
     val exchanges = Walk.collect(p) { case e: Exchange => e.nodeName }
     assert(exchanges.isEmpty, s"the lshsigs build must plan no exchange: $exchanges\n$p")
   }
@@ -800,7 +831,7 @@ class PlanShapeSpec extends SparkSpec {
     // re-inflates the shuffle 3.5× and the pair dot 4×.
     import org.apache.spark.sql.functions._
     val df = VectorOps.cellVerifiedPairs(spark, dir,
-      VectorOps.sharedCoarseAssign(spark, dir))
+      Ivf.assignment(spark, dir, Ivf.Augmented, Ivf.TwoLevel))
     // the candidate PAIR join: keyed on cell AND two-sided (both pair ids
     // in its output) — a one-sided join that also keys on cell is not the
     // pair space this pin guards
@@ -831,7 +862,7 @@ class PlanShapeSpec extends SparkSpec {
     val aug = base.unionByName(
       base.select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
     val n = aug.withColumn("nrm", sqrt(vdot(col("embedding"), col("embedding"))))
-      .join(VectorOps.sharedCoarseAssign(spark, dir), Seq("vec_id"))
+      .join(Ivf.assignment(spark, dir, Ivf.Augmented, Ivf.TwoLevel), Seq("vec_id"))
     val l = n.select(col("cell"), col("vec_id").as("i"), col("embedding").as("ea"), col("nrm").as("na"))
     val r = n.select(col("cell"), col("vec_id").as("j"), col("embedding").as("eb"), col("nrm").as("nb"))
     val exact = l.join(r, Seq("cell")).filter(col("i") < col("j"))
@@ -849,18 +880,10 @@ class PlanShapeSpec extends SparkSpec {
     // may run above it. Read off the executed plan of each build's
     // checkpoint action (the descent's own aggregates — the flat chain's
     // Lloyd means group by cell — sit below the final argmax)
-    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.joins.BaseJoinExec
-    import org.apache.spark.sql.util.QueryExecutionListener
     val s2 = spark.newSession()
-    val built = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    s2.listenerManager.register(new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (funcName == "localCheckpoint") built.add(qe.executedPlan)
-      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    })
+    val builds = new Builds(s2)
     object Walk extends AdaptiveSparkPlanHelper {
       def argmax(p: SparkPlan): Boolean = p match {
         case a: BaseAggregateExec => a.aggregateExpressions.exists(e =>
@@ -876,25 +899,18 @@ class PlanShapeSpec extends SparkSpec {
       es.exists(_.references.exists(_.name == "cell"))
     // each chain's codebook is its own cached build (pinned above); warm
     // it first so the one checkpoint read here is the assignment's
-    val k = VectorOps.cellCount(VectorOps.augCount(s2, dir))
-    val kNt = VectorOps.cellCount(4L * VectorOps.embCount(s2, dir))
-    for ((name, warm, build) <- Seq[(String, () => Unit, () => Unit)](
-        ("flat", () => (), () => VectorOps.sharedIvfAssign(s2, dir)),
-        ("coarse", () => VectorOps.coarseCodebook(s2, dir, k),
-          () => VectorOps.sharedCoarseAssign(s2, dir)),
-        ("imi", () => VectorOps.imiCodebook(s2, dir, k),
-          () => VectorOps.sharedImiAssign(s2, dir)),
-        ("coarse_nt", () => VectorOps.coarseCodebook(s2, dir, kNt),
-          () => VectorOps.sharedCoarseAssignNt(s2, dir)),
-        ("imi_nt", () => VectorOps.imiCodebook(s2, dir, kNt),
-          () => VectorOps.sharedImiAssignNt(s2, dir)))) {
+    val k = Ivf.cellCount(Ivf.Augmented.rows(s2, dir))
+    val kNt = Ivf.cellCount(Ivf.NearTwin.rows(s2, dir))
+    for ((name, warm, corpus, family) <- Seq[(String, () => Unit, Ivf.Corpus, Ivf.Family)](
+        ("flat", () => (), Ivf.Augmented, Ivf.Flat),
+        ("coarse", () => Ivf.coarseCodebook(s2, dir, k), Ivf.Augmented, Ivf.TwoLevel),
+        ("imi", () => Ivf.imiCodebook(s2, dir, k), Ivf.Augmented, Ivf.Imi),
+        ("coarse_nt", () => Ivf.coarseCodebook(s2, dir, kNt), Ivf.NearTwin, Ivf.TwoLevel),
+        ("imi_nt", () => Ivf.imiCodebook(s2, dir, kNt), Ivf.NearTwin, Ivf.Imi))) {
       warm()
-      org.apache.spark.GraftListenerBus.drain(s2.sparkContext)
-      built.clear()
-      build()
-      org.apache.spark.GraftListenerBus.drain(s2.sparkContext)
+      val built = builds.of(Ivf.assignment(s2, dir, corpus, family))
       assert(built.size === 1, s"$name: expected one checkpoint build, saw ${built.size}")
-      val p = built.peek()
+      val p = built.head
       assert(Walk.collect(p) { case n if Walk.argmax(n) => n }.nonEmpty,
         s"$name: the build plan must hold its argmax descent:\n$p")
       val top = Walk.above(p)

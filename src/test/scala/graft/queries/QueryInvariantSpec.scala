@@ -115,7 +115,7 @@ class QueryInvariantSpec extends SparkSpec {
     // must never strand a vector (the empty-group edge the inner join on
     // gid would otherwise silently drop) — every augmented vector gets a
     // cell, so the planted-pair recovery above is structural, not luck
-    val assign = VectorOps.sharedCoarseAssign(spark, dir)
+    val assign = Ivf.assignment(spark, dir, Ivf.Augmented, Ivf.TwoLevel)
     assert(assign.count() === 2 * nVecs)
     assert(assign.filter(col("cell").isNull).count() === 0L)
   }
@@ -134,7 +134,7 @@ class QueryInvariantSpec extends SparkSpec {
     assert(imi.map(_.toString).toSet === flat)
     // totality through BOTH bottom-up non-empty guards (level-2 with no
     // fine members, level-1 with no surviving level-2): no vector strands
-    val assign = VectorOps.sharedImiAssign(spark, dir)
+    val assign = Ivf.assignment(spark, dir, Ivf.Augmented, Ivf.Imi)
     assert(assign.count() === 2 * nVecs)
     assert(assign.filter(col("cell").isNull).count() === 0L)
   }
@@ -185,12 +185,12 @@ class QueryInvariantSpec extends SparkSpec {
     // 10⁶; per-tier numbers in SCALE.md round 13); and the apparatus is
     // non-vacuous — it strictly beats home-only search in the planted
     // bands.
-    val emb = VectorOps.ntAugmented(spark, dir)
+    val emb = Ivf.NearTwin.frame(spark, dir)
     val truth = VectorOps.anchoredNtTruthBands(spark, dir)
     val anchors = graft.queries.AnchorSample
       .withAnchors(emb.select($"vec_id"), $"vec_id")
       .filter($"is_anchor").select($"vec_id")
-    val assign = VectorOps.sharedImiAssignNt(spark, dir)
+    val assign = Ivf.assignment(spark, dir, Ivf.NearTwin, Ivf.Imi)
     def foundPerBand(tau: Double): Map[String, Long] =
       truth.join(VectorOps.probeAnchorCandidatesAt(assign, anchors, tau),
           Seq("i", "j"), "left_semi")
@@ -224,7 +224,7 @@ class QueryInvariantSpec extends SparkSpec {
     // capacity clamps. Each k frame is the corpus count n = k·1024 (one
     // TARGET_CELL per cell), so k = ⌈n/1024⌉ exactly.
     import spark.implicits._
-    def pb(k: Long): (Int, Int) = VectorOps.staticProbeWidth(k * 1024L)
+    def pb(k: Long): (Int, Int) = Ivf.staticProbeWidth(k * 1024L)
     assert(pb(16L) === ((2, 2)), "gate fixtures: the round-13 probe shape")
     assert(pb(80L) === ((3, 2)))
     assert(pb(2401L) === ((7, 3)), "exact fourth power: 7^4 must give 7, not 8")
@@ -244,18 +244,18 @@ class QueryInvariantSpec extends SparkSpec {
     // exchange width key on: it holds from an empty-ish corpus (k at
     // the MIN_CENTROIDS floor) through exactly k = 16 (n ≤ 16·1024), and
     // the first count past it derives p = 3
-    assert(VectorOps.staticProbeWidth(1L)._1 === 2,
+    assert(Ivf.staticProbeWidth(1L)._1 === 2,
       "a corpus under one cell's worth sits on the MIN_CENTROIDS floor")
-    assert(VectorOps.staticProbeWidth(4000L)._1 === 2,
+    assert(Ivf.staticProbeWidth(4000L)._1 === 2,
       "gate-sf corpus counts sit on the p = 2 floor")
-    assert(VectorOps.staticProbeWidth(16384L)._1 === 2,
+    assert(Ivf.staticProbeWidth(16384L)._1 === 2,
       "the p = 2 floor holds through exactly k = 16")
-    assert(VectorOps.staticProbeWidth(16385L)._1 === 3,
+    assert(Ivf.staticProbeWidth(16385L)._1 === 3,
       "the first count past the floor derives p = 3")
     // the emitted probe list obeys the law on the fixture: ranked extra
     // regions only (home excluded), margins non-negative and monotone,
     // and rank-2 consistent with the compat columns (cell2, mgn)
-    val assign = VectorOps.sharedImiAssign(spark, dir)
+    val assign = Ivf.assignment(spark, dir, Ivf.Augmented, Ivf.Imi)
     val bad = assign.filter(size($"probes") > 0).filter(
       $"probes".getItem(0).getField("pc") =!= $"cell2" ||
         abs($"probes".getItem(0).getField("mgn") - $"mgn") > 1e-15 ||
@@ -272,20 +272,20 @@ class QueryInvariantSpec extends SparkSpec {
     // snap must land on the true ceiling at and around every perfect power
     def pow(c: Long, r: Int): Long = Iterator.fill(r)(c).product
     for (r <- Seq(3, 4); k <- 1L to 200000L) {
-      val c = VectorOps.ceilRoot(k, r)
+      val c = Ivf.ceilRoot(k, r)
       assert(pow(c - 1, r) < k && k <= pow(c, r), s"ceilRoot($k, $r) = $c")
     }
     val cube = Seq(27L -> 3L, 28L -> 4L, 19532L -> 27L, 19683L -> 27L,
       19684L -> 28L, 1000000L -> 100L, 1000001L -> 101L)
     for ((k, c) <- cube)
-      assert(VectorOps.ceilRoot(k, 3) === c, s"cube root of $k (19532 is the 10^7 tier's k)")
+      assert(Ivf.ceilRoot(k, 3) === c, s"cube root of $k (19532 is the 10^7 tier's k)")
   }
 
   test("IVF corpus counts: the augmented corpora are exact multiples of the base count") {
     // every codebook size derives from the one memoized base count, which
-    // holds only while augmented is 2 copies and ntAugmented 4 copies
-    assert(VectorOps.augmented(spark, dir).count() === VectorOps.augCount(spark, dir))
-    assert(VectorOps.ntAugmented(spark, dir).count() === 4L * VectorOps.embCount(spark, dir))
+    // holds only while each corpus frame is its `copies` whole copies
+    for (c <- Seq(Ivf.Plain, Ivf.Augmented, Ivf.NearTwin))
+      assert(c.frame(spark, dir).count() === c.rows(spark, dir), c)
   }
 
   test("margin-gated nprobe=2: the gate only ever removes clear-winner " +
@@ -304,7 +304,7 @@ class QueryInvariantSpec extends SparkSpec {
       emb.select(($"vec_id" + 100000L).as("vec_id"), $"embedding"))
     val anchors = AnchorSample.withAnchors(aug.select($"vec_id"), $"vec_id")
       .filter($"is_anchor").select($"vec_id")
-    val assign = VectorOps.sharedImiAssign(spark, dir)
+    val assign = Ivf.assignment(spark, dir, Ivf.Augmented, Ivf.Imi)
     def cands(tau: Double): Set[(Long, Long)] =
       VectorOps.probeAnchorCandidatesAt(assign, anchors, tau)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -366,7 +366,7 @@ class QueryInvariantSpec extends SparkSpec {
     // the within-cell candidate space on the random fixture.
     def vdot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       graft.expr.Native.vecDot(a, b)
-    val assign = VectorOps.sharedCoarseAssign(spark, dir)
+    val assign = Ivf.assignment(spark, dir, Ivf.Augmented, Ivf.TwoLevel)
     val base = graft.Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     val aug = base.unionByName(
       base.select((col("vec_id") + 100000).as("vec_id"), col("embedding")))
@@ -566,7 +566,7 @@ class QueryInvariantSpec extends SparkSpec {
     val sample = q("curation_cluster_sample")
     val perCell = sample.groupBy($"cell").agg(count(lit(1)).as("n"))
     assert(perCell.filter($"n" > 8).isEmpty, "quota exceeded")
-    val assignedCells = VectorOps.corpusAssign(spark, dir)
+    val assignedCells = Ivf.assignment(spark, dir, Ivf.Plain, Ivf.TwoLevel)
       .select($"cell").distinct().collect().map(_.getLong(0)).toSet
     val sampledCells = perCell.select($"cell").collect().map(_.getLong(0)).toSet
     assert(sampledCells === assignedCells,
@@ -578,11 +578,10 @@ class QueryInvariantSpec extends SparkSpec {
     // two-level descent is per-vector independent, so assigning the
     // arrivals in two batches and unioning must equal one-shot assignment
     val arrivals = graft.Tables.embeddings(spark, dir).filter($"vec_id" % 4 === 0)
-    val cb = VectorOps.coarseCodebook(spark, dir,
-      VectorOps.cellCount(VectorOps.embCount(spark, dir)))
-    val whole = VectorOps.assignWithCodebook(arrivals, cb)
-    val halves = VectorOps.assignWithCodebook(arrivals.filter($"vec_id" % 8 === 0), cb)
-      .unionByName(VectorOps.assignWithCodebook(arrivals.filter($"vec_id" % 8 =!= 0), cb))
+    val cb = Ivf.coarseCodebook(spark, dir, Ivf.cellCount(Ivf.Plain.rows(spark, dir)))
+    val whole = Ivf.assignWithCodebook(arrivals, cb)
+    val halves = Ivf.assignWithCodebook(arrivals.filter($"vec_id" % 8 === 0), cb)
+      .unionByName(Ivf.assignWithCodebook(arrivals.filter($"vec_id" % 8 =!= 0), cb))
     assert(whole.exceptAll(halves).isEmpty && halves.exceptAll(whole).isEmpty)
     assert(whole.count() === arrivals.count())
   }
@@ -970,8 +969,8 @@ class QueryInvariantSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     }
     for ((chain, assign) <- Seq(
-        "imi" -> VectorOps.sharedImiAssign(spark, dir),
-        "coarse" -> VectorOps.sharedCoarseAssign(spark, dir))) {
+        "imi" -> Ivf.assignment(spark, dir, Ivf.Augmented, Ivf.Imi),
+        "coarse" -> Ivf.assignment(spark, dir, Ivf.Augmented, Ivf.TwoLevel))) {
       val exact = replay(assign)
       val got = VectorOps.probeVerifiedPairs(spark, dir, assign)
         .select("i", "j")
