@@ -760,9 +760,9 @@ class PlanShapeSpec extends SparkSpec {
   test("a codebook build reads the corpus once per seed table, at one scan partition and at several") {
     // every use of a seed table in a build (the pick, the join-back, the
     // level-2 descent) shares the one exchange under its rank window, so
-    // the md5-filtered corpus scan runs once per table: a one-partition
-    // scan plans no exchange of its own, and the gate corpus read the
-    // embeddings 4 times for the two-level codebook's 2 seed tables
+    // the md5-filtered corpus scan runs once per table. A one-partition
+    // scan plans no exchange of its own, so without that one each use of
+    // a seed table reads the corpus again
     import org.apache.spark.sql.execution.FileSourceScanExec
     for (maxBytes <- Seq(None, Some("4096")); aqe <- Seq("true", "false")) {
       val builds = new Builds(spark.newSession())
